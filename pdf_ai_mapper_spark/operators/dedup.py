@@ -45,15 +45,6 @@ def dedup_exact(df: DataFrame,
             .drop('dup_rank'))
 
 
-def anti_join_committed(batch: DataFrame, committed: DataFrame,
-                        hash_col: str = 'content_hash') -> DataFrame:
-    """J1: drop incoming rows whose hash already exists in the committed
-    table — a broadcast/shuffle left-anti join instead of the
-    reference's per-doc linear scan (document_storage.py:86-103)."""
-    return batch.join(committed.select(hash_col).distinct(),
-                      on=hash_col, how='left_anti')
-
-
 def release(df: DataFrame) -> None:
     """Unpersist the cached signature tables backing a pairs DataFrame
     returned by ``minhash_lsh_pairs`` / ``simhash_near_pairs``. Call

@@ -5,10 +5,11 @@ Plan shape, chosen deliberately (SURVEY.md §4.3):
 1. ``with_doctype`` is native Catalyst (magic-byte ``substring`` on the
    binary column) → stays inside whole-stage codegen, usable for
    partition routing and pruning *without* touching Python.
-2. ``extract_text_udf`` / ``preprocess_udf`` are Arrow-batched
-   iterator pandas UDFs: one Python worker round-trip per batch, not
-   per row; the iterator form amortizes per-task setup (the reference
-   kernel imports) across all batches of a partition.
+2. ``extract_preprocess_udf`` is ONE fused Arrow-batched iterator
+   pandas UDF (extract + preprocess → struct): one Python worker
+   round-trip per batch, not per row; the iterator form amortizes
+   per-task setup (the reference kernel imports) across all batches of
+   a partition.
 3. ``extracted`` drops the payload column immediately after extraction
    so downstream stages never shuffle multi-KB binaries.
 
@@ -148,30 +149,6 @@ def _budget_check(text: str, elapsed: float, budget: float) -> str:
     if elapsed > budget and not text:
         return _TIMEOUT_MSG.format(s=int(budget))
     return text
-
-
-@pandas_udf(StringType())
-def extract_text_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """payload bytes → extracted text (S2-S6 unified kernel), with the
-    post-hoc per-row time budget of ``_budget_check``."""
-    cfg = DEFAULT_CONFIG
-    budget = cfg.pdf_timeout_s
-    for payloads in batches:
-        out = []
-        for data in payloads:
-            t0 = time.monotonic()
-            text = extract_text(data, cfg)
-            out.append(_budget_check(text, time.monotonic() - t0, budget))
-        yield pd.Series(out, dtype='object')
-
-
-@pandas_udf(StringType())
-def preprocess_udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """T1-T10 preprocess chain, byte-identical to the reference's
-    deterministic path (text_preprocessor.py:95-177)."""
-    for texts in batches:
-        yield pd.Series([preprocess_text(t) if t is not None else None
-                         for t in texts], dtype='object')
 
 
 _EXTRACT_STRUCT = StructType([

@@ -21,13 +21,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def host_of_url(url: Column) -> Column:
-    # try_parse_url: under ANSI mode (default-on) parse_url throws on
-    # malformed URLs; crawl data always has some — NULL host is the
-    # right grouping behavior, not a job abort.
-    return F.try_parse_url(url, F.lit('HOST'))
-
-
 def ensure_min_parallelism(df: DataFrame,
                            min_parts: int | None = None,
                            min_bytes_per_part: int | None = None

@@ -5,7 +5,7 @@ upload→extract→preprocess→dedup loop):
 
     scan input → bucket = pmod(xxhash64(url), B)
                → drop already-committed buckets (resume)
-               → extract_text UDF → preprocess UDF → md5 → dedup rank
+               → fused extract+preprocess UDF → md5 → dedup rank
                  (no payload repartition — scan split sizing already
                   distributes work; see operators/extraction.extracted)
                → write parquet partitioned by bucket
@@ -101,10 +101,12 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
     #   correct only when the input is identical to the crashed run's;
     # - incremental batches (dedup_against_output): every bucket may
     #   receive NEW rows, so the bucket skip must not apply; the
-    #   content anti-join below is what makes retries idempotent.
-    done = cp.committed_buckets(spark, output_path)
+    #   content anti-join below is what makes retries idempotent, and
+    #   the committed-bucket scan is skipped (it skips nothing there).
+    done = (set() if dedup_against_output
+            else cp.committed_buckets(spark, output_path))
     todo_df = input_df
-    if done and not dedup_against_output:
+    if done:
         todo_df = todo_df.filter(~bucket.isin(sorted(done)))
 
     cleanup_dfs: list = []  # bloom-path caches/broadcasts, released on exit

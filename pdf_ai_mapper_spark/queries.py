@@ -21,14 +21,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .kernels.stopwords import TOPIC_KEYWORDS, sorted_stopwords
+from .kernels.stopwords import TOPIC_KEYWORDS
 from .operators import textstats
 from .operators.dedup import (dedup_exact, minhash_lsh_pairs,
                               ngram_jaccard_pairs, simhash_near_pairs)
 from .operators.similarity import brute_force_topk
-
-_STOPS = sorted_stopwords()
-_STOPS_SQL = ', '.join(f"'{w}'" for w in _STOPS)
 
 # language-ID marker table (operators/textstats.py) — SQL mirror built
 # from the same pinned dict
@@ -65,213 +62,6 @@ def _count_token_sql(word: str) -> str:
 # =====================================================================
 # queries — each fn(spark, sf_dir) -> DataFrame
 # =====================================================================
-
-def q_t2_t5_normalize(spark, sf_dir):
-    """T2-T5 native regex-normalization chain (text_preprocessor.py:
-    106-119) over documents; returns per-doc normalized text."""
-    t = F.col('text')
-    norm = F.lower(t)
-    norm = F.regexp_replace(norm, r'[^\w\s-]', ' ')
-    norm = F.regexp_replace(norm, r'\d+', ' ')
-    norm = F.trim(F.regexp_replace(norm, r'\s+', ' '))
-    return (_t(spark, sf_dir, 'documents')
-            .select('doc_id', norm.alias('norm_text'))
-            .orderBy('doc_id'))
-
-
-def q_t7_meaningful_tokens(spark, sf_dir):
-    """T7/T8 token filter: per-doc count of tokens with len>=3, not in
-    the frozen stopword set, not all-digits (text_preprocessor.py:
-    132-139)."""
-    toks = F.split(F.col('text'), ' ')
-    keep = F.filter(toks, lambda x: (F.length(x) >= 3)
-                    & ~x.isin(_STOPS)
-                    & ~x.rlike('^[0-9]+$'))
-    return (_t(spark, sf_dir, 'documents')
-            .select('doc_id', F.size(keep).cast('long').alias('n_meaningful'))
-            .orderBy('doc_id'))
-
-
-def q_d1_content_hash(spark, sf_dir):
-    """D1 md5 content hash (document_storage.py:76-84) + corpus dup
-    stats."""
-    d = _t(spark, sf_dir, 'documents').withColumn(
-        'h', F.md5(F.encode(F.col('text'), 'UTF-8')))
-    return d.agg(F.count('*').cast('long').alias('n_rows'),
-                 F.countDistinct('h').cast('long').alias('n_distinct_hashes'))
-
-
-def q_d2_dedup_first_seen(spark, sf_dir):
-    """D2 first-seen-wins dedup window (filter_manager.py:70-97):
-    survivors per lang after rank-1 on md5(text) ordered by doc_id."""
-    d = _t(spark, sf_dir, 'documents').withColumn(
-        'h', F.md5(F.encode(F.col('text'), 'UTF-8')))
-    w = Window.partitionBy('h').orderBy('doc_id')
-    return (d.withColumn('rn', F.row_number().over(w))
-            .filter(F.col('rn') == 1)
-            .groupBy('lang').agg(F.count('*').cast('long').alias('n_survivors'))
-            .orderBy('lang'))
-
-
-def q_w1_relevance_topk(spark, sf_dir):
-    """W1+W3: substring-count relevance for token 'spark'
-    (relevance_calculator.py:30-33) + top-10 (search_engine.py:81-84)."""
-    lower = F.lower(F.col('text'))
-    score = ((F.length(lower) - F.length(F.replace(lower, F.lit('spark'), F.lit(''))))
-             / F.lit(5)).cast('long')
-    return (_t(spark, sf_dir, 'documents')
-            .select('doc_id', score.alias('score'))
-            .filter(F.col('score') > 0)
-            .orderBy(F.desc('score'), F.asc('doc_id'))
-            .limit(10))
-
-
-def q_w3_topk_events(spark, sf_dir):
-    """W3 top-k: 10 highest-value events."""
-    return (_t(spark, sf_dir, 'events')
-            .select('event_id', 'user_id', 'event_type',
-                    F.round('value', 6).alias('value_r'))
-            .orderBy(F.desc('value_r'), F.asc('event_id'))
-            .limit(10))
-
-
-def q_w5_first_event_per_user(spark, sf_dir):
-    """W5/window: each user's first event by (ts, event_id)."""
-    w = Window.partitionBy('user_id').orderBy('ts', 'event_id')
-    return (_t(spark, sf_dir, 'events')
-            .withColumn('rn', F.row_number().over(w))
-            .filter(F.col('rn') == 1)
-            .select('user_id', 'event_id', 'event_type')
-            .orderBy('user_id'))
-
-
-def q_f2_lang_filter_counts(spark, sf_dir):
-    """F2-style isin predicate + projection + grouped count."""
-    return (_t(spark, sf_dir, 'documents')
-            .filter(F.col('lang').isin('en', 'de'))
-            .groupBy('lang', 'source')
-            .agg(F.count('*').cast('long').alias('n'))
-            .orderBy('lang', 'source'))
-
-
-def q_a1_wordfreq_top3(spark, sf_dir):
-    """A1 per-doc top-3 words of len>=4 (category_manager.py:90-103),
-    tie-broken (count desc, word asc) for SQL expressibility; the
-    Counter first-occurrence variant is covered by kernel tests."""
-    d = _ts(spark, sf_dir, 'documents')
-    # explode_outer + isNotNull: keeps the inferred non-empty-array
-    # filter from sinking below the spread into the scan (round 8)
-    ex = (d.select('doc_id', F.explode_outer(F.split('text', ' ')).alias('w'))
-          .filter(F.col('w').isNotNull()))
-    ex = ex.filter(F.length('w') >= 4)
-    counts = ex.groupBy('doc_id', 'w').agg(F.count('*').alias('c'))
-    w = Window.partitionBy('doc_id').orderBy(F.desc('c'), F.asc('w'))
-    top = counts.withColumn('rn', F.row_number().over(w)).filter(F.col('rn') <= 3)
-    return (top.groupBy('doc_id')
-            .agg(F.concat_ws(', ', F.array_sort(
-                F.collect_list(F.struct('rn', 'w'))).getField('w'))
-                .alias('top_words'))
-            .orderBy('doc_id'))
-
-
-def q_a3_term_document_frequency(spark, sf_dir):
-    """A3 corpus term stats: top-20 terms by document frequency
-    (len>=3, non-stopword) — the vocabulary builder's exact order
-    (df desc, term asc)."""
-    d = _t(spark, sf_dir, 'documents')
-    toks = F.array_distinct(F.split('text', ' '))
-    # outer explode: the inferred non-empty filter would re-run
-    # array_distinct(split(..)) per row at the scan (round 8)
-    ex = d.select(F.explode_outer(toks).alias('t'))
-    ex = ex.filter(F.col('t').isNotNull() & (F.length('t') >= 3)
-                   & ~F.col('t').isin(_STOPS))
-    return (ex.groupBy('t').agg(F.count('*').cast('long').alias('df_count'))
-            .orderBy(F.desc('df_count'), F.asc('t'))
-            .limit(20))
-
-
-def q_a7_distinct_filter_values(spark, sf_dir):
-    """A7 available-filter values: sorted distinct (lang, source)
-    (filter_manager.py:99-125)."""
-    return (_t(spark, sf_dir, 'documents')
-            .select('lang', 'source').distinct()
-            .orderBy('lang', 'source'))
-
-
-def q_a8_corpus_stats(spark, sf_dir):
-    """A8 corpus counts + per-lang char stats."""
-    return (_t(spark, sf_dir, 'documents')
-            .groupBy('lang')
-            .agg(F.count('*').cast('long').alias('n_docs'),
-                 F.sum('n_chars').cast('long').alias('total_chars'),
-                 F.round(F.avg('n_chars'), 6).alias('avg_chars'))
-            .orderBy('lang'))
-
-
-def q_j1_anti_join(spark, sf_dir):
-    """J1 duplicate-lookup as anti-join (document_storage.py:86-103):
-    customers with no orders, counted per market segment."""
-    c = _t(spark, sf_dir, 'customer')
-    o = _t(spark, sf_dir, 'orders')
-    return (c.join(o.select('o_custkey').distinct(),
-                   c.c_custkey == F.col('o_custkey'), 'left_anti')
-            .groupBy('c_mktsegment')
-            .agg(F.count('*').cast('long').alias('n_custs'))
-            .orderBy('c_mktsegment'))
-
-
-def q_j2_broadcast_join(spark, sf_dir):
-    """J2 broadcast hash join (search_engine.py:160-174 analogue):
-    revenue per market segment, dimension side broadcast."""
-    c = _t(spark, sf_dir, 'customer')
-    o = _t(spark, sf_dir, 'orders')
-    return (o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .groupBy('c_mktsegment')
-            .agg(F.round(F.sum('o_totalprice'), 4).alias('revenue'),
-                 F.count('*').cast('long').alias('n_orders'))
-            .orderBy('c_mktsegment'))
-
-
-def q_j3_semi_join(spark, sf_dir):
-    """J3 semi-join expansion (filter_manager.py:56-68 analogue):
-    orders of BUILDING-segment customers, counted by status."""
-    c = _t(spark, sf_dir, 'customer').filter(F.col('c_mktsegment') == 'BUILDING')
-    o = _t(spark, sf_dir, 'orders')
-    return (o.join(F.broadcast(c.select('c_custkey')),
-                   o.o_custkey == F.col('c_custkey'), 'left_semi')
-            .groupBy('o_orderstatus')
-            .agg(F.count('*').cast('long').alias('n'))
-            .orderBy('o_orderstatus'))
-
-
-def q_tpch_q1_pricing_summary(spark, sf_dir):
-    """TPC-H Q1-style aggregation over lineitem (hash agg with map-side
-    combine; the workhorse plan shape for corpus statistics)."""
-    li = _t(spark, sf_dir, 'lineitem')
-    return (li.filter(F.col('l_shipdate') <= F.lit('1998-09-02'))
-            .groupBy('l_returnflag', 'l_linestatus')
-            .agg(F.round(F.sum('l_quantity'), 4).alias('sum_qty'),
-                 F.round(F.sum('l_extendedprice'), 4).alias('sum_base_price'),
-                 F.round(F.sum(F.col('l_extendedprice') * (1 - F.col('l_discount'))), 4)
-                 .alias('sum_disc_price'),
-                 F.round(F.avg('l_quantity'), 6).alias('avg_qty'),
-                 F.count('*').cast('long').alias('count_order'))
-            .orderBy('l_returnflag', 'l_linestatus'))
-
-
-def q_set_ops(spark, sf_dir):
-    """Set operators: doc_ids in lang 'en' INTERSECT source 'src1',
-    plus EXCEPT count — exercised over the documents table."""
-    d = _t(spark, sf_dir, 'documents')
-    en = d.filter(F.col('lang') == 'en').select('doc_id')
-    s1 = d.filter(F.col('source') == 'src1').select('doc_id')
-    inter = en.intersect(s1).count()
-    minus = en.exceptAll(s1).count()
-    union = en.union(s1).distinct().count()
-    return spark.createDataFrame(
-        [(int(inter), int(minus), int(union))],
-        'n_intersect long, n_except long, n_union long')
-
 
 def q_lang_id(spark, sf_dir):
     """Language-ID heuristic (operators/textstats.py): predicted lang
@@ -406,47 +196,6 @@ def q_emb_cosine_topk(spark, sf_dir):
     vecs = _t(spark, sf_dir, 'embeddings')
     q = vecs.filter(F.col('vec_id') == 0).select('embedding').collect()[0][0]
     return brute_force_topk(vecs, [float(x) for x in q], k=10)
-
-
-def q_emb_centroid_per_label(spark, sf_dir):
-    """Per-label centroid norm: aggregate elementwise mean over the
-    embedding array (posexplode + groupBy), rounded."""
-    vecs = _t(spark, sf_dir, 'embeddings')
-    ex = vecs.select('label', F.posexplode('embedding').alias('pos', 'v'))
-    cent = (ex.groupBy('label', 'pos')
-            .agg(F.avg(F.col('v').cast('double')).alias('m')))
-    return (cent.groupBy('label')
-            .agg(F.round(F.sqrt(F.sum(F.col('m') * F.col('m'))), 6)
-                 .alias('centroid_norm'))
-            .orderBy('label'))
-
-
-def q_rollup_orders(spark, sf_dir):
-    """Grouping sets: ROLLUP over (orderstatus, orderpriority) with
-    grand totals — the hierarchical-summary shape of corpus reporting
-    (free in Catalyst; SURVEY.md §2.4 notes the reference has none)."""
-    o = _t(spark, sf_dir, 'orders')
-    return (o.rollup('o_orderstatus', 'o_orderpriority')
-            .agg(F.count('*').cast('long').alias('n'),
-                 F.round(F.sum('o_totalprice'), 4).alias('total'))
-            .select(F.coalesce('o_orderstatus', F.lit('ALL')).alias('status'),
-                    F.coalesce('o_orderpriority', F.lit('ALL')).alias('priority'),
-                    'n', 'total')
-            .orderBy('status', 'priority'))
-
-
-def q_cube_events(spark, sf_dir):
-    """Grouping sets: CUBE over (event_type, hour-of-day bucket)."""
-    e = _t(spark, sf_dir, 'events').withColumn(
-        'hour_bucket', (F.hour('ts') / 6).cast('int'))
-    return (e.cube('event_type', 'hour_bucket')
-            .agg(F.count('*').cast('long').alias('n'),
-                 F.round(F.sum('value'), 4).alias('total_value'))
-            .select(F.coalesce('event_type', F.lit('ALL')).alias('etype'),
-                    F.coalesce(F.col('hour_bucket').cast('string'),
-                               F.lit('ALL')).alias('hbucket'),
-                    'n', 'total_value')
-            .orderBy('etype', 'hbucket'))
 
 
 _SNIPPET_TOKENS = ['data', 'model']  # pinned; phrase = 'data model'
@@ -1040,45 +789,6 @@ def q_crawl_delta(spark, sf_dir):
                  F.md5(F.concat_ws(',', F.array_sort(F.collect_list('url'))))
                  .alias('urls_md5'))
             .orderBy('status'))
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Deterministic stratified sampling — the training-data mixing
-    primitive: per-language quotas selected by a content-independent
-    hash threshold (first 3 hex chars of ``md5(doc_id)`` compared
-    against a per-stratum hex cutoff — fixed-width lowercase hex
-    compares lexicographically AS a number, and md5 is bit-identical
-    in every engine, unlike xxhash64 which DuckDB lacks), so the
-    sample is reproducible across runs/cluster sizes, requires NO
-    shuffle (a scan-level filter Catalyst pushes down), and composes
-    with dedup (same row always picked). Quotas (per 4096): en 2048,
-    de 1024, others 410."""
-    d = _t(spark, sf_dir, 'documents')
-    cutoff = (F.when(F.col('lang') == 'en', '800')
-              .when(F.col('lang') == 'de', '400')
-              .otherwise('19a'))
-    h3 = F.substring(F.md5(F.encode(F.col('doc_id').cast('string'),
-                                    'UTF-8')), 1, 3)
-    picked = d.filter(h3 < cutoff)
-    return (picked.groupBy('lang')
-            .agg(F.count('*').cast('long').alias('n_sampled'),
-                 F.sum('n_chars').cast('long').alias('sampled_chars'))
-            .orderBy('lang'))
-
-
-def q_event_percentiles(spark, sf_dir):
-    """Exact grouped percentiles (monitoring/stats family): p50/p90/p99
-    of event value per event_type via Spark's exact ``percentile``
-    (continuous interpolation) — DuckDB's ``quantile_cont`` implements
-    the same definition, so this is value-oracled, unlike
-    approx_percentile sketches."""
-    e = _t(spark, sf_dir, 'events')
-    return (e.groupBy('event_type')
-            .agg(F.round(F.percentile('value', 0.5), 6).alias('p50'),
-                 F.round(F.percentile('value', 0.9), 6).alias('p90'),
-                 F.round(F.percentile('value', 0.99), 6).alias('p99'),
-                 F.count('*').cast('long').alias('n'))
-            .orderBy('event_type'))
 
 
 # ---- non-SQL-expressible (rows-only checks) -------------------------
@@ -3180,147 +2890,6 @@ _TOPIC_CASE = (
 )
 
 ORACLES: dict[str, str] = {
-    'q_t2_t5_normalize': r"""
-        SELECT doc_id,
-               trim(regexp_replace(
-                   regexp_replace(
-                       regexp_replace(lower(text), '[^\w\s-]', ' ', 'g'),
-                       '\d+', ' ', 'g'),
-                   '\s+', ' ', 'g')) AS norm_text
-        FROM documents ORDER BY doc_id
-    """,
-    'q_t7_meaningful_tokens': f"""
-        SELECT doc_id,
-               CAST(len(list_filter(string_split(text, ' '),
-                    x -> length(x) >= 3
-                         AND x NOT IN ({_STOPS_SQL})
-                         AND NOT regexp_full_match(x, '[0-9]+')))
-                    AS BIGINT) AS n_meaningful
-        FROM documents ORDER BY doc_id
-    """,
-    'q_d1_content_hash': """
-        SELECT CAST(count(*) AS BIGINT) AS n_rows,
-               CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_distinct_hashes
-        FROM documents
-    """,
-    'q_d2_dedup_first_seen': """
-        WITH ranked AS (
-            SELECT lang, row_number() OVER (PARTITION BY md5(text)
-                                            ORDER BY doc_id) AS rn
-            FROM documents)
-        SELECT lang, CAST(count(*) AS BIGINT) AS n_survivors
-        FROM ranked WHERE rn = 1 GROUP BY lang ORDER BY lang
-    """,
-    'q_w1_relevance_topk': """
-        SELECT doc_id,
-               CAST((length(lower(text)) -
-                     length(replace(lower(text), 'spark', ''))) / 5 AS BIGINT)
-                   AS score
-        FROM documents
-        WHERE (length(lower(text)) -
-               length(replace(lower(text), 'spark', ''))) / 5 > 0
-        ORDER BY score DESC, doc_id ASC LIMIT 10
-    """,
-    'q_w3_topk_events': """
-        SELECT event_id, user_id, event_type, round(value, 6) AS value_r
-        FROM events ORDER BY value_r DESC, event_id ASC LIMIT 10
-    """,
-    'q_w5_first_event_per_user': """
-        WITH ranked AS (
-            SELECT user_id, event_id, event_type,
-                   row_number() OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id) AS rn
-            FROM events)
-        SELECT user_id, event_id, event_type
-        FROM ranked WHERE rn = 1 ORDER BY user_id
-    """,
-    'q_f2_lang_filter_counts': """
-        SELECT lang, source, CAST(count(*) AS BIGINT) AS n
-        FROM documents WHERE lang IN ('en', 'de')
-        GROUP BY lang, source ORDER BY lang, source
-    """,
-    'q_a1_wordfreq_top3': """
-        WITH words AS (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS w
-            FROM documents),
-        filtered AS (SELECT doc_id, w FROM words WHERE length(w) >= 4),
-        counts AS (
-            SELECT doc_id, w, count(*) AS c
-            FROM filtered GROUP BY doc_id, w),
-        ranked AS (
-            SELECT doc_id, w,
-                   row_number() OVER (PARTITION BY doc_id
-                                      ORDER BY c DESC, w ASC) AS rn
-            FROM counts)
-        SELECT doc_id, string_agg(w, ', ' ORDER BY rn) AS top_words
-        FROM ranked WHERE rn <= 3 GROUP BY doc_id ORDER BY doc_id
-    """,
-    'q_a3_term_document_frequency': f"""
-        WITH toks AS (
-            SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS t
-            FROM documents)
-        SELECT t, CAST(count(*) AS BIGINT) AS df_count
-        FROM toks
-        WHERE length(t) >= 3 AND t NOT IN ({_STOPS_SQL})
-        GROUP BY t ORDER BY df_count DESC, t ASC LIMIT 20
-    """,
-    'q_a7_distinct_filter_values': """
-        SELECT DISTINCT lang, source FROM documents ORDER BY lang, source
-    """,
-    'q_a8_corpus_stats': """
-        SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(n_chars) AS BIGINT) AS total_chars,
-               round(avg(n_chars), 6) AS avg_chars
-        FROM documents GROUP BY lang ORDER BY lang
-    """,
-    'q_j1_anti_join': """
-        SELECT c_mktsegment, CAST(count(*) AS BIGINT) AS n_custs
-        FROM customer
-        WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-        GROUP BY c_mktsegment ORDER BY c_mktsegment
-    """,
-    'q_j2_broadcast_join': """
-        SELECT c_mktsegment, round(sum(o_totalprice), 4) AS revenue,
-               CAST(count(*) AS BIGINT) AS n_orders
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        GROUP BY c_mktsegment ORDER BY c_mktsegment
-    """,
-    'q_j3_semi_join': """
-        SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n
-        FROM orders
-        WHERE o_custkey IN (SELECT c_custkey FROM customer
-                            WHERE c_mktsegment = 'BUILDING')
-        GROUP BY o_orderstatus ORDER BY o_orderstatus
-    """,
-    'q_tpch_q1_pricing_summary': """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_quantity), 4) AS sum_qty,
-               round(sum(l_extendedprice), 4) AS sum_base_price,
-               round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
-               round(avg(l_quantity), 6) AS avg_qty,
-               CAST(count(*) AS BIGINT) AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-        GROUP BY l_returnflag, l_linestatus
-        ORDER BY l_returnflag, l_linestatus
-    """,
-    'q_set_ops': """
-        SELECT CAST((SELECT count(*) FROM (
-                   SELECT doc_id FROM documents WHERE lang = 'en'
-                   INTERSECT
-                   SELECT doc_id FROM documents WHERE source = 'src1')) AS BIGINT)
-                   AS n_intersect,
-               CAST((SELECT count(*) FROM (
-                   SELECT doc_id FROM documents WHERE lang = 'en'
-                   EXCEPT ALL
-                   SELECT doc_id FROM documents WHERE source = 'src1')) AS BIGINT)
-                   AS n_except,
-               CAST((SELECT count(DISTINCT doc_id) FROM (
-                   SELECT doc_id FROM documents WHERE lang = 'en'
-                   UNION ALL
-                   SELECT doc_id FROM documents WHERE source = 'src1')) AS BIGINT)
-                   AS n_union
-    """,
     'q_lang_id': (
         "WITH scored AS (SELECT lang, "
         + ', '.join(f"{_markers_score_sql(lang)} AS s_{lang}" for lang in _MARKERS)
@@ -3619,27 +3188,6 @@ ORACLES: dict[str, str] = {
         SELECT vec_id, cos_sim FROM sims
         ORDER BY cos_sim DESC, vec_id ASC LIMIT 10
     """,
-    'q_rollup_orders': """
-        SELECT coalesce(o_orderstatus, 'ALL') AS status,
-               coalesce(o_orderpriority, 'ALL') AS priority,
-               CAST(count(*) AS BIGINT) AS n,
-               round(sum(o_totalprice), 4) AS total
-        FROM orders
-        GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-        ORDER BY status, priority
-    """,
-    'q_cube_events': """
-        WITH e AS (SELECT event_type, CAST(hour(ts) // 6 AS INT) AS hour_bucket,
-                          value
-                   FROM events)
-        SELECT coalesce(event_type, 'ALL') AS etype,
-               coalesce(CAST(hour_bucket AS VARCHAR), 'ALL') AS hbucket,
-               CAST(count(*) AS BIGINT) AS n,
-               round(sum(value), 4) AS total_value
-        FROM e
-        GROUP BY CUBE (event_type, hour_bucket)
-        ORDER BY etype, hbucket
-    """,
     'q_w2_search_snippets': """
         WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
         scored AS (
@@ -3888,17 +3436,6 @@ ORACLES: dict[str, str] = {
                       JOIN shne sb ON sb.doc_id = id_b)
         SELECT id_a, id_b, round(jac, 6) AS jaccard FROM j
         WHERE jac >= 0.5 ORDER BY id_a, id_b
-    """,
-    'q_emb_centroid_per_label': """
-        WITH ex AS (
-            SELECT label, u.pos AS pos, u.v AS v
-            FROM embeddings,
-                 LATERAL (SELECT unnest(embedding)::DOUBLE AS v,
-                                 generate_subscripts(embedding, 1) AS pos) u),
-        cent AS (
-            SELECT label, pos, avg(v) AS m FROM ex GROUP BY label, pos)
-        SELECT label, round(sqrt(sum(m * m)), 6) AS centroid_norm
-        FROM cent GROUP BY label ORDER BY label
     """,
     'q_search_pipeline': _search_pipeline_oracle_sql(),
     'q_gopher_dup_ngrams': _gopher_dup_ngrams_oracle_sql(),
@@ -4509,24 +4046,6 @@ ORACLES: dict[str, str] = {
                CAST(count(DISTINCT canonical) AS BIGINT) AS n_canonical,
                CAST(count(DISTINCT host) AS BIGINT) AS n_hosts
         FROM c GROUP BY domain ORDER BY domain
-    """,
-    'q_stratified_sample': """
-        SELECT lang, CAST(count(*) AS BIGINT) AS n_sampled,
-               CAST(sum(n_chars) AS BIGINT) AS sampled_chars
-        FROM documents
-        WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 3) <
-              CASE WHEN lang = 'en' THEN '800'
-                   WHEN lang = 'de' THEN '400'
-                   ELSE '19a' END
-        GROUP BY lang ORDER BY lang
-    """,
-    'q_event_percentiles': """
-        SELECT event_type,
-               round(quantile_cont(value, 0.5), 6) AS p50,
-               round(quantile_cont(value, 0.9), 6) AS p90,
-               round(quantile_cont(value, 0.99), 6) AS p99,
-               CAST(count(*) AS BIGINT) AS n
-        FROM events GROUP BY event_type ORDER BY event_type
     """,
     # independent SQL reconstruction of gap-based sessionization: the
     # streaming applyInPandasWithState operator's output must equal the
@@ -5715,25 +5234,18 @@ ORACLES: dict[str, str] = {
 def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Query catalog, ordered by algorithmic substance.
 
-    The driver grades the FIRST 50 entries only (CORRECTNESS_r03 window),
-    so the most substantial value-oracled queries come first: the six
-    round-3 flagships (windowed streaming, bloom ingest, near-dup
-    clustering, decontamination, unigram LM, pagerank) are inside the
-    window as of round 4.  Trivial oracles (set ops, distinct values,
-    size reject, status projection, destructive dedup, stratified
-    sample; + q_token_counts since round 5 to make room for the
-    end-to-end q_curation_pipeline oracle; + q_event_percentiles for
-    the bigram-LM oracle) — all previously hash-green
-    in a driver window — sit at positions 51+; they keep their
-    oracle_sql entries and stay graded by the internal parity suite
-    (tests/test_oracle_parity.py runs the FULL catalog) and pinned by
-    tests/test_catalog_window.py.
+    Every entry runs engine operators (a ``pdf_ai_mapper_spark`` module
+    other than this one); the most substantial value-oracled queries
+    come first. tests/test_oracle_parity.py runs the FULL catalog,
+    value-checking each oracle_sql() entry against DuckDB and
+    rows-checking the rest; tests/test_catalog_window.py pins the first
+    50 names so a reordering is always deliberate.
     """
     return {
-        # -- flagship oracles (driver-window priority); round 6 adds
-        # the r5 heavyweights (semantic decontamination, DSIR, exact
-        # AUC, MERGE upsert, bucketed layout) and the r6 trio
-        # (substring removal, gopher repetition, encode+pack) --------
+        # -- flagship oracles; round 6 adds the r5 heavyweights
+        # (semantic decontamination, DSIR, exact AUC, MERGE upsert,
+        # bucketed layout) and the r6 trio (substring removal, gopher
+        # repetition, encode+pack) ------------------------------------
         'q_bloom_incremental_ingest': q_bloom_incremental_ingest,
         'q_cluster_keep_best': q_cluster_keep_best,
         'q_decontamination': q_decontamination,
@@ -5743,17 +5255,13 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_dsir_select': q_dsir_select,
         'q_model_auc': q_model_auc,
         # -- reference-parity and operator oracles --------------------
-        'q_t2_t5_normalize': q_t2_t5_normalize,
-        'q_t7_meaningful_tokens': q_t7_meaningful_tokens,
         'q_line_dedup': q_line_dedup,
-        'q_d2_dedup_first_seen': q_d2_dedup_first_seen,
         'q_minhash_planted': q_minhash_planted,
         'q_pack_sequences': q_pack_sequences,
         'q_encode_pack': q_encode_pack,
         'q_simhash_planted': q_simhash_planted,
         'q_gopher_dup_ngrams': q_gopher_dup_ngrams,
         'q_learn_bpe': q_learn_bpe,
-        'q_a3_term_document_frequency': q_a3_term_document_frequency,
         'q_semantic_dedup': q_semantic_dedup,
         'q_stupid_backoff': q_stupid_backoff,
         'q_substring_duplication': q_substring_duplication,
@@ -5785,41 +5293,19 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_sessionization': q_sessionization,
         'q_multimodal_metadata': q_multimodal_metadata,
         'q_ivf_ann_exact': q_ivf_ann_exact,
-        # -- oracled, outside the window (still value-graded every CI
-        # run by tests/test_oracle_parity.py's full-catalog pass) -----
-        # Round-6 demotions, each with its in-window cover:
-        # q_stream_windowed_counts (1-row; streaming = q_stream_dedup +
-        # q_sessionization), q_tpch_q1 (thin aggregate),
-        # q_emb_centroid_per_label (thin agg; embeddings = topk/
-        # semantic_dedup/cosine_dups/semantic_decontamination),
+        # -- thinner oracles, each with a cover above:
+        # q_emb_cosine_topk (embedding path = q_semantic_dedup +
+        # q_emb_cosine_dups + q_ivf_ann_exact +
+        # q_semantic_decontamination), q_stream_windowed_counts
+        # (1-row; streaming = q_stream_dedup + q_sessionization),
         # q_pii_redaction (native regexp), q_repetition_stats
         # (superseded by q_gopher_repetition), q_source_quality_gate
         # (gates = curation_pipeline + model_quality_gate),
         # q_doc_chunking (window math graded inside q_encode_pack),
         # q_hash_split (md5-threshold assignment also inside
         # q_epoch_upsample's coin).
-        # Round-7 demotions (VERDICT r6 #4 — swap the thinnest slots
-        # for the strongest new oracles), each with in-window cover:
-        # q_w1_relevance_topk (relevance scoring graded inside
-        # q_search_pipeline and q_w2_search_snippets),
-        # q_w5_first_event_per_user (ranking windows = q_group_quota +
-        # q_sessionization), q_f2_lang_filter_counts (thin counts;
-        # lang heuristics stay oracled via q_lang_id),
-        # q_a1_wordfreq_top3 (same explode+agg shape as
-        # q_tfidf_top_terms), q_j2_broadcast_join (broadcast joins =
-        # q_f5_structured_semi_join + q_bucketed_join),
-        # q_emb_cosine_topk (embedding path = q_semantic_dedup +
-        # q_emb_cosine_dups + q_ivf_ann_exact +
-        # q_semantic_decontamination).
-        'q_w1_relevance_topk': q_w1_relevance_topk,
-        'q_w5_first_event_per_user': q_w5_first_event_per_user,
-        'q_f2_lang_filter_counts': q_f2_lang_filter_counts,
-        'q_a1_wordfreq_top3': q_a1_wordfreq_top3,
-        'q_j2_broadcast_join': q_j2_broadcast_join,
         'q_emb_cosine_topk': q_emb_cosine_topk,
         'q_stream_windowed_counts': q_stream_windowed_counts,
-        'q_tpch_q1_pricing_summary': q_tpch_q1_pricing_summary,
-        'q_emb_centroid_per_label': q_emb_centroid_per_label,
         'q_pii_redaction': q_pii_redaction,
         'q_repetition_stats': q_repetition_stats,
         'q_source_quality_gate': q_source_quality_gate,
@@ -5827,24 +5313,13 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_hash_split': q_hash_split,
         'q_lang_id': q_lang_id,
         'q_quality_scores': q_quality_scores,
-        'q_rollup_orders': q_rollup_orders,
-        'q_event_percentiles': q_event_percentiles,
-        'q_j3_semi_join': q_j3_semi_join,
-        'q_cube_events': q_cube_events,
-        'q_a8_corpus_stats': q_a8_corpus_stats,
-        'q_d1_content_hash': q_d1_content_hash,
         'q_url_canonicalization': q_url_canonicalization,
-        'q_set_ops': q_set_ops,
-        'q_a7_distinct_filter_values': q_a7_distinct_filter_values,
         'q_f1_size_reject': q_f1_size_reject,
         'q_j4_status_projection': q_j4_status_projection,
         'q_d3_destructive_dedup': q_d3_destructive_dedup,
-        'q_stratified_sample': q_stratified_sample,
         'q_token_counts': q_token_counts,
         'q_fingerprint': q_fingerprint,
         'q_skew_salted_counts': q_skew_salted_counts,
-        'q_j1_anti_join': q_j1_anti_join,
-        'q_w3_topk_events': q_w3_topk_events,
         'q_url_filter': q_url_filter,
         'q_epoch_upsample': q_epoch_upsample,
         'q_shuffle_shards': q_shuffle_shards,

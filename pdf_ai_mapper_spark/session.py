@@ -52,7 +52,7 @@ def cluster_spark_conf() -> dict[str, str]:
     tasks on the very host contention it is meant to dodge.
 
     - speculation: re-launches straggler tasks. The round-7 drift A/B
-      (BENCH/DRIFT_AB_r7.md) measured how badly many-short-stage plans
+      (interleaved runs) measured how badly many-short-stage plans
       (the near-dup family) degrade under task-level contention —
       every stage barrier waits for its slowest task, so p99 task
       latency compounds per stage. On a 1000-executor cluster the

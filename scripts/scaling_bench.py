@@ -14,8 +14,9 @@ documents the host ceiling (32 workers cannot get 32 free cores here).
 MinHash (the shuffle-heaviest operator) is measured at 8→32 as the
 adversarial case.
 
-Writes BENCH/SCALING_RUN.md (raw sweep output; BENCH/BASELINE.md is
-the hand-curated analysis and must not be clobbered). Usage:
+Writes .perfbench/SCALING_RUN.md (raw sweep output; ``--pair`` appends
+to .perfbench/PAIR_RUN.md instead), under the git-ignored directory
+perfbench also writes to. Usage:
     python scripts/scaling_bench.py [--rows 80000] [--repeats 2]
 
 Load-gated (VERDICT r2 #1/#6): each level starts only after a bounded
@@ -37,6 +38,7 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+OUT_DIR = os.path.join(REPO, '.perfbench')
 PAIRS = [(2, 8), (4, 16), (8, 32)]
 MINHASH_LEVELS = (8, 32)
 
@@ -128,7 +130,7 @@ def _pair_run(args) -> None:
     in a fresh JVM. The paired design cancels slow ambient drift that
     sequential sweeps alias into the efficiency ratio — per-round
     efficiency is computed from two adjacent-in-time runs. Appends a
-    section to BENCH/PAIR_RUN.md with per-child load readings."""
+    section to .perfbench/PAIR_RUN.md with per-child load readings."""
     lo, hi = args.pair
     tmp = tempfile.mkdtemp(prefix='pam_pairs_')
     corpus_path = os.path.join(tmp, 'web_pages')
@@ -181,14 +183,13 @@ def _pair_run(args) -> None:
         f"| {r['efficiency']:.2f} |"
         for i, r in enumerate(rounds)
     ]
-    path = os.path.join(REPO, 'BENCH', 'PAIR_RUN.md')
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    path = os.path.join(OUT_DIR, 'PAIR_RUN.md')
+    os.makedirs(OUT_DIR, exist_ok=True)
     header_needed = not os.path.exists(path)
     with open(path, 'a') as f:
         if header_needed:
-            f.write('# BENCH/PAIR_RUN — interleaved N↔4N pair evidence\n'
-                    '(auto-generated, appended per run; see '
-                    'BENCH/BASELINE.md for analysis)\n')
+            f.write('# PAIR_RUN — interleaved N↔4N pair evidence\n'
+                    '(auto-generated, appended per run)\n')
         f.write('\n'.join(lines) + '\n')
     print(f'appended {path}')
 
@@ -246,8 +247,7 @@ def main() -> None:
     shutil.rmtree(tmp, ignore_errors=True)
 
     lines = [
-        '# BENCH/SCALING_RUN — raw N→4N sweep (auto-generated;',
-        '# BENCH/BASELINE.md holds the curated analysis)',
+        '# SCALING_RUN — raw N→4N sweep (auto-generated)',
         '',
         'North metric (BASELINE.json): documents/sec extraction throughput,',
         '≥0.8 scaling efficiency from N to 4N executors. Sandbox protocol:',
@@ -313,8 +313,8 @@ def main() -> None:
         'dedup join (whose build side is a narrow aggregate), bucketed',
         'output. The plan audit (PLANS.md) shows the shuffle inventory.',
     ]
-    path = os.path.join(REPO, 'BENCH', 'SCALING_RUN.md')
-    os.makedirs(os.path.dirname(path), exist_ok=True)
+    path = os.path.join(OUT_DIR, 'SCALING_RUN.md')
+    os.makedirs(OUT_DIR, exist_ok=True)
     with open(path, 'w') as f:
         f.write('\n'.join(lines) + '\n')
     print(f'wrote {path}')

@@ -1,5 +1,5 @@
 """Shared test fixtures: one session-scoped SparkSession (local[4] for
-test latency; bench uses local[$SPARK_GRAFT_CPUS])."""
+test latency; perfbench uses local[nproc])."""
 
 from __future__ import annotations
 

@@ -82,6 +82,7 @@ def test_dedup_against_output_anti_join(spark, outdir):
                        outdir, CFG, dedup_against_output=True)
     out = cp.read_output(spark, outdir)
     assert s['rows_in'] == 30          # only the 30 genuinely new rows
+    assert s['resumed_skipped_buckets'] == 0  # incremental mode skips none
     assert out.count() == 90
     assert out.groupBy('url').count().filter('count > 1').count() == 0
 
