@@ -10,8 +10,8 @@ backed by the Spark engine instead of the single-node processor:
                  thread at document_service.py:154-162 becomes a
                  synchronous batched ingest — on a cluster, uploads
                  land in the streaming inbox instead)
-- status       → ``pipeline.with_status`` over the output table
-                 (status.py:16-47)
+- status       → url + categories of the output table, status from
+                 the categories (status.py:16-47)
 - search       → ``operators.search.search`` + structured-filter
                  resolution (search.py:17-69, search_engine.py:150-190)
 - categories / recategorize / recategorize_with_clusters /
@@ -41,7 +41,7 @@ from .operators.categorize import (category_dimension, fit_kmeans_categories,
                                    fit_lda_categories)
 from .operators.dedup import dedup_exact
 from .operators.search import search as search_op
-from .pipeline import run_extraction, with_status
+from .pipeline import run_extraction
 
 # reference upload.py:29 — plus .html/.htm, the capability this engine
 # adds (the reference rejects them; documented divergence)
@@ -64,22 +64,10 @@ class MapperAPI:
         return os.path.join(self.base_path, '_structured_categories')
 
     def _read_output(self) -> DataFrame | None:
-        from pyspark.errors import AnalysisException
-        try:
-            return cp.read_output(self.spark, self.base_path)
-        except AnalysisException as e:
-            if cp.is_missing_path_error(e):
-                return None
-            raise
+        return cp.read_or_none(cp.read_output, self.spark, self.base_path)
 
     def _read_sidecar(self, path: str) -> DataFrame | None:
-        from pyspark.errors import AnalysisException
-        try:
-            return self.spark.read.parquet(path)
-        except AnalysisException as e:
-            if cp.is_missing_path_error(e):
-                return None
-            raise
+        return cp.read_or_none(self.spark.read.parquet, path)
 
     def _docs_with_categories(self) -> DataFrame | None:
         out = self._read_output()
@@ -145,7 +133,7 @@ class MapperAPI:
             response['structured_categories'] = structured
         if docs is None:
             return response
-        page = with_status(docs).select('url', 'status', 'categories')
+        page = docs.select('url', 'categories')
         response['document_count'] = page.count()
         page = page.orderBy('url')
         if offset:

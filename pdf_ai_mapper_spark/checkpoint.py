@@ -5,10 +5,10 @@ The reference batches JSON index writes behind a pending-save flag
 snapshot-style commits with per-bucket lineage (SURVEY.md §4.3):
 
 - Output is laid out in ``output_buckets`` url-hash buckets
-  (``bucket = pmod(xxhash64(url), B)``), written with dynamic
-  partition overwrite — each bucket commit is atomic at the
-  directory level (Iceberg snapshot commit on real clusters; the
-  parquet layout here is Iceberg-shaped).
+  (``bucket_of(url, B)``), written with dynamic partition
+  overwrite — each bucket commit is atomic at the directory level
+  (Iceberg snapshot commit on real clusters; the parquet layout here
+  is Iceberg-shaped).
 - ``_checkpoints`` parquet records, per committed bucket:
   run id, rows in/out, error-row count, commit timestamp.
 - A resumed run reads the committed bucket set and processes only the
@@ -21,7 +21,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 CHECKPOINT_SCHEMA = ('run_id string, bucket int, rows_in long, rows_out long, '
@@ -34,6 +34,12 @@ def checkpoint_path(output_path: str) -> str:
 
 def data_path(output_path: str) -> str:
     return os.path.join(output_path, 'data')
+
+
+def bucket_of(key, n_buckets: int) -> Column:
+    """The layout's bucket of ``key`` (a column or column name):
+    ``pmod(xxhash64(key), n_buckets)`` as int."""
+    return F.pmod(F.xxhash64(key), F.lit(n_buckets)).cast('int')
 
 
 def is_missing_path_error(e: Exception) -> bool:
@@ -54,16 +60,23 @@ def is_missing_path_error(e: Exception) -> bool:
             or 'Path does not exist' in s)
 
 
-def committed_buckets(spark: SparkSession, output_path: str) -> set[int]:
+def read_or_none(read, *args) -> DataFrame | None:
+    """``read(*args)``, or None when it fails only because the path does
+    not exist yet (a first run). Every other error re-raises."""
     from pyspark.errors import AnalysisException
-    cp = checkpoint_path(output_path)
     try:
-        rows = spark.read.parquet(cp).select('bucket').distinct().collect()
+        return read(*args)
     except AnalysisException as e:
-        if is_missing_path_error(e):  # first run: no checkpoint table yet
-            return set()
+        if is_missing_path_error(e):
+            return None
         raise
-    return {r['bucket'] for r in rows}
+
+
+def committed_buckets(spark: SparkSession, output_path: str) -> set[int]:
+    cps = read_or_none(spark.read.parquet, checkpoint_path(output_path))
+    if cps is None:  # first run: no checkpoint table yet
+        return set()
+    return {r['bucket'] for r in cps.select('bucket').distinct().collect()}
 
 
 def append_checkpoints(spark: SparkSession, output_path: str,
@@ -90,7 +103,7 @@ def new_run_id() -> str:
 # content anti-join makes retries drop already-written rows, the
 # counters would stay wrong forever.  The fix is a tiny intent marker:
 #
-#   write _intents/<run_id>.json  (carries the per-bucket rows_in map)
+#   write _intents/<run_id>.json  (holds only the run_id)
 #   → parquet append job commits
 #   → append_checkpoints
 #   → remove the marker
@@ -98,24 +111,23 @@ def new_run_id() -> str:
 # ``reconcile_intents`` (called at the start of every run) finds
 # orphaned markers and rebuilds the missing checkpoint entries by
 # scanning ONLY the crashed run's rows (run_id + bucket + is_error —
-# three narrow columns, column-pruned).  Normal startup cost is one
-# listdir.  On a real cluster this marker is a row in a driver-side
-# run-state table next to the Iceberg snapshot log.
+# three narrow columns, column-pruned); rows_in = rows_out, as
+# ``transform`` keeps every row.  Older markers that also carry a
+# per-bucket rows_in map stay readable; the map is ignored.  Normal
+# startup cost is one listdir.  On a real cluster this marker is a row
+# in a run-state table next to the Iceberg snapshot log.
 
 def intents_path(output_path: str) -> str:
     return os.path.join(output_path, '_intents')
 
 
-def write_intent(output_path: str, run_id: str,
-                 rows_in: dict[int, int]) -> None:
+def write_intent(output_path: str, run_id: str) -> None:
     import json
     d = intents_path(output_path)
     os.makedirs(d, exist_ok=True)
     tmp = os.path.join(d, f'.{run_id}.tmp')
     with open(tmp, 'w') as f:
-        json.dump({'run_id': run_id,
-                   'rows_in': {str(k): int(v) for k, v in rows_in.items()}},
-                  f)
+        json.dump({'run_id': run_id}, f)
     os.rename(tmp, os.path.join(d, f'{run_id}.json'))  # atomic publish
 
 
@@ -146,19 +158,15 @@ def reconcile_intents(spark: SparkSession, output_path: str) -> int:
     reconciled.  Idempotent: a marker whose entries already exist (the
     crash hit between append_checkpoints and clear_intent) is simply
     cleared."""
-    from pyspark.errors import AnalysisException
     intents = pending_intents(output_path)
     if not intents:
         return 0
 
     def _run_ids(path: str) -> set[str]:
-        try:
-            return {r['run_id'] for r in spark.read.parquet(path)
-                    .select('run_id').distinct().collect()}
-        except AnalysisException as e:
-            if is_missing_path_error(e):
-                return set()
-            raise
+        df = read_or_none(spark.read.parquet, path)
+        if df is None:
+            return set()
+        return {r['run_id'] for r in df.select('run_id').distinct().collect()}
 
     counted = _run_ids(checkpoint_path(output_path))
     written = _run_ids(data_path(output_path))
@@ -166,7 +174,6 @@ def reconcile_intents(spark: SparkSession, output_path: str) -> int:
     for intent in intents:
         rid = intent['run_id']
         if rid in written and rid not in counted:
-            rows_in = {int(k): v for k, v in intent.get('rows_in', {}).items()}
             stats = (spark.read.parquet(data_path(output_path))
                      .filter(F.col('run_id') == rid)
                      .groupBy('bucket')
@@ -175,8 +182,8 @@ def reconcile_intents(spark: SparkSession, output_path: str) -> int:
                      .collect())
             append_checkpoints(spark, output_path, [
                 {'run_id': rid, 'bucket': int(r['bucket']),
-                 'rows_in': int(rows_in.get(int(r['bucket']), r['out'])),
-                 'rows_out': int(r['out']), 'error_rows': int(r['err'])}
+                 'rows_in': int(r['out']), 'rows_out': int(r['out']),
+                 'error_rows': int(r['err'])}
                 for r in stats])
             fixed += 1
         clear_intent(output_path, rid)
@@ -223,20 +230,17 @@ def recover_swap(data: str) -> None:
             return
 
 
-def compact_output(spark: SparkSession, output_path: str,
-                   files_per_bucket: int = 1) -> dict:
+def compact_output(spark: SparkSession, output_path: str) -> dict:
     """Small-file compaction for the bucketed batch layout.
 
     Every append-mode run (incremental batches via
     ``run_extraction(dedup_against_output=True)``) adds ≥1 file per
     touched bucket, so file count grows linearly with runs — at
     cluster scale each read then pays one open()+footer parse per tiny
-    file. Rewrites each bucket into ``files_per_bucket`` files
-    (repartition on (bucket, url-hash-salt) so a bucket can also be
-    SPLIT into several right-sized files), verifies the row count,
-    then atomically swaps directories. The lineage table is untouched:
-    compaction moves bytes, not rows, so resume semantics and
-    counters stay valid.
+    file. Rewrites each bucket into one file (repartition on bucket),
+    verifies the row count, then atomically swaps directories. The
+    lineage table is untouched: compaction moves bytes, not rows, so
+    resume semantics and counters stay valid.
 
     On a real cluster this is Iceberg's rewrite-data-files snapshot
     commit; the local-fs stand-in is write-to-sibling + rename swap,
@@ -248,10 +252,8 @@ def compact_output(spark: SparkSession, output_path: str,
     files_before = len(df.inputFiles())
     n_before = df.count()
 
-    k = max(1, files_per_bucket)
     n_buckets = df.select('bucket').distinct().count()
-    parts = df.repartition(max(1, n_buckets * k), F.col('bucket'),
-                           F.pmod(F.xxhash64('url'), F.lit(k)))
+    parts = df.repartition(max(1, n_buckets), F.col('bucket'))
     tmp = data + '.compact_tmp'
     parts.write.partitionBy('bucket').mode('overwrite').parquet(tmp)
 
@@ -363,9 +365,7 @@ def upsert_output(spark: SparkSession, output_path: str,
     data = data_path(output_path)
     recover_upsert(data)
     tmp, _old, intent = _upsert_paths(data)
-    b = batch.withColumn(
-        'bucket', F.pmod(F.xxhash64(F.col(key_col)),
-                         F.lit(n_buckets)).cast('int'))
+    b = batch.withColumn('bucket', bucket_of(key_col, n_buckets))
     affected = sorted(r['bucket']
                       for r in b.select('bucket').distinct().collect())
     if not affected:

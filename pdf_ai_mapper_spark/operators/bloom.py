@@ -149,7 +149,10 @@ def might_contain_col(df: DataFrame, key_col: str, bitmap: bytes,
 
 def release_blooms(df: DataFrame) -> None:
     """Unpersist the bitmap broadcasts behind a ``might_contain_col`` /
-    ``bloom_split`` result (mirrors ``dedup.release``)."""
+    ``bloom_split`` result, and the tagged frame ``bloom_split``
+    persisted (mirrors ``dedup.release``)."""
+    for tagged in getattr(df, '_bloom_persisted', ()):
+        tagged.unpersist()
     for bc in getattr(df, '_bloom_broadcasts', ()):
         bc.unpersist()
 
@@ -159,18 +162,18 @@ def bloom_split(df: DataFrame, key_col: str,
     """(definite_new, maybe_present) split of ``df`` by Bloom
     membership of ``key_col``. ``definite_new`` is exact (no false
     negatives by construction); ``maybe_present`` needs the exact
-    join. Both sides keep the original schema and carry the broadcast
-    handle for :func:`release_blooms`.
+    join. Both sides keep the original schema and carry the handles
+    for :func:`release_blooms`.
 
-    NB the two branches are filters over ONE tagged plan — a consumer
-    that unions them back and runs multiple actions re-evaluates the
-    source per branch per action unless it persists the tagged frame;
-    ``run_extraction(bloom_prefilter=True)`` does exactly that (the
-    incremental BATCH is the small side — the committed corpus is the
-    side that must never be cached or shuffled)."""
-    tagged = might_contain_col(df, key_col, bitmap)
+    The two branches are filters over ONE tagged plan, persisted here:
+    a consumer that unions them back and runs several actions would
+    otherwise re-evaluate the source and the Bloom UDF per branch per
+    action. Split only the small side (the incremental batch) — the
+    committed corpus must never be cached or shuffled."""
+    tagged = might_contain_col(df, key_col, bitmap).persist()
     fresh = tagged.filter(~F.col('__bloom_maybe')).drop('__bloom_maybe')
     maybe = tagged.filter(F.col('__bloom_maybe')).drop('__bloom_maybe')
-    fresh._bloom_broadcasts = tagged._bloom_broadcasts
-    maybe._bloom_broadcasts = tagged._bloom_broadcasts
+    for side in (fresh, maybe):
+        side._bloom_broadcasts = tagged._bloom_broadcasts
+        side._bloom_persisted = [tagged]
     return fresh, maybe

@@ -101,8 +101,7 @@ def _affine_params(num_hashes: int) -> list[tuple[int, int]]:
 
 
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
-                       num_hashes: int = 64, k: int = 3,
-                       impl: str = 'numpy') -> DataFrame:
+                       num_hashes: int = 64, k: int = 3) -> DataFrame:
     """(id, sig: array<bigint>) — num_hashes min-hash values per doc.
 
     Entirely map-side — NO shuffle: shingles and their base hashes are
@@ -135,23 +134,11 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     base = F.transform(F.col('shingles'),
                        lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE31)))
     shingled = shingled.withColumn('__h', base)
-
-    if impl == 'numpy':
-        # the 64 affine-min reductions as one vectorized numpy batch op
-        # (Arrow-transferred array<long> in/out) — the interpreted HOF
-        # evaluation of 64 transform+array_min passes is measurably
-        # slower; values are bit-identical (same params, i64 math)
-        return shingled.select(
-            id_col, _numpy_sig_udf(num_hashes)(F.col('__h')).alias('sig'))
-
-    def _perm(a: int, b: int):
-        # closure factory: a plain lambda with default args would be
-        # bound by PySpark as a 3-arg higher-order lambda
-        return lambda h: F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MERSENNE31))
-
-    slots = [F.array_min(F.transform(F.col('__h'), _perm(a, b)))
-             for (a, b) in _affine_params(num_hashes)]
-    return shingled.select(id_col, F.array(*slots).alias('sig'))
+    # the 64 affine-min reductions as one vectorized numpy batch op
+    # (Arrow-transferred array<long> in/out) — the interpreted HOF
+    # evaluation of 64 transform+array_min passes is measurably slower
+    return shingled.select(
+        id_col, _numpy_sig_udf(num_hashes)(F.col('__h')).alias('sig'))
 
 
 def _numpy_sig_udf(num_hashes: int):
@@ -257,15 +244,12 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
 # --------------------------------------------------------------- SimHash
 
 def with_simhash(df: DataFrame, id_col: str, text_col: str,
-                 bits: int = 64, impl: str = 'numpy') -> DataFrame:
+                 bits: int = 64) -> DataFrame:
     """64-bit SimHash per doc from token hashes (Charikar, STOC 2002).
 
-    numpy impl (default): token hashes are a per-row array (native
-    xxhash64 transform — no explode, no shuffle), and the 64 signed
-    bit-sums + sign-pack run as one vectorized numpy batch op. The
-    native impl (explode + 64 sum aggregations, map-side combinable)
-    remains for environments without Arrow; both produce identical
-    values."""
+    Token hashes are a per-row array (native xxhash64 transform — no
+    explode, no shuffle), and the 64 signed bit-sums + sign-pack run as
+    one vectorized numpy batch op."""
     # spread + cheap pushable row-empty gate (rlike '\S' ⟺ at least
     # one non-empty token under the same Java \s class the split
     # uses): same round-8 rationale as minhash_signatures — the
@@ -278,25 +262,9 @@ def with_simhash(df: DataFrame, id_col: str, text_col: str,
         min_bytes_per_part=SPREAD_MIN_BYTES_PER_PART)
     toks = F.filter(F.split(F.lower(F.col(text_col)), r'\s+'),
                     lambda t: F.length(t) > 0)
-    if impl == 'numpy':
-        hashes = F.transform(toks, lambda t: F.xxhash64(t))
-        return (df.select(id_col, hashes.alias('__h'))
-                .select(id_col, _numpy_simhash_udf(bits)(F.col('__h')).alias('simhash')))
-
-    ex = (df.select(id_col, F.explode_outer(toks).alias('tok'))
-            .filter(F.col('tok').isNotNull())
-            .withColumn('h', F.xxhash64('tok')))
-    aggs = [
-        F.sum(F.shiftright('h', b).bitwiseAND(F.lit(1)) * 2 - 1).alias(f'b{b}')
-        for b in range(bits)
-    ]
-    sums = ex.groupBy(id_col).agg(*aggs)
-    sim = None
-    for b in range(bits):
-        term = F.when(F.col(f'b{b}') >= 0,
-                      F.shiftleft(F.lit(1).cast('long'), b)).otherwise(F.lit(0).cast('long'))
-        sim = term if sim is None else sim.bitwiseOR(term)
-    return sums.select(id_col, sim.alias('simhash'))
+    hashes = F.transform(toks, lambda t: F.xxhash64(t))
+    return (df.select(id_col, hashes.alias('__h'))
+            .select(id_col, _numpy_simhash_udf(bits)(F.col('__h')).alias('simhash')))
 
 
 def _numpy_simhash_udf(bits: int):

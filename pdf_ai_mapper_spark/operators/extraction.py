@@ -213,7 +213,6 @@ def needs_salt(df: DataFrame, threshold: int) -> bool:
 
 def extracted(df: DataFrame,
               payload_col: str = 'html',
-              keep_payload: bool = False,
               partitions: int | None = None,
               preprocess_mode: str = 'deterministic',
               auto_salt: bool = True,
@@ -252,7 +251,7 @@ def extracted(df: DataFrame,
         # occupied partitions (measured: 8 requested → 4 non-empty);
         # the raw 64-bit hash distributes uniformly
         out = out.repartition(partitions, F.xxhash64(*key_cols))
-    out = (
+    return (
         out
         .withColumn('content_hash', F.md5(F.col(payload_col)))  # D1: F.md5 == hashlib.md5 hex
         .withColumn('__ep', fused(F.col(payload_col)))
@@ -263,7 +262,5 @@ def extracted(df: DataFrame,
                     F.col('extracted_text').startswith('Error'))  # F3
         .withColumn('error_code', error_code_col(F.col('extracted_text')))
         .withColumn('processed_at', F.current_timestamp())
+        .drop(payload_col)  # prune the binary before any shuffle
     )
-    if not keep_payload:
-        out = out.drop(payload_col)  # prune the binary before any shuffle
-    return out

@@ -203,7 +203,6 @@ def search(df: DataFrame, query: str,
            categories: list[str] | None = None,
            text_col: str = 'extracted_text',
            k: int | None = None,
-           dedup: bool = True,
            cfg=DEFAULT_CONFIG) -> DataFrame:
     """Full search pipeline (reference search_engine.py:39-84):
     driver-side query stem → filters → dedup → score → snippet → top-k.
@@ -217,7 +216,7 @@ def search(df: DataFrame, query: str,
     out = df
     if categories and 'categories' in df.columns:
         out = category_filter(out, categories)
-    if dedup and 'content_hash' in df.columns:
+    if 'content_hash' in df.columns:
         out = (with_dup_rank(out)
                .filter(F.col('content_hash').isNull() | (F.col('dup_rank') == 1))
                .drop('dup_rank'))

@@ -3,7 +3,7 @@
 Stages (one batch job — the Spark re-expression of the reference's
 upload→extract→preprocess→dedup loop):
 
-    scan input → bucket = pmod(xxhash64(url), B)
+    scan input → bucket = checkpoint.bucket_of(url, B)
                → drop already-committed buckets (resume)
                → fused extract+preprocess UDF → md5 → dedup rank
                  (no payload repartition — scan split sizing already
@@ -12,6 +12,12 @@ upload→extract→preprocess→dedup loop):
                  (dynamic partition overwrite → atomic per-bucket
                   commits, crash-safe resume)
                → append per-bucket lineage counters to _checkpoints
+
+Lineage counters: a native pre-pass counts ``rows_in`` per bucket.
+``transform`` keeps every row, so each bucket's ``rows_out`` is that
+same count; the write job observes only the error rows per touched
+bucket and one total, and a total that differs from the pre-pass
+fails the run before any counter is recorded.
 
 Cited reference behavior: anti-join dedup replaces
 ``document_storage.py:86-103``; batched commit replaces the
@@ -37,8 +43,7 @@ def transform(input_df: DataFrame, run_id: str,
               cfg: EngineConfig = DEFAULT_CONFIG,
               partitions: int | None = None) -> DataFrame:
     """The pure (no-IO) pipeline body: input web_pages → output rows."""
-    out = input_df.withColumn(
-        'bucket', F.pmod(F.xxhash64('url'), F.lit(cfg.output_buckets)).cast('int'))
+    out = input_df.withColumn('bucket', cp.bucket_of('url', cfg.output_buckets))
     out = extracted(out, payload_col='html', partitions=partitions,
                     preprocess_mode=cfg.preprocess_mode)
     # first-seen duplicate flag WITHOUT shuffling the heavy text rows:
@@ -88,9 +93,16 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
     rows bypass the anti-join shuffle entirely — only the (dup_rate +
     fpp) slice of the batch shuffles. Result is byte-identical to the
     plain anti-join (operators/bloom.py); on an over-cap corpus the
-    bloom build raises and we fall back to the plain join."""
+    bloom build raises and we fall back to the plain join.
+
+    Raises RuntimeError after the write when it saw a different row
+    count than the pre-pass (the input or the committed table changed
+    between the two jobs). No counters are recorded then, so the
+    usual recovery heals the run: resume mode redoes the uncounted
+    buckets, and append mode reconciles the pending intent from the
+    data at the next run's start."""
     run_id = run_id or cp.new_run_id()
-    bucket = F.pmod(F.xxhash64('url'), F.lit(cfg.output_buckets)).cast('int')
+    bucket = cp.bucket_of('url', cfg.output_buckets)
 
     # heal any prior run that crashed between its data append and its
     # checkpoint append (exactly-once counters; see cp.reconcile_intents)
@@ -109,125 +121,87 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
     if done:
         todo_df = todo_df.filter(~bucket.isin(sorted(done)))
 
-    cleanup_dfs: list = []  # bloom-path caches/broadcasts, released on exit
-    cleanup_bcs: list = []
-
-    def _release_bloom_state() -> None:
-        for d in cleanup_dfs:
-            d.unpersist()
-        for b in cleanup_bcs:
-            b.unpersist()
-
-    # everything from the bloom split through the final action runs
-    # under try/finally: any failing action (counters collect, observe,
-    # the write itself) would otherwise leak the persisted tagged batch
-    # and keep the bloom bitmap pinned on every executor for the
-    # session lifetime (ADVICE r3)
+    committed = (cp.read_or_none(cp.read_output, spark, output_path)
+                 if dedup_against_output else None)
+    fresh = None  # the bloom's definite-new side, when a bloom was built
+    entries: list[dict] = []
+    # the bloom split persists the tagged batch and pins its bitmap on
+    # every executor: release both whichever action fails (ADVICE r3)
     try:
-        if dedup_against_output:
-            from pyspark.errors import AnalysisException
-            try:
-                committed = cp.read_output(spark, output_path)
-            except AnalysisException as e:
-                if not cp.is_missing_path_error(e):
-                    raise  # corrupt/permission-broken output must surface
-                committed = None  # first run — nothing committed yet
-            if committed is not None:
-                # the raw input has no content_hash yet — derive it for the
-                # anti-join only (md5 is cheap; the payload stays local)
-                hashes = (committed.select('content_hash').distinct()
-                          .withColumnRenamed('content_hash', '__h'))
-                todo_df = todo_df.withColumn('__h', F.md5(F.col('html')))
-                if bloom_prefilter:
-                    from .operators.bloom import build_bloom, might_contain_col
-                    try:
-                        bitmap = build_bloom(hashes, '__h')
-                    except ValueError:
-                        bitmap = None  # over the broadcast cap → plain join
-                    if bitmap is not None:
-                        # persist the tagged BATCH once (the small, bounded
-                        # side; the committed corpus stays uncached and
-                        # unshuffled): both union branches and both
-                        # downstream actions (counters + write) would
-                        # otherwise re-scan the input and re-run md5 + the
-                        # bloom UDF per branch per action
-                        tagged = might_contain_col(todo_df, '__h',
-                                                   bitmap).persist()
-                        fresh = (tagged.filter(~F.col('__bloom_maybe'))
-                                 .drop('__bloom_maybe'))
-                        maybe = (tagged.filter(F.col('__bloom_maybe'))
-                                 .drop('__bloom_maybe'))
-                        cleanup_dfs = [tagged]
-                        cleanup_bcs = tagged._bloom_broadcasts
-                        todo_df = fresh.unionByName(
-                            maybe.join(hashes, on='__h', how='left_anti'))
-                    else:
-                        todo_df = todo_df.join(hashes, on='__h',
-                                               how='left_anti')
-                else:
-                    todo_df = todo_df.join(hashes, on='__h', how='left_anti')
-                todo_df = todo_df.drop('__h')
+        if committed is not None:
+            # the raw input has no content_hash yet — derive it for the
+            # anti-join only (md5 is cheap; the payload stays local)
+            hashes = (committed.select(F.col('content_hash').alias('__h'))
+                      .distinct())
+            todo_df = todo_df.withColumn('__h', F.md5(F.col('html')))
+            if bloom_prefilter:
+                from .operators import bloom
+                try:
+                    bitmap = bloom.build_bloom(hashes, '__h')
+                except ValueError:
+                    bitmap = None  # over the broadcast cap → plain join
+                if bitmap is not None:
+                    fresh, todo_df = bloom.bloom_split(todo_df, '__h', bitmap)
+            todo_df = todo_df.join(hashes, on='__h', how='left_anti')
+            if fresh is not None:
+                todo_df = fresh.unionByName(todo_df)
+            todo_df = todo_df.drop('__h')
 
         # cheap native pass for per-bucket input counters (url column
         # only — the parquet scan prunes the payload)
         rows_in = {r['bucket']: r['n'] for r in
                    todo_df.select(bucket.alias('bucket'))
                    .groupBy('bucket').agg(F.count('*').alias('n')).collect()}
-        if not rows_in:
-            return {'run_id': run_id, 'buckets': 0, 'rows_in': 0,
-                    'rows_out': 0, 'error_rows': 0,
-                    'resumed_skipped_buckets': len(done)}
+        if rows_in:
+            result = transform(todo_df, run_id, cfg)
+            # transform keeps every row, so rows_out = rows_in per
+            # bucket; the write job observes only what it alone knows —
+            # the error rows per touched bucket — plus one total that
+            # proves the 1:1 claim (touched + 1 aggregates, evaluated
+            # map-side on the write itself: no post-write re-scan)
+            from pyspark.sql import Observation
+            obs = Observation(f'lineage-{run_id}')
+            result = result.observe(
+                obs, F.count(F.lit(1)).alias('rows'),
+                *[F.count_if((F.col('bucket') == b) & F.col('is_error'))
+                  .alias(f'err_{b}') for b in sorted(rows_in)])
+            # write mode per use case:
+            # - resume of the SAME input (default): dynamic partition
+            #   overwrite — a bucket is either committed or fully
+            #   rewritten, crash-safe;
+            # - incremental batches (dedup_against_output): append — new
+            #   rows join existing buckets, and the content anti-join
+            #   above makes a crashed run self-healing (already-written
+            #   rows are dropped from the retry, so the append never
+            #   duplicates). The intent marker written just before the
+            #   append closes the remaining counter gap: a crash after
+            #   the data commits but before the checkpoint append is
+            #   reconciled at the next run's start.
+            writer = result.write.partitionBy('bucket')
+            if dedup_against_output:
+                cp.write_intent(output_path, run_id)
+                writer = writer.mode('append')
+            else:
+                writer = (writer.option('partitionOverwriteMode', 'dynamic')
+                          .mode('overwrite'))
+            writer.parquet(cp.data_path(output_path))
 
-        result = transform(todo_df, run_id, cfg)
-
-        # lineage counters ride ON the write job via df.observe() — the
-        # earlier post-write re-scan read the whole output table back
-        # (run_id is not a partition key, so at 100 TB that is a full
-        # footer scan). Per-bucket conditional sums are bounded by
-        # cfg.output_buckets, evaluated map-side at zero extra passes.
-        from pyspark.sql import Observation
-        obs = Observation(f'lineage-{run_id}')
-        buckets_todo = sorted(rows_in)
-        metrics = []
-        for b in buckets_todo:
-            metrics.append(F.sum(F.when(F.col('bucket') == b, 1).otherwise(0))
-                           .cast('long').alias(f'out_{b}'))
-            metrics.append(
-                F.sum(F.when((F.col('bucket') == b) & F.col('is_error'), 1)
-                      .otherwise(0)).cast('long').alias(f'err_{b}'))
-        result = result.observe(obs, metrics[0], *metrics[1:])
-        # write mode per use case:
-        # - resume of the SAME input (default): dynamic partition
-        #   overwrite — a bucket is either committed or fully rewritten,
-        #   crash-safe;
-        # - incremental batches (dedup_against_output): append — new rows
-        #   join existing buckets, and the content anti-join above makes a
-        #   crashed run self-healing (already-written rows are dropped
-        #   from the retry, so the append never duplicates). The intent
-        #   marker written just before the append closes the remaining
-        #   counter gap: a crash after the data commits but before the
-        #   checkpoint append is reconciled at the next run's start.
-        if dedup_against_output:
-            cp.write_intent(output_path, run_id, rows_in)
-        writer = result.write.partitionBy('bucket')
-        if dedup_against_output:
-            writer = writer.mode('append')
-        else:
-            writer = (writer.option('partitionOverwriteMode', 'dynamic')
-                      .mode('overwrite'))
-        writer.parquet(cp.data_path(output_path))
-
-        vals = obs.get  # blocks until the write job reports its metrics
+            vals = obs.get  # blocks until the write job reports its metrics
+            if vals['rows'] != sum(rows_in.values()):
+                raise RuntimeError(
+                    f'run {run_id}: the write saw {vals["rows"]} rows but '
+                    f'the pre-pass counted {sum(rows_in.values())}; the '
+                    f'input or the committed table changed between them')
+            entries = [{'run_id': run_id, 'bucket': int(b),
+                        'rows_in': int(n), 'rows_out': int(n),
+                        'error_rows': int(vals[f'err_{b}'])}
+                       for b, n in sorted(rows_in.items())]
+            cp.append_checkpoints(spark, output_path, entries)
+            if dedup_against_output:
+                cp.clear_intent(output_path, run_id)
     finally:
-        _release_bloom_state()
-    entries = [{'run_id': run_id, 'bucket': int(b),
-                'rows_in': int(rows_in.get(b, 0)),
-                'rows_out': int(vals[f'out_{b}']),
-                'error_rows': int(vals[f'err_{b}'])}
-               for b in buckets_todo if int(vals[f'out_{b}']) > 0]
-    cp.append_checkpoints(spark, output_path, entries)
-    if dedup_against_output:
-        cp.clear_intent(output_path, run_id)
+        if fresh is not None:
+            bloom.release_blooms(fresh)
 
     return {
         'run_id': run_id,

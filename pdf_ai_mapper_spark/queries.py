@@ -2149,9 +2149,7 @@ def q_recrawl_upsert(spark, sf_dir):
     shutil.rmtree(out)
     try:
         stored = (docs.withColumn('crawl_ts', F.lit(100).cast('long'))
-                  .withColumn('bucket',
-                              F.pmod(F.xxhash64(F.col('url')), F.lit(8))
-                              .cast('int')))
+                  .withColumn('bucket', cp.bucket_of('url', 8)))
         stored.write.partitionBy('bucket').parquet(cp.data_path(out))
         upd = (docs.filter(F.col('url').cast('long') % 3 == 0)
                .withColumn('toks', F.col('toks') + 1000)
@@ -2764,8 +2762,7 @@ def q_compaction_content(spark, sf_dir):
         F.concat(F.lit('doc-'), F.col('doc_id').cast('string'))
         .alias('url'),
         'doc_id', 'text',
-        F.pmod(F.xxhash64(F.col('doc_id').cast('string')),
-               F.lit(8)).cast('int').alias('bucket'))
+        cp_mod.bucket_of(F.col('doc_id').cast('string'), 8).alias('bucket'))
     outdir = tempfile.mkdtemp(prefix='pam_q_compc_')
     shutil.rmtree(outdir)
     data = cp_mod.data_path(outdir)

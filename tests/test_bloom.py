@@ -97,5 +97,11 @@ def test_broadcast_handle_rides_and_releases(spark, keys_df):
     bitmap = build_bloom(keys_df, 'k')
     fresh, maybe = bloom_split(keys_df, 'k', bitmap)
     assert fresh._bloom_broadcasts is maybe._bloom_broadcasts
+    # the tagged frame both branches filter is persisted, so the source
+    # and the Bloom UDF run once per row across several actions
+    [tagged] = fresh._bloom_persisted
+    assert maybe._bloom_persisted == [tagged]
+    assert tagged.storageLevel.useMemory
     fresh.count(), maybe.count()
     release_blooms(fresh)  # must not raise; executor copies dropped
+    assert not tagged.storageLevel.useMemory

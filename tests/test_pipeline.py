@@ -218,11 +218,102 @@ def test_reconcile_idempotent_when_entries_exist(spark, outdir):
     entries."""
     run_extraction(spark, web_pages_df(spark, 30, num_partitions=2),
                    outdir, CFG, dedup_against_output=True, run_id='rid0')
-    cp.write_intent(outdir, 'rid0', {0: 30})   # stale marker
+    cp.write_intent(outdir, 'rid0')   # stale marker
     assert cp.reconcile_intents(spark, outdir) == 0
     assert cp.pending_intents(outdir) == []
     cps = spark.read.parquet(cp.checkpoint_path(outdir))
     assert cps.agg(F.sum('rows_out').alias('o')).collect()[0]['o'] == 30
+
+
+def _with_error_payloads(spark, n=60):
+    """Fixture pages plus rows whose extraction fails: an empty payload
+    and a truncated PDF."""
+    import pandas as pd
+    from pdf_ai_mapper_spark.fixtures.webpages import web_pages_pandas
+    pages = web_pages_pandas(n)
+    bad = pd.DataFrame({'url': ['http://err.example/empty',
+                                'http://err.example/truncated.pdf'],
+                        'warc_ts': pages['warc_ts'].iloc[:2].values,
+                        'html': [b'', b'%PDF-1.4\n1 0 obj <<'],
+                        'text': ['', ''], 'lang': ['en', 'en']})
+    return spark.createDataFrame(pd.concat([pages, bad], ignore_index=True))
+
+
+def test_error_rows_counted_per_bucket(spark, outdir):
+    """Each bucket's error_rows equals its is_error rows in the output,
+    and rows_in equals rows_out."""
+    s = run_extraction(spark, _with_error_payloads(spark), outdir, CFG)
+    out = cp.read_output(spark, outdir)
+    want = {r['bucket']: (r['n'], r['e']) for r in out.groupBy('bucket').agg(
+        F.count('*').alias('n'),
+        F.sum(F.col('is_error').cast('long')).alias('e')).collect()}
+    got = {r['bucket']: (r['rows_in'], r['rows_out'], r['error_rows'])
+           for r in spark.read.parquet(cp.checkpoint_path(outdir)).collect()}
+    assert got == {b: (n, n, e) for b, (n, e) in want.items()}
+    assert s['error_rows'] == sum(e for _, e in want.values()) >= 2
+
+
+@pytest.mark.parametrize('append', [False, True])
+def test_write_row_drift_raises_and_recovers(spark, outdir, monkeypatch,
+                                             append):
+    """A write that sees fewer rows than the pre-pass counted fails the
+    run before any counter is recorded; the next run's recovery (bucket
+    redo in resume mode, intent reconcile in append mode) leaves
+    counters that match the table."""
+    from pdf_ai_mapper_spark import pipeline
+    pages = web_pages_df(spark, 60, num_partitions=4)
+    lost = pages.select('url').first()['url']
+    real = pipeline.transform
+    monkeypatch.setattr(pipeline, 'transform', lambda df, *a, **kw: real(
+        df, *a, **kw).filter(F.col('url') != lost))
+    with pytest.raises(RuntimeError, match='the write saw 59 rows'):
+        run_extraction(spark, pages, outdir, CFG, run_id='driftrun01',
+                       dedup_against_output=append)
+    monkeypatch.undo()
+    assert cp.read_or_none(spark.read.parquet,
+                           cp.checkpoint_path(outdir)) is None
+    assert [i['run_id'] for i in cp.pending_intents(outdir)] == (
+        ['driftrun01'] if append else [])
+
+    run_extraction(spark, pages, outdir, CFG, dedup_against_output=append)
+    assert cp.pending_intents(outdir) == []
+    out = cp.read_output(spark, outdir)
+    if not append:  # in append mode the lost row's content may be a dup
+        assert out.count() == 60
+    table = {(r['run_id'], r['bucket']): r['n'] for r in
+             out.groupBy('run_id', 'bucket').count()
+             .withColumnRenamed('count', 'n').collect()}
+    cps = spark.read.parquet(cp.checkpoint_path(outdir)).collect()
+    assert {(r['run_id'], r['bucket']): r['rows_out'] for r in cps} == table
+    assert all(r['rows_in'] == r['rows_out'] for r in cps)
+
+
+def test_reconcile_reads_legacy_intent_with_rows_in_map(
+        spark, outdir, monkeypatch):
+    """Markers written before the intent held only the run_id carry a
+    per-bucket rows_in map; reconcile still reads them and counts the
+    committed rows."""
+    import json
+    import os
+
+    def dying_append(*a, **kw):
+        raise RuntimeError('injected crash before checkpoint append')
+
+    monkeypatch.setattr('pdf_ai_mapper_spark.pipeline.cp.append_checkpoints',
+                        dying_append)
+    with pytest.raises(RuntimeError, match='injected crash'):
+        run_extraction(spark, web_pages_df(spark, 30, num_partitions=2),
+                       outdir, CFG, dedup_against_output=True,
+                       run_id='legacyrun1')
+    monkeypatch.undo()
+    with open(os.path.join(cp.intents_path(outdir), 'legacyrun1.json'),
+              'w') as f:
+        json.dump({'run_id': 'legacyrun1', 'rows_in': {'0': 999}}, f)
+    assert cp.reconcile_intents(spark, outdir) == 1
+    assert cp.pending_intents(outdir) == []
+    agg = spark.read.parquet(cp.checkpoint_path(outdir)).agg(
+        F.sum('rows_in').alias('i'), F.sum('rows_out').alias('o')).collect()[0]
+    assert agg['i'] == agg['o'] == 30
 
 
 def _write_store(spark, outdir, rows, n_buckets=8):
