@@ -39,8 +39,7 @@ from . import checkpoint as cp
 from .config import DEFAULT_CONFIG, EngineConfig
 from .operators.categorize import (category_dimension, fit_kmeans_categories,
                                    fit_lda_categories)
-from .operators.dedup import dedup_exact
-from .operators.search import search as search_op
+from .operators.search import resolve_structured, search as search_op
 from .pipeline import run_extraction
 
 # reference upload.py:29 — plus .html/.htm, the capability this engine
@@ -165,23 +164,15 @@ class MapperAPI:
             return {'results': [],
                     'available_filters': self._available_filters(structured)}
 
-        wanted = list(categories or [])
-        if category_types or keywords:                      # search.py:31-42
-            for cat in structured:
-                if category_types and cat['type'] in category_types:
-                    wanted.append(cat['display_name'])
-                    continue
-                if keywords and any(kw in cat['keywords'] for kw in keywords):
-                    wanted.append(cat['display_name'])
-        wanted = sorted(set(wanted))
+        wanted = sorted(set(categories or ()).union(      # search.py:31-42
+            resolve_structured(structured, category_types, keywords)))
 
         hits = search_op(docs, query, categories=wanted or None,
                          k=k, cfg=self.cfg)
         by_name = {c['display_name']: c for c in structured}
         results = []
         for r in hits.collect():  # k rows — driver-sized by contract
-            cats = list(r['categories']) if 'categories' in hits.columns \
-                else ['Processing']
+            cats = list(r['categories'])
             item = {
                 'document_id': r['url'],
                 'filename': r['url'].rsplit('/', 1)[-1],
@@ -258,7 +249,8 @@ class MapperAPI:
 
     def cleanup_duplicates(self) -> dict:
         """POST /cleanup-duplicates/ (categories.py:167-188): D3
-        destructive dedup — survivors rewritten, count reported."""
+        destructive dedup — rows the commit flagged ``is_duplicate``
+        are dropped, survivors rewritten, count reported."""
         removed = self._cleanup_duplicates_impl()
         out = self._read_output()
         n = out.count() if out is not None else 0
@@ -271,17 +263,17 @@ class MapperAPI:
         docs = self._read_output()
         if docs is None:
             return 0
-        n_before = docs.count()
-        survivors = dedup_exact(docs)
-        n_after = survivors.count()
-        if n_after < n_before:
+        # first-seen per content hash is the flag the commit stored
+        removed = docs.filter(F.col('is_duplicate')).count()
+        if removed:
             # rewrite the full table (destructive, document_storage.py:
             # 105-138); bucketed layout preserved
             tmp = cp.data_path(self.base_path) + '.dedup_tmp'
-            survivors.write.partitionBy('bucket').mode('overwrite').parquet(tmp)
+            (docs.filter(~F.col('is_duplicate'))
+             .write.partitionBy('bucket').mode('overwrite').parquet(tmp))
             data = cp.data_path(self.base_path)
             cp.swap_dirs(data, tmp, data + '.dedup_old')
-        return n_before - n_after
+        return removed
 
     def _structured_list(self) -> list[dict]:
         dim = self._read_sidecar(self._structured_path())

@@ -338,7 +338,10 @@ def upsert_output(spark: SparkSession, output_path: str,
     (computed here with the layout's own hash), is key-unique, and
     ``order_col`` is non-null. ``n_buckets`` must equal the layout's
     bucket count — a different value scatters keys into the wrong
-    directories.
+    directories. On an engine table, ``is_duplicate`` is stored as the
+    batch gives it, never recomputed here; search and
+    ``MapperAPI.cleanup_duplicates`` trust that value as the
+    first-seen-per-content-hash flag, so the caller must keep it true.
 
     Scale shape: the affected-bucket set collects driver-side
     (≤ n_buckets ints); the stored scan is partition-pruned to those

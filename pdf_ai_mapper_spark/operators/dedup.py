@@ -1,10 +1,13 @@
 """Deduplication operators (D1-D4 + the training-data-pipeline family).
 
 Exact dedup re-expresses the reference's first-seen-wins semantics
-(``filter_manager.py:70-97`` search-time; ``document_storage.py:105-138``
+(``filter_manager.py:70-97`` at search; ``document_storage.py:105-138``
 destructive) as a rank-1 window — a single hash shuffle on
 ``content_hash`` instead of the reference's O(n²) scan.  Rows with a
-NULL hash are always kept (reference :80-82).
+NULL hash are always kept (reference :80-82).  ``dedup_exact`` is the
+operator for arbitrary frames; engine-written tables carry the same
+fact as the ``is_duplicate`` flag settled at commit time
+(``pipeline.transform``), which search and cleanup read instead.
 
 Near-dup family (MinHash+LSH, SimHash, n-gram Jaccard) is built
 entirely from native Catalyst expressions — explode / xxhash64 /
@@ -25,22 +28,14 @@ from pyspark.sql import functions as F
 
 # --------------------------------------------------------------- exact dedup
 
-def with_dup_rank(df: DataFrame,
-                  hash_col: str = 'content_hash',
-                  order_cols: tuple[str, ...] = ('warc_ts', 'url')) -> DataFrame:
-    """First-seen-wins rank per content hash (D2). Deterministic total
-    order inside each hash group via (warc_ts, url)."""
-    w = Window.partitionBy(hash_col).orderBy(*[F.col(c).asc() for c in order_cols])
-    return df.withColumn('dup_rank', F.row_number().over(w))
-
-
 def dedup_exact(df: DataFrame,
                 hash_col: str = 'content_hash',
                 order_cols: tuple[str, ...] = ('warc_ts', 'url')) -> DataFrame:
-    """Survivor set: rank-1 rows; NULL hashes exempt (reference
-    filter_manager.py:80-82)."""
-    ranked = with_dup_rank(df, hash_col, order_cols)
-    return (ranked
+    """Survivor set (D2/D3): the first-seen row per hash in
+    ``order_cols`` order (rank 1 of a row_number window); NULL hashes
+    exempt (reference filter_manager.py:80-82)."""
+    w = Window.partitionBy(hash_col).orderBy(*[F.col(c).asc() for c in order_cols])
+    return (df.withColumn('dup_rank', F.row_number().over(w))
             .filter(F.col(hash_col).isNull() | (F.col('dup_rank') == 1))
             .drop('dup_rank'))
 

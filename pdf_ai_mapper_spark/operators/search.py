@@ -2,7 +2,9 @@
 (``search_engine.py:39-145``) as one lazy DataFrame program.
 
 Stage order is hand-pinned (Catalyst cannot reorder around opaque
-UDFs — SURVEY.md §4.1): category filter → dedup rank → relevance UDF →
+UDFs — SURVEY.md §4.1): category filter → stored first-seen flag
+(``is_duplicate``, settled at commit time: no per-query window or
+shuffle) → relevance UDF →
 score>0 filter → top-k → snippet UDF (on the k winners ONLY — ranking
 never reads the snippet, so deferring it is result-identical and costs
 k computations instead of one per matching document).
@@ -12,7 +14,7 @@ distributed top-k, no global sort.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -23,12 +25,17 @@ from pyspark.sql.types import LongType, StringType
 from ..config import DEFAULT_CONFIG
 from ..kernels.query import is_valid_query, preprocess_query
 from ..kernels.relevance import generate_snippet, relevance_score
-from .dedup import with_dup_rank
 
 
 def _relevance_udf(tokens: list[str]):
     """Relevance (W1) as an Arrow pandas UDF; tokens are captured in the
-    closure (tiny — a handful of strings), shipped once per task."""
+    closure (tiny — a handful of strings), shipped once per task.
+
+    Both UDFs are marked nondeterministic only to pin the stage order:
+    otherwise Catalyst pushes ``score > 0`` below the score projection
+    (a second relevance evaluation) and the snippet projection below
+    the top-k limit (snippets per partition, and a range-partitioned
+    sort whose sampling job re-runs the scan and the UDFs)."""
     toks = list(tokens)
 
     @pandas_udf(LongType())
@@ -36,7 +43,7 @@ def _relevance_udf(tokens: list[str]):
         for texts in batches:
             yield pd.Series([relevance_score(toks, t or '') for t in texts],
                             dtype='int64')
-    return rel
+    return rel.asNondeterministic()
 
 
 def _snippet_udf(tokens: list[str], length: int, stride: int):
@@ -47,7 +54,7 @@ def _snippet_udf(tokens: list[str], length: int, stride: int):
         for texts in batches:
             yield pd.Series([generate_snippet(toks, t or '', length, stride)
                              for t in texts], dtype='object')
-    return snip
+    return snip.asNondeterministic()
 
 
 # -- native (whole-stage-codegen) relevance + snippet ------------------
@@ -152,51 +159,37 @@ def category_filter(df: DataFrame, categories: list[str] | None,
                                       F.lit([c for c in categories])))
 
 
+def resolve_structured(dim_rows: Iterable,
+                       category_types: list[str] | None = None,
+                       keywords: list[str] | None = None) -> list[str]:
+    """F5/J3: display names of the category-dimension rows (Rows or
+    dicts with type, keywords, display_name) whose type is in
+    ``category_types`` or whose keywords overlap ``keywords``
+    (reference filter_manager.py:52-68, search.py:31-42). Sorted,
+    distinct; empty when nothing matches."""
+    types, kws = set(category_types or ()), set(keywords or ())
+    return sorted({r['display_name'] for r in dim_rows
+                   if r['type'] in types or kws & set(r['keywords'] or ())})
+
+
 def structured_category_filter(df: DataFrame, cats_dim: DataFrame,
                                category_types: list[str] | None = None,
                                keywords: list[str] | None = None,
                                cat_col: str = 'categories') -> DataFrame:
-    """F5/J3: resolve type/keyword filters against the (tiny) structured
-    category dimension, then semi-join — the dimension side is
-    broadcast (reference filter_manager.py:52-68)."""
-    dim = cats_dim
-    conds = []
-    if category_types:
-        conds.append(F.col('type').isin(category_types))
-    if keywords:
-        conds.append(F.arrays_overlap(F.col('keywords'),
-                                      F.lit([k for k in keywords])))
-    if not conds:
+    """F5/J3: resolve type/keyword filters against the structured
+    category dimension, then filter with ONE native arrays_overlap
+    predicate — no explode, no shuffle, heavy rows never move. The
+    dimension is driver-built (``categorize.category_dimension``: topic
+    names, ≤ dozens), so it is collected. No filter → ``df`` as is; no
+    matching name → no rows."""
+    if not (category_types or keywords):
         return df
-    cond = conds[0]
-    for c in conds[1:]:
-        cond = cond | c
-    wanted = dim.filter(cond).select(F.col('display_name').alias('__cat'))
-    # the dimension is tiny (driver-built: topic names, ≤ dozens) —
-    # when it fits in a literal list the whole filter is ONE native
-    # arrays_overlap predicate: no explode, no shuffle, heavy rows
-    # never move. Guarded fallback for an unexpectedly large dim:
-    # explode ONLY the key columns and semi-join the matching keys
-    # back, so the wide rows still never ride an explode/dedup shuffle
-    # (the earlier formulation exploded and dropDuplicates'd full rows).
-    head = wanted.take(10_001)
-    if len(head) <= 10_000:
-        names = [r['__cat'] for r in head]
-        if not names:
-            return df.filter(F.lit(False))
-        return df.filter(F.arrays_overlap(F.col(cat_col), F.lit(names)))
-    key = 'url' if 'url' in df.columns else None
-    narrow = (df.select(key, F.explode(F.col(cat_col)).alias('__cat'))
-              if key else
-              df.select(F.explode(F.col(cat_col)).alias('__cat')))
-    if key:
-        hits = (narrow.join(wanted, on='__cat', how='left_semi')
-                .select(key).distinct())
-        return df.join(hits, on=key, how='left_semi')
-    # no stable key: fall back to a full-row semi join via the array
-    return df.join(
-        narrow.join(wanted, on='__cat', how='left_semi').distinct(),
-        on=F.array_contains(F.col(cat_col), F.col('__cat')), how='left_semi')
+    names = resolve_structured(
+        cats_dim.select('type', 'keywords', 'display_name').collect(),
+        category_types, keywords)
+    if not names:
+        return df.filter(F.lit(False))
+    return category_filter(df, names, cat_col)
 
 
 def search(df: DataFrame, query: str,
@@ -205,7 +198,8 @@ def search(df: DataFrame, query: str,
            k: int | None = None,
            cfg=DEFAULT_CONFIG) -> DataFrame:
     """Full search pipeline (reference search_engine.py:39-84):
-    driver-side query stem → filters → dedup → score → snippet → top-k.
+    driver-side query stem → filters → stored dedup flag → score →
+    snippet → top-k.
     Returns (url, categories?, score, snippet) ordered by score desc."""
     k = k or cfg.max_results
     tokens = preprocess_query(query)
@@ -213,13 +207,11 @@ def search(df: DataFrame, query: str,
         return df.sparkSession.createDataFrame(
             [], 'url string, score long, snippet string')
 
-    out = df
-    if categories and 'categories' in df.columns:
-        out = category_filter(out, categories)
-    if 'content_hash' in df.columns:
-        out = (with_dup_rank(out)
-               .filter(F.col('content_hash').isNull() | (F.col('dup_rank') == 1))
-               .drop('dup_rank'))
+    out = category_filter(df, categories)
+    # first-seen dedup is the flag the commit stored (NULL hashes store
+    # False, so they stay exempt) — no per-query window or shuffle
+    if 'is_duplicate' in df.columns:
+        out = out.filter(~F.col('is_duplicate'))
 
     # ascii tokens (the common case after stemming) → fully native
     # relevance AND snippet: the whole search plan stays inside

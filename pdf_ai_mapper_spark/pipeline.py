@@ -4,10 +4,15 @@ Stages (one batch job — the Spark re-expression of the reference's
 upload→extract→preprocess→dedup loop):
 
     scan input → bucket = checkpoint.bucket_of(url, B)
-               → drop already-committed buckets (resume)
-               → fused extract+preprocess UDF → md5 → dedup rank
+               → fused extract+preprocess UDF → md5 → is_duplicate
+                 (first-seen per content hash over the WHOLE input)
                  (no payload repartition — scan split sizing already
                   distributes work; see operators/extraction.extracted)
+               → drop already-committed buckets (resume): the filter
+                 applies to transform's output, so is_duplicate is
+                 exact, and Catalyst pushes it below the extraction
+                 UDF — committed buckets are never extracted; only
+                 md5 over their payload feeds the first-seen aggregate
                → write parquet partitioned by bucket
                  (dynamic partition overwrite → atomic per-bucket
                   commits, crash-safe resume)
@@ -117,9 +122,8 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
     #   the committed-bucket scan is skipped (it skips nothing there).
     done = (set() if dedup_against_output
             else cp.committed_buckets(spark, output_path))
+    skip = bucket.isin(sorted(done)) if done else F.lit(False)
     todo_df = input_df
-    if done:
-        todo_df = todo_df.filter(~bucket.isin(sorted(done)))
 
     committed = (cp.read_or_none(cp.read_output, spark, output_path)
                  if dedup_against_output else None)
@@ -150,10 +154,13 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
         # cheap native pass for per-bucket input counters (url column
         # only — the parquet scan prunes the payload)
         rows_in = {r['bucket']: r['n'] for r in
-                   todo_df.select(bucket.alias('bucket'))
+                   todo_df.filter(~skip).select(bucket.alias('bucket'))
                    .groupBy('bucket').agg(F.count('*').alias('n')).collect()}
         if rows_in:
-            result = transform(todo_df, run_id, cfg)
+            # skip AFTER transform: its first-seen aggregate must see
+            # every input row, or a resume stores later copies whose
+            # first sighting sits in a committed bucket as first-seen
+            result = transform(todo_df, run_id, cfg).filter(~skip)
             # transform keeps every row, so rows_out = rows_in per
             # bucket; the write job observes only what it alone knows —
             # the error rows per touched bucket — plus one total that

@@ -39,9 +39,12 @@ def test_run_then_resume_is_idempotent(spark, outdir):
 def test_partial_run_resumes_remaining_buckets(spark, outdir):
     """Simulate a crash after some buckets committed: drop half the
     checkpoint entries, rerun, and expect exactly the missing buckets
-    to be (re)processed with no duplicated output rows."""
+    to be (re)processed with no duplicated output rows — and the
+    resumed table to equal a clean run's (is_duplicate included)."""
     pages = web_pages_df(spark, 120, num_partitions=4)
     run_extraction(spark, pages, outdir, CFG)
+    clean = cp.read_output(spark, outdir).drop('run_id', 'processed_at')
+    clean = sorted(clean.collect())
 
     # forge a partial checkpoint table: keep only buckets < 4
     cps = spark.read.parquet(cp.checkpoint_path(outdir))
@@ -57,6 +60,7 @@ def test_partial_run_resumes_remaining_buckets(spark, outdir):
     out = cp.read_output(spark, outdir)
     assert out.count() == 120                        # no dup rows
     assert out.select('url').distinct().count() == 120
+    assert sorted(out.drop('run_id', 'processed_at').collect()) == clean
 
 
 def test_lineage_counters_sum_to_input(spark, outdir):
@@ -318,8 +322,7 @@ def test_reconcile_reads_legacy_intent_with_rows_in_map(
 
 def _write_store(spark, outdir, rows, n_buckets=8):
     df = (spark.createDataFrame(rows, 'url string, crawl_ts long, body string')
-          .withColumn('bucket', F.pmod(F.xxhash64(F.col('url')),
-                                       F.lit(n_buckets)).cast('int')))
+          .withColumn('bucket', cp.bucket_of('url', n_buckets)))
     df.write.partitionBy('bucket').parquet(cp.data_path(outdir))
     return df
 
@@ -370,10 +373,8 @@ def test_upsert_rewrites_only_affected_buckets(spark, outdir):
                              order_col='crawl_ts', n_buckets=8)
     assert stats['buckets_rewritten'] == 1
     after = _listing(outdir)
-    from pyspark.sql import functions as SF
     hot = 'bucket=%d' % (spark.createDataFrame([('u0',)], 'url string')
-                         .select(SF.pmod(SF.xxhash64('url'), SF.lit(8))
-                                 .cast('int').alias('b'))
+                         .select(cp.bucket_of('url', 8).alias('b'))
                          .collect()[0]['b'])
     assert set(before) == set(after)
     for d in before:

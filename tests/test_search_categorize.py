@@ -23,8 +23,8 @@ CFG = EngineConfig(shuffle_partitions=8)
 @pytest.fixture(scope='module')
 def corpus(spark):
     df = transform(web_pages_df(spark, 120, num_partitions=4), run_id='t', cfg=CFG)
-    df = df.select('url', 'warc_ts', 'content_hash', 'extracted_text',
-                   'preprocessed_text').cache()
+    df = df.select('url', 'warc_ts', 'content_hash', 'is_duplicate',
+                   'extracted_text', 'preprocessed_text').cache()
     df.count()
     return df
 
@@ -145,6 +145,36 @@ def test_category_dimension_and_structured_filter(spark, corpus):
                                       category_types=['Document'],
                                       keywords=['proof'])
     assert sorted(r['url'] for r in both.collect()) == ['u1', 'u3']
+    assert structured_category_filter(docs, dim) is docs       # no filter
+    assert structured_category_filter(docs, dim,
+                                      keywords=['nomatch']).count() == 0
+
+
+def test_resolve_structured_is_type_or_keyword_union():
+    from pdf_ai_mapper_spark.operators.search import resolve_structured
+    dim = [{'type': 'Science', 'keywords': ['theorem', 'proof'],
+            'display_name': 'Science: theorem, proof'},
+           {'type': 'History', 'keywords': ['empire'],
+            'display_name': 'History: empire'},
+           {'type': 'Science', 'keywords': ['cell'],
+            'display_name': 'Science: cell'},
+           {'type': 'Document', 'keywords': None, 'display_name': 'Document'}]
+    assert resolve_structured(dim) == []
+    assert resolve_structured(dim, ['Science']) == ['Science: cell',
+                                                   'Science: theorem, proof']
+    assert resolve_structured(dim, keywords=['empire', 'zzz']) == [
+        'History: empire']
+    assert resolve_structured(dim, ['Document'], ['proof']) == [
+        'Document', 'Science: theorem, proof']
+    assert resolve_structured(dim, ['Art'], ['zzz']) == []
+
+
+def test_search_category_filter_needs_categories_column(spark, corpus):
+    """A category filter on a frame without a categories column is an
+    error, not a silently dropped filter."""
+    from pyspark.errors import AnalysisException
+    with pytest.raises(AnalysisException):
+        search(corpus, 'philosophy virtue', categories=['History']).collect()
 
 
 def test_model_persistence_roundtrip(spark, corpus, tmp_path):

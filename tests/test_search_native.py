@@ -93,6 +93,22 @@ def test_search_plan_has_zero_arrow_eval_python(spark):
     assert 'ArrowEvalPython' not in plan2
 
 
+def test_udf_search_scores_once_and_snips_only_top_k(spark):
+    """Non-ascii tokens take the UDF path: one relevance evaluation,
+    a TakeOrderedAndProject top-k, and the snippet UDF over its k rows
+    only — no filter copy of the relevance UDF, no range-partitioned
+    sort."""
+    df = spark.createDataFrame(
+        [(f'u{i}', t) for i, t in enumerate(TEXTS + ['δίκη spark δίκη']) if t],
+        'url string, extracted_text string')
+    res = search(df, 'δίκη', k=5)
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert plan.count('ArrowEvalPython') == 2
+    top = plan.index('TakeOrderedAndProject')
+    assert plan.index('snip(') < top < plan.index('rel(')
+    assert [r['url'] for r in res.collect()] == [f'u{len(TEXTS)}']
+
+
 def test_search_native_results_equal_udf_results(spark):
     """Byte-equal end-to-end: force the UDF path by monkeypatching the
     gate, compare against the native path."""
