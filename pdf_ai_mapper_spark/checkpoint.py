@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 CHECKPOINT_SCHEMA = ('run_id string, bucket int, rows_in long, rows_out long, '
                      'error_rows long, committed_at timestamp')
+_CHECKPOINT_COLUMNS = [f.split()[0] for f in CHECKPOINT_SCHEMA.split(', ')]
 
 
 def checkpoint_path(output_path: str) -> str:
@@ -81,14 +82,19 @@ def committed_buckets(spark: SparkSession, output_path: str) -> set[int]:
 
 def append_checkpoints(spark: SparkSession, output_path: str,
                        entries: list[dict]) -> None:
+    """Append one ``CHECKPOINT_SCHEMA`` row per entry as ONE parquet
+    file, every row stamped with the same driver-side ``committed_at``.
+    The rows go from pandas to the JVM as Arrow, so no Python worker
+    starts and no per-call timestamp literal enters generated code."""
     if not entries:
         return
-    df = spark.createDataFrame(
-        [(e['run_id'], e['bucket'], e['rows_in'], e['rows_out'], e['error_rows'])
-         for e in entries],
-        'run_id string, bucket int, rows_in long, rows_out long, error_rows long',
-    ).withColumn('committed_at', F.current_timestamp())
-    df.write.mode('append').parquet(checkpoint_path(output_path))
+    import datetime as dt
+    import pandas as pd
+    now = dt.datetime.now(dt.timezone.utc)
+    rows = pd.DataFrame([{**e, 'committed_at': now} for e in entries],
+                        columns=_CHECKPOINT_COLUMNS)
+    (spark.createDataFrame(rows, CHECKPOINT_SCHEMA).coalesce(1)
+     .write.mode('append').parquet(checkpoint_path(output_path)))
 
 
 def new_run_id() -> str:

@@ -10,7 +10,7 @@ does not apply to LEFT ANTI joins (a bloom can only prune rows that
 cannot MATCH — for an anti-join those are exactly the rows you keep),
 so we build the split explicitly:
 
-    bloom = build_bloom(committed.select(hash))        # one narrow job
+    bloom = build_bloom(committed.select(hash), expected_keys=n)
     definite_new, maybe_dup = bloom_split(batch, hash, bloom)
     result = definite_new UNION (maybe_dup ANTI JOIN committed)
 
@@ -19,6 +19,14 @@ shuffle. A Bloom "maybe" (true dups + ~fpp false positives) still goes
 through the exact anti-join, so the final result is byte-identical to
 the plain anti-join — the filter moves bytes, never answers. Shuffle
 volume drops from 100% of the batch to (dup_rate + fpp).
+
+When the pipeline uses it: ``run_extraction(bloom_prefilter=True)``
+counts the n distinct committed hashes once. While n × 64 B fits the
+session's ``spark.sql.autoBroadcastJoinThreshold`` it broadcasts the
+hash set instead — a broadcast anti-join shuffles no batch row at all
+and starts no Python worker — so a Bloom is built only for a hash set
+too large to broadcast, sized from that count, and only while its
+bitmap fits the cap below (else the plain join).
 
 Construction: standard k-hash Bloom (Bloom 1970, CACM 13(7)) over the
 64-bit xxhash of the key column. Bit positions come from the vendored
@@ -97,8 +105,11 @@ def build_bloom(df: DataFrame, key_col: str,
     """Build a Bloom bitmap over ``key_col`` (any hashable SQL type;
     hashed JVM-side with xxhash64 so only 8 B/row leaves the scan).
 
-    Returns the bitmap as bytes. One Spark job (two if
-    ``expected_keys`` must be counted first)."""
+    Returns the bitmap as bytes. The bitmap itself is one Spark job,
+    plus one per shuffle stage AQE materialises in ``df``'s plan (a
+    ``distinct`` adds one); leaving ``expected_keys`` to be counted
+    here adds the count's jobs too — three for a ``distinct`` under
+    AQE — so pass a count the caller already has."""
     if expected_keys is None:
         expected_keys = df.count()
     m_bits = bloom_params(max(1, expected_keys), bits_per_key)

@@ -24,6 +24,23 @@ same count; the write job observes only the error rows per touched
 bucket and one total, and a total that differs from the pre-pass
 fails the run before any counter is recorded.
 
+Incremental batches (``dedup_against_output``) first drop every row
+whose md5 is already committed: a left-anti join on the distinct
+committed content hashes. With ``bloom_prefilter`` those hashes are
+counted once and the count picks the join:
+
+    n × 64 B ≤ spark.sql.autoBroadcastJoinThreshold
+        → explicit broadcast anti-join (the batch never shuffles;
+          a threshold of -1 never broadcasts)
+    Bloom bitmap for n keys ≤ its cap (operators/bloom.py)
+        → Bloom pre-split: definite-new rows bypass the join, only
+          the maybe-committed slice takes it
+    otherwise
+        → the plain join
+
+Without it the plain join runs uncounted, planned from Spark's size
+estimate of the hash side. Every rung commits the same rows.
+
 Cited reference behavior: anti-join dedup replaces
 ``document_storage.py:86-103``; batched commit replaces the
 pending-save flag ``document_storage.py:59-74``.
@@ -42,6 +59,10 @@ OUTPUT_COLUMNS = ['url', 'warc_ts', 'lang', 'doctype', 'content_hash',
                   'extracted_text', 'preprocessed_text', 'is_error',
                   'error_code', 'is_duplicate', 'run_id', 'processed_at',
                   'bucket']
+
+# bytes one committed hash takes in a broadcast hash table: a 32-char
+# md5 hex key in an UnsafeRow, plus its slot
+_HASH_ROW_BYTES = 64
 
 
 def transform(input_df: DataFrame, run_id: str,
@@ -93,12 +114,15 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
                    bloom_prefilter: bool = False) -> dict:
     """Execute (or resume) an extraction run. Returns run stats.
 
-    ``bloom_prefilter`` (incremental mode only): pre-split the batch
-    with a Bloom filter over the committed hash set so definite-new
-    rows bypass the anti-join shuffle entirely — only the (dup_rate +
-    fpp) slice of the batch shuffles. Result is byte-identical to the
-    plain anti-join (operators/bloom.py); on an over-cap corpus the
-    bloom build raises and we fall back to the plain join.
+    ``bloom_prefilter`` (incremental mode only): size the content
+    anti-join from one count of the distinct committed hashes, so the
+    batch shuffles as little as the hash set allows — a broadcast
+    anti-join when the set fits the session's broadcast threshold (no
+    shuffle); else a Bloom pre-split (operators/bloom.py) where only
+    the (dup_rate + fpp) slice of the batch shuffles; else, when the
+    bitmap would exceed its cap, the plain join. Every choice commits
+    the same rows as the plain anti-join, which runs uncounted when
+    the flag is off.
 
     Raises RuntimeError after the write when it saw a different row
     count than the pre-pass (the input or the committed table changed
@@ -139,13 +163,24 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
                       .distinct())
             todo_df = todo_df.withColumn('__h', F.md5(F.col('html')))
             if bloom_prefilter:
-                from .operators import bloom
-                try:
-                    bitmap = bloom.build_bloom(hashes, '__h')
-                except ValueError:
-                    bitmap = None  # over the broadcast cap → plain join
-                if bitmap is not None:
-                    fresh, todo_df = bloom.bloom_split(todo_df, '__h', bitmap)
+                n = hashes.count()  # the one count both rungs size from
+                # autoBroadcastJoinThreshold in bytes; -1 never broadcasts
+                threshold = (spark._jsparkSession.sessionState().conf()
+                             .autoBroadcastJoinThreshold())
+                if n * _HASH_ROW_BYTES <= threshold:
+                    # explicit: a planned sort-merge join would shuffle
+                    # the batch before AQE could switch it to broadcast
+                    hashes = F.broadcast(hashes)
+                else:
+                    from .operators import bloom
+                    try:
+                        bitmap = bloom.build_bloom(hashes, '__h',
+                                                   expected_keys=n)
+                    except ValueError:
+                        bitmap = None  # over the bitmap cap → plain join
+                    if bitmap is not None:
+                        fresh, todo_df = bloom.bloom_split(todo_df, '__h',
+                                                           bitmap)
             todo_df = todo_df.join(hashes, on='__h', how='left_anti')
             if fresh is not None:
                 todo_df = fresh.unionByName(todo_df)

@@ -2398,7 +2398,12 @@ def q_bloom_incremental_ingest(spark, sf_dir):
     overlaps + ~1% false positives) take the exact anti-join. The
     filter moves bytes, never answers, so the committed set is exactly
     A ∪ B. ORACLED: per-lang counts of {doc_id : 2|id or 3|id} derived
-    independently from the documents table."""
+    independently from the documents table.
+
+    The two runs pin ``spark.sql.autoBroadcastJoinThreshold`` to -1
+    (restored after): at catalog scale the committed hashes would fit
+    a broadcast, and run_extraction then broadcasts them instead of
+    building the Bloom this entry exists to exercise."""
     import shutil
     import tempfile
     from . import checkpoint as cp_mod
@@ -2407,13 +2412,19 @@ def q_bloom_incremental_ingest(spark, sf_dir):
     from .pipeline import run_extraction
     d = _t(spark, sf_dir, 'documents')
     outdir = tempfile.mkdtemp(prefix='pam_q_bloom_')
+    threshold = spark.conf.get('spark.sql.autoBroadcastJoinThreshold')
     try:
         cfg = EngineConfig(shuffle_partitions=8, output_buckets=8)
-        for pred in (F.col('doc_id') % 2 == 0, F.col('doc_id') % 3 == 0):
-            pages = web_pages_from_documents(spark, sf_dir,
-                                             docs=d.filter(pred))
-            run_extraction(spark, pages, outdir, cfg,
-                           dedup_against_output=True, bloom_prefilter=True)
+        spark.conf.set('spark.sql.autoBroadcastJoinThreshold', '-1')
+        try:
+            for pred in (F.col('doc_id') % 2 == 0, F.col('doc_id') % 3 == 0):
+                pages = web_pages_from_documents(spark, sf_dir,
+                                                 docs=d.filter(pred))
+                run_extraction(spark, pages, outdir, cfg,
+                               dedup_against_output=True,
+                               bloom_prefilter=True)
+        finally:
+            spark.conf.set('spark.sql.autoBroadcastJoinThreshold', threshold)
         out = cp_mod.read_output(spark, outdir)
         ids = out.select(F.regexp_extract('url', r'/p/(\d+)$', 1)
                          .cast('long').alias('doc_id'))

@@ -13,7 +13,10 @@ Options:
                         build + persist the sidecar to PATH and exit
     --incremental       append-mode batch with content dedup against
                         the committed output (exactly-once counters)
-    --bloom             bloom pre-split for the incremental anti-join
+    --bloom             size the incremental anti-join from a count of
+                        the committed hashes: broadcast when they fit
+                        spark.sql.autoBroadcastJoinThreshold, else a
+                        bloom pre-split, else the plain join
     --preprocess-mode {deterministic,nltk}
                         NLTK-present stopwords/tokenizer (default:
                         deterministic byte-identity path)

@@ -17,6 +17,36 @@ def spark():
     s.stop()
 
 
+@pytest.fixture()
+def no_broadcast(spark):
+    """``spark.sql.autoBroadcastJoinThreshold`` = -1 for one test,
+    restored after: ``run_extraction(bloom_prefilter=True)`` then never
+    broadcasts the committed hashes and takes the Bloom rung."""
+    old = spark.conf.get('spark.sql.autoBroadcastJoinThreshold')
+    spark.conf.set('spark.sql.autoBroadcastJoinThreshold', '-1')
+    try:
+        yield
+    finally:
+        spark.conf.set('spark.sql.autoBroadcastJoinThreshold', old)
+
+
+@pytest.fixture()
+def spy_bloom(monkeypatch):
+    """``spy_bloom(name)`` wraps ``operators.bloom.<name>`` for one test
+    and returns the list it appends each call's kwargs to."""
+    from pdf_ai_mapper_spark.operators import bloom
+
+    def spy(name):
+        calls, real = [], getattr(bloom, name)
+
+        def wrapper(*a, **kw):
+            calls.append(kw)
+            return real(*a, **kw)
+        monkeypatch.setattr(bloom, name, wrapper)
+        return calls
+    return spy
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         'markers', 'slow: long-running end-to-end tests (spark-submit etc.)')

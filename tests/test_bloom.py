@@ -64,32 +64,53 @@ def test_params_cap():
         bloom_params(_MAX_BITMAP_BYTES)  # 8 B/bit × 10 bits/key >> cap
 
 
-def test_incremental_ingest_identical_with_bloom(spark, tmp_path):
-    """E2E: bloom-prefiltered incremental ingest produces the exact
-    same committed rows as the plain anti-join path."""
+def _ingest_two_batches(spark, out, bloom_prefilter):
+    """Commit batch A, then batch B (50% overlap) in incremental mode;
+    returns the committed (url, content_hash, extracted_text) set."""
     from pdf_ai_mapper_spark import checkpoint as cp
     from pdf_ai_mapper_spark.config import EngineConfig
     from pdf_ai_mapper_spark.fixtures.webpages import web_pages_pandas
     from pdf_ai_mapper_spark.pipeline import run_extraction
 
     cfg = EngineConfig(shuffle_partitions=8, output_buckets=8)
-    batch_a = spark.createDataFrame(web_pages_pandas(120, start=0))
-    batch_b = spark.createDataFrame(web_pages_pandas(120, start=60))  # 50% overlap
+    for start in (0, 60):
+        stats = run_extraction(
+            spark, spark.createDataFrame(web_pages_pandas(120, start=start)),
+            out, cfg, dedup_against_output=True,
+            bloom_prefilter=bloom_prefilter)
+    assert stats['rows_out'] < 120  # the overlap was pruned
+    return {tuple(r) for r in cp.read_output(spark, out)
+            .select('url', 'content_hash', 'extracted_text').collect()}
 
-    outs = {}
-    for name, bloom in (('plain', False), ('bloom', True)):
-        out = str(tmp_path / name)
-        run_extraction(spark, batch_a, out, cfg, dedup_against_output=True,
-                       bloom_prefilter=bloom)
-        stats = run_extraction(spark, batch_b, out, cfg,
-                               dedup_against_output=True,
-                               bloom_prefilter=bloom)
-        assert stats['rows_out'] < 120  # the overlap was pruned
-        outs[name] = {tuple(r) for r in cp.read_output(spark, out)
-                      .select('url', 'content_hash', 'extracted_text')
-                      .collect()}
-    assert outs['plain'] == outs['bloom']
-    assert len(outs['plain']) > 120
+
+def test_incremental_ingest_identical_with_bloom(spark, tmp_path, spy_bloom,
+                                                 no_broadcast):
+    """E2E: bloom-prefiltered incremental ingest produces the exact
+    same committed rows as the plain anti-join path. Broadcast is off,
+    so the second batch (the one with a committed table to join)
+    builds the Bloom, once, sized from the run's hash count."""
+    from pdf_ai_mapper_spark.fixtures.webpages import web_pages_pandas
+    plain = _ingest_two_batches(spark, str(tmp_path / 'plain'), False)
+    builds = spy_bloom('build_bloom')
+    bloomed = _ingest_two_batches(spark, str(tmp_path / 'bloom'), True)
+    batch_a_hashes = (spark.createDataFrame(web_pages_pandas(120))
+                      .select(F.md5('html')).distinct().count())
+    assert [kw.get('expected_keys') for kw in builds] == [batch_a_hashes]
+    assert bloomed == plain
+    assert len(plain) > 120
+
+
+def test_over_cap_bloom_falls_back_to_plain_join(spark, tmp_path, spy_bloom,
+                                                 monkeypatch, no_broadcast):
+    """A hash set too large both to broadcast and for the bitmap cap
+    takes the plain join: build_bloom raises, nothing is split, and the
+    committed rows equal the plain path's."""
+    from pdf_ai_mapper_spark.operators import bloom
+    plain = _ingest_two_batches(spark, str(tmp_path / 'plain'), False)
+    monkeypatch.setattr(bloom, '_MAX_BITMAP_BYTES', 1)
+    builds, splits = spy_bloom('build_bloom'), spy_bloom('bloom_split')
+    assert _ingest_two_batches(spark, str(tmp_path / 'cap'), True) == plain
+    assert len(builds) == 1 and splits == []
 
 
 def test_broadcast_handle_rides_and_releases(spark, keys_df):

@@ -104,15 +104,23 @@ def test_flag_exact_after_partial_resume(spark, outdir):
     assert _assert_flag_exact(spark, outdir) == clean
 
 
-@pytest.mark.parametrize('bloom', [False, True])
-def test_flag_exact_across_incremental_batches(spark, outdir, bloom):
+@pytest.mark.parametrize('strategy', ['broadcast', 'bloom', 'plain'])
+def test_flag_exact_across_incremental_batches(spark, outdir, strategy,
+                                               request, spy_bloom):
     """Copies within a batch are flagged by that batch's commit; copies
     of committed content never land (the anti-join), so no content
-    hash spans two runs. NULL payloads pass the anti-join every time."""
+    hash spans two runs. NULL payloads pass the anti-join every time.
+    Holds for each anti-join ``run_extraction`` can pick: the broadcast
+    of a small hash set, the Bloom split (broadcast off) and the plain
+    join (no prefilter)."""
+    if strategy == 'bloom':
+        request.getfixturevalue('no_broadcast')
+    builds = spy_bloom('build_bloom')
+    prefilter = strategy != 'plain'
     run_extraction(spark, _pages(spark, range(36),
                                  [_null_payload('null-payload-1')]),
                    outdir, CFG, dedup_against_output=True,
-                   bloom_prefilter=bloom)
+                   bloom_prefilter=prefilter)
     first = _assert_flag_exact(spark, outdir)
     assert first > 0
     batch2 = _pages(spark, range(30, 72),
@@ -120,7 +128,8 @@ def test_flag_exact_across_incremental_batches(spark, outdir, bloom):
                      _null_ts_copy('null-ts-across', 6),   # committed
                      _null_ts_copy('null-ts-within', 42)])  # new here
     run_extraction(spark, batch2, outdir, CFG, dedup_against_output=True,
-                   bloom_prefilter=bloom)
+                   bloom_prefilter=prefilter)
+    assert len(builds) == (1 if strategy == 'bloom' else 0)
     assert _assert_flag_exact(spark, outdir) > first
     urls = {r['url'] for r in cp.read_output(spark, outdir).collect()}
     assert {'null-payload-1', 'null-payload-2', 'null-ts-within'} <= urls

@@ -97,6 +97,119 @@ def test_dedup_against_output_anti_join(spark, outdir):
     assert cp.read_output(spark, outdir).count() == 90
 
 
+def _last_write_plan(spark, path):
+    """(depth, node) lines of the final physical plan of the last SQL
+    execution that wrote ``path``, as the session's status store holds
+    it (the test sets ``spark.sql.ui.explainMode`` to simple)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [execs.apply(i).physicalPlanDescription()
+             for i in range(execs.size())]
+    plan = [p for p in plans
+            if f'InsertIntoHadoopFsRelationCommand file:{path},' in p][-1]
+    final = plan.split('== Initial Plan ==')[0].splitlines()[3:]
+    return [(len(line) - len(line.lstrip(' :+-')), line.lstrip(' :+-'))
+            for line in final if line.strip()]
+
+
+def _subtree(nodes, i):
+    """Index range of node ``i``'s subtree (itself excluded)."""
+    end = i + 1
+    while end < len(nodes) and nodes[end][0] > nodes[i][0]:
+        end += 1
+    return range(i + 1, end)
+
+
+def test_small_committed_set_broadcasts_the_anti_join(spark, outdir,
+                                                      monkeypatch):
+    """With ``bloom_prefilter`` and a committed hash set that fits the
+    broadcast threshold, the batch meets the hashes in a broadcast
+    anti-join: no Bloom is built and the batch never shuffles on the
+    join key. The committed rows equal the plain join's."""
+    import re
+    from pdf_ai_mapper_spark.operators import bloom
+
+    def no_bloom(*a, **kw):
+        raise AssertionError('build_bloom called on a broadcastable set')
+
+    monkeypatch.setattr(bloom, 'build_bloom', no_bloom)
+    plain_dir = outdir + '_plain'
+    tables = {}
+    old = spark.conf.get('spark.sql.ui.explainMode')
+    try:
+        spark.conf.set('spark.sql.ui.explainMode', 'simple')
+        for out, prefilter in ((plain_dir, False), (outdir, True)):
+            for n in (60, 90):  # rows 0-59 committed, then 30 new
+                run_extraction(spark, web_pages_df(spark, n, num_partitions=4),
+                               out, CFG, dedup_against_output=True,
+                               bloom_prefilter=prefilter)
+            tables[prefilter] = sorted(
+                cp.read_output(spark, out).drop('run_id', 'processed_at')
+                .collect())
+        nodes = _last_write_plan(spark, cp.data_path(outdir))
+    finally:
+        spark.conf.set('spark.sql.ui.explainMode', old)
+        shutil.rmtree(plain_dir, ignore_errors=True)
+    assert len(tables[True]) == 90 and tables[True] == tables[False]
+
+    joins = [i for i, (_, node) in enumerate(nodes) if re.search(
+        r'BroadcastHashJoin \[__h#\d+\], \[__h#\d+\], LeftAnti, BuildRight',
+        node)]
+    assert joins, '\n'.join(node for _, node in nodes)
+    build_side = set()
+    for i in joins:
+        children = [j for j in _subtree(nodes, i)
+                    if nodes[j][0] == nodes[i][0] + 3]
+        streamed, build = children
+        # the batch scan side reaches the join with no exchange at all
+        assert not any('Exchange' in nodes[j][1]
+                       for j in range(streamed, build))
+        build_side.update(_subtree(nodes, build))
+    # the one exchange on __h is the committed-hash distinct, under
+    # the broadcast
+    assert all(j in build_side for j, (_, node) in enumerate(nodes)
+               if 'hashpartitioning(__h' in node)
+
+
+def test_each_checkpoint_append_writes_one_file(spark, outdir, monkeypatch):
+    """Every append_checkpoints call — after a run's write and from
+    reconcile_intents — adds exactly one parquet file in
+    CHECKPOINT_SCHEMA, with one non-null committed_at per call."""
+    import os
+
+    def files():
+        return {f for f in os.listdir(cp.checkpoint_path(outdir))
+                if f.endswith('.parquet')}
+
+    run_extraction(spark, web_pages_df(spark, 60, num_partitions=4),
+                   outdir, CFG, dedup_against_output=True)
+    assert len(files()) == 1
+
+    def dying_append(*a, **kw):
+        raise RuntimeError('injected crash before checkpoint append')
+
+    monkeypatch.setattr('pdf_ai_mapper_spark.pipeline.cp.append_checkpoints',
+                        dying_append)
+    with pytest.raises(RuntimeError, match='injected crash'):
+        run_extraction(spark, web_pages_df(spark, 90, num_partitions=4),
+                       outdir, CFG, dedup_against_output=True,
+                       run_id='crashedrun02')
+    monkeypatch.undo()
+    assert len(files()) == 1
+    assert cp.reconcile_intents(spark, outdir) == 1
+    assert len(files()) == 2
+
+    cps = spark.read.parquet(cp.checkpoint_path(outdir))
+    assert cps.schema == spark.createDataFrame([], cp.CHECKPOINT_SCHEMA).schema
+    per_run = cps.groupBy('run_id').agg(
+        F.count('*').alias('rows'),
+        F.count('committed_at').alias('stamped'),
+        F.countDistinct('committed_at').alias('stamps')).collect()
+    assert len(per_run) == 2
+    for r in per_run:
+        assert r['rows'] > 1 and r['stamped'] == r['rows'] and r['stamps'] == 1
+
+
 def test_corrupt_checkpoint_table_surfaces(spark, outdir):
     """A broken _checkpoints table must raise, not silently disable
     resume (checkpoint.committed_buckets narrows its catch to the
