@@ -17,9 +17,8 @@ Common-Crawl-style web-page tables:
                    checkpoint/resume and per-partition lineage counters.
 - ``api``        — ``MapperAPI``: the reference's HTTP endpoints as
                    library methods with identical response shapes.
-- ``streaming``  — availableNow file-stream ingest (idempotent per
-                   micro-batch), watermarked host monitoring, stateful
-                   sessionization.
+- ``sources``    — WARC input (``sources.warc``).
+- ``queries``    — the query catalog with DuckDB oracles.
 """
 
 __version__ = "0.2.0"

@@ -8,8 +8,7 @@ backed by the Spark engine instead of the single-node processor:
 - upload       → single-row batch through ``run_extraction`` with
                  content anti-join dedup (upload.py:18-60; the daemon
                  thread at document_service.py:154-162 becomes a
-                 synchronous batched ingest — on a cluster, uploads
-                 land in the streaming inbox instead)
+                 synchronous batched ingest)
 - status       → url + categories of the output table, status from
                  the categories (status.py:16-47)
 - search       → ``operators.search.search`` + structured-filter

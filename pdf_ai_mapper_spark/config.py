@@ -24,7 +24,6 @@ class EngineConfig:
     ocr_trigger_chars: int = 1000
     max_pages_for_ocr: int = 5
     pdf_timeout_s: float = 120.0
-    image_timeout_s: float = 30.0
     # 'deterministic' = reference's NLTK-absent path (byte-identity
     # contract); 'nltk' = reference's NLTK-present stopwords+tokenizer
     # (kernels/preprocess.py — documented POS-tag delta)
@@ -56,7 +55,6 @@ class EngineConfig:
     arrow_max_records_per_batch: int = 2048  # payloads are large; keep batches bounded
     output_buckets: int = 64                 # url-hash buckets for output layout + resume
     hot_host_threshold: int = 10_000         # rows/host before salting kicks in
-    salt_buckets: int = 16
 
 
 DEFAULT_CONFIG = EngineConfig()

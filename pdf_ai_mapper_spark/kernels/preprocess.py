@@ -33,17 +33,9 @@ from .stopwords import NLTK_STOP_WORDS, STOP_WORDS
 
 _phrase_count = itemgetter(1)
 
-# Precompiled — these run per document in the hot path.
-_RE_GREEK = re.compile(r'[Ͱ-Ͽἀ-῿]')
-_RE_CYRILLIC = re.compile(r'[Ѐ-ӿ]')
-_RE_CJK = re.compile(r'[一-鿿]')
-_RE_ARABIC = re.compile(r'[؀-ۿ]')
-_RE_SPECIALS = re.compile(r'[^\w\s-]')
-_RE_DIGITS = re.compile(r'\d+')
-_RE_WS = re.compile(r'\s+')
-# The six script/special/digit passes fused into ONE alternation: the
-# three groups are disjoint character sets (script chars are \w
-# letters, digits are \w, specials are non-\w), every match is
+# The reference's six script/special/digit passes fused into ONE
+# alternation: the three groups are disjoint character sets (script
+# chars are \w letters, digits are \w, specials are non-\w), every match is
 # replaced by a single space in all formulations, and replacements
 # never create new matches — so one pass is byte-identical to the
 # reference's six sequential subs (verified by the hypothesis parity

@@ -141,8 +141,3 @@ TOPIC_KEYWORDS: dict[str, tuple[str, ...]] = {
     'Medicine': ('medicine', 'medical', 'health', 'disease', 'treatment', 'patient', 'doctor', 'hospital', 'surgery', 'anatomy'),
     'Economics': ('economics', 'economic', 'financial', 'money', 'business', 'market', 'trade', 'commerce', 'industry', 'capital'),
 }
-
-
-def sorted_stopwords() -> list[str]:
-    """Stable ordering, for broadcast literals and SQL IN-lists."""
-    return sorted(STOP_WORDS)

@@ -1,5 +1,5 @@
-"""Topic categorization (A3-A6): CountVectorizer / HashingTF+IDF
-features, LDA topic model, KMeans variant, topic naming.
+"""Topic categorization (A3-A6): CountVectorizer features, LDA topic
+model, KMeans variant, topic naming.
 
 Re-expresses the reference's sklearn pipeline
 (``category_manager.py:36-41,138-139``: CountVectorizer(max_features=
@@ -19,8 +19,6 @@ max_iter=100)) with ``pyspark.ml``:
   named via the topic-type keyword table
   (reference ``_categorize_with_lda`` :153-185, ``_get_lda_topic_name``
   :222-260, ``_determine_topic_type`` :266-296).
-- north_star mode: HashingTF + IDF features (no vocabulary fit — one
-  pass less at 100 TB).
 """
 
 from __future__ import annotations
@@ -29,8 +27,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.ml.clustering import LDA, KMeans
-from pyspark.ml.feature import (IDF, CountVectorizer, CountVectorizerModel,
-                                HashingTF)
+from pyspark.ml.feature import CountVectorizer, CountVectorizerModel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,18 +40,6 @@ def with_tokens(df: DataFrame, text_col: str = 'preprocessed_text',
     return df.withColumn(
         out_col,
         F.filter(F.split(F.col(text_col), ' '), lambda t: F.length(t) > 0))
-
-
-def tfidf_features(df: DataFrame, tokens_col: str = 'tokens',
-                   out_col: str = 'features',
-                   num_features: int = 1 << 18) -> DataFrame:
-    """North-star featurization: HashingTF + IDF. No vocab fit —
-    scales to any corpus without a driver-side dictionary."""
-    tf = HashingTF(inputCol=tokens_col, outputCol='__tf',
-                   numFeatures=num_features)
-    tfd = tf.transform(df)
-    idf = IDF(inputCol='__tf', outputCol=out_col).fit(tfd)
-    return idf.transform(tfd).drop('__tf')
 
 
 def count_vector_features(df: DataFrame, tokens_col: str = 'tokens',

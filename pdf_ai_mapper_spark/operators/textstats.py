@@ -693,8 +693,8 @@ def with_fingerprint(df: DataFrame, text_col: str = 'text') -> DataFrame:
 def tfidf_terms(df: DataFrame, id_col: str = 'doc_id',
                 text_col: str = 'text', min_token_len: int = 3) -> DataFrame:
     """Exact-term TF-IDF per (doc, term) — the SQL-checkable sibling of
-    ``categorize.tfidf_features`` (HashingTF+IDF, whose murmur3 buckets
-    have no SQL mirror). Same smoothing as Spark ML's IDF:
+    Spark ML's HashingTF+IDF (whose murmur3 buckets have no SQL
+    mirror). Same smoothing as Spark ML's IDF:
     ``idf = ln((n_docs + 1) / (df + 1))``.
 
     Plan shape: explode → two narrow aggs (per-(doc,term) tf and

@@ -34,14 +34,19 @@ sys.path.insert(0, '/root/repo')
 # that sat in this window were replaced by the next oracled entries in
 # catalog order: q_emb_cosine_topk, q_stream_windowed_counts,
 # q_pii_redaction, q_repetition_stats.
+# Deleting the asof, urls, graph, dsir, multimodal and streaming modules
+# took seven entries out of this window (q_pagerank_centrality,
+# q_dsir_select, q_stream_dedup, q_asof_join, q_sessionization,
+# q_multimodal_metadata, q_stream_windowed_counts); the catalog moved
+# the next seven oracled non-residents up to fill them: q_f1_size_reject,
+# q_j4_status_projection, q_d3_destructive_dedup, q_epoch_upsample,
+# q_shuffle_shards, q_mixture_fill, q_shard_export.
 GRADED_WINDOW = [
     'q_bloom_incremental_ingest',
     'q_cluster_keep_best',
     'q_decontamination',
     'q_unigram_logprob',
-    'q_pagerank_centrality',
     'q_semantic_decontamination',
-    'q_dsir_select',
     'q_model_auc',
     'q_line_dedup',
     'q_minhash_planted',
@@ -62,7 +67,6 @@ GRADED_WINDOW = [
     'q_quality_cascade',
     'q_token_counts_bpe',
     'q_w2_search_snippets',
-    'q_stream_dedup',
     'q_group_quota',
     'q_ngram_jaccard_exact',
     'q_emb_cosine_dups',
@@ -75,16 +79,19 @@ GRADED_WINDOW = [
     'q_error_taxonomy',
     'q_search_pipeline',
     'q_tfidf_top_terms',
-    'q_asof_join',
     'q_lda_categories',
     'q_bigram_lm',
-    'q_sessionization',
-    'q_multimodal_metadata',
     'q_ivf_ann_exact',
     'q_emb_cosine_topk',
-    'q_stream_windowed_counts',
     'q_pii_redaction',
     'q_repetition_stats',
+    'q_f1_size_reject',
+    'q_j4_status_projection',
+    'q_d3_destructive_dedup',
+    'q_epoch_upsample',
+    'q_shuffle_shards',
+    'q_mixture_fill',
+    'q_shard_export',
 ]
 
 

@@ -1,19 +1,14 @@
 """Corpus-composition operators added late in round 5: CCNet-style
-perplexity bucketing (textstats.ppl_buckets), token-budget mixture
-allocation (curate.token_budget_fill), and streaming dedup within a
-watermark (streaming.dedup_stream).
+perplexity bucketing (textstats.ppl_buckets) and token-budget mixture
+allocation (curate.token_budget_fill).
 
 Each operator's value semantics are also DuckDB-oracled end-to-end by
-q_ppl_buckets / q_token_budget_mix / q_stream_dedup; these tests pin
-the properties the oracle can't see (mode agreement, pure-Python
-reference equivalence, cross-run streaming state, plan shape).
+q_ppl_buckets / q_token_budget_mix; these tests pin the properties the
+oracle can't see (mode agreement, pure-Python reference equivalence,
+plan shape).
 """
 
 from __future__ import annotations
-
-import os
-import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -283,43 +278,6 @@ class TestBudgetsFromMixture:
         assert got == {'en': 40, 'de': 10}
 
 
-class TestUrlQualityFilter:
-    def _run(self, spark, urls, **kw):
-        from pdf_ai_mapper_spark.operators.urls import url_quality_filter
-        df = spark.createDataFrame(list(enumerate(urls)),
-                                   'doc_id long, url string')
-        return {r['url']: r for r in url_quality_filter(df, **kw).collect()}
-
-    def test_blocklist_and_scores(self, spark):
-        out = self._run(spark, [
-            'https://badsite.example/innocent/page',     # blocked domain
-            'https://www.badsite.example/x',             # www. stripped
-            'https://news.site.com/article',             # clean
-            'https://host.com/casino/page',              # 5 >= 5
-            'https://host.com/free-download',            # 1+1 = 2
-            'https://host.com/casino-casino',            # 10: repeats count
-        ])
-        assert out['https://badsite.example/innocent/page']['url_block']
-        assert not out['https://badsite.example/innocent/page']['url_ok']
-        assert out['https://www.badsite.example/x']['url_block']
-        clean = out['https://news.site.com/article']
-        assert not clean['url_block'] and clean['url_ok']
-        assert clean['url_score'] == 0
-        assert out['https://host.com/casino/page']['url_score'] == 5
-        assert not out['https://host.com/casino/page']['url_ok']
-        assert out['https://host.com/free-download']['url_score'] == 2
-        assert out['https://host.com/free-download']['url_ok']
-        assert out['https://host.com/casino-casino']['url_score'] == 10
-
-    def test_case_insensitive_and_custom_tables(self, spark):
-        out = self._run(spark, ['https://h.com/CASINO', 'https://h.com/x'],
-                        keyword_weights={'casino': 3}, threshold=3,
-                        blocked_domains=('h.com',))
-        assert out['https://h.com/CASINO']['url_score'] == 3
-        # both blocked regardless of score: domain rule dominates
-        assert all(r['url_block'] and not r['url_ok'] for r in out.values())
-
-
 class TestSemanticDecontamination:
     def _frames(self, spark):
         import math
@@ -367,90 +325,6 @@ class TestSemanticDecontamination:
                 ._jdf.queryExecution().executedPlan().toString())
         assert 'Exchange' not in plan
         assert plan.count('ArrowEvalPython') == 1
-
-
-class TestDedupStream:
-    SCHEMA = 'doc_id long, text string, ts timestamp'
-
-    def _write(self, spark, rows, path):
-        (spark.createDataFrame(rows, self.SCHEMA)
-         .coalesce(1).write.mode('append').parquet(path))
-
-    def _run(self, spark, indir, outdir, watermark='1 hour'):
-        from pdf_ai_mapper_spark.streaming import dedup_stream
-        dedup_stream(
-            spark, indir, outdir, self.SCHEMA, ['content_hash'],
-            ts_col='ts', watermark=watermark,
-            derive=lambda s: s.withColumn('content_hash', F.md5('text')))
-        return spark.read.parquet(os.path.join(outdir, 'deduped'))
-
-    def test_within_watermark_duplicates_guaranteed_dropped(self, spark):
-        import datetime as dt
-        base = dt.datetime(2025, 1, 1)
-        indir = tempfile.mkdtemp(prefix='pam_sdedup_in_')
-        outdir = tempfile.mkdtemp(prefix='pam_sdedup_out_')
-        try:
-            rows = [(i, f'doc {i % 20}', base + dt.timedelta(seconds=30 * i))
-                    for i in range(100)]  # 5 copies of each of 20 texts
-            self._write(spark, rows, indir)
-            out = self._run(spark, indir, outdir).collect()
-            assert len(out) == 20
-            assert sorted({r['text'] for r in out}) == sorted(
-                {f'doc {i}' for i in range(20)})
-        finally:
-            shutil.rmtree(indir, ignore_errors=True)
-            shutil.rmtree(outdir, ignore_errors=True)
-
-    def test_state_persists_across_available_now_runs(self, spark):
-        # two successive availableNow runs share the checkpointed state
-        # store: a duplicate arriving in run 2, within the watermark of
-        # its run-1 original, is still dropped
-        import datetime as dt
-        base = dt.datetime(2025, 1, 1)
-        indir = tempfile.mkdtemp(prefix='pam_sdedup2_in_')
-        outdir = tempfile.mkdtemp(prefix='pam_sdedup2_out_')
-        try:
-            self._write(spark, [(1, 'alpha', base), (2, 'beta', base)], indir)
-            first = self._run(spark, indir, outdir).count()
-            assert first == 2
-            self._write(spark, [(3, 'alpha', base + dt.timedelta(minutes=5)),
-                                (4, 'gamma', base + dt.timedelta(minutes=5))],
-                        indir)
-            out = self._run(spark, indir, outdir).collect()
-            texts = sorted(r['text'] for r in out)
-            assert texts == ['alpha', 'beta', 'gamma']
-        finally:
-            shutil.rmtree(indir, ignore_errors=True)
-            shutil.rmtree(outdir, ignore_errors=True)
-
-    def test_state_evicted_past_watermark_readmits_recrawl(self, spark):
-        # the flip side that distinguishes this from global
-        # dropDuplicates: once the watermark passes a key's event time,
-        # its state is evicted and a much-later re-crawl re-enters the
-        # corpus. (Eviction timing is an implementation property of the
-        # state store — the CONTRACT only guarantees dedup within the
-        # delay — so this pins observed RocksDB/HDFS-store behavior.)
-        import datetime as dt
-        base = dt.datetime(2025, 1, 1)
-        indir = tempfile.mkdtemp(prefix='pam_sdedup3_in_')
-        outdir = tempfile.mkdtemp(prefix='pam_sdedup3_out_')
-        try:
-            self._write(spark, [(1, 'alpha', base)], indir)
-            assert self._run(spark, indir, outdir,
-                             watermark='10 minutes').count() == 1
-            # run 2's batch carries the watermark far past run 1's
-            # state (+1 day), then re-crawls 'alpha'
-            self._write(spark, [(2, 'filler', base + dt.timedelta(days=1))],
-                        indir)
-            assert self._run(spark, indir, outdir,
-                             watermark='10 minutes').count() == 2
-            self._write(spark, [(3, 'alpha', base + dt.timedelta(days=1))],
-                        indir)
-            out = self._run(spark, indir, outdir, watermark='10 minutes')
-            assert out.filter(F.col('text') == 'alpha').count() == 2
-        finally:
-            shutil.rmtree(indir, ignore_errors=True)
-            shutil.rmtree(outdir, ignore_errors=True)
 
 
 class TestEpochUpsample:

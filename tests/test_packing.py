@@ -612,170 +612,3 @@ class TestExportJsonl:
         with pytest.raises(ValueError):
             export_jsonl(spark, self._df(spark, 5),
                          tempfile.mkdtemp(), 'doc_id', 0)
-
-
-class TestStreamExportShards:
-    def _write_input(self, spark, d, rows):
-        spark.createDataFrame(rows, 'doc_id long, toks long') \
-            .coalesce(1).write.mode('append').parquet(d)
-
-    def test_stream_builds_then_appends_verified_export(self, spark):
-        import shutil
-        import tempfile
-        from pdf_ai_mapper_spark.operators.packing import verify_shards
-        from pdf_ai_mapper_spark.streaming import stream_export_shards
-        inp = tempfile.mkdtemp(prefix='pam_sx_in_')
-        out = tempfile.mkdtemp(prefix='pam_sx_out_')
-        shutil.rmtree(out)
-        try:
-            self._write_input(spark, inp, [(i, 37) for i in range(100)])
-            stream_export_shards(spark, inp, out,
-                                 'doc_id long, toks long',
-                                 'doc_id', 'toks', 1000, seed='sx')
-            assert verify_shards(spark, out, 'doc_id', 'toks')
-            m1 = {r['shard']: tuple(r) for r in
-                  spark.read.parquet(f'{out}/_manifest').collect()}
-            assert sum(r[2] for r in m1.values()) == 3700
-
-            # second wave of files -> appended at the next boundary,
-            # stored manifest rows byte-identical
-            self._write_input(spark, inp,
-                              [(1000 + i, 29) for i in range(80)])
-            stream_export_shards(spark, inp, out,
-                                 'doc_id long, toks long',
-                                 'doc_id', 'toks', 1000, seed='sx')
-            assert verify_shards(spark, out, 'doc_id', 'toks')
-            m2 = {r['shard']: tuple(r) for r in
-                  spark.read.parquet(f'{out}/_manifest').collect()}
-            for s, row in m1.items():
-                assert m2[s] == row
-            new = set(m2) - set(m1)
-            assert new and min(new) == 4       # 3700 -> boundary 4000
-            assert sum(m2[s][2] for s in new) == 80 * 29
-
-            # a third run with nothing new changes nothing
-            stream_export_shards(spark, inp, out,
-                                 'doc_id long, toks long',
-                                 'doc_id', 'toks', 1000, seed='sx')
-            m3 = {r['shard']: tuple(r) for r in
-                  spark.read.parquet(f'{out}/_manifest').collect()}
-            assert m3 == m2
-        finally:
-            shutil.rmtree(inp, ignore_errors=True)
-            shutil.rmtree(out, ignore_errors=True)
-
-    def test_lost_marker_after_manifest_commit_does_not_reappend(self, spark):
-        """ADVICE r5 #2: a crash BETWEEN the manifest commit and the
-        _stream_batches/<id> marker write used to make a restarted
-        stream re-append the whole batch (and, data and manifest being
-        mutually consistent, verify_shards passed on the silent
-        duplicates). The batch id now rides in the manifest commit, so
-        the restart recognizes the committed batch and restores the
-        marker instead."""
-        import os
-        import shutil
-        import tempfile
-        from pdf_ai_mapper_spark.operators.packing import verify_shards
-        from pdf_ai_mapper_spark.streaming import stream_export_shards
-        inp = tempfile.mkdtemp(prefix='pam_sx_in_')
-        out = tempfile.mkdtemp(prefix='pam_sx_out_')
-        shutil.rmtree(out)
-        try:
-            self._write_input(spark, inp, [(i, 10) for i in range(20)])
-            stream_export_shards(spark, inp, out,
-                                 'doc_id long, toks long',
-                                 'doc_id', 'toks', 100, seed='sx')
-            man = spark.read.parquet(f'{out}/_manifest')
-            assert 'batch_id' in man.columns   # the idempotence record
-            # simulate the torn window: marker lost, checkpoint lost
-            os.remove(f'{out}/_stream_batches/0')
-            shutil.rmtree(f'{out}/_stream_checkpoint')
-            stream_export_shards(spark, inp, out,
-                                 'doc_id long, toks long',
-                                 'doc_id', 'toks', 100, seed='sx')
-            total = (spark.read.parquet(f'{out}/_manifest')
-                     .agg(F.sum('n_tokens')).collect()[0][0])
-            assert total == 200                # not doubled
-            n_docs = spark.read.parquet(f'{out}/shards').count()
-            assert n_docs == 20                # no duplicate rows either
-            assert os.path.exists(f'{out}/_stream_batches/0')  # restored
-            assert verify_shards(spark, out, 'doc_id', 'toks')
-        finally:
-            shutil.rmtree(inp, ignore_errors=True)
-            shutil.rmtree(out, ignore_errors=True)
-
-    def test_batch_id_check_survives_batch_bootstrapped_export(self, spark):
-        """ADVICE r6 low: when the export is BOOTSTRAPPED by a
-        non-streaming write_shards (manifest files WITHOUT batch_id)
-        and the stream appends later files WITH it, default parquet
-        schema resolution may pick an old file, drop the batch_id
-        column, and silently skip the committed-batch check — reopening
-        the double-append window. The recovery read must mergeSchema."""
-        import os
-        import shutil
-        import tempfile
-        from pdf_ai_mapper_spark.operators.packing import (shuffle_shards,
-                                                           verify_shards,
-                                                           write_shards)
-        from pdf_ai_mapper_spark.streaming import stream_export_shards
-        inp = tempfile.mkdtemp(prefix='pam_sx_in_')
-        out = tempfile.mkdtemp(prefix='pam_sx_out_')
-        shutil.rmtree(out)
-        try:
-            # bootstrap WITHOUT the stream: no batch_id column on disk
-            boot = spark.createDataFrame([(i, 10) for i in range(20)],
-                                         'doc_id long, toks long')
-            sharded = shuffle_shards(boot, 'doc_id', 'toks', 100,
-                                     seed='boot')
-            write_shards(spark, sharded, out, 'doc_id', 'toks')
-            release(sharded)
-            # stream appends batch 0 (manifest rows WITH batch_id)
-            self._write_input(spark, inp,
-                              [(100 + i, 10) for i in range(20)])
-            stream_export_shards(spark, inp, out,
-                                 'doc_id long, toks long',
-                                 'doc_id', 'toks', 100, seed='sx')
-            # torn window: marker + checkpoint lost, batch replays
-            os.remove(f'{out}/_stream_batches/0')
-            shutil.rmtree(f'{out}/_stream_checkpoint')
-            stream_export_shards(spark, inp, out,
-                                 'doc_id long, toks long',
-                                 'doc_id', 'toks', 100, seed='sx')
-            total = (spark.read.option('mergeSchema', 'true')
-                     .parquet(f'{out}/_manifest')
-                     .agg(F.sum('n_tokens')).collect()[0][0])
-            assert total == 400                # 200 boot + 200, once
-            assert spark.read.parquet(f'{out}/shards').count() == 40
-            assert verify_shards(spark, out, 'doc_id', 'toks')
-        finally:
-            shutil.rmtree(inp, ignore_errors=True)
-            shutil.rmtree(out, ignore_errors=True)
-
-    def test_completed_batch_marker_skips_rerun(self, spark):
-        import os
-        import shutil
-        import tempfile
-        from pdf_ai_mapper_spark.streaming import stream_export_shards
-        inp = tempfile.mkdtemp(prefix='pam_sx_in_')
-        out = tempfile.mkdtemp(prefix='pam_sx_out_')
-        shutil.rmtree(out)
-        try:
-            self._write_input(spark, inp, [(i, 10) for i in range(20)])
-            stream_export_shards(spark, inp, out,
-                                 'doc_id long, toks long',
-                                 'doc_id', 'toks', 100, seed='sx')
-            marks = os.listdir(f'{out}/_stream_batches')
-            assert marks == ['0']
-            # wipe the STREAM checkpoint (simulates a fresh pipeline
-            # deploy re-reading all input) -> markers must prevent a
-            # double append
-            shutil.rmtree(f'{out}/_stream_checkpoint')
-            stream_export_shards(spark, inp, out,
-                                 'doc_id long, toks long',
-                                 'doc_id', 'toks', 100, seed='sx')
-            total = (spark.read.parquet(f'{out}/_manifest')
-                     .agg(F.sum('n_tokens')).collect()[0][0])
-            assert total == 200                # not doubled
-        finally:
-            shutil.rmtree(inp, ignore_errors=True)
-            shutil.rmtree(out, ignore_errors=True)

@@ -96,64 +96,6 @@ def _sections(formatted: str) -> list[tuple[str, str, str]]:
     return out
 
 
-def test_asof_narrow_keeps_left_payload_out_of_window_exchange(spark):
-    """asof_join(strategy='narrow'): the wide left columns must never
-    enter any shuffle Exchange or Sort — only the join-back carries
-    them (VERDICT r4: the inline form's window exchange was the one
-    perf `weak`; the narrow path is the 100 TB shape for wide lefts)."""
-    import datetime as dt
-
-    from pdf_ai_mapper_spark.operators.asof import asof_join
-    left = spark.createDataFrame(
-        [(1, dt.datetime(2024, 1, 1, 5), 7, 'wide-doc-text')],
-        'doc_id long, ts timestamp, k long, doc_text string')
-    right = spark.createDataFrame(
-        [(7, dt.datetime(2024, 1, 1, 4), 'snap')],
-        'k long, rts timestamp, tag string')
-    import re
-
-    df = asof_join(left, right, on='k', left_ts='ts', right_ts='rts')
-    df.collect()   # let AQE finalize (runtime stats → broadcast join-back)
-    fm = _formatted(spark, df)
-    # AQE's formatted explain carries BOTH plan trees (details follow
-    # them); audit only the operators present in the FINAL tree
-    final_tree = fm.split('== Initial Plan ==')[0]
-    final_ids = set(re.findall(r'\((\d+)\)', final_tree))
-    # wide left (a string payload column) must auto-route to narrow:
-    # every window-pipeline operator (carries __src/__payload) must be
-    # free of the left payload column
-    window_sections = 0
-    for sid, name, section in _sections(fm):
-        if (sid in final_ids
-                and name in ('Exchange', 'Sort', 'Window', 'WindowGroupLimit')
-                and '__src' in section):
-            window_sections += 1
-            assert 'doc_text' not in section, (name, section)
-    assert window_sections >= 3   # exchange + sort + windows at minimum
-    # and with a small resolved table AQE must broadcast the join-back
-    # in the final plan, so the left payload avoids a network shuffle
-    assert 'BroadcastHashJoin' in final_tree
-    assert 'SortMergeJoin' not in final_tree
-
-
-def test_asof_inline_single_window_no_join(spark):
-    """asof_join(strategy='inline'): one window, no join-back — the
-    skinny-payload fast path must not acquire a second join."""
-    import datetime as dt
-
-    from pdf_ai_mapper_spark.operators.asof import asof_join
-    left = spark.createDataFrame(
-        [(1, dt.datetime(2024, 1, 1, 5), 7, 2.0)],
-        'event_id long, ts timestamp, k long, value double')
-    right = spark.createDataFrame(
-        [(7, dt.datetime(2024, 1, 1, 4), 9.0)],
-        'k long, rts timestamp, cp double')
-    df = asof_join(left, right, on='k', left_ts='ts', right_ts='rts')
-    p = _plan(df)   # all-fixed-width left → auto routes to inline
-    assert 'Join' not in p
-    assert p.count('Window') == 1
-
-
 def _final_ids(formatted: str) -> set[str]:
     """Operator ids appearing in FINAL plan regions of a formatted
     AQE explain. A nested InMemoryRelation carries its OWN
@@ -291,8 +233,8 @@ def test_release_contract_no_persist_leaks(spark):
     LSH signatures, shared array bases) must leave ZERO persisted RDDs
     behind — a leak per call accumulates MEMORY_AND_DISK tables across
     a bench loop or a long driver session."""
-    # NOT covered: q_pagerank_centrality / q_semantic_dedup /
-    # q_minhash_incremental — their operators localCheckpoint()
+    # NOT covered: q_semantic_dedup / q_minhash_incremental — their
+    # operators localCheckpoint()
     # iterations, and checkpointed RDDs stay registered until the JVM
     # ContextCleaner GCs the unreferenced handles (bounded per call,
     # self-cleaning; a hard unpersist would break the lineage
