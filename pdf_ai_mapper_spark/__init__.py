@@ -10,7 +10,8 @@ Common-Crawl-style web-page tables:
                    snippets). No Spark imports; unit-testable standalone.
 - ``operators``  — Spark DataFrame operators wrapping the kernels as
                    Arrow pandas UDFs, plus native-Catalyst dedup, search,
-                   similarity, categorization and skew handling.
+                   categorization, the Bloom ingest pre-filter and the
+                   scan parallelism spread.
 - ``fixtures``   — deterministic synthetic ``web_pages`` generator
                    (seed-free: content derived from row index).
 - ``pipeline``   — the end-to-end extraction pipeline with

@@ -196,9 +196,18 @@ def reconcile_intents(spark: SparkSession, output_path: str) -> int:
     return fixed
 
 
+def recover_output(output_path: str) -> None:
+    """Finish or roll back any directory swap a crash interrupted
+    (``recover_swap``, then ``recover_upsert``). Readers and writers
+    call it first: a writer that created a fresh ``data`` before it
+    would strand the table a crashed swap moved aside."""
+    data = data_path(output_path)
+    recover_swap(data)
+    recover_upsert(data)
+
+
 def read_output(spark: SparkSession, output_path: str) -> DataFrame:
-    recover_swap(data_path(output_path))
-    recover_upsert(data_path(output_path))
+    recover_output(output_path)
     return spark.read.parquet(data_path(output_path))
 
 
@@ -212,9 +221,10 @@ def swap_dirs(data: str, tmp: str, old: str) -> None:
       every later swap fails forever;
     - the window between the two renames is NOT atomic: a crash there
       leaves ``data`` missing but ``old`` + ``tmp`` intact.
-      ``recover_swap`` (called by ``read_output``) restores ``old`` in
-      that case, so readers see the pre-swap table rather than
-      PATH_NOT_FOUND.
+      ``recover_swap`` (called through ``recover_output``) restores
+      ``old`` in that case, so readers see the pre-swap table rather
+      than PATH_NOT_FOUND, and writers never write a fresh ``data``
+      beside the stranded one.
     """
     import shutil
     shutil.rmtree(old, ignore_errors=True)
@@ -254,7 +264,7 @@ def compact_output(spark: SparkSession, output_path: str) -> dict:
     import shutil
 
     data = data_path(output_path)
-    df = spark.read.parquet(data)
+    df = read_output(spark, output_path)
     files_before = len(df.inputFiles())
     n_before = df.count()
 
@@ -308,12 +318,11 @@ def _promote_upsert(data: str, buckets: list[int]) -> None:
 
 
 def recover_upsert(data: str) -> None:
-    """Finish or discard an interrupted ``upsert_output`` (called by
-    ``read_output`` and at the start of every upsert). With a
-    published intent the merge write had completed → roll FORWARD
-    (finish the per-bucket promotion); without one the crash hit
-    mid-merge-write → the stored table is untouched, discard the
-    stray tmp."""
+    """Finish or discard an interrupted ``upsert_output`` (called
+    through ``recover_output``). With a published intent the merge
+    write had completed → roll FORWARD (finish the per-bucket
+    promotion); without one the crash hit mid-merge-write → the
+    stored table is untouched, discard the stray tmp."""
     import json
     import shutil
     tmp, old, intent = _upsert_paths(data)
@@ -372,7 +381,6 @@ def upsert_output(spark: SparkSession, output_path: str,
     from pyspark.sql import Observation
 
     data = data_path(output_path)
-    recover_upsert(data)
     tmp, _old, intent = _upsert_paths(data)
     b = batch.withColumn('bucket', bucket_of(key_col, n_buckets))
     affected = sorted(r['bucket']

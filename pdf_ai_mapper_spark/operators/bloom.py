@@ -30,7 +30,7 @@ bitmap fits the cap below (else the plain join).
 
 Construction: standard k-hash Bloom (Bloom 1970, CACM 13(7)) over the
 64-bit xxhash of the key column. Bit positions come from the vendored
-splitmix64 finalizer (similarity._splitmix64) applied to hash XOR
+splitmix64 finalizer (``_splitmix64`` below) applied to hash XOR
 per-probe seed, masked to a power-of-two bit count — deterministic
 across driver and executors, no RNG. Partial bitmaps (one per
 partition, after a shuffle-free coalesce bounds the count at 64) are
@@ -57,7 +57,21 @@ from typing import Iterator, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _splitmix64
+_SM64_GAMMA = np.uint64(0x9E3779B97F4A7C15)
+_SM64_M1 = np.uint64(0xBF58476D1CE4E5B9)
+_SM64_M2 = np.uint64(0x94D049BB133111EB)
+
+
+def _splitmix64(x: np.ndarray) -> np.ndarray:
+    """Vendored splitmix64 finalizer (Steele et al., OOPSLA 2014 —
+    public domain), vectorized over uint64. Deterministic everywhere;
+    uint64 arithmetic wraps, which is the intended mod-2^64 math."""
+    with np.errstate(over='ignore'):
+        z = x + _SM64_GAMMA
+        z = (z ^ (z >> np.uint64(30))) * _SM64_M1
+        z = (z ^ (z >> np.uint64(27))) * _SM64_M2
+        return z ^ (z >> np.uint64(31))
+
 
 _DEFAULT_BITS_PER_KEY = 10
 _NUM_PROBES = 7  # ≈ 0.69 · bits_per_key, optimal for 10 bits/key

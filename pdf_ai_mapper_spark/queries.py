@@ -25,7 +25,6 @@ from .kernels.stopwords import TOPIC_KEYWORDS
 from .operators import textstats
 from .operators.dedup import (dedup_exact, minhash_lsh_pairs,
                               ngram_jaccard_pairs, simhash_near_pairs)
-from .operators.similarity import brute_force_topk
 
 # language-ID marker table (operators/textstats.py) — SQL mirror built
 # from the same pinned dict
@@ -190,14 +189,6 @@ def q_fingerprint(spark, sf_dir):
             .orderBy('lang'))
 
 
-def q_emb_cosine_topk(spark, sf_dir):
-    """Embedding similarity: brute-force cosine top-10 vs the vec_id=0
-    query vector (array<float> → double math, rounded)."""
-    vecs = _t(spark, sf_dir, 'embeddings')
-    q = vecs.filter(F.col('vec_id') == 0).select('embedding').collect()[0][0]
-    return brute_force_topk(vecs, [float(x) for x in q], k=10)
-
-
 _SNIPPET_TOKENS = ['data', 'model']  # pinned; phrase = 'data model'
 
 # q_search_pipeline's query string; its stems are computed ONCE here on
@@ -337,18 +328,6 @@ def q_w2_search_snippets(spark, sf_dir):
            .limit(10)
            .withColumn('snippet', snip(F.col('text'))))
     return out.select('doc_id', 'score', 'snippet')
-
-
-def q_skew_salted_counts(spark, sf_dir):
-    """Salted two-stage aggregation (operators/skew.py) over a skewed
-    key — user_id event counts. The salt splits hot keys across
-    reducers; the merged result is byte-equal to a plain GROUP BY,
-    which is exactly what the oracle asserts."""
-    from .operators.skew import salted_count
-    ev = _t(spark, sf_dir, 'events')
-    return (salted_count(ev, F.col('user_id'), salt_buckets=8,
-                         key_name='user_id')
-            .orderBy('user_id'))
 
 
 def q_f1_size_reject(spark, sf_dir):
@@ -520,50 +499,6 @@ def q_doc_chunking(spark, sf_dir):
                                                    F.col('chunk_text'))))))
                  .alias('chunks_digest'))
             .orderBy('doc_id'))
-
-
-def q_skew_salted_agg(spark, sf_dir):
-    """General two-stage salted aggregation (operators/skew.salted_agg)
-    over the skewed events table: per-event_type count + sum + max of
-    value. The oracle asserts byte-equality with a plain GROUP BY —
-    the salting must be algebraically invisible."""
-    from .operators.skew import salted_agg
-    ev = _t(spark, sf_dir, 'events')
-    out = salted_agg(
-        ev, ['event_type'],
-        aggs_partial=[F.count('*').alias('__n'),
-                      F.sum('value').alias('__s'),
-                      F.max('value').alias('__m')],
-        aggs_merge=[F.sum('__n').cast('long').alias('n'),
-                    F.round(F.sum('__s'), 4).alias('total_value'),
-                    F.round(F.max('__m'), 6).alias('max_value')])
-    return out.orderBy('event_type')
-
-
-def q_emb_cosine_dups(spark, sf_dir):
-    """Embedding-cosine near-dup pairs (operators/similarity.
-    pairwise_cosine_dups, hyperplane-LSH blocked) over the embeddings
-    table unioned with an exactly-duplicated slice (vec_id%5==0,
-    shifted ids). The fixture's max natural pairwise cosine is ~0.51,
-    so at threshold 0.95 the true pair set is exactly the duplicate
-    identities — which identical vectors' identical buckets provably
-    find — making the LSH operator's output equal to the exact DuckDB
-    all-pairs oracle. ``max_bucket_size`` is set above the table size
-    so every bucket takes the dense branch: the star-expansion branch
-    only guarantees pairs THROUGH the hub, so the exact-equality claim
-    would be fragile to fixture growth otherwise (ADVICE r2)."""
-    from .operators.similarity import pairwise_cosine_dups
-    vecs = _t(spark, sf_dir, 'embeddings').select('vec_id', 'embedding')
-    dup = (vecs.filter(F.col('vec_id') % 5 == 0)
-           .withColumn('vec_id', F.col('vec_id') + 100000))
-    both = vecs.unionByName(dup)
-    from .operators.dedup import release as _release
-    res = pairwise_cosine_dups(both, threshold=0.95, planes=6,
-                               max_bucket_size=1_000_000)
-    out = res.orderBy('id_a', 'id_b')   # orderBy drops _persisted_deps
-    rows = out.collect()
-    _release(res)
-    return spark.createDataFrame(rows, out.schema)
 
 
 def q_ngram_jaccard_exact(spark, sf_dir):
@@ -916,19 +851,6 @@ def q_search_pipeline(spark, sf_dir):
     return search(d, _SEARCH_QUERY, k=10)
 
 
-def q_lsh_ann_topk(spark, sf_dir):
-    """Approximate top-k via hyperplane LSH (operators/similarity.
-    lsh_topk; rows-only — recall < 1.0 by construction, so no SQL
-    oracle; the exact variant q_emb_cosine_topk is the oracled
-    anchor). The query's own vector must always be found (its bucket
-    is its own)."""
-    from .operators.similarity import lsh_topk
-    vecs = _t(spark, sf_dir, 'embeddings')
-    q = vecs.filter(F.col('vec_id') == 0).select('embedding').collect()[0][0]
-    return (lsh_topk(vecs, [float(x) for x in q], k=10, planes=4)
-            .orderBy(F.desc('cos_sim'), F.asc('vec_id')))
-
-
 def q_neardup_pr(spark, sf_dir):
     """Precision/recall of the approximate near-dup operators (MinHash
     LSH, SimHash) against the EXACT n-gram Jaccard pair sets (rows-only
@@ -1145,44 +1067,6 @@ def q_para_neardup(spark, sf_dir):
         'docs_with_dups long, dup_paras long')
 
 
-def q_semantic_dedup(spark, sf_dir):
-    """SemDeDup (similarity.semantic_dedup, round 5 — Abbas et al.
-    2023: embedding-space dedup that catches paraphrases text dedup
-    cannot): KMeans cells → within-cell LSH-sub-bucketed cosine pairs
-    → connected components → keep the least-prototypical member per
-    group. Runs over the embeddings table unioned with an
-    exactly-duplicated slice (the q_emb_cosine_dups construction).
-
-    ORACLED despite the seeded KMeans, because on this fixture the
-    result is provably assignment-INDEPENDENT: identical vectors land
-    in the same cell and LSH sub-bucket whatever the clustering, the
-    fixture's max natural cosine (~0.51, pinned by q_emb_cosine_dups'
-    exact-equality oracle) is far below the 0.995 threshold so the
-    pair set is exactly the planted identities, identical vectors tie
-    on centroid_sim so the keep rule degenerates to min-id, and
-    max_bucket_size sits above the corpus so every bucket takes the
-    dense branch (star pairs only guarantee hub adjacency). The SQL
-    side needs only the construction arithmetic."""
-    from .operators.dedup import release as _release
-    from .operators.similarity import semantic_dedup
-    vecs = _t(spark, sf_dir, 'embeddings').select('vec_id', 'embedding')
-    dup = (vecs.filter(F.col('vec_id') % 5 == 0)
-           .withColumn('vec_id', F.col('vec_id') + 100000))
-    both = vecs.unionByName(dup)
-    out = semantic_dedup(both, n_clusters=8, threshold=0.995,
-                         max_bucket_size=100000)
-    agg = out.agg(
-        F.count('*').cast('long').alias('n_vecs'),
-        F.count_distinct('sem_group').cast('long').alias('n_groups'),
-        F.sum((~F.col('keep')).cast('long')).cast('long').alias('n_removed'),
-        F.sum(F.when(F.col('keep'), F.col('vec_id'))).cast('long')
-        .alias('survivor_id_sum')).collect()
-    _release(out)
-    return spark.createDataFrame(agg,
-                                 'n_vecs long, n_groups long, '
-                                 'n_removed long, survivor_id_sum long')
-
-
 def q_pack_sequences(spark, sf_dir):
     """Sequence packing for training export (operators/packing,
     round 5 — GPT-style concat-and-chop): every document's position
@@ -1236,98 +1120,6 @@ def q_encode_pack(spark, sf_dir):
     rows = out.collect()
     _release(packed)
     return spark.createDataFrame(rows, out.schema)
-
-
-def q_ivf_ann_topk(spark, sf_dir):
-    """IVF (inverted-file) ANN top-k (operators/similarity.ivf_index/
-    ivf_topk; rows-only — KMeans cells are seeded but not SQL): probe
-    the 4 nearest of 8 cells for the vec_id=0 query; the exact variant
-    q_emb_cosine_topk is the oracled anchor."""
-    from .operators.similarity import ivf_index, ivf_topk
-    vecs = _t(spark, sf_dir, 'embeddings')
-    q = vecs.filter(F.col('vec_id') == 0).select('embedding').collect()[0][0]
-    indexed, model = ivf_index(vecs, n_lists=8)
-    return (ivf_topk(indexed, model, [float(x) for x in q], k=10, n_probe=4)
-            .orderBy(F.desc('cos_sim'), F.asc('vec_id')))
-
-
-def q_ann_recall(spark, sf_dir):
-    """Recall@k evidence for the ANN prune paths (round 7 — VERDICT r6
-    #5): LSH (planes=4, the q_lsh_ann_topk config) and IVF (probe
-    4-of-8 cells, the q_ivf_ann_topk config) measured against the
-    ORACLED exact twin (q_emb_cosine_topk's brute_force_topk) over
-    eight fixture query vectors, with the mean scanned corpus fraction
-    alongside — the cost axis of the recall/cost tradeoff (LSH scans
-    ~1/16 of the corpus for its recall; IVF ~half). Rows-only (recall
-    < 1.0 by construction; KMeans cells are not SQL), but the quality
-    floors are asserted IN-QUERY so a recall regression turns the
-    driver row RED instead of hiding behind a stable row count:
-    self-hit must be perfect (the query's bucket is its own; its cell
-    is the nearest), and mean recall must clear 0.15 (lsh) / 0.60
-    (ivf). Measured: 0.2375 / 0.85 at sf0.01 (0.275 lsh at sf0.001) —
-    leave margin because KMeans cell boundaries may shift with
-    partitioning; the LSH path is splitmix64-deterministic and pinned
-    EXACTLY by tests/test_dedup_similarity.py::test_ann_recall_pinned.
-    Scale shape: the corpus is bucketed/indexed ONCE and persisted;
-    each probe reads one bucket / n_probe cells (partition-prunable
-    when written bucketed by lsh_bucket / ivf_cell)."""
-    from pyspark import StorageLevel
-    from .operators.similarity import (brute_force_topk, ivf_index,
-                                       ivf_probe_cells, query_bucket,
-                                       with_lsh_bucket)
-    planes, n_lists, n_probe, k = 4, 8, 4, 10
-    vecs = _t(spark, sf_dir, 'embeddings')
-    qids = list(range(8))
-    queries = {r['vec_id']: [float(x) for x in r['embedding']]
-               for r in vecs.filter(F.col('vec_id').isin(qids))
-               .select('vec_id', 'embedding').collect()}
-    indexed, model = ivf_index(vecs, n_lists=n_lists)
-    both = (with_lsh_bucket(indexed, 'embedding', planes=planes)
-            .persist(StorageLevel.MEMORY_AND_DISK))
-    n_total = both.count()
-    bucket_n = {r['lsh_bucket']: r['n'] for r in
-                both.groupBy('lsh_bucket').agg(F.count('*').alias('n'))
-                .collect()}
-    cell_n = {r['ivf_cell']: r['n'] for r in
-              both.groupBy('ivf_cell').agg(F.count('*').alias('n'))
-              .collect()}
-
-    def ids(df):
-        return {r['vec_id'] for r in df.collect()}
-
-    per_method = {'lsh': [], 'ivf': []}  # (recall, self_hit, scanned)
-    for qid in qids:
-        qv = queries[qid]
-        exact = ids(brute_force_topk(vecs, qv, k=k))
-        b = query_bucket(qv, planes)
-        lsh = ids(brute_force_topk(
-            both.filter(F.col('lsh_bucket') == b), qv, k=k))
-        probe = ivf_probe_cells(model, qv, n_probe)
-        ivf = ids(brute_force_topk(
-            both.filter(F.col('ivf_cell').isin(probe)), qv, k=k))
-        per_method['lsh'].append(
-            (len(lsh & exact) / k, qid in lsh, bucket_n.get(b, 0)))
-        per_method['ivf'].append(
-            (len(ivf & exact) / k, qid in ivf,
-             sum(cell_n.get(c, 0) for c in probe)))
-    both.unpersist()
-    floors = {'lsh': 0.15, 'ivf': 0.60}
-    rows = []
-    for name in ('lsh', 'ivf'):
-        rs = per_method[name]
-        mean_r = sum(r for r, _, _ in rs) / len(rs)
-        min_r = min(r for r, _, _ in rs)
-        self_hit = sum(1 for _, s, _ in rs if s) / len(rs)
-        scan = sum(n for _, _, n in rs) / (len(rs) * n_total)
-        assert self_hit == 1.0, \
-            f'{name}: query vector missing from its own top-{k} ({self_hit})'
-        assert mean_r >= floors[name], \
-            f'{name}: mean recall@{k} {mean_r} below floor {floors[name]}'
-        rows.append((name, len(rs), k, round(mean_r, 6), round(min_r, 6),
-                     round(self_hit, 6), round(scan, 6)))
-    return spark.createDataFrame(
-        rows, 'operator string, n_queries long, k long, mean_recall double,'
-              ' min_recall double, self_hit double, mean_scan_frac double')
 
 
 def q_unigram_logprob(spark, sf_dir):
@@ -1487,31 +1279,6 @@ def q_temperature_mix(spark, sf_dir):
                  F.sum('n_tokens').cast('long').alias('sum_tokens'),
                  F.sum('doc_id').cast('long').alias('id_sum'))
             .orderBy('lang'))
-
-
-def q_semantic_decontamination(spark, sf_dir):
-    """Embedding-space benchmark decontamination
-    (similarity.semantic_decontamination): the benchmark = a shifted
-    copy of every 10th embedding (ids +100000), so exactly those 50
-    train vectors sit at rounded cosine 1.0 while the corpus's max
-    natural cosine (~0.51, measured for q_semantic_dedup) is far under
-    the 0.9 threshold — the verdict has no rounding boundary anywhere
-    near it. Reports per-verdict counts, train-id sums, and the sum of
-    matched bench ids (witnessing the min-id argmax). ORACLED: DuckDB
-    recomputes every train×bench cosine, rounds to the same 6-place
-    grid, and applies the identical (sim DESC, bench_id ASC) argmax."""
-    from .operators.similarity import semantic_decontamination
-    emb = _t(spark, sf_dir, 'embeddings')
-    bench = emb.filter(F.col('vec_id') % 10 == 0).select(
-        (F.col('vec_id') + 100000).alias('vec_id'), 'embedding')
-    out = semantic_decontamination(emb, bench, threshold=0.9)
-    verdict = F.when(F.col('contaminated'),
-                     F.lit('contaminated')).otherwise(F.lit('clean'))
-    return (out.groupBy(verdict.alias('verdict'))
-            .agg(F.count('*').cast('long').alias('n_vecs'),
-                 F.sum('vec_id').cast('long').alias('id_sum'),
-                 F.sum(F.when(F.col('contaminated'), F.col('bench_id')))
-                 .cast('long').alias('bench_id_sum')))
 
 
 def q_epoch_upsample(spark, sf_dir):
@@ -1719,109 +1486,6 @@ def q_calibration_bins(spark, sf_dir):
     return (bins.select('bin', 'n', 'n_pos',
                         F.round('pos_rate', 6).alias('pos_rate'))
             .orderBy('bin'))
-
-
-def q_bucketed_join(spark, sf_dir):
-    """Bucketed co-located join (layout.write_bucketed /
-    colocated_join, late round 5): documents and their frozen-model
-    scores land as two tables hash-bucketed on doc_id, then join with
-    ZERO shuffle Exchange on either side (plan pinned in
-    tests/test_layout.py with broadcast forced off — here the values
-    witness the join). Per-lang totals over docs whose score passes
-    the gate. Tables are external to a temp dir and dropped in
-    finally; the result is materialized first."""
-    import shutil
-    import tempfile
-    from .layout import colocated_join, drop_table, write_bucketed
-    from .operators.quality_model import model_quality_units
-    lt, rt = 'pam_q_bjoin_docs', 'pam_q_bjoin_scores'
-    d1 = tempfile.mkdtemp(prefix='pam_q_bj1_')
-    d2 = tempfile.mkdtemp(prefix='pam_q_bj2_')
-    shutil.rmtree(d1)
-    shutil.rmtree(d2)
-    docs = (_t(spark, sf_dir, 'documents')
-            .select('doc_id', 'lang',
-                    F.size(F.split(F.trim(F.col('text')), r'\s+'))
-                    .cast('long').alias('toks')))
-    scores = (model_quality_units(_t(spark, sf_dir, 'documents'))
-              .filter(F.col('mq_units') > 0)
-              .select('doc_id', F.col('mq_units').alias('units')))
-    try:
-        write_bucketed(docs, lt, d1, 'doc_id', 8)
-        write_bucketed(scores, rt, d2, 'doc_id', 8)
-        res = (colocated_join(spark, lt, rt, 'doc_id')
-               .groupBy('lang')
-               .agg(F.count('*').cast('long').alias('n_docs'),
-                    F.sum('toks').cast('long').alias('sum_toks'),
-                    F.sum('units').cast('long').alias('sum_units'))
-               .orderBy('lang'))
-        rows = res.collect()
-        return spark.createDataFrame(rows, res.schema)
-    finally:
-        drop_table(spark, lt)
-        drop_table(spark, rt)
-        shutil.rmtree(d1, ignore_errors=True)
-        shutil.rmtree(d2, ignore_errors=True)
-
-
-def q_range_pruned_read(spark, sf_dir):
-    """Range-clustered layout + min/max file skipping
-    (layout.write_clustered / read_pruned, late round 5 — the
-    Iceberg/Delta manifest-pruning idea over plain parquet):
-    documents land range-clustered on doc_id across 8 files with a
-    per-file min/max sidecar; a mid-range predicate then scans ONLY
-    the overlapping files (skip evidence asserted here: fewer files
-    read than exist). Values must equal a plain WHERE over the whole
-    table — pruning is a physical optimization, never a semantic
-    one."""
-    import shutil
-    import tempfile
-    from .layout import read_pruned, write_clustered
-    docs = (_t(spark, sf_dir, 'documents')
-            .select('doc_id', 'lang',
-                    F.size(F.split(F.trim(F.col('text')), r'\s+'))
-                    .cast('long').alias('toks')))
-    b = docs.agg(F.min('doc_id'), F.max('doc_id')).collect()[0]
-    mn, mx = int(b[0]), int(b[1])
-    lo = mn + (mx - mn) * 2 // 10
-    hi = mn + (mx - mn) * 6 // 10
-    out = tempfile.mkdtemp(prefix='pam_q_prune_')
-    shutil.rmtree(out)
-    try:
-        write_clustered(docs, out, 'doc_id', 8)
-        pruned = read_pruned(spark, out, 'doc_id', lo, hi)
-        res = (pruned.groupBy('lang')
-               .agg(F.count('*').cast('long').alias('n_docs'),
-                    F.sum('toks').cast('long').alias('sum_toks'),
-                    F.min('doc_id').cast('long').alias('min_id'),
-                    F.max('doc_id').cast('long').alias('max_id'))
-               .orderBy('lang'))
-        rows = res.collect()
-        read, total = pruned._pruned_files
-        assert read < total, (read, total)   # the skip actually happened
-        return spark.createDataFrame(rows, res.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def q_salted_join(spark, sf_dir):
-    """Salted shuffle join (skew.salted_join, late round 5 — the join
-    companion to the salted aggs): events join a derived user dim on
-    (user_id, per-row salt) so a hot user spreads across 8 reducers;
-    the salt is routing only, so values must equal the plain join
-    (hot-key partition spread is pinned in tests/test_skew.py).
-    Per-event-type totals of the joined weight witness every matched
-    row."""
-    from .operators.skew import salted_join
-    ev = _t(spark, sf_dir, 'events')
-    dim = (ev.select('user_id').distinct()
-           .withColumn('weight', (F.col('user_id') % 13).cast('long')))
-    joined = salted_join(ev, dim, 'user_id', salt_buckets=8)
-    return (joined.groupBy('event_type')
-            .agg(F.count('*').cast('long').alias('n'),
-                 F.sum('weight').cast('long').alias('sum_weight'),
-                 F.sum('user_id').cast('long').alias('sum_uid'))
-            .orderBy('event_type'))
 
 
 def q_corpus_datasheet(spark, sf_dir):
@@ -2133,24 +1797,6 @@ def q_bloom_incremental_ingest(spark, sf_dir):
                                      'lang string, n long')
     finally:
         shutil.rmtree(outdir, ignore_errors=True)
-
-
-def q_ivf_ann_exact(spark, sf_dir):
-    """IVF ANN probed at n_probe = n_lists — every cell scanned, so the
-    result is PROVABLY the exact brute-force top-k (ivf_topk degenerates
-    to brute_force_topk over the whole corpus; similarity.py:185-201).
-    ORACLED with the same exact-cosine SQL as q_emb_cosine_topk: this
-    value-checks the IVF machinery end-to-end — KMeans cell assignment
-    loses no vectors, the probe-union covers the corpus, and the
-    per-cell cosine math matches the exact oracle bit-for-bit. The
-    pruning path (n_probe < n_lists, partition-pruned scan) stays the
-    rows-only q_ivf_ann_topk + the pytest recall/pruning pins."""
-    from .operators.similarity import ivf_index, ivf_topk
-    vecs = _t(spark, sf_dir, 'embeddings')
-    q = vecs.filter(F.col('vec_id') == 0).select('embedding').collect()[0][0]
-    indexed, model = ivf_index(vecs, n_lists=8)
-    return (ivf_topk(indexed, model, [float(x) for x in q], k=10, n_probe=8)
-            .orderBy(F.desc('cos_sim'), F.asc('vec_id')))
 
 
 def q_warc_ingest(spark, sf_dir):
@@ -2641,20 +2287,6 @@ ORACLES: dict[str, str] = {
         FROM tk GROUP BY seq ORDER BY seq
     """,
 
-    # SemDeDup: the construction arithmetic IS the oracle — the planted
-    # duplicate slice is removed (min-id survivors), nothing else is
-    # (max natural cosine ~0.51 << 0.995, pinned by q_emb_cosine_dups)
-    'q_semantic_dedup': """
-        SELECT CAST(count(*)
-                    + sum(CASE WHEN vec_id % 5 = 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_vecs,
-               CAST(count(*) AS BIGINT) AS n_groups,
-               CAST(sum(CASE WHEN vec_id % 5 = 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_removed,
-               CAST(sum(vec_id) AS BIGINT) AS survivor_id_sum
-        FROM embeddings
-    """,
-
     # exact BPE: per-word counts computed by tests/reference_bpe.py
     # (independent transcription of the public GPT-2 merge loop) over
     # the fixture lexicon; an unmapped word makes count(*)<>count(n)
@@ -2683,18 +2315,6 @@ ORACLES: dict[str, str] = {
                CAST(count(DISTINCT md5(regexp_replace(lower(text), '\s+', ' ', 'g')))
                     AS BIGINT) AS n_fp
         FROM documents GROUP BY lang ORDER BY lang
-    """,
-    'q_emb_cosine_topk': """
-        WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-        sims AS (
-            SELECT vec_id,
-                   round(list_dot_product(embedding::DOUBLE[], q.qv)
-                         / (sqrt(list_dot_product(embedding::DOUBLE[],
-                                                  embedding::DOUBLE[]))
-                            * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cos_sim
-            FROM embeddings, q)
-        SELECT vec_id, cos_sim FROM sims
-        ORDER BY cos_sim DESC, vec_id ASC LIMIT 10
     """,
     'q_w2_search_snippets': """
         WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
@@ -2737,10 +2357,6 @@ ORACLES: dict[str, str] = {
                || (CASE WHEN pos + 200 < length(t) THEN '...' ELSE '' END)
                    AS snippet
         FROM cleaned ORDER BY score DESC, doc_id ASC
-    """,
-    'q_skew_salted_counts': """
-        SELECT user_id, CAST(count(*) AS BIGINT) AS n
-        FROM events GROUP BY user_id ORDER BY user_id
     """,
     'q_f1_size_reject': """
         SELECT octet_length(encode(text)) <= 1500 AS accepted,
@@ -2892,31 +2508,6 @@ ORACLES: dict[str, str] = {
                CAST(sum(n_tokens) AS BIGINT) AS total_chunk_tokens,
                md5(string_agg(lbl, chr(31) ORDER BY lbl)) AS chunks_digest
         FROM lab GROUP BY doc_id ORDER BY doc_id
-    """,
-    'q_skew_salted_agg': """
-        SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-               round(sum(value), 4) AS total_value,
-               round(max(value), 6) AS max_value
-        FROM events GROUP BY event_type ORDER BY event_type
-    """,
-    'q_emb_cosine_dups': """
-        WITH u AS (
-            SELECT vec_id, embedding FROM embeddings
-            UNION ALL
-            SELECT vec_id + 100000, embedding FROM embeddings
-            WHERE vec_id % 5 = 0),
-        p AS (
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   round(list_dot_product(a.embedding::DOUBLE[],
-                                          b.embedding::DOUBLE[]) /
-                         (sqrt(list_dot_product(a.embedding::DOUBLE[],
-                                                a.embedding::DOUBLE[])) *
-                          sqrt(list_dot_product(b.embedding::DOUBLE[],
-                                                b.embedding::DOUBLE[]))), 6)
-                       AS cos_sim
-            FROM u a JOIN u b ON a.vec_id < b.vec_id)
-        SELECT id_a, id_b, cos_sim FROM p
-        WHERE cos_sim >= 0.95 ORDER BY id_a, id_b
     """,
     'q_ngram_jaccard_exact': r"""
         WITH toks AS (
@@ -3809,40 +3400,6 @@ ORACLES: dict[str, str] = {
         WHERE cum_before < budget
         GROUP BY lang ORDER BY lang
     """,
-    # every train×bench cosine recomputed, rounded to the same 6-place
-    # grid, identical (sim DESC, bid ASC) argmax; bench_id_sum is NULL
-    # for the clean group on both sides
-    'q_semantic_decontamination': r"""
-        WITH bench AS (
-            SELECT vec_id + 100000 AS bid, embedding FROM embeddings
-            WHERE vec_id % 10 = 0
-        ), sims AS (
-            SELECT t.vec_id, b.bid,
-                   round(list_dot_product(t.embedding::DOUBLE[],
-                                          b.embedding::DOUBLE[]) /
-                         (sqrt(list_dot_product(t.embedding::DOUBLE[],
-                                                t.embedding::DOUBLE[])) *
-                          sqrt(list_dot_product(b.embedding::DOUBLE[],
-                                                b.embedding::DOUBLE[]))), 6)
-                       AS sim
-            FROM embeddings t, bench b
-        ), best AS (
-            SELECT vec_id, bid, sim,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY sim DESC, bid ASC) AS rk
-            FROM sims
-        ), v AS (
-            SELECT vec_id, bid, sim >= 0.9 AS contaminated
-            FROM best WHERE rk = 1
-        )
-        SELECT CASE WHEN contaminated THEN 'contaminated'
-                    ELSE 'clean' END AS verdict,
-               CAST(count(*) AS BIGINT) AS n_vecs,
-               CAST(sum(vec_id) AS BIGINT) AS id_sum,
-               CAST(sum(CASE WHEN contaminated THEN bid END) AS BIGINT)
-                   AS bench_id_sum
-        FROM v GROUP BY verdict
-    """,
     # both shingle sets rebuilt in SQL and intersected — the benchmark
     # slice is every 97th doc
     'q_decontamination': r"""
@@ -3965,20 +3522,6 @@ ORACLES: dict[str, str] = {
         FROM documents
         WHERE doc_id % 2 = 0 OR doc_id % 3 = 0
         GROUP BY lang ORDER BY lang
-    """,
-    # full-probe IVF provably degenerates to exact brute force — same
-    # SQL as q_emb_cosine_topk by construction
-    'q_ivf_ann_exact': """
-        WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-        sims AS (
-            SELECT vec_id,
-                   round(list_dot_product(embedding::DOUBLE[], q.qv)
-                         / (sqrt(list_dot_product(embedding::DOUBLE[],
-                                                  embedding::DOUBLE[]))
-                            * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cos_sim
-            FROM embeddings, q)
-        SELECT vec_id, cos_sim FROM sims
-        ORDER BY cos_sim DESC, vec_id ASC LIMIT 10
     """,
     # the md5 coin replayed digit-for-digit: thresholds are the exact
     # hex of frac(f)·16^32 (1/4 → 2^126 = '4'+31×'0', 1/2 → 2^127 =
@@ -4185,61 +3728,6 @@ ORACLES: dict[str, str] = {
                round(sum(tokc) / CAST(count(*) AS DOUBLE), 6)
                    AS tokens_per_doc
         FROM j
-    """,
-    # salt is routing only: the salted join's values must equal the
-    # plain join, replayed here without any salt
-    'q_salted_join': r"""
-        WITH dim AS (SELECT DISTINCT user_id, user_id % 13 AS weight
-                     FROM events)
-        SELECT e.event_type, CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(d.weight) AS BIGINT) AS sum_weight,
-               CAST(sum(e.user_id) AS BIGINT) AS sum_uid
-        FROM events e JOIN dim d ON e.user_id = d.user_id
-        GROUP BY e.event_type ORDER BY e.event_type
-    """,
-    # the co-located join's VALUES witnessed single-table (bucketing
-    # is a physical layout choice — results must be layout-invariant);
-    # the zero-Exchange plan itself is pinned in tests/test_layout.py
-    'q_bucketed_join': r"""
-        WITH w(term, wt) AS (VALUES
-            ('query', 300), ('sort', 250), ('merge', 250), ('vector', 220),
-            ('stream', 200), ('window', 200), ('fast', 200), ('scan', 150),
-            ('join', 150), ('spark', 150), ('hash', 120), ('column', 120),
-            ('table', 100), ('batch', 100), ('agg', 100), ('group', 100),
-            ('order', 100), ('filter', 100), ('key', 80), ('row', 80),
-            ('value', 60), ('data', 60), ('line', 60), ('part', 60),
-            ('customer', 50), ('big', 50), ('small', -150), ('slow', -400),
-            ('dup', -500), ('a', -100), ('the', -100)),
-        tok AS (SELECT doc_id, lang,
-                       len(string_split_regex(trim(text), '\s+')) AS toks,
-                       unnest(string_split_regex(lower(trim(text)), '\s+'))
-                           AS t
-                FROM documents),
-        sc AS (SELECT doc_id, any_value(lang) AS lang,
-                      any_value(toks) AS toks,
-                      -4700 + sum(coalesce(wt, 0)) AS units
-               FROM tok LEFT JOIN w ON t = term
-               GROUP BY doc_id)
-        SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(toks) AS BIGINT) AS sum_toks,
-               CAST(sum(units) AS BIGINT) AS sum_units
-        FROM sc WHERE units > 0 GROUP BY lang ORDER BY lang
-    """,
-    # file skipping must be value-invisible: the pruned scan equals a
-    # plain WHERE over the whole table (bounds derived the same way —
-    # integer floor-div of the id span)
-    'q_range_pruned_read': r"""
-        WITH b AS (SELECT min(doc_id) AS mn, max(doc_id) AS mx
-                   FROM documents),
-        r AS (SELECT mn + (mx - mn) * 2 // 10 AS lo,
-                     mn + (mx - mn) * 6 // 10 AS hi FROM b)
-        SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(len(string_split_regex(trim(text), '\s+')))
-                   AS BIGINT) AS sum_toks,
-               CAST(min(doc_id) AS BIGINT) AS min_id,
-               CAST(max(doc_id) AS BIGINT) AS max_id
-        FROM documents, r WHERE doc_id BETWEEN lo AND hi
-        GROUP BY lang ORDER BY lang
     """,
     # exact AUC replayed: per-distinct-score class counts, negatives-
     # below cumsum, 2·AUC·P·N as an integer — the '__all__' row checks
@@ -4513,14 +4001,12 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """
     return {
         # -- flagship oracles; round 6 adds the r5 heavyweights
-        # (semantic decontamination, exact AUC, MERGE upsert, bucketed
-        # layout) and the r6 trio (substring removal, gopher
-        # repetition, encode+pack) ------------------------------------
+        # (exact AUC, MERGE upsert) and the r6 trio (substring removal,
+        # gopher repetition, encode+pack) -----------------------------
         'q_bloom_incremental_ingest': q_bloom_incremental_ingest,
         'q_cluster_keep_best': q_cluster_keep_best,
         'q_decontamination': q_decontamination,
         'q_unigram_logprob': q_unigram_logprob,
-        'q_semantic_decontamination': q_semantic_decontamination,
         'q_model_auc': q_model_auc,
         # -- reference-parity and operator oracles --------------------
         'q_line_dedup': q_line_dedup,
@@ -4530,7 +4016,6 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_simhash_planted': q_simhash_planted,
         'q_gopher_dup_ngrams': q_gopher_dup_ngrams,
         'q_learn_bpe': q_learn_bpe,
-        'q_semantic_dedup': q_semantic_dedup,
         'q_stupid_backoff': q_stupid_backoff,
         'q_substring_duplication': q_substring_duplication,
         'q_substring_removal': q_substring_removal,
@@ -4544,10 +4029,7 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_w2_search_snippets': q_w2_search_snippets,
         'q_group_quota': q_group_quota,
         'q_ngram_jaccard_exact': q_ngram_jaccard_exact,
-        'q_emb_cosine_dups': q_emb_cosine_dups,
-        'q_skew_salted_agg': q_skew_salted_agg,
         'q_recrawl_upsert': q_recrawl_upsert,
-        'q_bucketed_join': q_bucketed_join,
         'q_script_id': q_script_id,
         'q_f5_structured_semi_join': q_f5_structured_semi_join,
         'q_a6_topic_type': q_a6_topic_type,
@@ -4556,14 +4038,9 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_tfidf_top_terms': q_tfidf_top_terms,
         'q_lda_categories': q_lda_categories,
         'q_bigram_lm': q_bigram_lm,
-        'q_ivf_ann_exact': q_ivf_ann_exact,
         # -- thinner oracles, each with a cover above:
-        # q_emb_cosine_topk (embedding path = q_semantic_dedup +
-        # q_emb_cosine_dups + q_ivf_ann_exact +
-        # q_semantic_decontamination), q_pii_redaction (native
-        # regexp), q_repetition_stats (superseded by
-        # q_gopher_repetition).
-        'q_emb_cosine_topk': q_emb_cosine_topk,
+        # q_pii_redaction (native regexp), q_repetition_stats
+        # (superseded by q_gopher_repetition).
         'q_pii_redaction': q_pii_redaction,
         'q_repetition_stats': q_repetition_stats,
         'q_f1_size_reject': q_f1_size_reject,
@@ -4573,6 +4050,15 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_shuffle_shards': q_shuffle_shards,
         'q_mixture_fill': q_mixture_fill,
         'q_shard_export': q_shard_export,
+        # -- next oracles in catalog order, moved up when the
+        # embedding, salted and layout entries left the catalog:
+        'q_append_shards': q_append_shards,
+        'q_threshold_report': q_threshold_report,
+        'q_calibration_bins': q_calibration_bins,
+        'q_pr_curve': q_pr_curve,
+        'q_average_precision': q_average_precision,
+        'q_compaction_content': q_compaction_content,
+        'q_nfc_normalize': q_nfc_normalize,
         # -- oracles kept out of the first 50, each with a cover above:
         # q_source_quality_gate (gates = curation_pipeline +
         # model_quality_gate), q_doc_chunking (window math graded
@@ -4585,18 +4071,8 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_quality_scores': q_quality_scores,
         'q_token_counts': q_token_counts,
         'q_fingerprint': q_fingerprint,
-        'q_skew_salted_counts': q_skew_salted_counts,
-        'q_append_shards': q_append_shards,
-        'q_threshold_report': q_threshold_report,
-        'q_calibration_bins': q_calibration_bins,
-        'q_pr_curve': q_pr_curve,
-        'q_average_precision': q_average_precision,
-        'q_compaction_content': q_compaction_content,
-        'q_nfc_normalize': q_nfc_normalize,
         'q_tokenizer_report': q_tokenizer_report,
         'q_export_diff': q_export_diff,
-        'q_range_pruned_read': q_range_pruned_read,
-        'q_salted_join': q_salted_join,
         'q_corpus_datasheet': q_corpus_datasheet,
         'q_jsonl_export': q_jsonl_export,
         'q_para_neardup_planted': q_para_neardup_planted,
@@ -4612,11 +4088,8 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_minhash_incremental': q_minhash_incremental,
         'q_simhash_near_dups': q_simhash_near_dups,
         'q_extraction_pipeline': q_extraction_pipeline,
-        'q_lsh_ann_topk': q_lsh_ann_topk,
         'q_neardup_pr': q_neardup_pr,
         'q_para_neardup': q_para_neardup,
-        'q_ivf_ann_topk': q_ivf_ann_topk,
-        'q_ann_recall': q_ann_recall,
         'q_warc_ingest': q_warc_ingest,
         'q_compaction': q_compaction,
     }

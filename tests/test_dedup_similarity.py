@@ -1,11 +1,10 @@
-"""Dedup family + similarity operators on Spark, checked against
-driver-side brute force on small corpora."""
+"""Dedup family and text-statistics operators on Spark, checked
+against driver-side brute force on small corpora."""
 
 from __future__ import annotations
 
 import itertools
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -14,9 +13,6 @@ from pdf_ai_mapper_spark.operators.dedup import (dedup_exact,
                                                  ngram_jaccard_pairs,
                                                  simhash_near_pairs,
                                                  with_shingles)
-from pdf_ai_mapper_spark.operators.similarity import (brute_force_topk,
-                                                      cosine_sim,
-                                                      pairwise_cosine_dups)
 
 
 def _corpus(spark):
@@ -87,144 +83,6 @@ def test_simhash_exact_dup_distance_zero(spark):
     assert pairs.get((0, 3)) == 0   # identical text → identical simhash
 
 
-def test_brute_force_topk_matches_numpy(spark):
-    import numpy as np
-    vecs = spark.read.parquet('/root/testdata/sf0.001/embeddings.parquet')
-    q = vecs.filter(F.col('vec_id') == 0).collect()[0]['embedding']
-    got = brute_force_topk(vecs, list(q), k=5).collect()
-    pdf = vecs.toPandas()
-    qv = np.array(q, dtype='float64')
-    sims = pdf['embedding'].map(
-        lambda v: float(np.dot(np.array(v, dtype='float64'), qv)
-                        / (np.linalg.norm(v) * np.linalg.norm(qv))))
-    pdf = pdf.assign(sim=sims.round(6)).sort_values(
-        ['sim', 'vec_id'], ascending=[False, True])
-    want = list(pdf['vec_id'].head(5))
-    assert [r['vec_id'] for r in got] == want
-    assert got[0]['vec_id'] == 0 and abs(got[0]['cos_sim'] - 1.0) < 1e-6
-
-
-def test_pairwise_cosine_dups_self_consistency(spark):
-    """Duplicated vectors land in the same LSH bucket and are found."""
-    vecs = spark.read.parquet('/root/testdata/sf0.001/embeddings.parquet').limit(50)
-    dup = vecs.withColumn('vec_id', F.col('vec_id') + 1000)
-    both = vecs.unionByName(dup)
-    pairs = {(r['id_a'], r['id_b'])
-             for r in pairwise_cosine_dups(both, threshold=0.999).collect()}
-    for r in vecs.collect():
-        assert (r['vec_id'], r['vec_id'] + 1000) in pairs
-
-
-def test_ivf_cell_layout_prunes_partitions(spark):
-    """The IVF scale path: an index written partitionBy('ivf_cell')
-    makes a probe a PARTITION-PRUNED read — the executed plan's scan
-    must carry PartitionFilters on ivf_cell and read only the probed
-    cells' files, which is the whole point of the inverted-file layout
-    at 100 TB."""
-    import shutil
-    import tempfile
-    from pdf_ai_mapper_spark.operators.similarity import ivf_index
-    from pyspark.sql import functions as F
-    vecs = spark.read.parquet('/root/testdata/sf0.001/embeddings.parquet')
-    indexed, model = ivf_index(vecs, n_lists=8)
-    out = tempfile.mkdtemp(prefix='pam_ivf_')
-    try:
-        indexed.write.partitionBy('ivf_cell').mode('overwrite').parquet(out)
-        probe = spark.read.parquet(out).filter(F.col('ivf_cell').isin([0, 3]))
-        plan = probe._jdf.queryExecution().executedPlan().toString()
-        assert 'PartitionFilters' in plan and 'ivf_cell' in plan.split(
-            'PartitionFilters')[1][:200], plan[:800]
-        # NB inputFiles() reports the UNPRUNED relation — the pruning
-        # evidence is the PartitionFilters above; semantics check here
-        got_cells = {r['ivf_cell'] for r in probe.select('ivf_cell')
-                     .distinct().collect()}
-        assert got_cells and got_cells <= {0, 3}, got_cells
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def test_ivf_topk_recall_vs_brute_force(spark):
-    from pdf_ai_mapper_spark.operators.similarity import (brute_force_topk,
-                                                          ivf_index, ivf_topk)
-    from pyspark.sql import functions as F
-    vecs = spark.read.parquet('/root/testdata/sf0.001/embeddings.parquet')
-    q = list(vecs.filter(F.col('vec_id') == 7).collect()[0]['embedding'])
-    exact = [r['vec_id'] for r in brute_force_topk(vecs, q, k=10).collect()]
-
-    indexed, model = ivf_index(vecs, n_lists=8)
-    indexed = indexed.cache()
-    # full probe == exact
-    full = [r['vec_id'] for r in
-            ivf_topk(indexed, model, q, k=10, n_probe=8).collect()]
-    assert full == exact
-    # partial probe: query's own vector always found; decent recall
-    ann = [r['vec_id'] for r in
-           ivf_topk(indexed, model, q, k=10, n_probe=3).collect()]
-    assert 7 in ann
-    recall = len(set(ann) & set(exact)) / 10
-    assert recall >= 0.5, f'recall {recall}'
-
-
-def test_ann_recall_pinned(spark):
-    """q_ann_recall's fixture values (round 7 — VERDICT r6 #5): the LSH
-    leg is splitmix64-deterministic, so its recall is pinned EXACTLY;
-    the IVF leg depends on seeded-KMeans cell boundaries (which may
-    shift with partitioning), so it is floor-asserted — the same split
-    the query's in-query asserts use. Also checks the refactored
-    ivf_probe_cells == what ivf_topk scans (full probe == brute force
-    stays exact)."""
-    from pdf_ai_mapper_spark.queries import q_ann_recall
-
-    rows = {r['operator']: r
-            for r in q_ann_recall(spark, '/root/testdata/sf0.001').collect()}
-    assert set(rows) == {'lsh', 'ivf'}
-    lsh, ivf = rows['lsh'], rows['ivf']
-    # deterministic leg: exact pins (measured on the fixture)
-    assert lsh['mean_recall'] == 0.275, lsh  # sf0.001 (sf0.01 reads 0.2375)
-    assert lsh['min_recall'] == 0.1, lsh
-    assert lsh['self_hit'] == 1.0
-    assert 0.0 < lsh['mean_scan_frac'] < 0.2  # ~1/16 of the corpus
-    # KMeans leg: floors with margin
-    assert ivf['mean_recall'] >= 0.6, ivf
-    assert ivf['self_hit'] == 1.0
-    assert 0.3 < ivf['mean_scan_frac'] < 0.75  # ~4 of 8 cells
-
-
-def test_lsh_768dim_bounded_plan_and_star_expansion(spark):
-    """768-dim vectors run LSH end-to-end (the old per-dimension
-    expression tree exploded at this dim), the driver-side query bucket
-    matches the executor kernel, and a hot bucket (120 near-identical
-    vectors) is star-expanded instead of joined quadratically."""
-    import numpy as np
-    from pdf_ai_mapper_spark.operators.similarity import (
-        lsh_topk, pairwise_cosine_dups, query_bucket, with_lsh_bucket)
-
-    rng = np.random.default_rng(7)
-    base = rng.standard_normal(768)
-    rows = []
-    for i in range(120):  # hot cluster: tiny perturbations of one vector
-        rows.append((i, [float(x) for x in base + rng.standard_normal(768) * 1e-4]))
-    for i in range(120, 160):  # background noise vectors
-        rows.append((i, [float(x) for x in rng.standard_normal(768)]))
-    df = spark.createDataFrame(rows, 'vec_id long, embedding array<double>')
-
-    bucketed = with_lsh_bucket(df, 'embedding', planes=6).collect()
-    assert all(0 <= r['lsh_bucket'] < 64 for r in bucketed)
-    by_id = {r['vec_id']: r['lsh_bucket'] for r in bucketed}
-    q = rows[0][1]
-    assert query_bucket(q, planes=6) == by_id[0]  # driver == executor
-
-    ann = [r['vec_id'] for r in lsh_topk(df, q, k=10, planes=6).collect()]
-    assert 0 in ann and len(ann) == 10
-
-    pairs = pairwise_cosine_dups(df, threshold=0.999, planes=6,
-                                 max_bucket_size=16).collect()
-    ids_in_pairs = {r['id_a'] for r in pairs} | {r['id_b'] for r in pairs}
-    assert set(range(120)) <= ids_in_pairs  # whole hot cluster reachable via hub
-    # star expansion: ~119 hub pairs, not 120·119/2 = 7140 dense pairs
-    assert len(pairs) < 400
-
-
 SF001_DOCS = '/root/testdata/sf0.01/documents.parquet'
 
 
@@ -274,24 +132,6 @@ def test_release_unpersists_signature_cache(spark):
     assert df._persisted_deps[0].storageLevel.useMemory
     release(df)
     assert not df._persisted_deps[0].storageLevel.useMemory
-
-
-def test_release_unpersists_cosine_dups_cache(spark):
-    """release() must unpersist the ACTUAL cached plan, not a derived
-    one — verified against the session CacheManager, which a wrong
-    handle leaves non-empty (the leak ADVICE r2 found)."""
-    from pdf_ai_mapper_spark.operators.dedup import release
-    from pdf_ai_mapper_spark.operators.similarity import pairwise_cosine_dups
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    cm.clearCache()
-    rows = [(i, [float((i * 7 + j) % 13) for j in range(8)])
-            for i in range(40)]
-    df = spark.createDataFrame(rows, 'vec_id long, embedding array<double>')
-    pairs = pairwise_cosine_dups(df, threshold=0.99, planes=4)
-    pairs.collect()
-    assert not cm.isEmpty()
-    release(pairs)
-    assert cm.isEmpty()
 
 
 def test_pii_redaction_kinds_and_order(spark):
@@ -1008,79 +848,6 @@ def test_paragraph_pairs_precision_recall_vs_exact(spark):
     assert prec >= 0.9, (prec, len(got))
     rec = len(got & exact_hi) / len(exact_hi)
     assert rec >= 0.8, rec
-
-
-def _semdedup_fixture(spark):
-    """Three well-separated 8-dim clusters; exact-duplicate groups
-    inside two of them (exact duplicates guarantee same KMeans cell
-    and same LSH sub-bucket, so the blocked pair search provably sees
-    them)."""
-    import random
-    rng = random.Random(5)
-    rows = []
-    centers = [[10, 0, 0, 0, 0, 0, 0, 0],
-               [0, 10, 0, 0, 0, 0, 0, 0],
-               [0, 0, 10, 0, 0, 0, 0, 0]]
-    vid = 0
-    groups = []
-    for ci, c in enumerate(centers):
-        # one duplicated vector, multiplicity 3 / 2 / 1 per cluster
-        dup = [x + rng.uniform(-0.5, 0.5) for x in c]
-        mult = 3 - ci
-        g = []
-        for _ in range(mult):
-            rows.append((vid, [float(x) for x in dup]))
-            g.append(vid)
-            vid += 1
-        if mult > 1:
-            groups.append(tuple(g))
-        for _ in range(3):   # distinct members
-            rows.append((vid, [float(x + rng.uniform(-1.5, 1.5))
-                               for x in c]))
-            vid += 1
-    return spark.createDataFrame(rows, 'vec_id long, embedding array<double>'), groups
-
-
-def test_semantic_dedup_groups_and_keep_rule(spark):
-    from pdf_ai_mapper_spark.operators.dedup import release
-    from pdf_ai_mapper_spark.operators.similarity import semantic_dedup
-    df, groups = _semdedup_fixture(spark)
-    out = semantic_dedup(df, n_clusters=3, threshold=0.999, seed=42)
-    rows = {r['vec_id']: r for r in out.collect()}
-    release(out)
-    assert len(rows) == df.count()            # one row per vector
-    # each planted exact-duplicate set resolves to ONE group with ONE
-    # survivor
-    for g in groups:
-        labels = {rows[v]['sem_group'] for v in g}
-        assert len(labels) == 1, g
-        kept = [v for v in g if rows[v]['keep']]
-        assert len(kept) == 1, g
-        # keep rule: argmin (centroid_sim, id) within the group
-        want = min(g, key=lambda v: (rows[v]['centroid_sim'], v))
-        assert kept[0] == want, (g, kept, want)
-    # non-duplicated vectors: own group, kept
-    planted = {v for g in groups for v in g}
-    for v, r in rows.items():
-        if v not in planted:
-            assert r['sem_group'] == v and r['keep'], v
-    # survivor count = total - (multiplicities - 1)
-    n_keep = sum(1 for r in rows.values() if r['keep'])
-    assert n_keep == len(rows) - sum(len(g) - 1 for g in groups)
-
-
-def test_semantic_dedup_no_dups_keeps_everything(spark):
-    from pdf_ai_mapper_spark.operators.dedup import release
-    from pdf_ai_mapper_spark.operators.similarity import semantic_dedup
-    import random
-    rng = random.Random(9)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(20)]
-    df = spark.createDataFrame(rows, 'vec_id long, embedding array<double>')
-    out = semantic_dedup(df, n_clusters=4, threshold=0.9999, seed=42)
-    got = out.collect()
-    release(out)
-    assert all(r['keep'] for r in got)
-    assert all(r['sem_group'] == r['vec_id'] for r in got)
 
 
 def test_bigram_lm_score_matches_python_reference(spark):

@@ -278,55 +278,6 @@ class TestBudgetsFromMixture:
         assert got == {'en': 40, 'de': 10}
 
 
-class TestSemanticDecontamination:
-    def _frames(self, spark):
-        import math
-        train = [
-            (1, [1.0, 0.0, 0.0, 0.0]),          # exact copy of bench 100
-            (2, [0.9, 0.1, 0.0, 0.0]),          # near-paraphrase of bench 100
-            (3, [0.0, 0.0, 1.0, 0.0]),          # orthogonal to all bench
-            (4, [0.0, 0.0, 0.0, 0.0]),          # zero vector
-            (5, [0.0, 2.0, 0.0, 0.0]),          # scaled copy of bench 101
-        ]
-        bench = [(100, [1.0, 0.0, 0.0, 0.0]), (101, [0.0, 1.0, 0.0, 0.0])]
-        t = spark.createDataFrame(train, 'vec_id long, embedding array<double>')
-        b = spark.createDataFrame(bench, 'vec_id long, embedding array<double>')
-        return t, b
-
-    def test_flags_copies_paraphrases_and_scales(self, spark):
-        from pdf_ai_mapper_spark.operators.similarity import (
-            semantic_decontamination)
-        t, b = self._frames(spark)
-        out = {r['vec_id']: r for r in
-               semantic_decontamination(t, b, threshold=0.95).collect()}
-        assert out[1]['contaminated'] and out[1]['bench_id'] == 100
-        assert out[1]['bench_sim'] == 1.0
-        # 0.9/sqrt(0.82) ≈ 0.9939 >= 0.95: the paraphrase n-gram
-        # scrubbing misses is exactly what this catches
-        assert out[2]['contaminated'] and out[2]['bench_id'] == 100
-        assert not out[3]['contaminated']
-        assert not out[4]['contaminated'] and out[4]['bench_sim'] == 0.0
-        # cosine is scale-invariant: 2x the bench vector still matches
-        assert out[5]['contaminated'] and out[5]['bench_id'] == 101
-
-    def test_empty_bench_raises(self, spark):
-        import pytest as _pytest
-        from pdf_ai_mapper_spark.operators.similarity import (
-            semantic_decontamination)
-        t, b = self._frames(spark)
-        with _pytest.raises(ValueError, match='empty'):
-            semantic_decontamination(t, b.filter('vec_id < 0'))
-
-    def test_train_side_never_shuffles(self, spark):
-        from pdf_ai_mapper_spark.operators.similarity import (
-            semantic_decontamination)
-        t, b = self._frames(spark)
-        plan = (semantic_decontamination(t, b)
-                ._jdf.queryExecution().executedPlan().toString())
-        assert 'Exchange' not in plan
-        assert plan.count('ArrowEvalPython') == 1
-
-
 class TestEpochUpsample:
     def _df(self, spark, n=60):
         rows = [(i, ['books', 'crawl'][i % 2]) for i in range(n)]

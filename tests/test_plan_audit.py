@@ -233,10 +233,9 @@ def test_release_contract_no_persist_leaks(spark):
     LSH signatures, shared array bases) must leave ZERO persisted RDDs
     behind — a leak per call accumulates MEMORY_AND_DISK tables across
     a bench loop or a long driver session."""
-    # NOT covered: q_semantic_dedup / q_minhash_incremental — their
-    # operators localCheckpoint()
-    # iterations, and checkpointed RDDs stay registered until the JVM
-    # ContextCleaner GCs the unreferenced handles (bounded per call,
+    # NOT covered: q_minhash_incremental — its operator
+    # localCheckpoint()s, and checkpointed RDDs stay registered until
+    # the JVM ContextCleaner GCs the unreferenced handles (bounded per call,
     # self-cleaning; a hard unpersist would break the lineage
     # truncation they exist for).
     import __spark_entry__ as e
@@ -255,7 +254,7 @@ def test_release_contract_no_persist_leaks(spark):
                  'q_pack_sequences', 'q_encode_pack', 'q_pr_curve',
                  'q_average_precision', 'q_model_auc',
                  'q_ngram_jaccard_exact', 'q_minhash_near_dups',
-                 'q_simhash_near_dups', 'q_emb_cosine_dups'):
+                 'q_simhash_near_dups'):
         cat[name](spark, SF).collect()
         new = _ids() - baseline
         assert not new, (name, new)

@@ -1,156 +1,7 @@
-"""Salted join for skewed keys (operators/skew.salted_join): value
-equivalence to a plain join, hot-key spreading across reducers."""
+"""Parallelism spread for one-split scan inputs
+(operators/skew.ensure_min_parallelism)."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from pdf_ai_mapper_spark.operators.skew import salted_join
-
-
-def _skewed_big(spark, n=4000):
-    # 90% of rows share one key — the classic hot host
-    return spark.range(n).select(
-        F.when(F.col('id') % 10 < 9, F.lit('hot.example.com'))
-        .otherwise(F.concat(F.lit('h'), (F.col('id') % 37)
-                            .cast('string'))).alias('host'),
-        F.col('id').alias('row_id'))
-
-
-def _small(spark):
-    rows = [('hot.example.com', 1)] + [(f'h{i}', i + 10)
-                                       for i in range(37)]
-    return spark.createDataFrame(rows, 'host string, weight int')
-
-
-def _key(rows, cols):
-    return sorted(tuple(r[c] for c in cols) for r in rows)
-
-
-class TestSaltedJoin:
-    def test_inner_matches_plain_join(self, spark):
-        big, small = _skewed_big(spark), _small(spark)
-        cols = ['host', 'row_id', 'weight']
-        got = _key(salted_join(big, small, 'host', 8).collect(), cols)
-        exp = _key(big.join(small, 'host').collect(), cols)
-        assert got == exp
-
-    def test_left_keeps_unmatched_rows_exactly_once(self, spark):
-        big = _skewed_big(spark, 500)
-        small = _small(spark).filter(F.col('host') != 'hot.example.com')
-        cols = ['host', 'row_id', 'weight']
-        got = _key(salted_join(big, small, 'host', 8, how='left')
-                   .collect(), cols)
-        exp = _key(big.join(small, 'host', 'left').collect(), cols)
-        assert got == exp
-
-    def test_hot_key_spreads_across_reducers(self, spark):
-        """The operator's point: with broadcast off, the hot key's
-        rows land in MORE than one join-output partition (a plain
-        shuffle join pins them all to one reducer)."""
-        old = spark.conf.get('spark.sql.autoBroadcastJoinThreshold')
-        oldc = spark.conf.get('spark.sql.adaptive.coalescePartitions.enabled')
-        try:
-            spark.conf.set('spark.sql.autoBroadcastJoinThreshold', '-1')
-            # AQE size-coalesces this KB-scale shuffle to ONE partition
-            # (documented trap) — disable it; the assertion is about
-            # the hash routing, which is what survives at real scale
-            spark.conf.set(
-                'spark.sql.adaptive.coalescePartitions.enabled', 'false')
-            big, small = _skewed_big(spark), _small(spark)
-
-            def hot_pids(joined):
-                return (joined
-                        .withColumn('pid', F.spark_partition_id())
-                        .filter(F.col('host') == 'hot.example.com')
-                        .select('pid').distinct().count())
-
-            assert hot_pids(big.join(small, 'host')) == 1
-            assert hot_pids(salted_join(big, small, 'host', 8)) > 1
-        finally:
-            spark.conf.set('spark.sql.autoBroadcastJoinThreshold', old)
-            spark.conf.set(
-                'spark.sql.adaptive.coalescePartitions.enabled', oldc)
-
-    def test_salt_is_deterministic(self, spark):
-        """ADVICE r5 #4: a monotonically_increasing_id-derived salt is
-        a NONDETERMINISTIC shuffle key — partial stage retries re-salt
-        the same rows differently and can duplicate/drop join rows.
-        The salt must be a pure function of the row: same input row →
-        same salt on every evaluation, and no nondeterministic
-        expression anywhere in the salted plan."""
-        from pdf_ai_mapper_spark.operators.skew import (_row_salt,
-                                                        salted_agg,
-                                                        salted_count)
-        big, small = _skewed_big(spark), _small(spark)
-        joined = salted_join(big, small, 'host', 8)
-        plan = joined._jdf.queryExecution().analyzed().toString()
-        assert 'monotonically_increasing_id' not in plan
-        assert 'xxhash64' in plan
-        # re-evaluating the salt on the same rows reproduces it exactly
-        s1 = big.withColumn('s', _row_salt(big, 8)).collect()
-        s2 = big.withColumn('s', _row_salt(big, 8)).collect()
-        assert sorted(map(tuple, s1)) == sorted(map(tuple, s2))
-        # identical-value rows share a salt (the documented trade-off)
-        assert len({tuple(r) for r in s1}) == len({tuple(r[:-1])
-                                                   for r in s1})
-        # the aggregation helpers carry the same fix
-        for df in (salted_count(big, F.col('host')),
-                   salted_agg(big, ['host'],
-                              [F.count('*').alias('c')],
-                              [F.sum('c').cast('long').alias('n')])):
-            p = df._jdf.queryExecution().analyzed().toString()
-            assert 'monotonically_increasing_id' not in p
-
-    def test_map_columns_are_skipped_not_fatal(self, spark):
-        """ADVICE r6 low: xxhash64 raises AnalysisException on MapType,
-        so hashing EVERY column broke salted_* on schemas the r5 form
-        accepted. Map-typed columns (anywhere in the type tree) must be
-        excluded from the salt hash, with results still exact."""
-        from pdf_ai_mapper_spark.operators.skew import (salted_agg,
-                                                        salted_count)
-        big = _skewed_big(spark, 400).withColumn(
-            'meta', F.create_map(F.lit('k'), F.col('row_id')))
-        # nested: array<struct<m: map>> must be skipped too
-        big = big.withColumn(
-            'nested', F.array(F.struct(F.col('meta').alias('m'))))
-        small = _small(spark)
-        got = _key(salted_join(big, small, 'host', 8)
-                   .select('host', 'row_id', 'weight').collect(),
-                   ['host', 'row_id', 'weight'])
-        exp = _key(big.join(small, 'host')
-                   .select('host', 'row_id', 'weight').collect(),
-                   ['host', 'row_id', 'weight'])
-        assert got == exp
-        counts = {r['key']: r['n']
-                  for r in salted_count(big, F.col('host')).collect()}
-        assert counts['hot.example.com'] == 360
-        agg = salted_agg(big, ['host'], [F.count('*').alias('c')],
-                         [F.sum('c').cast('long').alias('n')])
-        assert {r['host']: r['n'] for r in agg.collect()} == counts
-
-    def test_salt_cols_override_and_all_map_fallback(self, spark):
-        from pdf_ai_mapper_spark.operators.skew import _row_salt
-        big = _skewed_big(spark, 100)
-        # explicit subset: only row_id feeds the hash
-        plan = big.withColumn('s', _row_salt(big, 8, ['row_id'])) \
-            ._jdf.queryExecution().analyzed().toString()
-        assert 'xxhash64(row_id' in plan and 'host' not in \
-            plan.split('xxhash64', 1)[1].split(')')[0]
-        # nothing hashable -> constant salt: degraded spread, still
-        # deterministic and correct
-        allmap = spark.range(5).select(
-            F.create_map(F.lit('k'), F.col('id')).alias('m'))
-        got = allmap.withColumn('s', _row_salt(allmap, 8)).collect()
-        assert {r['s'] for r in got} == {0}
-
-    def test_invalid_args_rejected(self, spark):
-        big, small = _skewed_big(spark, 10), _small(spark)
-        with pytest.raises(ValueError):
-            salted_join(big, small, 'host', 8, how='full')
-        with pytest.raises(ValueError):
-            salted_join(big, small, 'host', 0)
 
 
 class TestEnsureMinParallelism:
