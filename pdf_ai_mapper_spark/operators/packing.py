@@ -192,9 +192,10 @@ def shuffle_shards(df: DataFrame, id_col: str, tokens_col: str,
     Order contract: the shuffle key is md5(id[·'|'·epoch]·'|'·seed) ·
     id — engine-portable (any md5), collision-proof (the raw id is
     appended), and seed-switchable per training run without touching
-    the data.  With ``epoch_col`` set (the ``epoch_upsample`` output),
-    a document's copies hash APART, interleaving repeats across the
-    whole stream instead of clumping them back-to-back.
+    the data.  With ``epoch_col`` set (one row per repeated copy of a
+    document, numbered by epoch), a document's copies hash APART,
+    interleaving repeats across the whole stream instead of clumping
+    them back-to-back.
 
     Adds: ``shard`` (the shard the document STARTS in — documents are
     never split across shards here; a straddler belongs to the shard

@@ -124,6 +124,10 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
     the same rows as the plain anti-join, which runs uncounted when
     the flag is off.
 
+    A resume (the default mode) skips every committed bucket, whatever
+    the input: ``resumed_skipped_rows`` counts the input rows that hash
+    into those buckets and are not written.
+
     Raises RuntimeError after the write when it saw a different row
     count than the pre-pass (the input or the committed table changed
     between the two jobs). No counters are recorded then, so the
@@ -190,10 +194,13 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
             todo_df = todo_df.drop('__h')
 
         # cheap native pass for per-bucket input counters (url column
-        # only — the parquet scan prunes the payload)
-        rows_in = {r['bucket']: r['n'] for r in
-                   todo_df.filter(~skip).select(bucket.alias('bucket'))
-                   .groupBy('bucket').agg(F.count('*').alias('n')).collect()}
+        # only — the parquet scan prunes the payload); it counts the
+        # committed buckets too, so the rows a resume drops are reported
+        counts = {r['bucket']: r['n'] for r in
+                  todo_df.select(bucket.alias('bucket'))
+                  .groupBy('bucket').agg(F.count('*').alias('n')).collect()}
+        rows_in = {b: n for b, n in counts.items() if b not in done}
+        skipped_rows = sum(n for b, n in counts.items() if b in done)
         if rows_in:
             # skip AFTER transform: its first-seen aggregate must see
             # every input row, or a resume stores later copies whose
@@ -255,4 +262,5 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
         'rows_out': sum(e['rows_out'] for e in entries),
         'error_rows': sum(e['error_rows'] for e in entries),
         'resumed_skipped_buckets': len(done),
+        'resumed_skipped_rows': skipped_rows,
     }

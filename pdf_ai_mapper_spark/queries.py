@@ -1148,25 +1148,6 @@ def q_bigram_lm(spark, sf_dir):
             .orderBy(F.asc('bigram_logprob'), F.asc('doc_id')).limit(20))
 
 
-def q_quality_cascade(spark, sf_dir):
-    """Staged quality funnel (curate.cascade_report, round 6): four
-    C4/Gopher-style gates in order — min length, min tokens, alpha
-    ratio, digit ratio — each document exiting at its FIRST failure;
-    per-stage attrition counts and pass rates from ONE corpus scan.
-    ORACLED: the first-fail CASE chain and the funnel arithmetic
-    replayed in SQL over the same rebuilt quality columns."""
-    from .operators.curate import cascade_report
-    from .operators.textstats import with_quality
-    q = with_quality(_t(spark, sf_dir, 'documents'))
-    stages = [
-        ('min_length', F.col('n_chars_q') >= 100),
-        ('min_tokens', F.col('n_tokens') >= 10),
-        ('alpha', F.col('alpha_ratio') > 0.6),
-        ('digit', F.col('digit_ratio') < 0.2),
-    ]
-    return cascade_report(q, stages).orderBy('stage_idx')
-
-
 def q_nfc_normalize(spark, sf_dir):
     """Unicode NFC normalization (textstats.with_nfc, round 6): every
     document's text gets a DECOMPOSED suffix appended (' cafe' +
@@ -1217,84 +1198,6 @@ def q_ppl_buckets(spark, sf_dir):
     scored = d.select('doc_id', 'lang').join(scores, on='doc_id')
     return (ppl_buckets(scored, 'doc_id', 'logprob', 'lang')
             .select('doc_id', 'lang', 'logprob', 'ppl_bucket'))
-
-
-def q_token_budget_mix(spark, sf_dir):
-    """Token-budget mixture allocation (curate.token_budget_fill):
-    per-language token budgets {en:6000, de/fr/es:2000, zh: ABSENT —
-    dropped by the explicit-mixture contract}, filled greedily by
-    (alpha_ratio desc, doc_id asc) priority; a doc is kept iff its
-    group's running token total BEFORE it is under budget. Reports
-    per-language doc/token totals plus an id_sum witnessing the exact
-    kept set. ORACLED: DuckDB repeats the rounded alpha_ratio order,
-    the integer exclusive running sum, and the budget CASE exactly."""
-    from .operators.curate import token_budget_fill
-    from .operators.textstats import with_quality
-    d = _t(spark, sf_dir, 'documents')
-    q = with_quality(d, 'text')
-    budgets = {'en': 6000, 'de': 2000, 'fr': 2000, 'es': 2000}
-    kept = token_budget_fill(q, 'lang', budgets, 'n_tokens',
-                             [('alpha_ratio', 'desc'), ('doc_id', 'asc')])
-    return (kept.groupBy('lang')
-            .agg(F.count('*').cast('long').alias('n_docs'),
-                 F.sum('n_tokens').cast('long').alias('sum_tokens'),
-                 F.sum('doc_id').cast('long').alias('id_sum')))
-
-
-def q_temperature_mix(spark, sf_dir):
-    """Temperature-scaled mixture (curate.temperature_weights →
-    budgets_from_mixture → token_budget_fill, round 7): per-language
-    weights DERIVED from the corpus as isqrt(sum n_tokens) (alpha=0.5,
-    the multilingual-sampling standard), total budget 6000 tokens —
-    chosen clamp-free at the gate scales so the waterfilling loop is
-    provably its single proportional round and the oracle can replay
-    budget_g = floor(total·w_g / Σw) in pure integer SQL. Fill order
-    (alpha_ratio DESC, doc_id ASC) as in q_token_budget_mix; per-lang
-    doc/token/id sums witness the exact kept set."""
-    from .operators.curate import (budgets_from_mixture,
-                                   temperature_weights,
-                                   token_budget_fill)
-    from .operators.textstats import with_quality
-    d = _t(spark, sf_dir, 'documents')
-    q = with_quality(d, 'text')
-    w = temperature_weights(q, 'lang', 'n_tokens', alpha=0.5)
-    budgets = budgets_from_mixture(q, 'lang', 'n_tokens', w, 6000)
-    # clamp-freeness guard (ADVICE r7): the oracle replays exactly ONE
-    # unclamped proportional round, so fail LOUDLY if waterfilling ever
-    # clamps at this corpus/budget instead of silently diverging.
-    from fractions import Fraction
-    _wsum = sum(w.values())
-    _expect = {g: int(Fraction(6000) * Fraction(wg) / _wsum)
-               for g, wg in w.items()}
-    _expect = {g: b for g, b in _expect.items() if b > 0}
-    if budgets != _expect:
-        raise RuntimeError(
-            'q_temperature_mix: budgets_from_mixture clamped '
-            f'(got {budgets}, single-round {_expect}) — the frozen '
-            'oracle only replays the unclamped proportional round')
-    kept = token_budget_fill(q, 'lang', budgets, 'n_tokens',
-                             [('alpha_ratio', 'desc'), ('doc_id', 'asc')])
-    return (kept.groupBy('lang')
-            .agg(F.count('*').cast('long').alias('n_docs'),
-                 F.sum('n_tokens').cast('long').alias('sum_tokens'),
-                 F.sum('doc_id').cast('long').alias('id_sum'))
-            .orderBy('lang'))
-
-
-def q_epoch_upsample(spark, sf_dir):
-    """Fractional per-group epoch upsampling (curate.epoch_upsample,
-    late round 5): en×1.25 / de×2.0 / fr×0.5 (es/zh unlisted →
-    dropped). Each doc emits floor(f) copies plus an md5-coin
-    fractional copy — per-doc rows (doc_id, lang, epoch) witness the
-    exact realized copy set. ORACLED: DuckDB replays the coin
-    (md5(id·'|'·seed) against the exact 2^126/2^127 hex thresholds)
-    and the range-explode bit-for-bit."""
-    from .operators.curate import epoch_upsample
-    d = _t(spark, sf_dir, 'documents')
-    out = epoch_upsample(d.select('doc_id', 'lang'), 'lang',
-                         {'en': 1.25, 'de': 2.0, 'fr': 0.5}, seed='r5')
-    return out.select('doc_id', 'lang',
-                      F.col('epoch').cast('long').alias('epoch'))
 
 
 def q_shuffle_shards(spark, sf_dir):
@@ -1382,120 +1285,6 @@ def q_append_shards(spark, sf_dir):
         return spark.createDataFrame(rows, combined.schema)
     finally:
         shutil.rmtree(out, ignore_errors=True)
-
-
-def q_model_auc(spark, sf_dir):
-    """Exact distributed ROC-AUC (operators/evaluate.auc_score, late
-    round 5): the frozen quality model's score (integer units —
-    heavy ties, so the midrank path is live) evaluated against the
-    lang='en' label, per source via the partitioned-window path PLUS
-    a global '__all__' row via the two-phase prefix-sum path (no
-    SinglePartition stage) — both derived from ONE corpus pass
-    (auc_report computes the per-(group, score) counts once; the
-    global path re-aggregates the collapsed counts). auc_num2 = the
-    exact integer 2·AUC·P·N; auc is one IEEE division of exact
-    integers, rounded 6."""
-    from .operators.evaluate import auc_report
-    from .operators.quality_model import model_quality_units
-    d = (model_quality_units(_ts(spark, sf_dir, 'documents'))
-         .select('source', F.col('mq_units').alias('score'),
-                 (F.col('lang') == 'en').cast('int').alias('label')))
-    rep = auc_report(d, 'score', 'label', ['source'])
-    return (rep.select(F.col('group').alias('source'), 'pos_n', 'neg_n',
-                       F.col('auc_num2').cast('long').alias('auc_num2'),
-                       F.round('auc', 6).alias('auc'))
-            .orderBy('source'))
-
-
-def q_pr_curve(spark, sf_dir):
-    """Exact precision-recall curve (operators/evaluate.pr_curve,
-    round 6): one row per distinct frozen-model score, exact BIGINT
-    tp/fp at that threshold (predict positive iff score >= s) and
-    precision/recall as single IEEE divisions, rounded 6 — every row
-    computed independently from cumulative counts, no running float
-    state. Oracle: the same class totals minus exclusive below-prefix
-    sums in SQL."""
-    from .operators.dedup import release as _release
-    from .operators.evaluate import pr_curve
-    from .operators.quality_model import model_quality_units
-    d = (model_quality_units(_ts(spark, sf_dir, 'documents'))
-         .select(F.col('mq_units').alias('score'),
-                 (F.col('lang') == 'en').cast('int').alias('label')))
-    cur = pr_curve(d, 'score', 'label')
-    out = (cur.select('score', 'tp', 'fp',
-                      F.round('precision', 6).alias('precision'),
-                      F.round('recall', 6).alias('recall'))
-           .orderBy(F.col('score').desc()))
-    rows = out.collect()
-    _release(cur)
-    return spark.createDataFrame(rows, out.schema)
-
-
-def q_average_precision(spark, sf_dir):
-    """Step-wise average precision per source
-    (operators/evaluate.average_precision, round 6): AP·P = Σ_s
-    p_s·precision_s with precision pinned to 12 places and the sum in
-    DECIMAL(38,12) — order-independent by construction, so the value
-    is hash-stable under any partitioning. Oracle: the identical
-    pinned arithmetic replayed in SQL."""
-    from .operators.evaluate import average_precision
-    from .operators.quality_model import model_quality_units
-    d = (model_quality_units(_ts(spark, sf_dir, 'documents'))
-         .select('source', F.col('mq_units').alias('score'),
-                 (F.col('lang') == 'en').cast('int').alias('label')))
-    ap = average_precision(d, 'score', 'label', ['source'])
-    return (ap.select('source', 'pos_n', 'neg_n',
-                      F.round('ap', 6).alias('ap'))
-            .orderBy('source'))
-
-
-def q_threshold_report(spark, sf_dir):
-    """Confusion counts + precision/recall/F1 at three gate cut
-    points (operators/evaluate.threshold_report, late round 5): one
-    conditional-aggregate pass over the corpus however many
-    thresholds are asked for. Counts are exact BIGINTs; the ratios
-    are single IEEE divisions of them, rounded 6."""
-    from .operators.evaluate import threshold_report
-    from .operators.quality_model import model_quality_units
-    d = (model_quality_units(_ts(spark, sf_dir, 'documents'))
-         .select(F.col('mq_units').alias('score'),
-                 (F.col('lang') == 'en').cast('int').alias('label')))
-    rep = threshold_report(d, 'score', 'label', [-1000.0, 0.0, 1000.0])
-    return (rep.select('threshold', 'tp', 'fp', 'fn', 'tn',
-                       F.round('precision', 6).alias('precision'),
-                       F.round('recall', 6).alias('recall'),
-                       F.round('f1', 6).alias('f1'))
-            .orderBy('threshold'))
-
-
-def q_calibration_bins(spark, sf_dir):
-    """Reliability-diagram bins (operators/evaluate.calibration_bins,
-    late round 5) over the frozen model's integer units in
-    [-10000, 10000), 8 equal bins, edge clamping: per bin the row
-    count, positive count and positive rate (one narrow groupBy —
-    map-side combine makes the shuffle n_bins rows per task).
-    mean_score is avg-of-doubles (addition-order-dependent) and is
-    deliberately NOT in the graded projection."""
-    from .operators.evaluate import calibration_bins
-    from .operators.quality_model import model_quality_units
-    d = (model_quality_units(_ts(spark, sf_dir, 'documents'))
-         .select(F.col('mq_units').cast('double').alias('score'),
-                 (F.col('lang') == 'en').cast('int').alias('label')))
-    bins = calibration_bins(d, 'score', 'label', n_bins=8,
-                            lo=-10000.0, hi=10000.0)
-    return (bins.select('bin', 'n', 'n_pos',
-                        F.round('pos_rate', 6).alias('pos_rate'))
-            .orderBy('bin'))
-
-
-def q_corpus_datasheet(spark, sf_dir):
-    """Corpus datasheet (curate.corpus_datasheet, late round 5): the
-    one-row release report — volume, diversity, duplication, quality
-    pass rates — in a single aggregate job. Every value is an exact
-    count or one IEEE division of exact counts (no avg-of-doubles),
-    so the row is hash-stable under any partitioning."""
-    from .operators.curate import corpus_datasheet
-    return corpus_datasheet(_t(spark, sf_dir, 'documents'))
 
 
 def q_jsonl_export(spark, sf_dir):
@@ -1620,36 +1409,6 @@ def q_export_diff(spark, sf_dir):
     finally:
         shutil.rmtree(a, ignore_errors=True)
         shutil.rmtree(b, ignore_errors=True)
-
-
-def q_mixture_fill(spark, sf_dir):
-    """Mixture waterfilling end-to-end (curate.budgets_from_mixture →
-    token_budget_fill, late round 5): weights en:3 / de:2 / zh:5
-    against a total of 3/5 of those groups' combined tokens. zh's
-    share (5/10 of total) exceeds its availability at every gate SF,
-    so round 1 clamps zh to availability and the shortfall reflows
-    to en/de by 3:2 in round 2 (neither clamps — comfortable margin
-    at both SFs). The greedy fill then selects by (alpha_ratio desc,
-    doc_id asc). ORACLED: DuckDB rebuilds availability, the exact
-    integer waterfilling arithmetic, and the fill window."""
-    from .operators.curate import budgets_from_mixture, token_budget_fill
-    from .operators.textstats import with_quality
-    d = _t(spark, sf_dir, 'documents')
-    q = with_quality(d, 'text')
-    weights = {'en': 3, 'de': 2, 'zh': 5}
-    avail = (q.filter(F.col('lang').isin(*weights))
-             .agg(F.sum('n_tokens')).collect()[0][0])
-    total = 3 * int(avail) // 5
-    budgets = budgets_from_mixture(q, 'lang', 'n_tokens', weights, total)
-    kept = token_budget_fill(q, 'lang', budgets, 'n_tokens',
-                             [('alpha_ratio', 'desc'), ('doc_id', 'asc')])
-    b = spark.createDataFrame(list(budgets.items()),
-                              'lang string, budget long')
-    return (kept.groupBy('lang')
-            .agg(F.count('*').cast('long').alias('n_docs'),
-                 F.sum('n_tokens').cast('long').alias('sum_tokens'),
-                 F.sum('doc_id').cast('long').alias('id_sum'))
-            .join(F.broadcast(b), on='lang'))
 
 
 def q_minhash_incremental(spark, sf_dir):
@@ -1895,39 +1654,6 @@ def q_warc_framing(spark, sf_dir):
             ' payload_md5 string')
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def q_curation_pipeline(spark, sf_dir):
-    """End-to-end corpus curation (operators/curate.curate_corpus):
-    quality gate → exact dedup → line dedup → chrome-dedup → dup score
-    → per-source quota → hash split, composed over the documents table
-    re-laid-out as 4-token lines (construction shared verbatim with
-    q_line_dedup so the line stage has real cross-doc duplicates to
-    remove). FULL value oracle since round 5 (VERDICT r4 #3): the
-    DuckDB side chains every stage's already-proven oracle into one
-    CTE pipeline — including the data-dependent line_min_df =
-    max(3, floor(0.002·|gated|)) threshold as a scalar subquery — and
-    the id_sum / line-count / dup_frac witnesses pin the exact
-    survivor set of the whole composition, not just its cardinality."""
-    from .operators.curate import curate_corpus
-    k = 4
-    toks = F.split(F.col('text'), ' ')
-    n = F.size(toks)
-    linearr = F.transform(
-        F.sequence(F.lit(0), F.ceil(n / F.lit(k)).cast('int') - 1),
-        lambda i: F.array_join(
-            F.slice(toks, i * F.lit(k) + F.lit(1), F.lit(k)), ' '))
-    d = (_t(spark, sf_dir, 'documents')
-         .select('doc_id', F.array_join(linearr, '\n').alias('text'),
-                 'lang', 'source', 'n_chars'))
-    out = curate_corpus(d, source_cap=30)
-    return (out.groupBy('split', 'source')
-            .agg(F.count('*').cast('long').alias('n_docs'),
-                 F.sum('doc_id').cast('long').alias('id_sum'),
-                 F.sum('n_kept').cast('long').alias('lines_kept'),
-                 F.sum('n_removed').cast('long').alias('lines_removed'),
-                 F.round(F.avg('dup_frac'), 6).alias('avg_dup_frac'))
-            .orderBy('split', 'source'))
 
 
 def q_compaction_content(spark, sf_dir):
@@ -2887,117 +2613,6 @@ ORACLES: dict[str, str] = {
         FROM s GROUP BY split ORDER BY split
     """,
 
-    # curation composition (round 5): every stage's already-proven
-    # oracle chained into ONE CTE pipeline over the same 4-token-line
-    # layout as q_line_dedup — quality gate (q_quality_scores exprs) →
-    # min-id exact dedup on raw text → line dedup at the data-dependent
-    # threshold max(3, floor(0.002*|gated|)) (scalar subquery) →
-    # empty-doc drop → min-id exact dedup on cleaned text → k=8 window
-    # duplication on cleaned text (q_substring_duplication exprs) →
-    # per-source quota (dup_frac asc, doc_id asc, cap 30) → md5 hash
-    # split on the doc id. The hex thresholds are 4/5 and 9/10 of
-    # 16^32 in exact integer arithmetic (hash_split's contract).
-    'q_curation_pipeline': r"""
-        WITH t0 AS (SELECT doc_id, lang, source, n_chars,
-                           string_split(text, ' ') AS toks
-                    FROM documents),
-        lin0 AS (
-            SELECT doc_id, i,
-                   array_to_string(toks[(i*4+1):(i*4+4)], ' ') AS line
-            FROM t0, LATERAL (SELECT unnest(range(0,
-                     CAST(ceil(len(toks)/4.0) AS INT))) AS i)
-        ),
-        docs AS (
-            SELECT t0.doc_id, t0.lang, t0.source, t0.n_chars, r.text
-            FROM t0 JOIN (
-                SELECT doc_id, string_agg(line, chr(10) ORDER BY i) AS text
-                FROM lin0 GROUP BY doc_id) r USING (doc_id)
-        ),
-        q AS (
-            SELECT *,
-                   round(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                         * 1.0 / greatest(length(text), 1), 6) AS alpha_ratio,
-                   round(length(regexp_replace(text, '[^0-9]', '', 'g'))
-                         * 1.0 / greatest(length(text), 1), 6) AS digit_ratio,
-                   len(string_split_regex(trim(text), '\s+')) AS n_tokens
-            FROM docs),
-        gated AS (
-            SELECT doc_id, lang, source, n_chars, text FROM q
-            WHERE alpha_ratio > 0.6 AND digit_ratio < 0.2 AND n_tokens >= 5),
-        d1 AS (
-            SELECT g.* FROM gated g
-            JOIN (SELECT min(doc_id) AS keep
-                  FROM gated GROUP BY md5(text)) kk
-              ON g.doc_id = kk.keep),
-        mdf AS (SELECT greatest(3, CAST(floor(0.002 * count(*)) AS INT)) AS v
-                FROM d1),
-        lin AS (
-            SELECT doc_id, i AS pos, ls[i+1] AS line
-            FROM (SELECT doc_id, string_split(text, chr(10)) AS ls FROM d1) s,
-                 LATERAL (SELECT unnest(range(0, len(ls))) AS i)
-        ),
-        hot AS (SELECT line FROM lin GROUP BY line
-                HAVING count(DISTINCT doc_id) >= (SELECT v FROM mdf)),
-        tot AS (SELECT doc_id, count(*) AS n_total FROM lin GROUP BY doc_id),
-        reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-                       string_agg(line, chr(10) ORDER BY pos) AS cleaned_text
-                FROM lin WHERE line NOT IN (SELECT line FROM hot)
-                GROUP BY doc_id),
-        ld AS (SELECT tot.doc_id,
-                      COALESCE(reb.n_kept, 0) AS n_kept,
-                      CAST(tot.n_total - COALESCE(reb.n_kept, 0) AS BIGINT)
-                          AS n_removed,
-                      COALESCE(reb.cleaned_text, '') AS cleaned_text
-               FROM tot LEFT JOIN reb USING (doc_id)),
-        j1 AS (SELECT d1.*, ld.n_kept, ld.n_removed, ld.cleaned_text
-               FROM d1 JOIN ld USING (doc_id)
-               WHERE length(ld.cleaned_text) > 0),
-        d2 AS (
-            SELECT j.* FROM j1 j
-            JOIN (SELECT min(doc_id) AS keep
-                  FROM j1 GROUP BY md5(cleaned_text)) kk
-              ON j.doc_id = kk.keep),
-        st AS (SELECT doc_id,
-                      string_split_regex(lower(cleaned_text), '\s+') AS ctoks
-               FROM d2),
-        w AS (SELECT doc_id, array_to_string(ctoks[i:i+7], ' ') AS win
-              FROM st, LATERAL (SELECT unnest(range(1, len(ctoks) - 8 + 2))
-                                AS i)
-              WHERE len(ctoks) >= 8),
-        freq AS (SELECT win, count(*) AS c FROM w GROUP BY win),
-        per AS (SELECT w.doc_id,
-                       CAST(count(*) AS BIGINT) AS n_windows,
-                       CAST(sum(CASE WHEN f.c >= 2 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS n_dup
-                FROM w JOIN freq f USING (win) GROUP BY w.doc_id),
-        wd AS (SELECT d2.*,
-                      round(COALESCE(p.n_dup, 0) * 1.0
-                            / greatest(COALESCE(p.n_windows, 0), 1), 6)
-                          AS dup_frac
-               FROM d2 LEFT JOIN per p USING (doc_id)),
-        ranked AS (SELECT *, row_number() OVER (
-                       PARTITION BY source
-                       ORDER BY dup_frac ASC, doc_id ASC) AS rn
-                   FROM wd),
-        sp AS (
-            SELECT *,
-                   CASE WHEN md5(CAST(doc_id AS VARCHAR))
-                             < 'cccccccccccccccccccccccccccccccc'
-                        THEN 'train'
-                        WHEN md5(CAST(doc_id AS VARCHAR))
-                             < 'e6666666666666666666666666666666'
-                        THEN 'val'
-                        ELSE 'test' END AS split
-            FROM ranked WHERE rn <= 30)
-        SELECT split, source,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(doc_id) AS BIGINT) AS id_sum,
-               CAST(sum(n_kept) AS BIGINT) AS lines_kept,
-               CAST(sum(n_removed) AS BIGINT) AS lines_removed,
-               round(avg(dup_frac), 6) AS avg_dup_frac
-        FROM sp GROUP BY split, source ORDER BY split, source
-    """,
-
     # line_dedup: the 4-token-line layout is constructed identically on
     # both sides, then the full dedup (exact distinct-doc frequency,
     # >=2 removed, ordered rebuild) is value-checked including the
@@ -3188,54 +2803,6 @@ ORACLES: dict[str, str] = {
         FROM per GROUP BY lang ORDER BY lang
     """,
 
-    # cascade funnel: the first-fail CASE chain and funnel arithmetic
-    # replayed over the rebuilt quality columns
-    'q_quality_cascade': r"""
-        WITH q AS (
-            SELECT length(text) AS n_chars,
-                   len(string_split_regex(trim(text), '\s+')) AS n_toks,
-                   round(length(regexp_replace(text, '[^A-Za-z]', '',
-                                               'g'))
-                         * 1.0 / greatest(length(text), 1), 6)
-                       AS alpha_ratio,
-                   round(length(regexp_replace(text, '[^0-9]', '', 'g'))
-                         * 1.0 / greatest(length(text), 1), 6)
-                       AS digit_ratio
-            FROM documents),
-        tagged AS (
-            SELECT CASE WHEN NOT coalesce(n_chars >= 100, FALSE)
-                        THEN 'min_length'
-                        WHEN NOT coalesce(n_toks >= 10, FALSE)
-                        THEN 'min_tokens'
-                        WHEN NOT coalesce(alpha_ratio > 0.6, FALSE)
-                        THEN 'alpha'
-                        WHEN NOT coalesce(digit_ratio < 0.2, FALSE)
-                        THEN 'digit'
-                        ELSE '__pass__' END AS stage
-            FROM q),
-        c AS (SELECT stage, count(*) AS n FROM tagged GROUP BY stage),
-        tot AS (SELECT CAST(sum(n) AS BIGINT) AS total FROM c),
-        f(stage_idx, stage) AS (VALUES
-            (0, 'min_length'), (1, 'min_tokens'), (2, 'alpha'),
-            (3, 'digit')),
-        funnel AS (
-            SELECT f.stage_idx, f.stage,
-                   COALESCE(c.n, 0) AS n_fail,
-                   tot.total
-                   - COALESCE(CAST(sum(c.n) OVER (ORDER BY f.stage_idx
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND 1 PRECEDING) AS BIGINT), 0) AS n_in
-            FROM f LEFT JOIN c USING (stage), tot)
-        SELECT CAST(stage_idx AS INT) AS stage_idx, stage,
-               CAST(n_in AS BIGINT) AS n_in,
-               CAST(n_fail AS BIGINT) AS n_fail,
-               CAST(n_in - n_fail AS BIGINT) AS n_pass,
-               CASE WHEN n_in > 0
-                    THEN round((n_in - n_fail) * 1.0 / n_in, 6)
-               END AS pass_rate
-        FROM funnel ORDER BY stage_idx
-    """,
-
     # NFC: both engines implement the Unicode standard algorithm —
     # byte-for-byte md5 agreement on decomposed input is the check
     'q_nfc_normalize': r"""
@@ -3338,67 +2905,6 @@ ORACLES: dict[str, str] = {
                     WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
                     ELSE 'tail' END AS ppl_bucket
         FROM documents d JOIN score s USING (doc_id)
-    """,
-    # greedy budget fill rebuilt: rounded alpha_ratio priority, integer
-    # exclusive running sum, budget VALUES mirror the query's dict;
-    # zh has no budget row so the inner join drops it (the operator's
-    # explicit-mixture contract)
-    'q_token_budget_mix': r"""
-        WITH q AS (
-            SELECT doc_id, lang,
-                   len(string_split_regex(trim(text), '\s+')) AS n_tokens,
-                   round(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                         * 1.0 / greatest(length(text), 1), 6) AS alpha_ratio
-            FROM documents
-        ), c AS (
-            SELECT doc_id, lang, n_tokens,
-                   sum(n_tokens) OVER (PARTITION BY lang
-                                       ORDER BY alpha_ratio DESC, doc_id ASC
-                                       ROWS UNBOUNDED PRECEDING)
-                       - n_tokens AS cum_before
-            FROM q
-        ), b(lang, budget) AS (VALUES
-            ('en', 6000), ('de', 2000), ('fr', 2000), ('es', 2000))
-        SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-               CAST(sum(doc_id) AS BIGINT) AS id_sum
-        FROM c JOIN b USING (lang)
-        WHERE cum_before < budget
-        GROUP BY lang
-    """,
-    # temperature mixture: weights = floor(sqrt(per-lang token sums))
-    # (IEEE sqrt correctly rounded → agrees with Python isqrt below
-    # 2^52), budgets = single proportional round in integer floor
-    # division (clamp-free total by construction), then the same
-    # exclusive-running-sum fill as q_token_budget_mix
-    'q_temperature_mix': r"""
-        WITH q AS (
-            SELECT doc_id, lang,
-                   len(string_split_regex(trim(text), '\s+')) AS n_tokens,
-                   round(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                         * 1.0 / greatest(length(text), 1), 6) AS alpha_ratio
-            FROM documents
-        ), w AS (
-            SELECT lang,
-                   CAST(floor(sqrt(sum(n_tokens)::DOUBLE)) AS BIGINT) AS w
-            FROM q GROUP BY lang HAVING sum(n_tokens) > 0
-        ), b AS (
-            SELECT lang, (6000 * w) // (SELECT sum(w) FROM w) AS budget
-            FROM w
-        ), c AS (
-            SELECT doc_id, lang, n_tokens,
-                   sum(n_tokens) OVER (PARTITION BY lang
-                                       ORDER BY alpha_ratio DESC, doc_id ASC
-                                       ROWS UNBOUNDED PRECEDING)
-                       - n_tokens AS cum_before
-            FROM q
-        )
-        SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-               CAST(sum(doc_id) AS BIGINT) AS id_sum
-        FROM c JOIN b USING (lang)
-        WHERE cum_before < budget
-        GROUP BY lang ORDER BY lang
     """,
     # both shingle sets rebuilt in SQL and intersected — the benchmark
     # slice is every 97th doc
@@ -3522,24 +3028,6 @@ ORACLES: dict[str, str] = {
         FROM documents
         WHERE doc_id % 2 = 0 OR doc_id % 3 = 0
         GROUP BY lang ORDER BY lang
-    """,
-    # the md5 coin replayed digit-for-digit: thresholds are the exact
-    # hex of frac(f)·16^32 (1/4 → 2^126 = '4'+31×'0', 1/2 → 2^127 =
-    # '8'+31×'0'); es/zh have no factor row, the join drops them
-    'q_epoch_upsample': r"""
-        WITH f(lang, whole, thr) AS (VALUES
-            ('en', 1, '40000000000000000000000000000000'),
-            ('de', 2, '00000000000000000000000000000000'),
-            ('fr', 0, '80000000000000000000000000000000')),
-        n AS (
-            SELECT d.doc_id, d.lang,
-                   f.whole + CASE WHEN md5(d.doc_id || '|r5') < f.thr
-                                  THEN 1 ELSE 0 END AS n_copies
-            FROM documents d JOIN f USING (lang)
-        )
-        SELECT doc_id, lang, CAST(e AS BIGINT) AS epoch
-        FROM (SELECT doc_id, lang, unnest(range(n_copies)) AS e
-              FROM n WHERE n_copies > 0)
     """,
     # the seeded stream re-sorted on the identical md5(id|seed)·id key,
     # cumulative window minus self = exclusive offset, integer divide
@@ -3679,313 +3167,6 @@ ORACLES: dict[str, str] = {
                               ORDER BY doc_id::VARCHAR)) AS ids_md5
         FROM documents
     """,
-    # the release datasheet rebuilt column-for-column: exact counts,
-    # the md5-distinct duplication measure, both quality gates, and
-    # single-division ratios
-    'q_corpus_datasheet': r"""
-        WITH w(term, wt) AS (VALUES
-            ('query', 300), ('sort', 250), ('merge', 250), ('vector', 220),
-            ('stream', 200), ('window', 200), ('fast', 200), ('scan', 150),
-            ('join', 150), ('spark', 150), ('hash', 120), ('column', 120),
-            ('table', 100), ('batch', 100), ('agg', 100), ('group', 100),
-            ('order', 100), ('filter', 100), ('key', 80), ('row', 80),
-            ('value', 60), ('data', 60), ('line', 60), ('part', 60),
-            ('customer', 50), ('big', 50), ('small', -150), ('slow', -400),
-            ('dup', -500), ('a', -100), ('the', -100)),
-        tok AS (SELECT doc_id,
-                       unnest(string_split_regex(lower(trim(text)), '\s+'))
-                           AS t
-                FROM documents),
-        sc AS (SELECT doc_id, -4700 + sum(coalesce(wt, 0)) AS units
-               FROM tok LEFT JOIN w ON t = term GROUP BY doc_id),
-        q AS (SELECT doc_id, lang, source,
-                     len(string_split_regex(trim(text), '\s+')) AS tokc,
-                     length(text) AS chars, md5(text) AS h,
-                     CASE WHEN
-                         round(length(regexp_replace(text, '[^A-Za-z]',
-                                                     '', 'g')) * 1.0
-                               / greatest(length(text), 1), 6) > 0.6
-                         AND round(length(regexp_replace(text, '[^0-9]',
-                                                         '', 'g')) * 1.0
-                                   / greatest(length(text), 1), 6) < 0.2
-                         AND len(string_split_regex(trim(text), '\s+')) >= 5
-                     THEN 1 ELSE 0 END AS qok,
-                     CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS en
-              FROM documents),
-        j AS (SELECT q.*, sc.units FROM q JOIN sc USING (doc_id))
-        SELECT CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-               CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-               CAST(sum(tokc) AS BIGINT) AS n_tokens,
-               CAST(sum(chars) AS BIGINT) AS n_chars,
-               CAST(count(DISTINCT h) AS BIGINT) AS n_unique_texts,
-               CAST(sum(qok) AS BIGINT) AS n_quality_ok,
-               CAST(sum(CASE WHEN units > 0 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_model_pass,
-               CAST(sum(en) AS BIGINT) AS n_en,
-               round((count(*) - count(DISTINCT h))
-                     / CAST(count(*) AS DOUBLE), 6) AS dup_frac,
-               round(sum(tokc) / CAST(count(*) AS DOUBLE), 6)
-                   AS tokens_per_doc
-        FROM j
-    """,
-    # exact AUC replayed: per-distinct-score class counts, negatives-
-    # below cumsum, 2·AUC·P·N as an integer — the '__all__' row checks
-    # the two-phase global path against plain SQL
-    'q_model_auc': r"""
-        WITH w(term, wt) AS (VALUES
-            ('query', 300), ('sort', 250), ('merge', 250), ('vector', 220),
-            ('stream', 200), ('window', 200), ('fast', 200), ('scan', 150),
-            ('join', 150), ('spark', 150), ('hash', 120), ('column', 120),
-            ('table', 100), ('batch', 100), ('agg', 100), ('group', 100),
-            ('order', 100), ('filter', 100), ('key', 80), ('row', 80),
-            ('value', 60), ('data', 60), ('line', 60), ('part', 60),
-            ('customer', 50), ('big', 50), ('small', -150), ('slow', -400),
-            ('dup', -500), ('a', -100), ('the', -100)),
-        tok AS (SELECT doc_id, source, lang,
-                       unnest(string_split_regex(lower(trim(text)), '\s+'))
-                           AS t
-                FROM documents),
-        sc AS (SELECT doc_id, any_value(source) AS source,
-                      CASE WHEN any_value(lang) = 'en' THEN 1 ELSE 0 END
-                          AS y,
-                      -4700 + sum(coalesce(wt, 0)) AS s
-               FROM tok LEFT JOIN w ON t = term
-               GROUP BY doc_id),
-        lab AS (SELECT source, s, y FROM sc
-                UNION ALL SELECT '__all__', s, y FROM sc),
-        per AS (SELECT source, s, sum(y) AS p, count(*) - sum(y) AS n
-                FROM lab GROUP BY source, s),
-        nb AS (SELECT source, p, n,
-                      sum(n) OVER (PARTITION BY source ORDER BY s
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND CURRENT ROW) - n AS nbelow
-               FROM per),
-        g AS (SELECT source, sum(p) AS pos_n, sum(n) AS neg_n,
-                     sum(p * (2 * nbelow + n)) AS num2
-              FROM nb GROUP BY source)
-        SELECT source, CAST(pos_n AS BIGINT) AS pos_n,
-               CAST(neg_n AS BIGINT) AS neg_n,
-               CAST(num2 AS BIGINT) AS auc_num2,
-               CASE WHEN pos_n > 0 AND neg_n > 0 THEN
-                   round(CAST(num2 AS DOUBLE) / (2.0 * pos_n * neg_n), 6)
-               END AS auc
-        FROM g ORDER BY source
-    """,
-    # PR curve: class totals minus exclusive below-prefix sums per
-    # distinct score; precision/recall single IEEE divisions of exact
-    # counts, every row independent
-    'q_pr_curve': r"""
-        WITH w(term, wt) AS (VALUES
-            ('query', 300), ('sort', 250), ('merge', 250), ('vector', 220),
-            ('stream', 200), ('window', 200), ('fast', 200), ('scan', 150),
-            ('join', 150), ('spark', 150), ('hash', 120), ('column', 120),
-            ('table', 100), ('batch', 100), ('agg', 100), ('group', 100),
-            ('order', 100), ('filter', 100), ('key', 80), ('row', 80),
-            ('value', 60), ('data', 60), ('line', 60), ('part', 60),
-            ('customer', 50), ('big', 50), ('small', -150), ('slow', -400),
-            ('dup', -500), ('a', -100), ('the', -100)),
-        tok AS (SELECT doc_id, lang,
-                       unnest(string_split_regex(lower(trim(text)), '\s+'))
-                           AS t
-                FROM documents),
-        sc AS (SELECT doc_id,
-                      CASE WHEN any_value(lang) = 'en' THEN 1 ELSE 0 END
-                          AS y,
-                      -4700 + sum(coalesce(wt, 0)) AS s
-               FROM tok LEFT JOIN w ON t = term
-               GROUP BY doc_id),
-        per AS (SELECT s, sum(y) AS p, count(*) - sum(y) AS n
-                FROM sc GROUP BY s),
-        tot AS (SELECT sum(p) AS tp_all, sum(n) AS fn_all FROM per),
-        c AS (SELECT s, p, n,
-                     sum(p) OVER (ORDER BY s
-                                  ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND CURRENT ROW) - p AS pb,
-                     sum(n) OVER (ORDER BY s
-                                  ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND CURRENT ROW) - n AS nb
-              FROM per)
-        SELECT s AS score,
-               CAST(tp_all - pb AS BIGINT) AS tp,
-               CAST(fn_all - nb AS BIGINT) AS fp,
-               round((tp_all - pb) * 1.0
-                     / ((tp_all - pb) + (fn_all - nb)), 6) AS precision,
-               round((tp_all - pb) * 1.0 / tp_all, 6) AS recall
-        FROM c, tot ORDER BY score DESC
-    """,
-
-    # average precision: the identical pinned arithmetic — precision
-    # rounded to 12 places, terms summed in DECIMAL(38,12)
-    'q_average_precision': r"""
-        WITH w(term, wt) AS (VALUES
-            ('query', 300), ('sort', 250), ('merge', 250), ('vector', 220),
-            ('stream', 200), ('window', 200), ('fast', 200), ('scan', 150),
-            ('join', 150), ('spark', 150), ('hash', 120), ('column', 120),
-            ('table', 100), ('batch', 100), ('agg', 100), ('group', 100),
-            ('order', 100), ('filter', 100), ('key', 80), ('row', 80),
-            ('value', 60), ('data', 60), ('line', 60), ('part', 60),
-            ('customer', 50), ('big', 50), ('small', -150), ('slow', -400),
-            ('dup', -500), ('a', -100), ('the', -100)),
-        tok AS (SELECT doc_id, source, lang,
-                       unnest(string_split_regex(lower(trim(text)), '\s+'))
-                           AS t
-                FROM documents),
-        sc AS (SELECT doc_id, any_value(source) AS source,
-                      CASE WHEN any_value(lang) = 'en' THEN 1 ELSE 0 END
-                          AS y,
-                      -4700 + sum(coalesce(wt, 0)) AS s
-               FROM tok LEFT JOIN w ON t = term
-               GROUP BY doc_id),
-        per AS (SELECT source, s, sum(y) AS p, count(*) - sum(y) AS n
-                FROM sc GROUP BY source, s),
-        c AS (SELECT source, s, p, n,
-                     sum(p) OVER (PARTITION BY source ORDER BY s
-                                  ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND CURRENT ROW) - p AS pb,
-                     sum(n) OVER (PARTITION BY source ORDER BY s
-                                  ROWS BETWEEN UNBOUNDED PRECEDING
-                                  AND CURRENT ROW) - n AS nb,
-                     sum(p) OVER (PARTITION BY source) AS bigp,
-                     sum(n) OVER (PARTITION BY source) AS bign
-              FROM per),
-        terms AS (SELECT source, bigp, bign,
-                         CAST(round(p * round((bigp - pb) * 1.0
-                              / ((bigp - pb) + (bign - nb)), 12), 12)
-                              AS DECIMAL(38,12)) AS term
-                  FROM c)
-        SELECT source,
-               CAST(any_value(bigp) AS BIGINT) AS pos_n,
-               CAST(any_value(bign) AS BIGINT) AS neg_n,
-               CASE WHEN any_value(bigp) > 0 THEN
-                   round(CAST(sum(term) AS DOUBLE)
-                         / any_value(bigp), 6) END AS ap
-        FROM terms GROUP BY source ORDER BY source
-    """,
-
-    # the conditional-aggregate confusion pass replayed per threshold;
-    # ratios are single IEEE divisions of exact counts
-    'q_threshold_report': r"""
-        WITH w(term, wt) AS (VALUES
-            ('query', 300), ('sort', 250), ('merge', 250), ('vector', 220),
-            ('stream', 200), ('window', 200), ('fast', 200), ('scan', 150),
-            ('join', 150), ('spark', 150), ('hash', 120), ('column', 120),
-            ('table', 100), ('batch', 100), ('agg', 100), ('group', 100),
-            ('order', 100), ('filter', 100), ('key', 80), ('row', 80),
-            ('value', 60), ('data', 60), ('line', 60), ('part', 60),
-            ('customer', 50), ('big', 50), ('small', -150), ('slow', -400),
-            ('dup', -500), ('a', -100), ('the', -100)),
-        tok AS (SELECT doc_id, lang,
-                       unnest(string_split_regex(lower(trim(text)), '\s+'))
-                           AS t
-                FROM documents),
-        sc AS (SELECT doc_id,
-                      CASE WHEN any_value(lang) = 'en' THEN 1 ELSE 0 END
-                          AS y,
-                      -4700 + sum(coalesce(wt, 0)) AS s
-               FROM tok LEFT JOIN w ON t = term
-               GROUP BY doc_id),
-        th(threshold) AS (VALUES (CAST(-1000 AS DOUBLE)),
-                                 (CAST(0 AS DOUBLE)),
-                                 (CAST(1000 AS DOUBLE))),
-        c AS (SELECT threshold,
-                     sum(CASE WHEN s >= threshold AND y = 1
-                         THEN 1 ELSE 0 END) AS tp,
-                     sum(CASE WHEN s >= threshold AND y = 0
-                         THEN 1 ELSE 0 END) AS fp,
-                     sum(CASE WHEN s < threshold AND y = 1
-                         THEN 1 ELSE 0 END) AS fn,
-                     sum(CASE WHEN s < threshold AND y = 0
-                         THEN 1 ELSE 0 END) AS tn
-              FROM sc, th GROUP BY threshold)
-        SELECT threshold, CAST(tp AS BIGINT) AS tp,
-               CAST(fp AS BIGINT) AS fp, CAST(fn AS BIGINT) AS fn,
-               CAST(tn AS BIGINT) AS tn,
-               CASE WHEN tp + fp > 0 THEN
-                   round(CAST(tp AS DOUBLE) / (tp + fp), 6)
-               END AS precision,
-               CASE WHEN tp + fn > 0 THEN
-                   round(CAST(tp AS DOUBLE) / (tp + fn), 6)
-               END AS recall,
-               CASE WHEN 2 * tp + fp + fn > 0 THEN
-                   round(2 * CAST(tp AS DOUBLE) / (2 * tp + fp + fn), 6)
-               END AS f1
-        FROM c ORDER BY threshold
-    """,
-    # equal-width bins over integer units with edge clamping; pos_rate
-    # is one division of exact counts (mean_score deliberately absent:
-    # avg-of-doubles is addition-order-dependent)
-    'q_calibration_bins': r"""
-        WITH w(term, wt) AS (VALUES
-            ('query', 300), ('sort', 250), ('merge', 250), ('vector', 220),
-            ('stream', 200), ('window', 200), ('fast', 200), ('scan', 150),
-            ('join', 150), ('spark', 150), ('hash', 120), ('column', 120),
-            ('table', 100), ('batch', 100), ('agg', 100), ('group', 100),
-            ('order', 100), ('filter', 100), ('key', 80), ('row', 80),
-            ('value', 60), ('data', 60), ('line', 60), ('part', 60),
-            ('customer', 50), ('big', 50), ('small', -150), ('slow', -400),
-            ('dup', -500), ('a', -100), ('the', -100)),
-        tok AS (SELECT doc_id, lang,
-                       unnest(string_split_regex(lower(trim(text)), '\s+'))
-                           AS t
-                FROM documents),
-        sc AS (SELECT doc_id,
-                      CASE WHEN any_value(lang) = 'en' THEN 1 ELSE 0 END
-                          AS y,
-                      -4700 + sum(coalesce(wt, 0)) AS s
-               FROM tok LEFT JOIN w ON t = term
-               GROUP BY doc_id),
-        b AS (SELECT CAST(least(greatest(
-                         floor((CAST(s AS DOUBLE) + 10000.0) / 2500.0),
-                         0), 7) AS BIGINT) AS bin, y
-              FROM sc)
-        SELECT bin, CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(y) AS BIGINT) AS n_pos,
-               round(CAST(sum(y) AS DOUBLE) / count(*), 6) AS pos_rate
-        FROM b GROUP BY bin ORDER BY bin
-    """,
-    # waterfilling replayed in exact integer arithmetic: round 1 clamps
-    # zh (its 5/10 share exceeds availability at both gate SFs — en/de
-    # round-1 shares are discarded per the repair loop), round 2
-    # reflows the shortfall 3:2 to en/de with floor division, then the
-    # q_token_budget_mix fill window runs against the derived budgets
-    'q_mixture_fill': r"""
-        WITH q AS (
-            SELECT doc_id, lang,
-                   len(string_split_regex(trim(text), '\s+')) AS n_tokens,
-                   round(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                         * 1.0 / greatest(length(text), 1), 6) AS alpha_ratio
-            FROM documents
-        ), w(lang, wt) AS (VALUES ('en', 3), ('de', 2), ('zh', 5)),
-        av AS (
-            SELECT lang, CAST(sum(n_tokens) AS BIGINT) AS avail
-            FROM q JOIN w USING (lang) GROUP BY lang
-        ), tot AS (
-            SELECT CAST(3 * sum(avail) // 5 AS BIGINT) AS total FROM av
-        ), b AS (
-            SELECT av.lang,
-                   CAST(CASE av.lang
-                        WHEN 'zh' THEN av.avail
-                        WHEN 'en' THEN (tot.total - zh.avail) * 3 // 5
-                        ELSE (tot.total - zh.avail) * 2 // 5
-                        END AS BIGINT) AS budget
-            FROM av, tot, (SELECT avail FROM av WHERE lang = 'zh') zh
-        ), c AS (
-            SELECT doc_id, lang, n_tokens,
-                   sum(n_tokens) OVER (PARTITION BY lang
-                                       ORDER BY alpha_ratio DESC,
-                                                doc_id ASC
-                                       ROWS UNBOUNDED PRECEDING)
-                       - n_tokens AS cum_before
-            FROM q JOIN w USING (lang)
-        )
-        SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
-               CAST(sum(doc_id) AS BIGINT) AS id_sum, b.budget
-        FROM c JOIN b USING (lang)
-        WHERE cum_before < budget
-        GROUP BY lang, b.budget
-    """,
 }
 
 
@@ -4000,14 +3181,12 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     50 names so a reordering is always deliberate.
     """
     return {
-        # -- flagship oracles; round 6 adds the r5 heavyweights
-        # (exact AUC, MERGE upsert) and the r6 trio (substring removal,
-        # gopher repetition, encode+pack) -----------------------------
+        # -- flagship oracles: Bloom ingest, cluster keep-best,
+        # decontamination and the unigram LM --------------------------
         'q_bloom_incremental_ingest': q_bloom_incremental_ingest,
         'q_cluster_keep_best': q_cluster_keep_best,
         'q_decontamination': q_decontamination,
         'q_unigram_logprob': q_unigram_logprob,
-        'q_model_auc': q_model_auc,
         # -- reference-parity and operator oracles --------------------
         'q_line_dedup': q_line_dedup,
         'q_minhash_planted': q_minhash_planted,
@@ -4021,10 +3200,7 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_substring_removal': q_substring_removal,
         'q_gopher_repetition': q_gopher_repetition,
         'q_ppl_buckets': q_ppl_buckets,
-        'q_temperature_mix': q_temperature_mix,
-        'q_curation_pipeline': q_curation_pipeline,
         'q_model_quality_gate': q_model_quality_gate,
-        'q_quality_cascade': q_quality_cascade,
         'q_token_counts_bpe': q_token_counts_bpe,
         'q_w2_search_snippets': q_w2_search_snippets,
         'q_group_quota': q_group_quota,
@@ -4046,24 +3222,13 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_f1_size_reject': q_f1_size_reject,
         'q_j4_status_projection': q_j4_status_projection,
         'q_d3_destructive_dedup': q_d3_destructive_dedup,
-        'q_epoch_upsample': q_epoch_upsample,
         'q_shuffle_shards': q_shuffle_shards,
-        'q_mixture_fill': q_mixture_fill,
         'q_shard_export': q_shard_export,
-        # -- next oracles in catalog order, moved up when the
-        # embedding, salted and layout entries left the catalog:
+        # -- next oracles in catalog order, moved up when the entries
+        # of deleted operators left the first 50:
         'q_append_shards': q_append_shards,
-        'q_threshold_report': q_threshold_report,
-        'q_calibration_bins': q_calibration_bins,
-        'q_pr_curve': q_pr_curve,
-        'q_average_precision': q_average_precision,
         'q_compaction_content': q_compaction_content,
         'q_nfc_normalize': q_nfc_normalize,
-        # -- oracles kept out of the first 50, each with a cover above:
-        # q_source_quality_gate (gates = curation_pipeline +
-        # model_quality_gate), q_doc_chunking (window math graded
-        # inside q_encode_pack), q_hash_split (md5-threshold assignment
-        # also inside q_epoch_upsample's coin).
         'q_source_quality_gate': q_source_quality_gate,
         'q_doc_chunking': q_doc_chunking,
         'q_hash_split': q_hash_split,
@@ -4073,13 +3238,12 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_fingerprint': q_fingerprint,
         'q_tokenizer_report': q_tokenizer_report,
         'q_export_diff': q_export_diff,
-        'q_corpus_datasheet': q_corpus_datasheet,
         'q_jsonl_export': q_jsonl_export,
+        # -- oracles after the first 50:
         'q_para_neardup_planted': q_para_neardup_planted,
         'q_substring_keep_first': q_substring_keep_first,
         'q_warc_framing': q_warc_framing,
         'q_neardup_clusters': q_neardup_clusters,
-        'q_token_budget_mix': q_token_budget_mix,
         'q_f4_category_overlap': q_f4_category_overlap,
         'q_html_meta': q_html_meta,
         'q_line_dedup_within': q_line_dedup_within,

@@ -5,11 +5,12 @@ hypothesis parity against the independent GPT-2-loop transcription
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, '/root/repo/tests')
+sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from pyspark.sql.functions import lit as F_lit  # noqa: E402
 from reference_bpe import reference_bpe, reference_count  # noqa: E402

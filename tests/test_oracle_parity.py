@@ -8,11 +8,12 @@ from __future__ import annotations
 import datetime
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, '/root/repo')
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 import __spark_entry__ as entry_mod
 
 SF_DIR = __import__('os').environ.get('ORACLE_SF_DIR', '/root/testdata/sf0.001')

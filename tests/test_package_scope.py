@@ -30,8 +30,6 @@ ROOTS = [f'{PKG}.api', f'{PKG}.pipeline',
          *sorted(ROOT.glob('perfbench/*.py'))]
 NOT_YET_DELETED = {
     f'{PKG}.kernels.bpe',
-    f'{PKG}.operators.curate',
-    f'{PKG}.operators.evaluate',
     f'{PKG}.operators.packing',
     f'{PKG}.operators.quality_model',
     f'{PKG}.operators.textstats',

@@ -33,6 +33,7 @@ def test_run_then_resume_is_idempotent(spark, outdir):
     s2 = run_extraction(spark, pages, outdir, CFG)
     assert s2['rows_out'] == 0 and s2['buckets'] == 0
     assert s2['resumed_skipped_buckets'] == CFG.output_buckets
+    assert s2['resumed_skipped_rows'] == 120
     assert cp.read_output(spark, outdir).count() == n1
 
 
@@ -56,6 +57,9 @@ def test_partial_run_resumes_remaining_buckets(spark, outdir):
     s = run_extraction(spark, pages, outdir, CFG)
     assert s['resumed_skipped_buckets'] == 4
     assert s['buckets'] == CFG.output_buckets - 4
+    b = cp.bucket_of('url', CFG.output_buckets)
+    assert s['resumed_skipped_rows'] == pages.filter(b < 4).count()
+    assert s['rows_in'] == 120 - s['resumed_skipped_rows']
 
     out = cp.read_output(spark, outdir)
     assert out.count() == 120                        # no dup rows
@@ -291,14 +295,16 @@ def test_writers_recover_a_crashed_swap_before_writing(spark, outdir):
     os.rename(data, data + '.compact_old')
 
     pages = web_pages_df(spark, 60, num_partitions=4)  # a superset
-    run_extraction(spark, pages, outdir, cfg)
+    s = run_extraction(spark, pages, outdir, cfg)
     b = cp.bucket_of('url', cfg.output_buckets).alias('b')
     first_urls = {r['url'] for r in first.select('url').collect()}
     done = {r['b'] for r in first.select(b).collect()}
     # resume skips committed buckets whatever the input, so the rows
-    # of the superset that hash into run 1's buckets stay unwritten
-    want = first_urls | {r['url'] for r in pages.select('url', b).collect()
-                         if r['b'] not in done}
+    # of the superset that hash into run 1's buckets stay unwritten,
+    # and the stats report how many
+    rows = pages.select('url', b).collect()
+    want = first_urls | {r['url'] for r in rows if r['b'] not in done}
+    assert s['resumed_skipped_rows'] == sum(r['b'] in done for r in rows)
     got = {r['url'] for r in cp.read_output(spark, outdir).collect()}
     assert got == want  # run 1's urls included
     assert not os.path.exists(data + '.compact_old')

@@ -251,8 +251,7 @@ def test_release_contract_no_persist_leaks(spark):
     baseline = _ids()
     for name in ('q_substring_removal', 'q_substring_keep_first',
                  'q_gopher_repetition', 'q_gopher_dup_ngrams',
-                 'q_pack_sequences', 'q_encode_pack', 'q_pr_curve',
-                 'q_average_precision', 'q_model_auc',
+                 'q_pack_sequences', 'q_encode_pack',
                  'q_ngram_jaccard_exact', 'q_minhash_near_dups',
                  'q_simhash_near_dups'):
         cat[name](spark, SF).collect()
