@@ -830,31 +830,6 @@ def line_dedup(df: DataFrame, id_col: str = 'doc_id',
                                F.lit('')).alias('cleaned_text')))
 
 
-def group_quota(df: DataFrame, group_col: str,
-                order_cols: 'list[tuple[str, str]]',
-                cap: int, id_col: str = 'doc_id') -> DataFrame:
-    """Per-group row quota (round 4) — crawl balancing: keep at most
-    ``cap`` rows per group (domain/host/source), preferring rows first
-    in ``order_cols`` order (list of (column, 'asc'|'desc')), so no
-    single domain dominates the corpus mix (the standard web-corpus
-    composition control).
-
-    Scale shape: the ranking window runs over a NARROW projection
-    (group, order keys, id) — one hash shuffle of small rows — and the
-    survivors semi-join back on the id, so the heavy text/payload
-    columns never ride the window exchange.  Deterministic: callers
-    must include a tiebreaker (e.g. the id) in order_cols."""
-    names = [c for c, _ in order_cols]
-    narrow = df.select(*dict.fromkeys([group_col, id_col, *names]))
-    exprs = [F.col(c).desc() if d == 'desc' else F.col(c).asc()
-             for c, d in order_cols]
-    w = Window.partitionBy(group_col).orderBy(*exprs)
-    keep = (narrow.withColumn('__rn', F.row_number().over(w))
-            .filter(F.col('__rn') <= cap)
-            .select(id_col))
-    return df.join(keep, on=id_col, how='left_semi')
-
-
 def _window_hash(hash_bits: int):
     """In-row window-content hash for the substring/n-gram family.
 

@@ -121,26 +121,6 @@ def q_quality_scores(spark, sf_dir):
             .orderBy('source'))
 
 
-def q_model_quality_gate(spark, sf_dir):
-    """Model-based quality filter (operators/quality_model, round 5 —
-    the FineWeb-Edu/DCLM stage the heuristic gates approximate): the
-    frozen linear model scores every document as ONE codegen fold over
-    an inlined term→weight map (no shuffle, no Python — plan-pinned in
-    test_quality_model), gate = margin units > 0. Integer-unit weights
-    make per-doc sums EXACT under any addition order, so Spark's
-    ordered fold and DuckDB's unordered SUM agree bit-for-bit; the
-    per-source (n_docs, n_pass, sum_units) triple witnesses every
-    document's exact score sum, not just the gate bit."""
-    from .operators.quality_model import model_quality_units
-    d = model_quality_units(_t(spark, sf_dir, 'documents'))
-    return (d.groupBy('source')
-            .agg(F.count('*').cast('long').alias('n_docs'),
-                 F.sum((F.col('mq_units') > 0).cast('int'))
-                 .cast('long').alias('n_pass'),
-                 F.sum('mq_units').cast('long').alias('sum_units'))
-            .orderBy('source'))
-
-
 def q_token_counts(spark, sf_dir):
     """Token counting: whitespace + BPE-ish subword estimate, corpus
     totals per lang."""
@@ -675,22 +655,6 @@ def q_line_dedup_within(spark, sf_dir):
             .orderBy('doc_id'))
 
 
-def q_group_quota(spark, sf_dir):
-    """Per-source row quota (dedup.group_quota, round 4 — crawl
-    balancing): keep the 30 longest docs per source (n_chars desc,
-    doc_id asc tiebreak); per-source survivor counts + id/char sums
-    witness the exact survivor SET."""
-    from .operators.dedup import group_quota
-    d = _t(spark, sf_dir, 'documents')
-    out = group_quota(d, 'source', [('n_chars', 'desc'), ('doc_id', 'asc')],
-                      cap=30)
-    return (out.groupBy('source')
-            .agg(F.count('*').cast('long').alias('n_kept'),
-                 F.sum('doc_id').cast('long').alias('id_sum'),
-                 F.sum('n_chars').cast('long').alias('chars_sum'))
-            .orderBy('source'))
-
-
 def q_substring_duplication(spark, sf_dir):
     """Exact substring-level duplication measure
     (dedup.substring_duplication_stats, round 4 — the Lee et al.
@@ -1067,61 +1031,6 @@ def q_para_neardup(spark, sf_dir):
         'docs_with_dups long, dup_paras long')
 
 
-def q_pack_sequences(spark, sf_dir):
-    """Sequence packing for training export (operators/packing,
-    round 5 — GPT-style concat-and-chop): every document's position
-    in the packed token stream at seq_len=512, via the two-phase
-    distributed prefix sum (range shuffle + per-partition windows +
-    broadcast partial offsets — NO single-partition stage,
-    plan-pinned in test_packing). Oracle: DuckDB's cumulative-sum
-    window reproduces the offsets exactly; per-doc
-    first/last/spanned-sequence columns witness the full assignment."""
-    from .operators.dedup import release as _release
-    from .operators.packing import pack_sequences
-    d = (_t(spark, sf_dir, 'documents')
-         .select('doc_id',
-                 F.size(F.split(F.trim(F.col('text')), r'\s+'))
-                 .cast('long').alias('toks')))
-    packed = pack_sequences(d, 'doc_id', 'toks', seq_len=512)
-    out = (packed.select('doc_id', 'offset', 'first_seq', 'last_seq',
-                         'n_seqs_spanned')
-           .orderBy('doc_id'))
-    rows = out.collect()
-    _release(packed)
-    return spark.createDataFrame(rows, out.schema)
-
-
-def q_encode_pack(spark, sf_dir):
-    """BPE encode-to-ids + materialized concat-and-chop
-    (textstats.with_input_ids → packing.pack_input_ids, round 6 —
-    VERDICT r5 #4: the export family becomes loader-real, packed rows
-    carry the actual input_ids). Per 512-token context window:
-    contributing-doc count, id count, and md5 over the exact
-    comma-joined id sequence IN ORDER. Oracle: per-word id sequences
-    computed by tests/reference_bpe.py (the independent GPT-2-loop
-    transcription) + the public vocab rule (char → code point, merge →
-    0x110000+rank), pasted as a VALUES map; an unmapped word NULLs the
-    doc's stream and fails loudly. The window arithmetic (global
-    offsets → chop) is re-derived in SQL from scratch."""
-    from .operators.dedup import release as _release
-    from .operators.packing import pack_input_ids
-    d = textstats.with_input_ids(_t(spark, sf_dir, 'documents'), 'text')
-    # sep_id 1114111 = the last Unicode code point — never emitted by
-    # the encoder for fixture text, so it marks boundaries unambiguously
-    packed = pack_input_ids(d.select('doc_id', 'input_ids'),
-                            'doc_id', 'input_ids', seq_len=512,
-                            sep_id=1114111)
-    out = (packed.select(
-        'seq', 'n_docs', 'n_ids',
-        F.md5(F.array_join(
-            F.transform('input_ids', lambda x: x.cast('string')),
-            ',')).alias('ids_md5'))
-        .orderBy('seq'))
-    rows = out.collect()
-    _release(packed)
-    return spark.createDataFrame(rows, out.schema)
-
-
 def q_unigram_logprob(spark, sf_dir):
     """Unigram LM quality score (textstats.unigram_logprob): per-doc
     mean ln p(token) under the corpus's own Lidstone-smoothed unigram
@@ -1200,126 +1109,6 @@ def q_ppl_buckets(spark, sf_dir):
             .select('doc_id', 'lang', 'logprob', 'ppl_bucket'))
 
 
-def q_shuffle_shards(spark, sf_dir):
-    """Seeded global shuffle + token-balanced sharding
-    (packing.shuffle_shards, late round 5): documents laid out in
-    md5(id|seed)·id order, exclusive token prefix sum via the
-    two-phase distributed scan, shards cut every 5000 tokens.
-    Per-doc (offset, shard, shard_offset) witnesses the entire
-    stream layout. ORACLED: DuckDB re-sorts on the same key and
-    replays the cumulative window + integer divide exactly."""
-    from .operators.dedup import release as _release
-    from .operators.packing import shuffle_shards
-    d = (_t(spark, sf_dir, 'documents')
-         .select('doc_id',
-                 F.size(F.split(F.trim(F.col('text')), r'\s+'))
-                 .cast('long').alias('toks')))
-    sharded = shuffle_shards(d, 'doc_id', 'toks', 5000, seed='r5')
-    out = sharded.select('doc_id', 'offset', 'shard', 'shard_offset')
-    rows = out.collect()
-    _release(sharded)
-    return spark.createDataFrame(rows, out.schema)
-
-
-def q_shard_export(spark, sf_dir):
-    """Shard export sink (packing.write_shards, late round 5): the
-    q_shuffle_shards layout materialized to shard=N/ parquet
-    partitions, manifest recomputed FROM THE WRITTEN FILES (write-
-    then-publish: no manifest, no export) and verified on read.
-    Returns the manifest — per-shard doc/token totals plus the md5 of
-    the sorted id list. ORACLED: DuckDB rebuilds the stream, the cut,
-    and the checksum (md5 of the comma-joined lexicographically
-    sorted ids) per shard."""
-    import shutil
-    import tempfile
-    from .operators.dedup import release as _release
-    from .operators.packing import (shuffle_shards, verify_shards,
-                                    write_shards)
-    d = (_t(spark, sf_dir, 'documents')
-         .select('doc_id',
-                 F.size(F.split(F.trim(F.col('text')), r'\s+'))
-                 .cast('long').alias('toks')))
-    out = tempfile.mkdtemp(prefix='pam_q_shards_')
-    shutil.rmtree(out)
-    try:
-        sharded = shuffle_shards(d, 'doc_id', 'toks', 5000, seed='r5')
-        manifest = write_shards(spark, sharded, out, 'doc_id', 'toks')
-        _release(sharded)
-        assert verify_shards(spark, out, 'doc_id', 'toks')
-        rows = manifest.collect()
-        return spark.createDataFrame(rows, manifest.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def q_append_shards(spark, sf_dir):
-    """Incremental shard append (packing.append_shards, late round 5):
-    even doc_ids export first (seed r5a), odd doc_ids append as a
-    second crawl batch (seed r5b) starting at the next shard boundary
-    — stored shards stay byte-identical, numbering continues, no
-    shard spans two batches, and verify_shards passes on the combined
-    tree. Returns the combined manifest. ORACLED: DuckDB builds both
-    batch streams, shifts batch 2 by the ceil-div boundary, and
-    unions the per-shard manifests."""
-    import shutil
-    import tempfile
-    from .operators.dedup import release as _release
-    from .operators.packing import (append_shards, shuffle_shards,
-                                    verify_shards, write_shards)
-    d = (_t(spark, sf_dir, 'documents')
-         .select('doc_id',
-                 F.size(F.split(F.trim(F.col('text')), r'\s+'))
-                 .cast('long').alias('toks')))
-    out = tempfile.mkdtemp(prefix='pam_q_append_')
-    shutil.rmtree(out)
-    try:
-        b1 = d.filter(F.col('doc_id') % 2 == 0)
-        b2 = d.filter(F.col('doc_id') % 2 == 1)
-        s1 = shuffle_shards(b1, 'doc_id', 'toks', 5000, seed='r5a')
-        write_shards(spark, s1, out, 'doc_id', 'toks')
-        _release(s1)
-        combined = append_shards(spark, b2, out, 'doc_id', 'toks',
-                                 5000, seed='r5b')
-        assert verify_shards(spark, out, 'doc_id', 'toks')
-        rows = combined.collect()
-        return spark.createDataFrame(rows, combined.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def q_jsonl_export(spark, sf_dir):
-    """JSONL export sink round-trip (packing.export_jsonl /
-    verify_jsonl, late round 5): documents export as range-clustered
-    gzip JSONL with a written-last attested manifest, the loader-side
-    verify passes, and the data read BACK from disk carries exactly
-    the corpus — witnessed by the count, the token sum, and an
-    order-independent md5 over the sorted id strings (file layout is
-    a physical choice; the content checksum is not)."""
-    import shutil
-    import tempfile
-    from .operators.packing import export_jsonl, verify_jsonl
-    docs = (_t(spark, sf_dir, 'documents')
-            .select('doc_id', 'lang',
-                    F.size(F.split(F.trim(F.col('text')), r'\s+'))
-                    .cast('long').alias('toks')))
-    out = tempfile.mkdtemp(prefix='pam_q_jsonl_')
-    shutil.rmtree(out)
-    try:
-        export_jsonl(spark, docs, out, 'doc_id', n_files=6)
-        assert verify_jsonl(spark, out, 'doc_id')
-        back = spark.read.json(f'{out}/data')
-        res = back.agg(
-            F.count('*').cast('long').alias('n_docs'),
-            F.sum('toks').cast('long').alias('sum_toks'),
-            F.md5(F.concat_ws(',', F.array_sort(
-                F.collect_list(F.col('doc_id').cast('string')))))
-            .alias('ids_md5'))
-        rows = res.collect()
-        return spark.createDataFrame(rows, res.schema)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
 def q_recrawl_upsert(spark, sf_dir):
     """Recrawl upsert / MERGE INTO (checkpoint.upsert_output, late
     round 5): documents land as a bucketed store at ts=100; a
@@ -1362,53 +1151,6 @@ def q_recrawl_upsert(spark, sf_dir):
         return spark.createDataFrame(rows, res.schema)
     finally:
         shutil.rmtree(out, ignore_errors=True)
-
-
-def q_export_diff(spark, sf_dir):
-    """Export versioning diff (packing.diff_manifests, round 6):
-    export A = even docs; export B = a COPY of A with the odd docs
-    appended at the next boundary (append_shards). The diff must read
-    all of A's shards as UNCHANGED (the append-only immutability
-    contract, audited through the user-facing artifact) plus ADDED
-    shards carrying exactly the odd batch — never changed/removed.
-    ORACLED: per-status doc/token sums derive from documents by
-    arithmetic (shard layout is physical; the even/odd content split
-    is not)."""
-    import shutil
-    import tempfile
-    from .operators.dedup import release as _release
-    from .operators.packing import (append_shards, diff_manifests,
-                                    shuffle_shards, write_shards)
-    docs = (_t(spark, sf_dir, 'documents')
-            .select('doc_id',
-                    F.size(F.split(F.trim(F.col('text')), r'\s+'))
-                    .cast('long').alias('toks')))
-    a = tempfile.mkdtemp(prefix='pam_q_diff_a_')
-    b = tempfile.mkdtemp(prefix='pam_q_diff_b_')
-    shutil.rmtree(a)
-    try:
-        even = docs.filter(F.col('doc_id') % 2 == 0)
-        sharded = shuffle_shards(even, 'doc_id', 'toks', 5000,
-                                 seed='r6diff')
-        write_shards(spark, sharded, a, 'doc_id', 'toks')
-        _release(sharded)
-        shutil.rmtree(b)
-        shutil.copytree(a, b)
-        odd = docs.filter(F.col('doc_id') % 2 == 1)
-        append_shards(spark, odd, b, 'doc_id', 'toks', 5000,
-                      seed='r6diff2')
-        d = diff_manifests(spark, a, b)
-        # shard COUNTS are physical (md5-order dependent) — the oracle
-        # grades the layout-independent content sums per status
-        out = (d.groupBy('status')
-               .agg(F.sum('n_docs').cast('long').alias('sum_docs'),
-                    F.sum('n_tokens').cast('long').alias('sum_tokens'))
-               .orderBy('status'))
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(a, ignore_errors=True)
-        shutil.rmtree(b, ignore_errors=True)
 
 
 def q_minhash_incremental(spark, sf_dir):
@@ -1884,33 +1626,6 @@ ORACLES: dict[str, str] = {
                    AS n_ok
         FROM q GROUP BY source ORDER BY source
     """,
-    # frozen linear quality model: integer 1e-4-logit weights make the
-    # per-doc sums exact in any addition order (no fp tolerance); the
-    # VALUES list mirrors quality_model.FROZEN_QUALITY_WEIGHTS verbatim
-    'q_model_quality_gate': r"""
-        WITH w(term, wt) AS (VALUES
-            ('query', 300), ('sort', 250), ('merge', 250), ('vector', 220),
-            ('stream', 200), ('window', 200), ('fast', 200), ('scan', 150),
-            ('join', 150), ('spark', 150), ('hash', 120), ('column', 120),
-            ('table', 100), ('batch', 100), ('agg', 100), ('group', 100),
-            ('order', 100), ('filter', 100), ('key', 80), ('row', 80),
-            ('value', 60), ('data', 60), ('line', 60), ('part', 60),
-            ('customer', 50), ('big', 50), ('small', -150), ('slow', -400),
-            ('dup', -500), ('a', -100), ('the', -100)),
-        tok AS (SELECT doc_id, source,
-                       unnest(string_split_regex(lower(trim(text)), '\s+'))
-                           AS t
-                FROM documents),
-        sc AS (SELECT doc_id, any_value(source) AS source,
-                      CAST(-4700 + sum(coalesce(wt, 0)) AS BIGINT) AS units
-               FROM tok LEFT JOIN w ON t = term
-               GROUP BY doc_id)
-        SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(CASE WHEN units > 0 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_pass,
-               CAST(sum(units) AS BIGINT) AS sum_units
-        FROM sc GROUP BY source ORDER BY source
-    """,
     'q_token_counts': r"""
         SELECT lang,
                CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
@@ -1919,98 +1634,6 @@ ORACLES: dict[str, str] = {
                    '[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9\s]'))) AS BIGINT)
                    AS total_bpe_tokens
         FROM documents GROUP BY lang ORDER BY lang
-    """,
-    # sequence packing: the two-phase distributed prefix sum must equal
-    # the single cumulative-sum window (integer arithmetic — exact)
-    'q_pack_sequences': r"""
-        WITH t AS (SELECT doc_id,
-                          len(string_split_regex(trim(text), '\s+'))
-                              AS toks
-                   FROM documents),
-        c AS (SELECT doc_id, toks,
-                     sum(toks) OVER (ORDER BY doc_id
-                                     ROWS BETWEEN UNBOUNDED PRECEDING
-                                     AND CURRENT ROW) - toks AS off
-              FROM t)
-        SELECT doc_id, CAST(off AS BIGINT) AS "offset",
-               CASE WHEN toks > 0
-                    THEN CAST(off // 512 AS BIGINT) END AS first_seq,
-               CASE WHEN toks > 0
-                    THEN CAST((off + toks - 1) // 512 AS BIGINT)
-                    END AS last_seq,
-               CAST(CASE WHEN toks > 0
-                         THEN (off + toks - 1) // 512 - off // 512 + 1
-                         ELSE 0 END AS BIGINT) AS n_seqs_spanned
-        FROM c ORDER BY doc_id
-    """,
-
-    # encode+pack: per-word id sequences computed by
-    # tests/reference_bpe.py (independent GPT-2-loop transcription)
-    # under the public vocab rule (single char -> code point, merge ->
-    # 0x110000 + rank); window chop re-derived from scratch. An
-    # unmapped word NULLs its doc's stream (count<>count(idl)) and the
-    # NULL poisons the offsets — loud failure on lexicon drift.
-    'q_encode_pack': r"""
-        WITH c(w, ids) AS (VALUES
-            ('join', '106,111,1114114'),
-            ('hash', '104,1114135,104'),
-            ('row', '1114123,119'),
-            ('batch', '1114146,104'),
-            ('scan', '1114149'),
-            ('column', '1114124,1114137,109,110'),
-            ('customer', '99,117,1114120,111,1114142'),
-            ('filter', '1114150,116,1114115'),
-            ('small', '1114144,1114140'),
-            ('slow', '115,108,1114134'),
-            ('merge', '1114143,101'),
-            ('order', '1114119,100,1114115'),
-            ('vector', '118,101,99,116,1114119'),
-            ('line', '108,1114138'),
-            ('table', '116,97,1114139'),
-            ('data', '100,1114118,97'),
-            ('agg', '97,1114133'),
-            ('value', '118,1114141,1114132'),
-            ('key', '1114131'),
-            ('stream', '1114120,114,101,97,109'),
-            ('window', '119,1114114,100,1114134'),
-            ('a', '97'),
-            ('spark', '115,1114147,107'),
-            ('part', '1114147,116'),
-            ('group', '103,1114123,1114136'),
-            ('big', '98,105,103'),
-            ('sort', '115,1114119,116'),
-            ('query', '1114125,1114115,121'),
-            ('fast', '102,97,1114120'),
-            ('the', '1114113'),
-            ('dup', '100,1114136')),
-        t AS (SELECT doc_id, string_split_regex(trim(text), '\s+') AS ws
-              FROM documents),
-        tok AS (SELECT doc_id, i AS wpos, ws[i + 1] AS w
-                FROM t, LATERAL (SELECT unnest(range(0, len(ws)))
-                                 AS i)),
-        m AS (SELECT tok.doc_id, tok.wpos, string_split(c.ids, ',')
-                         AS idl
-              FROM tok LEFT JOIN c ON tok.w = c.w),
-        docx AS (SELECT doc_id,
-                        CASE WHEN count(*) <> count(idl) THEN NULL
-                             ELSE list_append(
-                                 flatten(list(idl ORDER BY wpos)),
-                                 '1114111')
-                        END AS idl
-                 FROM m GROUP BY doc_id),
-        off AS (SELECT doc_id, idl,
-                       COALESCE(CAST(sum(len(idl)) OVER (ORDER BY doc_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING) AS BIGINT), 0) AS o
-                FROM docx),
-        tk AS (SELECT doc_id, o + i AS p, idl[i + 1] AS id
-               FROM off, LATERAL (SELECT unnest(range(0, len(idl)))
-                                  AS i))
-        SELECT CAST(p // 512 AS BIGINT) AS seq,
-               CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-               CAST(count(*) AS BIGINT) AS n_ids,
-               md5(string_agg(id, ',' ORDER BY p)) AS ids_md5
-        FROM tk GROUP BY seq ORDER BY seq
     """,
 
     # exact BPE: per-word counts computed by tests/reference_bpe.py
@@ -2581,20 +2204,6 @@ ORACLES: dict[str, str] = {
         ORDER BY tot.doc_id
     """,
 
-    'q_group_quota': """
-        WITH ranked AS (
-            SELECT source, doc_id, n_chars,
-                   row_number() OVER (PARTITION BY source
-                                      ORDER BY n_chars DESC, doc_id ASC)
-                       AS rn
-            FROM documents)
-        SELECT source, CAST(count(*) AS BIGINT) AS n_kept,
-               CAST(sum(doc_id) AS BIGINT) AS id_sum,
-               CAST(sum(n_chars) AS BIGINT) AS chars_sum
-        FROM ranked WHERE rn <= 30
-        GROUP BY source ORDER BY source
-    """,
-
     # hash_split: thresholds are exact-integer-arithmetic hex literals
     # (4/5 and 9/10 of 16^32); md5 hex compare is engine-portable
     'q_hash_split': """
@@ -3029,110 +2638,6 @@ ORACLES: dict[str, str] = {
         WHERE doc_id % 2 = 0 OR doc_id % 3 = 0
         GROUP BY lang ORDER BY lang
     """,
-    # the seeded stream re-sorted on the identical md5(id|seed)·id key,
-    # cumulative window minus self = exclusive offset, integer divide
-    # for the shard cut — byte-for-byte the operator's contract
-    'q_shuffle_shards': r"""
-        WITH t AS (
-            SELECT doc_id,
-                   len(string_split_regex(trim(text), '\s+')) AS toks,
-                   md5(doc_id || '|r5') || doc_id AS k
-            FROM documents
-        ), c AS (
-            SELECT doc_id,
-                   sum(toks) OVER (ORDER BY k
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND CURRENT ROW) - toks AS off
-            FROM t
-        )
-        SELECT doc_id, CAST(off AS BIGINT) AS "offset",
-               CAST(off // 5000 AS BIGINT) AS shard,
-               CAST(off % 5000 AS BIGINT) AS shard_offset
-        FROM c
-    """,
-    # the written tree attested end-to-end: same stream/cut CTE as
-    # q_shuffle_shards, checksum = md5 of the comma-joined ids sorted
-    # AS STRINGS (spark array_sort == binary-collation ORDER BY)
-    'q_shard_export': r"""
-        WITH t AS (
-            SELECT doc_id,
-                   len(string_split_regex(trim(text), '\s+')) AS toks,
-                   md5(doc_id || '|r5') || doc_id AS k
-            FROM documents
-        ), c AS (
-            SELECT doc_id, toks,
-                   (sum(toks) OVER (ORDER BY k
-                                    ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) - toks) // 5000
-                       AS shard
-            FROM t
-        )
-        SELECT CAST(shard AS BIGINT) AS shard,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(toks) AS BIGINT) AS n_tokens,
-               md5(string_agg(doc_id::VARCHAR, ','
-                              ORDER BY doc_id::VARCHAR)) AS ids_md5
-        FROM c GROUP BY shard
-    """,
-    # both batch streams rebuilt, batch 2 shifted to the ceil-div
-    # boundary (no shard spans two batches), manifests unioned — the
-    # append-only contract checked value-for-value
-    'q_append_shards': r"""
-        WITH t1 AS (
-            SELECT doc_id,
-                   len(string_split_regex(trim(text), '\s+')) AS toks,
-                   md5(doc_id || '|r5a') || doc_id AS k
-            FROM documents WHERE doc_id % 2 = 0
-        ), c1 AS (
-            SELECT doc_id, toks,
-                   (sum(toks) OVER (ORDER BY k
-                                    ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) - toks) // 5000
-                       AS shard
-            FROM t1
-        ), base AS (
-            SELECT ((sum(toks) + 4999) // 5000) * 5000 AS b FROM t1
-        ), t2 AS (
-            SELECT doc_id,
-                   len(string_split_regex(trim(text), '\s+')) AS toks,
-                   md5(doc_id || '|r5b') || doc_id AS k
-            FROM documents WHERE doc_id % 2 = 1
-        ), c2 AS (
-            SELECT doc_id, toks,
-                   (sum(toks) OVER (ORDER BY k
-                                    ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) - toks + base.b)
-                       // 5000 AS shard
-            FROM t2, base
-        ), m AS (
-            SELECT shard, doc_id, toks FROM c1
-            UNION ALL SELECT shard, doc_id, toks FROM c2
-        )
-        SELECT CAST(shard AS BIGINT) AS shard,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(toks) AS BIGINT) AS n_tokens,
-               md5(string_agg(doc_id::VARCHAR, ','
-                              ORDER BY doc_id::VARCHAR)) AS ids_md5
-        FROM m GROUP BY shard
-    """,
-    # export diff: append-only history must read as unchanged + added
-    # with the even/odd content sums — never changed/removed
-    'q_export_diff': r"""
-        WITH t AS (SELECT doc_id,
-                          len(string_split_regex(trim(text), '\s+'))
-                              AS toks
-                   FROM documents)
-        SELECT 'added' AS status,
-               CAST(count(*) AS BIGINT) AS sum_docs,
-               CAST(sum(toks) AS BIGINT) AS sum_tokens
-        FROM t WHERE doc_id % 2 = 1
-        UNION ALL
-        SELECT 'unchanged' AS status,
-               CAST(count(*) AS BIGINT) AS sum_docs,
-               CAST(sum(toks) AS BIGINT) AS sum_tokens
-        FROM t WHERE doc_id % 2 = 0
-        ORDER BY status
-    """,
 
     # MERGE keep-latest derived independently: updates replayed as a
     # CASE over the update predicate, inserts as a UNION ALL
@@ -3157,16 +2662,6 @@ ORACLES: dict[str, str] = {
                CAST(sum(ts) AS BIGINT) AS sum_ts
         FROM m GROUP BY lang ORDER BY lang
     """,
-    # the JSONL round-trip witnessed content-wise: what comes back off
-    # disk must be the corpus, independent of file layout
-    'q_jsonl_export': r"""
-        SELECT CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(len(string_split_regex(trim(text), '\s+')))
-                   AS BIGINT) AS sum_toks,
-               md5(string_agg(doc_id::VARCHAR, ','
-                              ORDER BY doc_id::VARCHAR)) AS ids_md5
-        FROM documents
-    """,
 }
 
 
@@ -3190,8 +2685,6 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # -- reference-parity and operator oracles --------------------
         'q_line_dedup': q_line_dedup,
         'q_minhash_planted': q_minhash_planted,
-        'q_pack_sequences': q_pack_sequences,
-        'q_encode_pack': q_encode_pack,
         'q_simhash_planted': q_simhash_planted,
         'q_gopher_dup_ngrams': q_gopher_dup_ngrams,
         'q_learn_bpe': q_learn_bpe,
@@ -3200,10 +2693,8 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_substring_removal': q_substring_removal,
         'q_gopher_repetition': q_gopher_repetition,
         'q_ppl_buckets': q_ppl_buckets,
-        'q_model_quality_gate': q_model_quality_gate,
         'q_token_counts_bpe': q_token_counts_bpe,
         'q_w2_search_snippets': q_w2_search_snippets,
-        'q_group_quota': q_group_quota,
         'q_ngram_jaccard_exact': q_ngram_jaccard_exact,
         'q_recrawl_upsert': q_recrawl_upsert,
         'q_script_id': q_script_id,
@@ -3222,11 +2713,7 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_f1_size_reject': q_f1_size_reject,
         'q_j4_status_projection': q_j4_status_projection,
         'q_d3_destructive_dedup': q_d3_destructive_dedup,
-        'q_shuffle_shards': q_shuffle_shards,
-        'q_shard_export': q_shard_export,
-        # -- next oracles in catalog order, moved up when the entries
-        # of deleted operators left the first 50:
-        'q_append_shards': q_append_shards,
+        # -- further oracles -----------------------------------------
         'q_compaction_content': q_compaction_content,
         'q_nfc_normalize': q_nfc_normalize,
         'q_source_quality_gate': q_source_quality_gate,
@@ -3237,9 +2724,6 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_token_counts': q_token_counts,
         'q_fingerprint': q_fingerprint,
         'q_tokenizer_report': q_tokenizer_report,
-        'q_export_diff': q_export_diff,
-        'q_jsonl_export': q_jsonl_export,
-        # -- oracles after the first 50:
         'q_para_neardup_planted': q_para_neardup_planted,
         'q_substring_keep_first': q_substring_keep_first,
         'q_warc_framing': q_warc_framing,
@@ -3247,7 +2731,7 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_f4_category_overlap': q_f4_category_overlap,
         'q_html_meta': q_html_meta,
         'q_line_dedup_within': q_line_dedup_within,
-        # rows-only (no SQL oracle):
+        # -- rows-only (no SQL oracle), after every oracled entry ------
         'q_minhash_near_dups': q_minhash_near_dups,
         'q_minhash_incremental': q_minhash_incremental,
         'q_simhash_near_dups': q_simhash_near_dups,

@@ -620,35 +620,6 @@ def test_hash_split_unnormalized_weights(spark):
     assert abs(counts['b'] / 10_000 - 0.25) < 0.02
 
 
-def test_group_quota_caps_and_prefers_order(spark):
-    from pdf_ai_mapper_spark.operators.dedup import group_quota
-    rows = [(i, 'big' if i < 20 else 'small', 100 - i) for i in range(25)]
-    df = spark.createDataFrame(rows, 'doc_id long, source string, n_chars long')
-    out = group_quota(df, 'source', [('n_chars', 'desc'), ('doc_id', 'asc')],
-                      cap=5)
-    got = {r['source']: sorted(x['doc_id'] for x in out.collect()
-                               if x['source'] == r['source'])
-           for r in out.select('source').distinct().collect()}
-    # 'big' keeps its 5 longest = lowest doc_ids (n_chars = 100 - i)
-    assert got['big'] == [0, 1, 2, 3, 4]
-    assert got['small'] == [20, 21, 22, 23, 24]   # under cap: all kept
-
-
-def test_group_quota_payload_not_in_window_exchange(spark):
-    """The heavy column must not ride the ranking window's shuffle."""
-    from pdf_ai_mapper_spark.operators.dedup import group_quota
-    df = spark.createDataFrame(
-        [(i, 's', i, 'x' * 10) for i in range(10)],
-        'doc_id long, source string, n_chars long, text string')
-    out = group_quota(df, 'source', [('n_chars', 'desc'), ('doc_id', 'asc')],
-                      cap=3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    for line in plan.splitlines():
-        if 'Exchange hashpartitioning(source' in line:
-            assert 'text' not in line
-    assert out.count() == 3
-
-
 def test_line_dedup_matches_python_reference_randomized(spark):
     """Seeded random corpora vs a pure-python reference of the same
     spec (df = distinct docs containing the line; >= min_df removed;

@@ -15,6 +15,19 @@ needed.
 shipped, with their catalog entries and tests, until a later deletion
 step removes them. The set is exact: a newly unreached module fails
 the test, and so does deleting one of these without dropping it here.
+
+The same boundary holds one level down, for the public top-level
+functions and classes of the reached modules (``NOT_YET_DELETED``
+modules aside): each name must be referenced from a reached module or
+a root script, not only from ``queries.py`` or the tests, unless
+``CALLED_ONLY_FROM_CATALOG_OR_TESTS`` lists it. The match
+is by name alone (a bare name, an attribute or a ``from`` import),
+so it over-counts what is reached: any same-named reference anywhere
+in the engine keeps a function in. ``CALLED_ONLY_FROM_CATALOG_OR_TESTS``
+records the names that no engine source references today. It is a
+record of fact, not a to-do list, and it is exact: a new public
+function that no engine path references fails the test, and so does a
+listed name that is gone or now referenced.
 """
 
 from __future__ import annotations
@@ -30,9 +43,35 @@ ROOTS = [f'{PKG}.api', f'{PKG}.pipeline',
          *sorted(ROOT.glob('perfbench/*.py'))]
 NOT_YET_DELETED = {
     f'{PKG}.kernels.bpe',
-    f'{PKG}.operators.packing',
-    f'{PKG}.operators.quality_model',
     f'{PKG}.operators.textstats',
+}
+CALLED_ONLY_FROM_CATALOG_OR_TESTS = {
+    'checkpoint.compact_output',
+    'checkpoint.upsert_output',
+    'fixtures.webpages.build_warc',
+    'fixtures.webpages.web_pages_from_documents',
+    'fixtures.webpages.web_pages_pandas',
+    'kernels.ocr.set_ocr_kernel',
+    'kernels.preprocess.meaningful_tokens',
+    'kernels.preprocess.normalize_text',
+    'operators.categorize.load_models',
+    'operators.categorize.save_models',
+    'operators.categorize.with_topic_type',
+    'operators.dedup.dedup_exact',
+    'operators.dedup.line_dedup',
+    'operators.dedup.line_dedup_within_doc',
+    'operators.dedup.minhash_index_update',
+    'operators.dedup.ngram_jaccard_pairs',
+    'operators.dedup.paragraph_neardup_rollup',
+    'operators.dedup.remove_duplicated_substrings',
+    'operators.dedup.simhash_near_pairs',
+    'operators.dedup.substring_duplication_stats',
+    'operators.extraction.size_ok_col',
+    'operators.extraction.with_html_meta',
+    'operators.search.structured_category_filter',
+    'pipeline.with_status',
+    'session.cluster_spark_conf',
+    'sources.warc.warc_member_ranges',
 }
 
 
@@ -101,3 +140,41 @@ def test_catalog_imports_only_engine_modules():
                      - NOT_YET_DELETED)
     assert not outside, (
         f'queries.py imports modules no engine path reaches: {outside}')
+
+
+def _referenced_names(path: Path) -> set[str]:
+    """Every name ``path`` references: bare names, attribute names and
+    ``from`` import aliases."""
+    found = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Name):
+            found.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            found.add(node.attr)
+        elif isinstance(node, ast.ImportFrom):
+            found.update(a.name for a in node.names)
+    return found
+
+
+def test_every_public_function_is_referenced_from_an_engine_path():
+    reached = _reachable()
+    referenced = set()
+    for path in ([MODULES[m] for m in reached]
+                 + [r for r in ROOTS if isinstance(r, Path)]):
+        referenced |= _referenced_names(path)
+    unreferenced = set()
+    for mod in reached - NOT_YET_DELETED:
+        for node in ast.parse(MODULES[mod].read_text()).body:
+            if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef))
+                    and not node.name.startswith('_')
+                    and node.name not in referenced):
+                unreferenced.add(
+                    f'{mod.removeprefix(PKG + ".")}.{node.name}')
+    assert not unreferenced - CALLED_ONLY_FROM_CATALOG_OR_TESTS, (
+        'public names no engine path references: '
+        f'{sorted(unreferenced - CALLED_ONLY_FROM_CATALOG_OR_TESTS)}')
+    assert not CALLED_ONLY_FROM_CATALOG_OR_TESTS - unreferenced, (
+        'CALLED_ONLY_FROM_CATALOG_OR_TESTS names functions that are gone '
+        'or now referenced: '
+        f'{sorted(CALLED_ONLY_FROM_CATALOG_OR_TESTS - unreferenced)}')

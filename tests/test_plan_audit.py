@@ -206,33 +206,19 @@ def test_gopher_repetition_text_never_in_exchange(spark):
 
 def test_with_input_ids_single_arrow_stage(spark):
     """with_input_ids must stay ONE ArrowEvalPython (chaining a second
-    pandas UDF doubles Python workers per task), and pack_input_ids on
-    top must not introduce a SinglePartition stage (covered in
-    test_packing) nor a second Python stage."""
-    from pdf_ai_mapper_spark.operators.packing import pack_input_ids
+    pandas UDF doubles Python workers per task)."""
     from pdf_ai_mapper_spark.operators.textstats import with_input_ids
     docs = spark.read.parquet(f'{SF}/documents.parquet') \
         .select('doc_id', 'text')
     ids = with_input_ids(docs).select('doc_id', 'input_ids')
     assert _plan(ids).count('ArrowEvalPython') == 1
-    packed = pack_input_ids(ids, 'doc_id', 'input_ids', seq_len=512)
-    packed.collect()
-    plan = _plan(packed)
-    for dep in getattr(packed, '_persisted_deps', ()):
-        dep.unpersist()
-    # AQE prints Final + Initial TREES (CLAUDE.md r5 note) — count
-    # Python stages in the FINAL tree only; the encode UDF must run at
-    # most once there (the ranged table is persisted downstream of it)
-    final = plan.split('== Initial Plan ==')[0]
-    assert final.count('ArrowEvalPython') <= 1
-    assert 'SinglePartition' not in plan
 
 
 def test_release_contract_no_persist_leaks(spark):
-    """Every catalog query that persists internally (two-phase scans,
-    LSH signatures, shared array bases) must leave ZERO persisted RDDs
-    behind — a leak per call accumulates MEMORY_AND_DISK tables across
-    a bench loop or a long driver session."""
+    """Every catalog query that persists internally (LSH signatures,
+    shared array bases) must leave ZERO persisted RDDs behind — a leak
+    per call accumulates MEMORY_AND_DISK tables across a bench loop or
+    a long driver session."""
     # NOT covered: q_minhash_incremental — its operator
     # localCheckpoint()s, and checkpointed RDDs stay registered until
     # the JVM ContextCleaner GCs the unreferenced handles (bounded per call,
@@ -251,7 +237,6 @@ def test_release_contract_no_persist_leaks(spark):
     baseline = _ids()
     for name in ('q_substring_removal', 'q_substring_keep_first',
                  'q_gopher_repetition', 'q_gopher_dup_ngrams',
-                 'q_pack_sequences', 'q_encode_pack',
                  'q_ngram_jaccard_exact', 'q_minhash_near_dups',
                  'q_simhash_near_dups'):
         cat[name](spark, SF).collect()
