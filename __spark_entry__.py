@@ -10,10 +10,13 @@ compares each against DuckDB at sf0.01.
 from __future__ import annotations
 
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-SF0001 = '/root/testdata/sf0.001'
+# root of the sf test tables (TESTDATA.md); the tests derive theirs
+TESTDATA_ROOT = Path('/root/testdata')
+SF0001 = str(TESTDATA_ROOT / 'sf0.001')
 
 
 def entry(spark: SparkSession) -> DataFrame:

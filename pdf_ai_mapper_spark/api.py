@@ -62,10 +62,10 @@ class MapperAPI:
         return os.path.join(self.base_path, '_structured_categories')
 
     def _read_output(self) -> DataFrame | None:
-        return cp.read_or_none(cp.read_output, self.spark, self.base_path)
+        return cp.read_output_or_none(self.spark, self.base_path)
 
     def _read_sidecar(self, path: str) -> DataFrame | None:
-        return cp.read_or_none(self.spark.read.parquet, path)
+        return cp.read_or_none(self.spark.read.parquet, path, path=path)
 
     def _docs_with_categories(self) -> DataFrame | None:
         out = self._read_output()

@@ -61,10 +61,26 @@ def is_missing_path_error(e: Exception) -> bool:
             or 'Path does not exist' in s)
 
 
-def read_or_none(read, *args) -> DataFrame | None:
-    """``read(*args)``, or None when it fails only because the path does
-    not exist yet (a first run). Every other error re-raises."""
+def _absent(path: str) -> bool:
+    """True when ``path`` is on the local filesystem and does not
+    exist. A path with any other scheme is left to Spark."""
+    from urllib.parse import urlparse
+    url = urlparse(path)
+    if url.scheme not in ('', 'file'):
+        return False
+    return not os.path.exists(url.path if url.scheme else path)
+
+
+def read_or_none(read, *args, path: str) -> DataFrame | None:
+    """``read(*args)``, or None when the table does not exist yet (a
+    first run). When ``path``, the table's directory, is a local path
+    that does not exist, ``read`` is not called: Spark is never asked
+    (and logs no PATH_NOT_FOUND trace). For a non-local path, or one
+    removed after that check, the missing-path error maps to None.
+    Every other error re-raises."""
     from pyspark.errors import AnalysisException
+    if _absent(path):
+        return None
     try:
         return read(*args)
     except AnalysisException as e:
@@ -74,7 +90,8 @@ def read_or_none(read, *args) -> DataFrame | None:
 
 
 def committed_buckets(spark: SparkSession, output_path: str) -> set[int]:
-    cps = read_or_none(spark.read.parquet, checkpoint_path(output_path))
+    path = checkpoint_path(output_path)
+    cps = read_or_none(spark.read.parquet, path, path=path)
     if cps is None:  # first run: no checkpoint table yet
         return set()
     return {r['bucket'] for r in cps.select('bucket').distinct().collect()}
@@ -169,7 +186,7 @@ def reconcile_intents(spark: SparkSession, output_path: str) -> int:
         return 0
 
     def _run_ids(path: str) -> set[str]:
-        df = read_or_none(spark.read.parquet, path)
+        df = read_or_none(spark.read.parquet, path, path=path)
         if df is None:
             return set()
         return {r['run_id'] for r in df.select('run_id').distinct().collect()}
@@ -209,6 +226,16 @@ def recover_output(output_path: str) -> None:
 def read_output(spark: SparkSession, output_path: str) -> DataFrame:
     recover_output(output_path)
     return spark.read.parquet(data_path(output_path))
+
+
+def read_output_or_none(spark: SparkSession,
+                        output_path: str) -> DataFrame | None:
+    """``read_output``, or None while the table has no ``data`` yet. A
+    crashed swap is rolled back before the check, so a table it moved
+    aside is found, not taken for a first run."""
+    recover_output(output_path)
+    return read_or_none(read_output, spark, output_path,
+                        path=data_path(output_path))
 
 
 def swap_dirs(data: str, tmp: str, old: str) -> None:

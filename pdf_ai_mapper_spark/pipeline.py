@@ -26,20 +26,28 @@ fails the run before any counter is recorded.
 
 Incremental batches (``dedup_against_output``) first drop every row
 whose md5 is already committed: a left-anti join on the distinct
-committed content hashes. With ``bloom_prefilter`` those hashes are
-counted once and the count picks the join:
+committed content hashes. With ``bloom_prefilter`` a capped collect
+of those hashes picks the join, with cap = threshold // 64 B
+(threshold = spark.sql.autoBroadcastJoinThreshold):
 
-    n × 64 B ≤ spark.sql.autoBroadcastJoinThreshold
-        → explicit broadcast anti-join (the batch never shuffles;
-          a threshold of -1 never broadcasts)
-    Bloom bitmap for n keys ≤ its cap (operators/bloom.py)
+    cap ≥ 0 and a collect of at most cap + 1 distinct hashes returns
+    ≤ cap of them
+        → broadcast anti-join against that driver-local set (a
+          LocalRelation): the batch never shuffles, and the pre-pass
+          and the write scan no committed file
+    otherwise (the collect overflowed, or the threshold is -1 and no
+    collect is tried) the hashes are counted (n):
+      Bloom bitmap for n keys ≤ its cap (operators/bloom.py)
         → Bloom pre-split: definite-new rows bypass the join, only
           the maybe-committed slice takes it
-    otherwise
+      otherwise
         → the plain join
 
-Without it the plain join runs uncounted, planned from Spark's size
-estimate of the hash side. Every rung commits the same rows.
+Past cap distinct hashes (524,288 at the default 32 MiB threshold) a
+batch pays one distinct pass more than a count alone would: the
+overflowing collect. Without the flag the plain join runs uncounted,
+planned from Spark's size estimate of the hash side. Every rung
+commits the same rows.
 
 Cited reference behavior: anti-join dedup replaces
 ``document_storage.py:86-103``; batched commit replaces the
@@ -115,14 +123,18 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
     """Execute (or resume) an extraction run. Returns run stats.
 
     ``bloom_prefilter`` (incremental mode only): size the content
-    anti-join from one count of the distinct committed hashes, so the
-    batch shuffles as little as the hash set allows — a broadcast
-    anti-join when the set fits the session's broadcast threshold (no
-    shuffle); else a Bloom pre-split (operators/bloom.py) where only
-    the (dup_rate + fpp) slice of the batch shuffles; else, when the
-    bitmap would exceed its cap, the plain join. Every choice commits
-    the same rows as the plain anti-join, which runs uncounted when
-    the flag is off.
+    anti-join from the distinct committed hashes, so the batch
+    shuffles as little as the hash set allows. A capped collect
+    fetches at most cap + 1 of them (cap = the session's broadcast
+    threshold // 64 B); when it holds at most cap, the batch meets
+    that driver-local set in a broadcast anti-join (no shuffle), and
+    the committed table is scanned once per batch. Otherwise one
+    count sizes a Bloom pre-split (operators/bloom.py), where only the
+    (dup_rate + fpp) slice of the batch shuffles, or, when the bitmap
+    would exceed its cap, the plain join. Past cap hashes the
+    overflowing collect is one distinct pass more than the count
+    alone. Every choice commits the same rows as the plain anti-join,
+    which runs uncounted when the flag is off.
 
     A resume (the default mode) skips every committed bucket, whatever
     the input: ``resumed_skipped_rows`` counts the input rows that hash
@@ -156,7 +168,7 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
     skip = bucket.isin(sorted(done)) if done else F.lit(False)
     todo_df = input_df
 
-    committed = (cp.read_or_none(cp.read_output, spark, output_path)
+    committed = (cp.read_output_or_none(spark, output_path)
                  if dedup_against_output else None)
     fresh = None  # the bloom's definite-new side, when a bloom was built
     entries: list[dict] = []
@@ -170,15 +182,19 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
                       .distinct())
             todo_df = todo_df.withColumn('__h', F.md5(F.col('html')))
             if bloom_prefilter:
-                n = hashes.count()  # the one count both rungs size from
                 # autoBroadcastJoinThreshold in bytes; -1 never broadcasts
                 threshold = (spark._jsparkSession.sessionState().conf()
                              .autoBroadcastJoinThreshold())
-                if n * _HASH_ROW_BYTES <= threshold:
-                    # explicit: a planned sort-merge join would shuffle
-                    # the batch before AQE could switch it to broadcast
-                    hashes = F.broadcast(hashes)
+                cap = threshold // _HASH_ROW_BYTES  # -1 at a threshold of -1
+                local = hashes.limit(cap + 1).toArrow() if cap >= 0 else None
+                if local is not None and local.num_rows <= cap:
+                    # the whole set, on the driver: the pre-pass and the
+                    # write join a LocalRelation and rescan no committed
+                    # file. Explicit broadcast: a planned sort-merge join
+                    # would shuffle the batch before AQE could switch it
+                    hashes = F.broadcast(spark.createDataFrame(local))
                 else:
+                    n = hashes.count()  # over cap: size the Bloom
                     from .operators import bloom
                     try:
                         bitmap = bloom.build_bloom(hashes, '__h',

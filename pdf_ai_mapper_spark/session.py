@@ -7,7 +7,18 @@ Pinned for determinism + oracle comparability:
   is 500 MB; we cap records per batch instead),
 - AQE on (runtime coalescing + skew-join splitting at scale),
 - shuffle partitions sized to the local core count (on a real
-  cluster this is set per-job or left to AQE).
+  cluster this is set per-job or left to AQE),
+- table listing on the driver: ``parallelPartitionDiscovery.threshold``
+  is at least the layout's bucket count (``cfg.output_buckets``), so
+  reading the bucketed output lists its bucket directories in the
+  driver instead of starting a Spark job with one task per directory
+  (51-64 tasks per read of a 64-bucket table at Spark's default of
+  32). These sessions' tables sit on a local filesystem, where one
+  listing is a cheap syscall; the commit protocol relies on that
+  filesystem anyway (``os.rename``). The cluster entry point
+  (``scripts/run_pipeline.py``) keeps Spark's parallel listing: on an
+  object store every directory is one round trip, which a listing job
+  spreads over the executors.
 """
 
 from __future__ import annotations
@@ -38,6 +49,8 @@ def get_spark(app_name: str = "pdf-ai-mapper-spark",
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(max(32, cfg.output_buckets)))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -45,9 +58,10 @@ def get_spark(app_name: str = "pdf-ai-mapper-spark",
 
 
 def cluster_spark_conf() -> dict[str, str]:
-    """Extra conf for REAL multi-executor clusters (pass as
-    ``get_spark(extra_conf=cluster_spark_conf())`` in the
-    spark-submit entry point). Deliberately NOT applied in local mode:
+    """Extra conf for REAL multi-executor clusters, applied to the
+    session builder of the spark-submit entry point
+    (``scripts/run_pipeline.py``), not through ``get_spark``, which
+    forces a local master. Deliberately NOT applied in local mode:
     none of these helps a single JVM, and speculation would double-run
     tasks on the very host contention it is meant to dodge.
 

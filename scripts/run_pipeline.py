@@ -13,10 +13,12 @@ Options:
                         build + persist the sidecar to PATH and exit
     --incremental       append-mode batch with content dedup against
                         the committed output (exactly-once counters)
-    --bloom             size the incremental anti-join from a count of
-                        the committed hashes: broadcast when they fit
-                        spark.sql.autoBroadcastJoinThreshold, else a
-                        bloom pre-split, else the plain join
+    --bloom             size the incremental anti-join from the
+                        committed hashes: a capped collect broadcasts
+                        them when they fit
+                        spark.sql.autoBroadcastJoinThreshold; else a
+                        count sizes a bloom pre-split, else the plain
+                        join
     --preprocess-mode {deterministic,nltk}
                         NLTK-present stopwords/tokenizer (default:
                         deterministic byte-identity path)
@@ -24,6 +26,10 @@ Options:
 Reads the input, runs doctype sniff → extract → preprocess → md5 →
 dedup, writes bucketed parquet with per-bucket lineage, resuming from
 the last committed bucket set. Prints one JSON line of run stats.
+
+The session takes the cluster settings of ``session.cluster_spark_conf``
+(speculation, decommissioning, shuffle retries), leaves the master to
+spark-submit, and keeps Spark's parallel table listing.
 """
 
 from __future__ import annotations
@@ -34,6 +40,14 @@ import json
 import sys
 
 from pyspark.sql import SparkSession
+
+
+def session_builder() -> SparkSession.Builder:
+    """The entry point's session builder: the app name and
+    ``cluster_spark_conf``; no master, which spark-submit sets."""
+    from pdf_ai_mapper_spark.session import cluster_spark_conf
+    return (SparkSession.builder.appName('pdf-ai-mapper-extract')
+            .config(map=cluster_spark_conf()))
 
 
 def main(argv: list[str]) -> int:
@@ -52,7 +66,7 @@ def main(argv: list[str]) -> int:
     from pdf_ai_mapper_spark.config import DEFAULT_CONFIG
     from pdf_ai_mapper_spark.pipeline import run_extraction
 
-    spark = SparkSession.builder.appName('pdf-ai-mapper-extract').getOrCreate()
+    spark = session_builder().getOrCreate()
     spark.conf.set('spark.sql.session.timeZone', 'UTC')
 
     if args.build_warc_index:

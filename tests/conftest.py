@@ -17,6 +17,16 @@ def spark():
     s.stop()
 
 
+@pytest.fixture(scope='session')
+def testdata():
+    """``__spark_entry__.TESTDATA_ROOT``, the root of the sf test tables.
+    A test that reads them skips on a host without them."""
+    from __spark_entry__ import TESTDATA_ROOT
+    if not TESTDATA_ROOT.is_dir():
+        pytest.skip(f'test data not present at {TESTDATA_ROOT}')
+    return TESTDATA_ROOT
+
+
 @pytest.fixture()
 def no_broadcast(spark):
     """``spark.sql.autoBroadcastJoinThreshold`` = -1 for one test,

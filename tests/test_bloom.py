@@ -113,6 +113,36 @@ def test_over_cap_bloom_falls_back_to_plain_join(spark, tmp_path, spy_bloom,
     assert len(builds) == 1 and splits == []
 
 
+def test_over_cap_collect_falls_back_to_counted_bloom(spark, tmp_path,
+                                                     spy_bloom, monkeypatch):
+    """A broadcast threshold of 2 hashes (2 × 64 B) below the committed
+    distinct set: the capped collect returns its cap + 1 = 3 hashes and
+    overflows, so the hashes are counted and the Bloom is built once,
+    sized from that count. The committed rows equal the plain join's."""
+    from pdf_ai_mapper_spark.fixtures.webpages import web_pages_pandas
+    plain = _ingest_two_batches(spark, str(tmp_path / 'plain'), False)
+    frame = type(spark.range(1))  # the session's DataFrame class
+    collected, real = [], frame.toArrow
+
+    def spy_to_arrow(self):
+        table = real(self)
+        collected.append(table.num_rows)
+        return table
+    monkeypatch.setattr(frame, 'toArrow', spy_to_arrow)
+    builds = spy_bloom('build_bloom')
+    old = spark.conf.get('spark.sql.autoBroadcastJoinThreshold')
+    spark.conf.set('spark.sql.autoBroadcastJoinThreshold', str(2 * 64))
+    try:
+        overflow = _ingest_two_batches(spark, str(tmp_path / 'over'), True)
+    finally:
+        spark.conf.set('spark.sql.autoBroadcastJoinThreshold', old)
+    batch_a_hashes = (spark.createDataFrame(web_pages_pandas(120))
+                      .select(F.md5('html')).distinct().count())
+    assert collected == [3]
+    assert [kw.get('expected_keys') for kw in builds] == [batch_a_hashes]
+    assert overflow == plain
+
+
 def test_broadcast_handle_rides_and_releases(spark, keys_df):
     from pdf_ai_mapper_spark.operators.bloom import release_blooms
     bitmap = build_bloom(keys_df, 'k')

@@ -83,14 +83,16 @@ def test_simhash_exact_dup_distance_zero(spark):
     assert pairs.get((0, 3)) == 0   # identical text → identical simhash
 
 
-SF001_DOCS = '/root/testdata/sf0.01/documents.parquet'
+@pytest.fixture()
+def sf001_docs(testdata):
+    return str(testdata / 'sf0.01' / 'documents.parquet')
 
 
-def test_ngram_jaccard_df_cap_invariance_sf001(spark):
+def test_ngram_jaccard_df_cap_invariance_sf001(spark, sf001_docs):
     """The df-capped blocking (max_shingle_df=256) finds exactly the
     same above-threshold pairs as unbounded blocking on the sf0.01
     corpus — the cap only prunes join keys, never the arithmetic."""
-    d = spark.read.parquet(SF001_DOCS)
+    d = spark.read.parquet(sf001_docs)
     capped = {(r['id_a'], r['id_b']): r['jaccard'] for r in
               ngram_jaccard_pairs(d, 'doc_id', 'text', k=3, threshold=0.5,
                                   max_shingle_df=256).collect()}
@@ -100,12 +102,12 @@ def test_ngram_jaccard_df_cap_invariance_sf001(spark):
     assert capped == uncapped and len(capped) > 0
 
 
-def test_minhash_simhash_precision_vs_exact_jaccard_sf001(spark):
+def test_minhash_simhash_precision_vs_exact_jaccard_sf001(spark, sf001_docs):
     """Pair-set quality of the LSH sketches against the exact n-gram
     Jaccard ground truth (deterministic data + algorithms → pinned
     bounds). SimHash approximates token-multiset cosine, not shingle
     Jaccard, so its bounds are looser by design."""
-    d = spark.read.parquet(SF001_DOCS)
+    d = spark.read.parquet(sf001_docs)
     exact = {(r['id_a'], r['id_b']) for r in
              ngram_jaccard_pairs(d, 'doc_id', 'text', k=3,
                                  threshold=0.5).collect()}

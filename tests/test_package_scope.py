@@ -70,7 +70,6 @@ CALLED_ONLY_FROM_CATALOG_OR_TESTS = {
     'operators.extraction.with_html_meta',
     'operators.search.structured_category_filter',
     'pipeline.with_status',
-    'session.cluster_spark_conf',
     'sources.warc.warc_member_ranges',
 }
 

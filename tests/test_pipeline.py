@@ -101,15 +101,20 @@ def test_dedup_against_output_anti_join(spark, outdir):
     assert cp.read_output(spark, outdir).count() == 90
 
 
-def _last_write_plan(spark, path):
-    """(depth, node) lines of the final physical plan of the last SQL
-    execution that wrote ``path``, as the session's status store holds
-    it (the test sets ``spark.sql.ui.explainMode`` to simple)."""
+def _plans(spark):
+    """The physical plan of every SQL execution the session's status
+    store holds, oldest first (the tests set ``spark.sql.ui.explainMode``
+    to simple)."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    plans = [execs.apply(i).physicalPlanDescription()
-             for i in range(execs.size())]
-    plan = [p for p in plans
+    return [execs.apply(i).physicalPlanDescription()
+            for i in range(execs.size())]
+
+
+def _last_write_plan(spark, path):
+    """(depth, node) lines of the final physical plan of the last SQL
+    execution that wrote ``path``."""
+    plan = [p for p in _plans(spark)
             if f'InsertIntoHadoopFsRelationCommand file:{path},' in p][-1]
     final = plan.split('== Initial Plan ==')[0].splitlines()[3:]
     return [(len(line) - len(line.lstrip(' :+-')), line.lstrip(' :+-'))
@@ -129,7 +134,10 @@ def test_small_committed_set_broadcasts_the_anti_join(spark, outdir,
     """With ``bloom_prefilter`` and a committed hash set that fits the
     broadcast threshold, the batch meets the hashes in a broadcast
     anti-join: no Bloom is built and the batch never shuffles on the
-    join key. The committed rows equal the plain join's."""
+    join key. The hashes are collected once: of the batch's SQL
+    executions exactly one scans the committed table, and the join's
+    build side is that driver-local set. The committed rows equal the
+    plain join's."""
     import re
     from pdf_ai_mapper_spark.operators import bloom
 
@@ -144,9 +152,11 @@ def test_small_committed_set_broadcasts_the_anti_join(spark, outdir,
         spark.conf.set('spark.sql.ui.explainMode', 'simple')
         for out, prefilter in ((plain_dir, False), (outdir, True)):
             for n in (60, 90):  # rows 0-59 committed, then 30 new
+                before = len(_plans(spark))
                 run_extraction(spark, web_pages_df(spark, n, num_partitions=4),
                                out, CFG, dedup_against_output=True,
                                bloom_prefilter=prefilter)
+            batch = _plans(spark)[before:]  # the second batch's
             tables[prefilter] = sorted(
                 cp.read_output(spark, out).drop('run_id', 'processed_at')
                 .collect())
@@ -155,6 +165,10 @@ def test_small_committed_set_broadcasts_the_anti_join(spark, outdir,
         spark.conf.set('spark.sql.ui.explainMode', old)
         shutil.rmtree(plain_dir, ignore_errors=True)
     assert len(tables[True]) == 90 and tables[True] == tables[False]
+    scans = [p for p in batch
+             if f'InMemoryFileIndex(1 paths)[file:{cp.data_path(outdir)}]'
+             in p]
+    assert len(scans) == 1, '\n\n'.join(scans)
 
     joins = [i for i, (_, node) in enumerate(nodes) if re.search(
         r'BroadcastHashJoin \[__h#\d+\], \[__h#\d+\], LeftAnti, BuildRight',
@@ -169,10 +183,67 @@ def test_small_committed_set_broadcasts_the_anti_join(spark, outdir,
         assert not any('Exchange' in nodes[j][1]
                        for j in range(streamed, build))
         build_side.update(_subtree(nodes, build))
-    # the one exchange on __h is the committed-hash distinct, under
-    # the broadcast
-    assert all(j in build_side for j, (_, node) in enumerate(nodes)
-               if 'hashpartitioning(__h' in node)
+    # the build side is the collected set (a reused exchange of it at
+    # the second join), not a scan of the table
+    build_nodes = [nodes[j][1] for j in sorted(build_side)]
+    assert any(node.startswith('LocalTableScan [__h#')
+               for node in build_nodes)
+    assert not any('FileScan' in node for node in build_nodes), build_nodes
+    assert not any('hashpartitioning(__h' in node for _, node in nodes)
+
+
+def test_bucketed_table_is_listed_on_the_driver(spark, outdir):
+    """Reading a 64-bucket table lists its bucket directories in the
+    driver: the read starts no job with more than one task (Spark's
+    parallel listing would start one task per directory), and counting
+    it starts no job with as many tasks as there are buckets."""
+    (spark.range(640).withColumn('bucket', (F.col('id') % 64).cast('int'))
+     .coalesce(1).write.partitionBy('bucket').parquet(cp.data_path(outdir)))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def tasks_per_job(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty('spark.jobGroup.id', None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return [sum(tracker.getStageInfo(s).numTasks
+                    for s in tracker.getJobInfo(j).stageIds)
+                for j in tracker.getJobIdsForGroup(group)]
+
+    assert max(tasks_per_job('listing-read',
+                             lambda: cp.read_output(spark, outdir))) == 1
+    assert max(tasks_per_job(
+        'listing-count',
+        lambda: cp.read_output(spark, outdir).count())) < 64
+
+
+def test_missing_table_reads_none_without_calling_spark(spark, outdir,
+                                                      monkeypatch):
+    """A local table directory that does not exist reads as None before
+    the reader is called; a table that exists but is corrupt still
+    raises."""
+    import os
+
+    def must_not_read(*a):
+        raise AssertionError('reader called for a missing directory')
+
+    missing = os.path.join(outdir, 'missing')
+    assert cp.read_or_none(must_not_read, missing, path=missing) is None
+    assert cp.read_or_none(must_not_read, 'file:' + missing,
+                           path='file:' + missing) is None
+    with monkeypatch.context() as m:
+        m.setattr(cp, 'read_output', must_not_read)
+        assert cp.read_output_or_none(spark, missing) is None
+    assert cp.committed_buckets(spark, missing) == set()
+
+    os.makedirs(missing)
+    with open(os.path.join(missing, 'part-0.parquet'), 'wb') as f:
+        f.write(b'this is not parquet')
+    with pytest.raises(Exception, match='[Pp]arquet|Job aborted'):
+        cp.read_or_none(spark.read.parquet, missing, path=missing).count()
 
 
 def test_each_checkpoint_append_writes_one_file(spark, outdir, monkeypatch):
@@ -427,8 +498,8 @@ def test_write_row_drift_raises_and_recovers(spark, outdir, monkeypatch,
         run_extraction(spark, pages, outdir, CFG, run_id='driftrun01',
                        dedup_against_output=append)
     monkeypatch.undo()
-    assert cp.read_or_none(spark.read.parquet,
-                           cp.checkpoint_path(outdir)) is None
+    assert cp.read_or_none(spark.read.parquet, cp.checkpoint_path(outdir),
+                           path=cp.checkpoint_path(outdir)) is None
     assert [i['run_id'] for i in cp.pending_intents(outdir)] == (
         ['driftrun01'] if append else [])
 

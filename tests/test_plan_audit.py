@@ -9,20 +9,24 @@ formatting (pinned in this sandbox).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-SF = '/root/testdata/sf0.001'
+
+@pytest.fixture()
+def sf(testdata):
+    return str(testdata / 'sf0.001')
 
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_decontamination_train_side_never_shuffles(spark):
+def test_decontamination_train_side_never_shuffles(spark, sf):
     """The benchmark shingle set must broadcast; the training corpus
     must reach the semi-join without an exchange on its shingles."""
     import __spark_entry__ as e
-    p = _plan(e.queries()['q_decontamination'](spark, SF))
+    p = _plan(e.queries()['q_decontamination'](spark, sf))
     assert 'BroadcastHashJoin' in p and 'LeftSemi' in p
     assert 'SortMergeJoin' not in p
 
@@ -51,10 +55,10 @@ def test_extraction_single_arrow_eval_python(spark):
     assert plan.count('ArrowEvalPython') == 1
 
 
-def test_scan_prunes_columns_for_narrow_query(spark):
+def test_scan_prunes_columns_for_narrow_query(spark, sf):
     """Column pruning reaches the parquet scan: a two-column projection
     must not read the text payload."""
-    df = (spark.read.parquet(f'{SF}/documents.parquet')
+    df = (spark.read.parquet(f'{sf}/documents.parquet')
           .groupBy('lang').agg(F.count('*').alias('n')))
     qe = df._jdf.queryExecution().toString()
     assert 'ReadSchema' in qe
@@ -62,8 +66,8 @@ def test_scan_prunes_columns_for_narrow_query(spark):
     assert 'text' not in read_schema
 
 
-def test_filter_pushdown_reaches_scan(spark):
-    df = (spark.read.parquet(f'{SF}/events.parquet')
+def test_filter_pushdown_reaches_scan(spark, sf):
+    df = (spark.read.parquet(f'{sf}/events.parquet')
           .filter(F.col('user_id') == 7).select('event_id'))
     qe = df._jdf.queryExecution().toString()
     assert 'PushedFilters: [' in qe
@@ -129,7 +133,7 @@ def _final_ids(formatted: str) -> set[str]:
     return ids
 
 
-def test_substring_removal_text_never_in_exchange(spark):
+def test_substring_removal_text_never_in_exchange(spark, sf):
     """remove_duplicated_substrings (round 6): window strings hash
     in-row — no Exchange may carry the text column or any window
     string; shuffles are (id, pos/start, hash) longs plus the rebuilt
@@ -142,7 +146,7 @@ def test_substring_removal_text_never_in_exchange(spark):
     exchange."""
     from pdf_ai_mapper_spark.operators.dedup import (
         remove_duplicated_substrings)
-    docs = spark.read.parquet(f'{SF}/documents.parquet') \
+    docs = spark.read.parquet(f'{sf}/documents.parquet') \
         .select('doc_id', 'text')
     import re
 
@@ -173,13 +177,13 @@ def test_substring_removal_text_never_in_exchange(spark):
     assert n_exchanges >= 2   # the audit actually saw the shuffles
 
 
-def test_gopher_repetition_text_never_in_exchange(spark):
+def test_gopher_repetition_text_never_in_exchange(spark, sf):
     """gopher_repetition (round 6): one exploded union of narrow
     (id, kind, key) rows — the document text column itself must not
     ride any Exchange (keys are lines/paragraphs/n-grams, bounded per
     row; the full text never moves)."""
     from pdf_ai_mapper_spark.operators.textstats import gopher_repetition
-    docs = spark.read.parquet(f'{SF}/documents.parquet') \
+    docs = spark.read.parquet(f'{sf}/documents.parquet') \
         .select('doc_id', 'text')
     import re
 
@@ -204,17 +208,17 @@ def test_gopher_repetition_text_never_in_exchange(spark):
     assert n_exchanges >= 1
 
 
-def test_with_input_ids_single_arrow_stage(spark):
+def test_with_input_ids_single_arrow_stage(spark, sf):
     """with_input_ids must stay ONE ArrowEvalPython (chaining a second
     pandas UDF doubles Python workers per task)."""
     from pdf_ai_mapper_spark.operators.textstats import with_input_ids
-    docs = spark.read.parquet(f'{SF}/documents.parquet') \
+    docs = spark.read.parquet(f'{sf}/documents.parquet') \
         .select('doc_id', 'text')
     ids = with_input_ids(docs).select('doc_id', 'input_ids')
     assert _plan(ids).count('ArrowEvalPython') == 1
 
 
-def test_release_contract_no_persist_leaks(spark):
+def test_release_contract_no_persist_leaks(spark, sf):
     """Every catalog query that persists internally (LSH signatures,
     shared array bases) must leave ZERO persisted RDDs behind — a leak
     per call accumulates MEMORY_AND_DISK tables across a bench loop or
@@ -239,7 +243,7 @@ def test_release_contract_no_persist_leaks(spark):
                  'q_gopher_repetition', 'q_gopher_dup_ngrams',
                  'q_ngram_jaccard_exact', 'q_minhash_near_dups',
                  'q_simhash_near_dups'):
-        cat[name](spark, SF).collect()
+        cat[name](spark, sf).collect()
         new = _ids() - baseline
         assert not new, (name, new)
 
@@ -257,3 +261,22 @@ def test_cluster_spark_conf_contract():
     assert all(isinstance(v, str) for v in conf.values())  # builder-safe
     src = inspect.getsource(get_spark)
     assert 'speculation' not in src
+
+
+def test_run_pipeline_builder_carries_cluster_conf():
+    """The spark-submit entry's session builder carries every
+    ``cluster_spark_conf`` item, leaves the master to spark-submit, and
+    keeps Spark's parallel table listing (``get_spark`` raises the
+    listing threshold for local tables only). Building it starts no
+    JVM."""
+    import importlib.util
+    from pathlib import Path
+    from pdf_ai_mapper_spark.session import cluster_spark_conf
+    path = Path(__file__).resolve().parents[1] / 'scripts' / 'run_pipeline.py'
+    spec = importlib.util.spec_from_file_location('run_pipeline', path)
+    run_pipeline = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(run_pipeline)
+    options = run_pipeline.session_builder()._options
+    assert cluster_spark_conf().items() <= options.items()
+    assert 'spark.master' not in options
+    assert not any('parallelPartitionDiscovery' in k for k in options)

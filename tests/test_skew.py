@@ -22,11 +22,11 @@ class TestEnsureMinParallelism:
         out = ensure_min_parallelism(df, min_parts=4)
         assert out is df            # identical plan object — no shuffle added
 
-    def test_single_row_group_parquet_scan_fires(self, spark):
+    def test_single_row_group_parquet_scan_fires(self, spark, testdata):
         # the motivating case: sf parquet files are ONE row group, so
         # the scan is one task regardless of maxPartitionBytes
         from pdf_ai_mapper_spark.operators.skew import ensure_min_parallelism
-        docs = spark.read.parquet('/root/testdata/sf0.001/documents.parquet')
+        docs = spark.read.parquet(str(testdata / 'sf0.001/documents.parquet'))
         assert docs.rdd.getNumPartitions() == 1
         out = ensure_min_parallelism(docs)
         assert (out.rdd.getNumPartitions()
