@@ -101,20 +101,6 @@ def transform(input_df: DataFrame, run_id: str,
     return out.select(*OUTPUT_COLUMNS)
 
 
-def with_status(df: DataFrame) -> DataFrame:
-    """J4 status projection (reference app/api/status.py:36-42): derive
-    per-document status without any join — the output table is
-    denormalized. 'error' when extraction failed, 'processing' when
-    categories are absent/empty, else 'processed'."""
-    has_cats = ('categories' in df.columns)
-    cats_ok = (F.size('categories') > 0) if has_cats else F.lit(False)
-    return df.withColumn(
-        'status',
-        F.when(F.col('is_error'), F.lit('error'))
-        .when(~cats_ok, F.lit('processing'))
-        .otherwise(F.lit('processed')))
-
-
 def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
                    cfg: EngineConfig = DEFAULT_CONFIG,
                    run_id: str | None = None,

@@ -23,8 +23,7 @@ from pyspark.sql import functions as F
 
 from .kernels.stopwords import TOPIC_KEYWORDS
 from .operators import textstats
-from .operators.dedup import (dedup_exact, minhash_lsh_pairs,
-                              ngram_jaccard_pairs, simhash_near_pairs)
+from .operators.dedup import dedup_exact, minhash_lsh_pairs
 
 # language-ID marker table (operators/textstats.py) — SQL mirror built
 # from the same pinned dict
@@ -358,22 +357,6 @@ def q_f5_structured_semi_join(spark, sf_dir):
             .orderBy('lang', 'source'))
 
 
-def q_j4_status_projection(spark, sf_dir):
-    """J4 status projection (pipeline.with_status; reference
-    app/api/status.py:36-42): error/processing/processed counts over
-    deterministically derived is_error/categories flags."""
-    from .pipeline import with_status
-    d = (_t(spark, sf_dir, 'documents')
-         .withColumn('is_error', F.col('doc_id') % 11 == 0)
-         .withColumn('categories',
-                     F.when(F.col('doc_id') % 3 == 0,
-                            F.array().cast('array<string>'))
-                     .otherwise(F.array(F.lit('Topic: sample')))))
-    return (with_status(d).groupBy('status')
-            .agg(F.count('*').cast('long').alias('n'))
-            .orderBy('status'))
-
-
 def q_d3_destructive_dedup(spark, sf_dir):
     """D3 destructive dedup (operators/dedup.dedup_exact; reference
     document_storage.py:105-138): per-lang count of REMOVED rows —
@@ -481,25 +464,6 @@ def q_doc_chunking(spark, sf_dir):
             .orderBy('doc_id'))
 
 
-def q_ngram_jaccard_exact(spark, sf_dir):
-    """Exact n-gram Jaccard near-dup pairs (k=3, threshold 0.5,
-    blocking through shingles with document frequency ≤ 256) — the
-    hash-green anchor for the near-dup family. The DuckDB oracle
-    replicates both the blocking contract and the exact arithmetic, so
-    this is a full value-level check of operators/dedup.py:
-    ngram_jaccard_pairs."""
-    from .operators.dedup import release as _release
-    d = _t(spark, sf_dir, 'documents')
-    res = ngram_jaccard_pairs(d, 'doc_id', 'text', k=3, threshold=0.5,
-                              max_shingle_df=256)
-    out = (res.select('id_a', 'id_b',
-                      F.round('jaccard', 6).alias('jaccard'))
-           .orderBy('id_a', 'id_b'))   # select/orderBy drop deps
-    rows = out.collect()
-    _release(res)
-    return spark.createDataFrame(rows, out.schema)
-
-
 def q_tfidf_top_terms(spark, sf_dir):
     """Exact-term TF-IDF (operators/textstats.tfidf_terms — the
     SQL-checkable sibling of the HashingTF+IDF featurizer the north
@@ -579,17 +543,6 @@ def q_minhash_near_dups(spark, sf_dir):
     return spark.createDataFrame(rows, out.schema)
 
 
-def q_simhash_near_dups(spark, sf_dir):
-    """SimHash near-dup pairs over documents (rows-only check)."""
-    from .operators.dedup import release as _release
-    d = _t(spark, sf_dir, 'documents')
-    res = simhash_near_pairs(d, 'doc_id', 'text', max_hamming=3)
-    out = res.orderBy('id_a', 'id_b')   # orderBy drops _persisted_deps
-    rows = out.collect()
-    _release(res)
-    return spark.createDataFrame(rows, out.schema)
-
-
 def q_lda_categories(spark, sf_dir):
     """A3-A6 composed, VALUE-ORACLED via the assignment-arity histogram
     (VERDICT r3 #3): CountVectorizer(pinned-order vocab) + LDA(k=8,
@@ -613,75 +566,14 @@ def q_lda_categories(spark, sf_dir):
             .orderBy('arity'))
 
 
-def q_line_dedup(spark, sf_dir):
-    """Cross-document exact line dedup (dedup.line_dedup — the CCNet /
-    RefinedWeb boilerplate-removal step, round 4): documents' text
-    re-laid-out as 4-token lines (construction shared verbatim with
-    the SQL oracle), every line occurring in >= 2 distinct docs
-    removed, order-preserving rebuild. FULL value check including the
-    rebuilt cleaned_text (~11% of lines are cross-doc dups at
-    sf0.01)."""
-    from .operators.dedup import line_dedup
-    k = 4
-    toks = F.split(F.col('text'), ' ')
-    n = F.size(toks)
-    linearr = F.transform(
-        F.sequence(F.lit(0), F.ceil(n / F.lit(k)).cast('int') - 1),
-        lambda i: F.array_join(
-            F.slice(toks, i * F.lit(k) + F.lit(1), F.lit(k)), ' '))
-    d4 = (_t(spark, sf_dir, 'documents')
-          .select('doc_id', F.array_join(linearr, '\n').alias('text')))
-    return (line_dedup(d4, 'doc_id', 'text', min_df=2)
-            .orderBy('doc_id'))
-
-
-def q_line_dedup_within(spark, sf_dir):
-    """Within-document line dedup (dedup.line_dedup_within_doc, round
-    7 — zero-shuffle in-row HOF form): each doc becomes a 6-line page
-    with its own text twice, a nav-chrome banner three times, and an
-    empty line (construction shared verbatim with the oracle) — keep
-    first occurrence of each non-empty line, keep empties. FULL value
-    check per doc including the rebuilt cleaned_text; the oracle runs
-    the EXPLODED window formulation, so parity doubles as the
-    in-row ≡ exploded equivalence proof."""
-    from .operators.dedup import line_dedup_within_doc
-    nl = F.lit('\n')
-    page = F.concat(F.col('text'), nl, F.lit('HOME | ABOUT | CONTACT'),
-                    nl, F.col('text'), nl, F.lit('HOME | ABOUT | CONTACT'),
-                    nl, F.lit(''), nl, F.lit('HOME | ABOUT | CONTACT'))
-    d = (_t(spark, sf_dir, 'documents')
-         .select('doc_id', page.alias('text')))
-    return (line_dedup_within_doc(d, 'doc_id', 'text')
-            .orderBy('doc_id'))
-
-
-def q_substring_duplication(spark, sf_dir):
-    """Exact substring-level duplication measure
-    (dedup.substring_duplication_stats, round 4 — the Lee et al.
-    suffix-array dedup signal at fixed k=8 granularity): per-doc
-    duplicated-window stats, aggregated per source. The Spark side
-    hashes windows before the shuffle (xxhash64); the oracle counts
-    the window STRINGS — equal absent 64-bit collisions (birthday
-    bound ~1e-9 at this scale)."""
-    from .operators.dedup import substring_duplication_stats
-    d = _t(spark, sf_dir, 'documents')
-    stats = substring_duplication_stats(d, 'doc_id', 'text', k=8)
-    return (stats.join(d.select('doc_id', 'source'), on='doc_id')
-            .groupBy('source')
-            .agg(F.sum('n_windows').cast('long').alias('windows'),
-                 F.sum('n_dup_windows').cast('long').alias('dup_windows'),
-                 F.round(F.avg('dup_frac'), 6).alias('avg_dup_frac'))
-            .orderBy('source'))
-
-
 def q_gopher_repetition(spark, sf_dir):
     """The complete Gopher repetition family
     (textstats.gopher_repetition, round 6 — VERDICT r5 #5): documents
     re-laid-out as 4-token lines grouped into 2-line paragraphs
-    (construction shared verbatim with the SQL oracle, the q_line_dedup
-    trick), then per doc: duplicate-line/paragraph fractions, their
-    character fractions, and top-2/3/4-gram character fractions — all
-    seven columns re-derived in SQL from scratch, rounded to 6dp."""
+    (construction shared verbatim with the SQL oracle), then per doc:
+    duplicate-line/paragraph fractions, their character fractions, and
+    top-2/3/4-gram character fractions — all seven columns re-derived
+    in SQL from scratch, rounded to 6dp."""
     from .operators.textstats import gopher_repetition
     k = 4
     toks = F.split(F.col('text'), ' ')
@@ -724,24 +616,6 @@ def q_learn_bpe(spark, sf_dir):
         rows, 'merge_rank int, lhs string, rhs string').orderBy('merge_rank')
 
 
-def q_substring_keep_first(spark, sf_dir):
-    """Substring-span removal with the Lee et al. PAPER policy
-    (keep='first'): the globally first occurrence of each duplicated
-    8-token window — min (doc_id, position) — survives; later copies
-    are dropped. Same full byte check as q_substring_removal; the
-    oracle replays the keep rule as a row_number over (doc_id, start)
-    per window value."""
-    from .operators.dedup import release as _release
-    from .operators.dedup import remove_duplicated_substrings
-    d = _t(spark, sf_dir, 'documents')
-    res = remove_duplicated_substrings(d, 'doc_id', 'text', k=8,
-                                       min_df=2, keep='first')
-    out = res.orderBy('doc_id')     # orderBy drops _persisted_deps
-    rows = out.collect()
-    _release(res)
-    return spark.createDataFrame(rows, out.schema)
-
-
 def q_gopher_dup_ngrams(spark, sf_dir):
     """Within-doc duplicated-n-gram character coverage
     (textstats.gopher_dup_ngrams, round 6 — the dup-5..10-gram half of
@@ -758,26 +632,6 @@ def q_gopher_dup_ngrams(spark, sf_dir):
                F.concat_ws(' ', F.col('text'), F.col('text')))
         .otherwise(F.col('text')).alias('text'))
     res = gopher_dup_ngrams(d)
-    out = res.orderBy('doc_id')     # orderBy drops _persisted_deps
-    rows = out.collect()
-    _release(res)
-    return spark.createDataFrame(rows, out.schema)
-
-
-def q_substring_removal(spark, sf_dir):
-    """Exact substring-span REMOVAL (dedup.remove_duplicated_substrings,
-    round 6 — the Lee et al. dedup ACT, not just the signal): every
-    token covered by an 8-token window occurring in >= 2 distinct docs
-    is dropped from all of them, texts rebuilt order-preserving. FULL
-    value check including the rebuilt cleaned_text bytes (the
-    q_line_dedup contract at token/window granularity); the Spark side
-    hashes windows (xxhash64) before the shuffle while the oracle
-    compares window STRINGS — equal absent 64-bit collisions."""
-    from .operators.dedup import release as _release
-    from .operators.dedup import remove_duplicated_substrings
-    d = _t(spark, sf_dir, 'documents')
-    res = remove_duplicated_substrings(d, 'doc_id', 'text', k=8,
-                                       min_df=2)
     out = res.orderBy('doc_id')     # orderBy drops _persisted_deps
     rows = out.collect()
     _release(res)
@@ -815,89 +669,6 @@ def q_search_pipeline(spark, sf_dir):
     return search(d, _SEARCH_QUERY, k=10)
 
 
-def q_neardup_pr(spark, sf_dir):
-    """Precision/recall of the approximate near-dup operators (MinHash
-    LSH, SimHash) against the EXACT n-gram Jaccard pair sets (rows-only
-    — the approximations are not SQL; the exact anchor is the oracled
-    q_ngram_jaccard_exact). Precision vs the J≥0.5 set, recall vs the
-    J≥0.8 set — the same contract tests/test_dedup_similarity.py pins
-    (SimHash approximates token-multiset cosine, not shingle Jaccard,
-    so its numbers are looser by design). Deterministic: fixed hash
-    params, no RNG."""
-    from .operators.dedup import release as _release
-
-    def pairs(q):
-        got = {(r['id_a'], r['id_b']) for r in q.collect()}
-        _release(q)
-        return got
-
-    d = _t(spark, sf_dir, 'documents')
-    exact = pairs(ngram_jaccard_pairs(d, 'doc_id', 'text', k=3, threshold=0.5))
-    exact_hi = pairs(ngram_jaccard_pairs(d, 'doc_id', 'text', k=3, threshold=0.8))
-    mh = pairs(minhash_lsh_pairs(d, 'doc_id', 'text', num_hashes=64,
-                                 bands=16, jaccard_threshold=0.8))
-    sh = pairs(simhash_near_pairs(d, 'doc_id', 'text', max_hamming=3))
-    rows = []
-    for name, got in (('minhash_lsh', mh), ('simhash', sh)):
-        prec = len(got & exact) / len(got) if got else 1.0
-        rec = len(got & exact_hi) / len(exact_hi) if exact_hi else 1.0
-        rows.append((name, len(got), round(prec, 6), round(rec, 6)))
-    return spark.createDataFrame(
-        rows, 'operator string, n_pairs long, precision double, recall double')
-
-
-def q_para_neardup_planted(spark, sf_dir):
-    """Paragraph-level fuzzy dedup with a FULL value oracle (round 6 —
-    VERDICT r5 #6: the q_semantic_dedup construction trick at
-    paragraph granularity). Corpus built deterministically from
-    documents' ids: every doc gets three 8-token paragraphs whose
-    tokens are doc-namespaced (cross-paragraph Jaccard EXACTLY 0),
-    except docs with doc_id % 50 < 3, whose first paragraph is a
-    group-namespaced sentinel shared verbatim within its group of
-    three (g = doc_id DIV 50; all eight tokens carry g, so
-    cross-GROUP Jaccard is also exactly 0). Identical paragraphs have
-    identical shingle sets → identical minhash signatures in every
-    band → guaranteed candidates with est-Jaccard exactly 1.0; every
-    other pair shares zero shingles, so nothing else can verify at
-    0.8 (margin 1.0 vs ~0). The LSH result is therefore EXACTLY the
-    planted all-pairs set, which the oracle re-derives from documents
-    by arithmetic alone (per-group pair counts, id sums, unit
-    jaccards, all cross-doc)."""
-    from .operators.dedup import paragraph_neardup_pairs
-    from .operators.dedup import release as _release
-    i = F.col('doc_id')
-    g = F.expr('doc_id DIV 50')
-
-    def filler(prefix):
-        return F.concat_ws(' ', *[
-            F.concat(F.lit(prefix), i.cast('string'), F.lit(f't{j}'))
-            for j in range(8)])
-
-    sentinel = F.concat_ws(' ', *[
-        F.concat(F.lit('g'), g.cast('string'), F.lit(f'd{j}'))
-        for j in range(8)])
-    para0 = F.when(i % 50 < 3, sentinel).otherwise(filler('d'))
-    corpus = (_t(spark, sf_dir, 'documents')
-              .select('doc_id',
-                      F.concat_ws('\n\n', para0, filler('x'),
-                                  filler('y')).alias('text')))
-    pairs = paragraph_neardup_pairs(corpus, jaccard_threshold=0.8)
-    rows = pairs.collect()
-    _release(pairs)
-    back = spark.createDataFrame(rows, pairs.schema)
-    return (back.withColumn('g', F.expr('doc_a DIV 50'))
-            .groupBy('g')
-            .agg(F.count('*').cast('long').alias('n_pairs'),
-                 F.sum('doc_a').cast('long').alias('id_sum_a'),
-                 F.sum('doc_b').cast('long').alias('id_sum_b'),
-                 F.sum('para_a').cast('long').alias('para_sum'),
-                 F.round(F.min('jaccard_est'), 6).alias('min_j'),
-                 F.round(F.max('jaccard_est'), 6).alias('max_j'),
-                 F.sum(F.col('cross_doc').cast('long')).cast('long')
-                 .alias('n_cross'))
-            .orderBy('g'))
-
-
 def _planted_corpus(spark, sf_dir, n_tokens: int = 12):
     """Shared planted construction (round 7 — VERDICT r6 #3): every
     doc is ``n_tokens`` doc-namespaced tokens (cross-doc token/shingle
@@ -906,8 +677,8 @@ def _planted_corpus(spark, sf_dir, n_tokens: int = 12):
     their group of three (g = doc_id DIV 50; every token carries g, so
     cross-group overlap is also exactly zero). Identical texts make
     near-dup discovery provable; disjoint texts make false pairs
-    impossible up to hash collisions (2^-31 per minhash slot and ~2^-47
-    per simhash pair — zero on the deterministic fixtures)."""
+    impossible up to hash collisions (2^-31 per minhash slot — zero on
+    the deterministic fixtures)."""
     i = F.col('doc_id')
     g = F.expr('doc_id DIV 50')
     filler = F.concat_ws(' ', *[
@@ -924,10 +695,10 @@ def _planted_corpus(spark, sf_dir, n_tokens: int = 12):
 
 def q_minhash_planted(spark, sf_dir):
     """Banded MinHash LSH with a FULL value oracle (round 7 — VERDICT
-    r6 #3: the construction that oracled q_semantic_dedup and
-    q_para_neardup_planted, applied to the MinHash operator itself;
-    q_minhash_near_dups stays as the natural-corpus rows check and
-    q_neardup_pr as the P/R pin). Identical sentinel texts have
+    r6 #3: the planted construction applied to the MinHash operator
+    itself; q_minhash_near_dups stays as the natural-corpus rows
+    check, and q_cluster_keep_best runs the same pairs through the
+    rest of the chain). Identical sentinel texts have
     identical shingle sets → identical signatures in EVERY band →
     guaranteed candidates with est-Jaccard exactly 1.0; any other pair
     has disjoint shingles, so passing 0.8 would need ≥52 of 64 slots
@@ -950,85 +721,6 @@ def q_minhash_planted(spark, sf_dir):
                  F.round(F.min('jaccard_est'), 6).alias('min_j'),
                  F.round(F.max('jaccard_est'), 6).alias('max_j'))
             .orderBy('g'))
-
-
-def q_simhash_planted(spark, sf_dir):
-    """SimHash near-dup with a FULL value oracle (round 7 — VERDICT r6
-    #3, the q_minhash_planted construction through the SimHash path).
-    Identical sentinel texts → identical 64-bit simhashes → all four
-    16-bit chunks match (guaranteed candidates) at Hamming distance
-    exactly 0; disjoint-token docs land ~32 bits apart (P[≤3] ≈ 2^-47
-    per pair — zero on the deterministic fixtures). Output is exactly
-    the planted all-pairs set with max_hamming 0."""
-    from .operators.dedup import release as _release
-    from .operators.dedup import simhash_near_pairs
-    pairs = simhash_near_pairs(_planted_corpus(spark, sf_dir),
-                               'doc_id', 'text', max_hamming=3)
-    rows = pairs.collect()
-    _release(pairs)
-    back = spark.createDataFrame(rows, pairs.schema)
-    return (back.withColumn('g', F.expr('id_a DIV 50'))
-            .groupBy('g')
-            .agg(F.count('*').cast('long').alias('n_pairs'),
-                 F.sum('id_a').cast('long').alias('id_sum_a'),
-                 F.sum('id_b').cast('long').alias('id_sum_b'),
-                 F.max('hamming').cast('long').alias('max_h'))
-            .orderBy('g'))
-
-
-def q_para_neardup(spark, sf_dir):
-    """Paragraph-level fuzzy dedup (dedup.paragraph_neardup_pairs /
-    paragraph_neardup_rollup, round 5 — RefinedWeb runs line-EXACT and
-    paragraph-FUZZY dedup; this is the fuzzy half, reusing the banded
-    MinHash machinery over composite (doc, para) keys). Documents are
-    re-laid-out as 12-token paragraphs; rows-only (LSH is not SQL —
-    the exact anchor is paragraph n-gram Jaccard, whose doc-level
-    form is the oracled q_ngram_jaccard_exact). Reports P/R against
-    the exact J>=0.5 / J>=0.8 paragraph pair sets plus the roll-up
-    totals."""
-    from .operators.dedup import (explode_paragraphs, ngram_jaccard_pairs,
-                                  paragraph_neardup_pairs,
-                                  paragraph_neardup_rollup)
-    from .operators.dedup import release as _release
-    k = 12
-    toks = F.split(F.col('text'), ' ')
-    n = F.size(toks)
-    linearr = F.transform(
-        F.sequence(F.lit(0), F.ceil(n / F.lit(k)).cast('int') - 1),
-        lambda i: F.array_join(
-            F.slice(toks, i * F.lit(k) + F.lit(1), F.lit(k)), ' '))
-    d = (_t(spark, sf_dir, 'documents')
-         .select('doc_id', F.array_join(linearr, '\n\n').alias('text')))
-
-    def pset(q):
-        s = {(r['id_a'], r['id_b']) for r in q.collect()}
-        _release(q)
-        return s
-
-    ptext = explode_paragraphs(d).withColumnRenamed('para', 'text')
-    exact_lo = pset(ngram_jaccard_pairs(ptext, 'pid', 'text',
-                                        k=3, threshold=0.5))
-    exact_hi = pset(ngram_jaccard_pairs(ptext, 'pid', 'text',
-                                        k=3, threshold=0.8))
-    pairs_df = paragraph_neardup_pairs(d, jaccard_threshold=0.8)
-    rows = pairs_df.collect()
-    _release(pairs_df)
-    shift = 1 << 20
-    got = {(r['doc_a'] * shift + r['para_a'],
-            r['doc_b'] * shift + r['para_b']) for r in rows}
-    n_cross = sum(1 for r in rows if r['cross_doc'])
-    prec = len(got & exact_lo) / len(got) if got else 1.0
-    rec = len(got & exact_hi) / len(exact_hi) if exact_hi else 1.0
-    roll = paragraph_neardup_rollup(d, jaccard_threshold=0.8)
-    sums = roll.agg(
-        F.sum((F.col('n_dup_paras') > 0).cast('long')).alias('docs_with_dups'),
-        F.sum('n_dup_paras').alias('dup_paras')).collect()[0]
-    _release(roll)
-    return spark.createDataFrame(
-        [(len(got), n_cross, round(prec, 6), round(rec, 6),
-          int(sums['docs_with_dups'] or 0), int(sums['dup_paras'] or 0))],
-        'n_pairs long, n_cross_doc long, precision double, recall double, '
-        'docs_with_dups long, dup_paras long')
 
 
 def q_unigram_logprob(spark, sf_dir):
@@ -1200,46 +892,27 @@ def q_decontamination(spark, sf_dir):
             .orderBy('doc_id'))
 
 
-def q_neardup_clusters(spark, sf_dir):
-    """Transitive closure of the near-dup graph: the oracled exact
-    n-gram-Jaccard pairs (J≥0.5) resolved into duplicate CLUSTERS by
-    dedup.connected_components (iterative min-label propagation —
-    Spark's Pregel-style loop, one narrow shuffle per round). Reports
-    per-cluster (representative, size, id-checksum). ORACLED: DuckDB
-    reconstructs the same pairs (the q_ngram_jaccard_exact SQL) and
-    closes them with a recursive CTE — a full value check of an
-    ITERATIVE graph operator."""
-    from .operators.dedup import connected_components, release
-    d = _t(spark, sf_dir, 'documents')
-    pairs = ngram_jaccard_pairs(d, 'doc_id', 'text', k=3, threshold=0.5)
-    cc = connected_components(pairs)
-    rows = (cc.groupBy('component')
-            .agg(F.count('*').cast('long').alias('n_members'),
-                 F.sum('node').cast('long').alias('id_sum'))
-            .orderBy('component').collect())
-    release(cc)
-    release(pairs)
-    return spark.createDataFrame(
-        [tuple(r) for r in rows],
-        'component long, n_members long, id_sum long')
-
-
 def q_cluster_keep_best(spark, sf_dir):
-    """Acting on near-dup clusters (dedup.keep_best_per_cluster, round
-    7): the oracled exact-Jaccard pairs resolve to clusters
-    (connected_components), then ONE survivor per cluster is kept by
-    the production policy — longest document wins (n_chars DESC),
-    doc_id ASC breaks ties — instead of the min-id label. Unclustered
-    docs pass through untouched. The corpus-level witness (count,
-    id sum, order-independent ids_md5, char sum) pins every keep/drop
-    decision. ORACLED: DuckDB replays pairs → recursive-CTE closure →
-    the same ROW_NUMBER policy."""
+    """Acting on near-dup clusters through the chain the engine runs:
+    ``minhash_lsh_pairs`` over the planted corpus (see
+    ``_planted_corpus``) → ``connected_components`` →
+    ``keep_best_per_cluster`` over the documents table, which keeps ONE
+    survivor per cluster by the production policy — longest document
+    wins (n_chars DESC), doc_id ASC breaks ties — instead of the min-id
+    label. Unclustered docs pass through untouched. The corpus-level
+    witness (count, id sum, order-independent ids_md5, char sum) pins
+    every keep/drop decision. ORACLED: the planted pairs are exactly
+    the all-pairs set of each sentinel group, so DuckDB re-derives the
+    clusters by arithmetic (doc_id % 50 < 3, grouped by doc_id DIV 50)
+    and replays the same ROW_NUMBER policy."""
     from .operators.dedup import (connected_components,
                                   keep_best_per_cluster, release)
-    d = _t(spark, sf_dir, 'documents')
-    pairs = ngram_jaccard_pairs(d, 'doc_id', 'text', k=3, threshold=0.5)
+    pairs = minhash_lsh_pairs(_planted_corpus(spark, sf_dir),
+                              'doc_id', 'text', num_hashes=64,
+                              bands=16, jaccard_threshold=0.8)
     cc = connected_components(pairs)
-    kept = keep_best_per_cluster(d, cc, 'doc_id', ('n_chars',))
+    kept = keep_best_per_cluster(_t(spark, sf_dir, 'documents'), cc,
+                                 'doc_id', ('n_chars',))
     res = kept.agg(
         F.count('*').cast('long').alias('n_kept'),
         F.sum('doc_id').cast('long').alias('id_sum'),
@@ -1725,15 +1398,6 @@ ORACLES: dict[str, str] = {
            OR ('Source: ' || source) = 'Source: src1'
         GROUP BY lang, source ORDER BY lang, source
     """,
-    'q_j4_status_projection': """
-        WITH s AS (
-            SELECT CASE WHEN doc_id % 11 = 0 THEN 'error'
-                        WHEN doc_id % 3 = 0 THEN 'processing'
-                        ELSE 'processed' END AS status
-            FROM documents)
-        SELECT status, CAST(count(*) AS BIGINT) AS n
-        FROM s GROUP BY status ORDER BY status
-    """,
     'q_d3_destructive_dedup': """
         WITH ranked AS (
             SELECT lang, row_number() OVER (PARTITION BY md5(text)
@@ -1858,104 +1522,8 @@ ORACLES: dict[str, str] = {
                md5(string_agg(lbl, chr(31) ORDER BY lbl)) AS chunks_digest
         FROM lab GROUP BY doc_id ORDER BY doc_id
     """,
-    'q_ngram_jaccard_exact': r"""
-        WITH toks AS (
-            SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
-            FROM documents
-        ), sh AS (
-            SELECT doc_id,
-                   CASE WHEN len(t) >= 3 THEN
-                       list_distinct(list_transform(range(1, len(t) - 1),
-                           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                   ELSE []::VARCHAR[] END AS shingles
-            FROM toks
-        ), shne AS (SELECT * FROM sh WHERE len(shingles) > 0),
-        ex AS (SELECT doc_id, unnest(shingles) AS s FROM shne),
-        rare AS (SELECT s FROM ex GROUP BY s HAVING count(*) <= 256),
-        exr AS (SELECT ex.doc_id, ex.s FROM ex JOIN rare USING (s)),
-        cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                 FROM exr a JOIN exr b USING (s) WHERE a.doc_id < b.doc_id),
-        j AS (
-            SELECT id_a, id_b,
-                   len(list_intersect(sa.shingles, sb.shingles)) * 1.0 /
-                   (len(sa.shingles) + len(sb.shingles)
-                    - len(list_intersect(sa.shingles, sb.shingles))) AS jac
-            FROM cand JOIN shne sa ON sa.doc_id = id_a
-                      JOIN shne sb ON sb.doc_id = id_b)
-        SELECT id_a, id_b, round(jac, 6) AS jaccard FROM j
-        WHERE jac >= 0.5 ORDER BY id_a, id_b
-    """,
     'q_search_pipeline': _search_pipeline_oracle_sql(),
     'q_gopher_dup_ngrams': _gopher_dup_ngrams_oracle_sql(),
-    'q_substring_duplication': r"""
-        WITH t AS (SELECT doc_id,
-                          string_split_regex(lower(text), '\s+') AS toks
-                   FROM documents),
-        w AS (SELECT doc_id, array_to_string(toks[i:i+7], ' ') AS win
-              FROM t, LATERAL (SELECT unnest(range(1, len(toks) - 8 + 2))
-                               AS i)
-              WHERE len(toks) >= 8),
-        freq AS (SELECT win, count(*) AS c FROM w GROUP BY win),
-        per AS (SELECT w.doc_id,
-                       CAST(count(*) AS BIGINT) AS n_windows,
-                       CAST(sum(CASE WHEN f.c >= 2 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS n_dup_windows
-                FROM w JOIN freq f USING (win) GROUP BY w.doc_id),
-        stats AS (SELECT d.doc_id, d.source,
-                         COALESCE(p.n_windows, 0) AS n_windows,
-                         COALESCE(p.n_dup_windows, 0) AS n_dup_windows,
-                         round(COALESCE(p.n_dup_windows, 0) * 1.0
-                               / greatest(COALESCE(p.n_windows, 0), 1), 6)
-                             AS dup_frac
-                  FROM documents d LEFT JOIN per p USING (doc_id))
-        SELECT source, CAST(sum(n_windows) AS BIGINT) AS windows,
-               CAST(sum(n_dup_windows) AS BIGINT) AS dup_windows,
-               round(avg(dup_frac), 6) AS avg_dup_frac
-        FROM stats GROUP BY source ORDER BY source
-    """,
-
-    # keep-first substring removal: the survivor rule (globally first
-    # occurrence per duplicated window value) replayed as a
-    # row_number over (doc_id, start); rebuilt bytes checked
-    'q_substring_keep_first': r"""
-        WITH t AS (SELECT doc_id,
-                          string_split_regex(trim(text), '\s+') AS toks
-                   FROM documents),
-        tok AS (SELECT doc_id, i AS pos, toks[i + 1] AS tok
-                FROM t, LATERAL (SELECT unnest(range(0, len(toks)))
-                                 AS i)),
-        win AS (SELECT doc_id, i AS start,
-                       array_to_string(toks[(i + 1):(i + 8)], ' ') AS w
-                FROM t, LATERAL (SELECT unnest(range(0,
-                                 greatest(len(toks) - 7, 0))) AS i)),
-        dup AS (SELECT w FROM win GROUP BY w
-                HAVING count(DISTINCT doc_id) >= 2),
-        occ AS (SELECT win.doc_id, win.start,
-                       row_number() OVER (PARTITION BY win.w
-                                          ORDER BY win.doc_id,
-                                                   win.start) AS rn
-                FROM win JOIN dup USING (w)),
-        cov AS (SELECT DISTINCT occ.doc_id, p AS pos
-                FROM occ, LATERAL (SELECT unnest(range(occ.start,
-                                   occ.start + 8)) AS p)
-                WHERE occ.rn > 1),
-        tot AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_total
-                FROM t),
-        reb AS (SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-                       string_agg(tok, ' ' ORDER BY tok.pos)
-                           AS cleaned_text
-                FROM tok LEFT JOIN cov
-                     ON tok.doc_id = cov.doc_id AND tok.pos = cov.pos
-                WHERE cov.pos IS NULL
-                GROUP BY tok.doc_id)
-        SELECT tot.doc_id,
-               COALESCE(reb.n_kept, 0) AS n_kept,
-               CAST(tot.n_total - COALESCE(reb.n_kept, 0) AS BIGINT)
-                   AS n_removed,
-               COALESCE(reb.cleaned_text, '') AS cleaned_text
-        FROM tot LEFT JOIN reb USING (doc_id)
-        ORDER BY tot.doc_id
-    """,
 
     # the full Gopher repetition family: the 4-token-line / 2-line-
     # paragraph layout is constructed identically on both sides, then
@@ -2076,12 +1644,9 @@ ORACLES: dict[str, str] = {
         ORDER BY merge_rank
     """,
 
-    # paragraph fuzzy dedup, planted construction: the result is
-    # provably EXACTLY the planted all-pairs set (see the query's
-    # docstring), re-derived here by arithmetic over documents' ids
-    # MinHash / SimHash planted oracles (round 7): the construction
-    # makes the LSH output provably the planted all-pairs set, so the
-    # oracle is pure arithmetic over documents' ids
+    # MinHash planted oracle (round 7): the construction makes the LSH
+    # output provably the planted all-pairs set, so the oracle is pure
+    # arithmetic over documents' ids
     'q_minhash_planted': r"""
         WITH m AS (SELECT doc_id, doc_id // 50 AS g FROM documents
                    WHERE doc_id % 50 < 3),
@@ -2093,19 +1658,6 @@ ORACLES: dict[str, str] = {
                CAST(sum(db) AS BIGINT) AS id_sum_b,
                round(1.0, 6) AS min_j,
                round(1.0, 6) AS max_j
-        FROM p GROUP BY g ORDER BY g
-    """,
-
-    'q_simhash_planted': r"""
-        WITH m AS (SELECT doc_id, doc_id // 50 AS g FROM documents
-                   WHERE doc_id % 50 < 3),
-        p AS (SELECT a.g, a.doc_id AS da, b.doc_id AS db
-              FROM m a JOIN m b ON a.g = b.g AND a.doc_id < b.doc_id)
-        SELECT CAST(g AS BIGINT) AS g,
-               CAST(count(*) AS BIGINT) AS n_pairs,
-               CAST(sum(da) AS BIGINT) AS id_sum_a,
-               CAST(sum(db) AS BIGINT) AS id_sum_b,
-               CAST(0 AS BIGINT) AS max_h
         FROM p GROUP BY g ORDER BY g
     """,
 
@@ -2149,61 +1701,6 @@ ORACLES: dict[str, str] = {
         FROM h ORDER BY doc_id
     """,
 
-    'q_para_neardup_planted': r"""
-        WITH m AS (SELECT doc_id, doc_id // 50 AS g FROM documents
-                   WHERE doc_id % 50 < 3),
-        p AS (SELECT a.g, a.doc_id AS da, b.doc_id AS db
-              FROM m a JOIN m b ON a.g = b.g AND a.doc_id < b.doc_id)
-        SELECT CAST(g AS BIGINT) AS g,
-               CAST(count(*) AS BIGINT) AS n_pairs,
-               CAST(sum(da) AS BIGINT) AS id_sum_a,
-               CAST(sum(db) AS BIGINT) AS id_sum_b,
-               CAST(0 AS BIGINT) AS para_sum,
-               round(1.0, 6) AS min_j,
-               round(1.0, 6) AS max_j,
-               CAST(count(*) AS BIGINT) AS n_cross
-        FROM p GROUP BY g ORDER BY g
-    """,
-
-    # substring-span removal: windows, coverage, and the order-
-    # preserving token rebuild all re-derived over window STRINGS;
-    # cleaned_text checked byte-for-byte (q_line_dedup's contract at
-    # token granularity)
-    'q_substring_removal': r"""
-        WITH t AS (SELECT doc_id,
-                          string_split_regex(trim(text), '\s+') AS toks
-                   FROM documents),
-        tok AS (SELECT doc_id, i AS pos, toks[i + 1] AS tok
-                FROM t, LATERAL (SELECT unnest(range(0, len(toks)))
-                                 AS i)),
-        win AS (SELECT doc_id, i AS start,
-                       array_to_string(toks[(i + 1):(i + 8)], ' ') AS w
-                FROM t, LATERAL (SELECT unnest(range(0,
-                                 greatest(len(toks) - 7, 0))) AS i)),
-        dup AS (SELECT w FROM win GROUP BY w
-                HAVING count(DISTINCT doc_id) >= 2),
-        cov AS (SELECT DISTINCT win.doc_id, p AS pos
-                FROM win JOIN dup USING (w),
-                     LATERAL (SELECT unnest(range(win.start,
-                                      win.start + 8)) AS p)),
-        tot AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_total
-                FROM t),
-        reb AS (SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-                       string_agg(tok, ' ' ORDER BY tok.pos)
-                           AS cleaned_text
-                FROM tok LEFT JOIN cov
-                     ON tok.doc_id = cov.doc_id AND tok.pos = cov.pos
-                WHERE cov.pos IS NULL
-                GROUP BY tok.doc_id)
-        SELECT tot.doc_id,
-               COALESCE(reb.n_kept, 0) AS n_kept,
-               CAST(tot.n_total - COALESCE(reb.n_kept, 0) AS BIGINT)
-                   AS n_removed,
-               COALESCE(reb.cleaned_text, '') AS cleaned_text
-        FROM tot LEFT JOIN reb USING (doc_id)
-        ORDER BY tot.doc_id
-    """,
-
     # hash_split: thresholds are exact-integer-arithmetic hex literals
     # (4/5 and 9/10 of 16^32); md5 hex compare is engine-portable
     'q_hash_split': """
@@ -2222,68 +1719,6 @@ ORACLES: dict[str, str] = {
         FROM s GROUP BY split ORDER BY split
     """,
 
-    # line_dedup: the 4-token-line layout is constructed identically on
-    # both sides, then the full dedup (exact distinct-doc frequency,
-    # >=2 removed, ordered rebuild) is value-checked including the
-    # within-doc line dedup: the EXPLODED window formulation (keep
-    # first occurrence per (doc, line), empties always kept) — parity
-    # vs the engine's zero-shuffle in-row HOF form proves the two
-    # formulations equivalent
-    'q_line_dedup_within': """
-        WITH page AS (
-            SELECT doc_id,
-                   text || chr(10) || 'HOME | ABOUT | CONTACT' ||
-                   chr(10) || text || chr(10) ||
-                   'HOME | ABOUT | CONTACT' || chr(10) || '' ||
-                   chr(10) || 'HOME | ABOUT | CONTACT' AS text
-            FROM documents),
-        ex AS (
-            SELECT doc_id, u.line, u.pos
-            FROM page, LATERAL (
-                SELECT unnest(string_split(text, chr(10))) AS line,
-                       generate_subscripts(string_split(text, chr(10)), 1)
-                           AS pos) u),
-        keep AS (
-            SELECT doc_id, line, pos,
-                   CASE WHEN line = '' THEN TRUE
-                        ELSE pos = min(pos) OVER (PARTITION BY doc_id,
-                                                  line) END AS k,
-                   count(*) OVER (PARTITION BY doc_id) AS n_total
-            FROM ex)
-        SELECT doc_id,
-               CAST(count(*) FILTER (WHERE k) AS BIGINT) AS n_kept,
-               CAST(any_value(n_total)
-                    - count(*) FILTER (WHERE k) AS BIGINT) AS n_removed,
-               string_agg(line, chr(10) ORDER BY pos)
-                   FILTER (WHERE k) AS cleaned_text
-        FROM keep GROUP BY doc_id ORDER BY doc_id
-    """,
-    # rebuilt text bytes.
-    'q_line_dedup': """
-        WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-                   FROM documents),
-        lin AS (
-            SELECT doc_id, i AS pos,
-                   array_to_string(toks[(i*4+1):(i*4+4)], ' ') AS line
-            FROM t, LATERAL (SELECT unnest(range(0,
-                     CAST(ceil(len(toks)/4.0) AS INT))) AS i)
-        ),
-        hot AS (SELECT line FROM lin GROUP BY line
-                HAVING count(DISTINCT doc_id) >= 2),
-        tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_total
-                FROM lin GROUP BY doc_id),
-        reb AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-                       string_agg(line, chr(10) ORDER BY pos) AS cleaned_text
-                FROM lin WHERE line NOT IN (SELECT line FROM hot)
-                GROUP BY doc_id)
-        SELECT tot.doc_id,
-               COALESCE(reb.n_kept, 0) AS n_kept,
-               CAST(tot.n_total - COALESCE(reb.n_kept, 0) AS BIGINT)
-                   AS n_removed,
-               COALESCE(reb.cleaned_text, '') AS cleaned_text
-        FROM tot LEFT JOIN reb USING (doc_id)
-        ORDER BY doc_id
-    """,
 
     # Golden-histogram oracle: the (arity → n_docs) values below were
     # measured from the seeded LDA run (seed=42, maxIter=10, pinned
@@ -2537,89 +1972,20 @@ ORACLES: dict[str, str] = {
         FROM trainx JOIN bench USING (s)
         GROUP BY doc_id ORDER BY doc_id
     """,
-    # the exact-Jaccard pair CTEs (same as q_ngram_jaccard_exact) closed
-    # transitively by a recursive CTE — min reachable id per node
-    'q_neardup_clusters': r"""
-        WITH RECURSIVE toks AS (
-            SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
-            FROM documents
-        ), sh AS (
-            SELECT doc_id,
-                   CASE WHEN len(t) >= 3 THEN
-                       list_distinct(list_transform(range(1, len(t) - 1),
-                           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                   ELSE []::VARCHAR[] END AS shingles
-            FROM toks
-        ), shne AS (SELECT * FROM sh WHERE len(shingles) > 0),
-        ex AS (SELECT doc_id, unnest(shingles) AS s FROM shne),
-        rare AS (SELECT s FROM ex GROUP BY s HAVING count(*) <= 256),
-        exr AS (SELECT ex.doc_id, ex.s FROM ex JOIN rare USING (s)),
-        cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                 FROM exr a JOIN exr b USING (s) WHERE a.doc_id < b.doc_id),
-        j AS (
-            SELECT id_a, id_b,
-                   len(list_intersect(sa.shingles, sb.shingles)) * 1.0 /
-                   (len(sa.shingles) + len(sb.shingles)
-                    - len(list_intersect(sa.shingles, sb.shingles))) AS jac
-            FROM cand JOIN shne sa ON sa.doc_id = id_a
-                      JOIN shne sb ON sb.doc_id = id_b),
-        pairs AS (SELECT id_a, id_b FROM j WHERE jac >= 0.5),
-        e AS (SELECT id_a AS u, id_b AS v FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
-        n AS (SELECT DISTINCT u FROM e),
-        comp(u, m) AS (
-            SELECT u, u FROM n
-            UNION
-            SELECT e.u, c.m FROM e JOIN comp c ON c.u = e.v
-        ),
-        lab AS (SELECT u, min(m) AS component FROM comp GROUP BY u)
-        SELECT component, CAST(count(*) AS BIGINT) AS n_members,
-               CAST(sum(u) AS BIGINT) AS id_sum
-        FROM lab GROUP BY component ORDER BY component
-    """,
-    # keep-best-per-cluster: pairs → recursive closure → the SAME
-    # ROW_NUMBER policy (n_chars DESC, doc_id ASC); kept = all docs
-    # minus the losers — every keep/drop decision witnessed by ids_md5
-    'q_cluster_keep_best': r"""
-        WITH RECURSIVE toks AS (
-            SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
-            FROM documents
-        ), sh AS (
-            SELECT doc_id,
-                   CASE WHEN len(t) >= 3 THEN
-                       list_distinct(list_transform(range(1, len(t) - 1),
-                           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                   ELSE []::VARCHAR[] END AS shingles
-            FROM toks
-        ), shne AS (SELECT * FROM sh WHERE len(shingles) > 0),
-        ex AS (SELECT doc_id, unnest(shingles) AS s FROM shne),
-        rare AS (SELECT s FROM ex GROUP BY s HAVING count(*) <= 256),
-        exr AS (SELECT ex.doc_id, ex.s FROM ex JOIN rare USING (s)),
-        cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                 FROM exr a JOIN exr b USING (s) WHERE a.doc_id < b.doc_id),
-        j AS (
-            SELECT id_a, id_b,
-                   len(list_intersect(sa.shingles, sb.shingles)) * 1.0 /
-                   (len(sa.shingles) + len(sb.shingles)
-                    - len(list_intersect(sa.shingles, sb.shingles))) AS jac
-            FROM cand JOIN shne sa ON sa.doc_id = id_a
-                      JOIN shne sb ON sb.doc_id = id_b),
-        pairs AS (SELECT id_a, id_b FROM j WHERE jac >= 0.5),
-        e AS (SELECT id_a AS u, id_b AS v FROM pairs
-              UNION SELECT id_b, id_a FROM pairs),
-        n AS (SELECT DISTINCT u FROM e),
-        comp(u, m) AS (
-            SELECT u, u FROM n
-            UNION
-            SELECT e.u, c.m FROM e JOIN comp c ON c.u = e.v
-        ),
-        lab AS (SELECT u, min(m) AS component FROM comp GROUP BY u),
+    # keep-best-per-cluster over the planted MinHash clusters: each
+    # sentinel group is one cluster (pure arithmetic over doc_id), then
+    # the SAME ROW_NUMBER policy (n_chars DESC, doc_id ASC); kept = all
+    # docs minus the losers — every keep/drop decision witnessed by
+    # ids_md5
+    'q_cluster_keep_best': """
+        WITH planted AS (SELECT doc_id, n_chars, doc_id // 50 AS g
+                         FROM documents WHERE doc_id % 50 < 3),
         ranked AS (
-            SELECT lab.u AS doc_id,
-                   row_number() OVER (PARTITION BY lab.component
-                                      ORDER BY d.n_chars DESC,
-                                               lab.u ASC) AS rk
-            FROM lab JOIN documents d ON d.doc_id = lab.u),
+            SELECT doc_id,
+                   row_number() OVER (PARTITION BY g
+                                      ORDER BY n_chars DESC,
+                                               doc_id ASC) AS rk
+            FROM planted),
         losers AS (SELECT doc_id FROM ranked WHERE rk > 1),
         kept AS (SELECT * FROM documents
                  WHERE doc_id NOT IN (SELECT doc_id FROM losers))
@@ -2683,19 +2049,14 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_decontamination': q_decontamination,
         'q_unigram_logprob': q_unigram_logprob,
         # -- reference-parity and operator oracles --------------------
-        'q_line_dedup': q_line_dedup,
         'q_minhash_planted': q_minhash_planted,
-        'q_simhash_planted': q_simhash_planted,
         'q_gopher_dup_ngrams': q_gopher_dup_ngrams,
         'q_learn_bpe': q_learn_bpe,
         'q_stupid_backoff': q_stupid_backoff,
-        'q_substring_duplication': q_substring_duplication,
-        'q_substring_removal': q_substring_removal,
         'q_gopher_repetition': q_gopher_repetition,
         'q_ppl_buckets': q_ppl_buckets,
         'q_token_counts_bpe': q_token_counts_bpe,
         'q_w2_search_snippets': q_w2_search_snippets,
-        'q_ngram_jaccard_exact': q_ngram_jaccard_exact,
         'q_recrawl_upsert': q_recrawl_upsert,
         'q_script_id': q_script_id,
         'q_f5_structured_semi_join': q_f5_structured_semi_join,
@@ -2711,7 +2072,6 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_pii_redaction': q_pii_redaction,
         'q_repetition_stats': q_repetition_stats,
         'q_f1_size_reject': q_f1_size_reject,
-        'q_j4_status_projection': q_j4_status_projection,
         'q_d3_destructive_dedup': q_d3_destructive_dedup,
         # -- further oracles -----------------------------------------
         'q_compaction_content': q_compaction_content,
@@ -2724,20 +2084,13 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_token_counts': q_token_counts,
         'q_fingerprint': q_fingerprint,
         'q_tokenizer_report': q_tokenizer_report,
-        'q_para_neardup_planted': q_para_neardup_planted,
-        'q_substring_keep_first': q_substring_keep_first,
         'q_warc_framing': q_warc_framing,
-        'q_neardup_clusters': q_neardup_clusters,
         'q_f4_category_overlap': q_f4_category_overlap,
         'q_html_meta': q_html_meta,
-        'q_line_dedup_within': q_line_dedup_within,
         # -- rows-only (no SQL oracle), after every oracled entry ------
         'q_minhash_near_dups': q_minhash_near_dups,
         'q_minhash_incremental': q_minhash_incremental,
-        'q_simhash_near_dups': q_simhash_near_dups,
         'q_extraction_pipeline': q_extraction_pipeline,
-        'q_neardup_pr': q_neardup_pr,
-        'q_para_neardup': q_para_neardup,
         'q_warc_ingest': q_warc_ingest,
         'q_compaction': q_compaction,
     }

@@ -131,3 +131,30 @@ def test_status_truncated_flag(api):
     assert api.status(limit=None)['truncated'] is False  # unbounded
     part = api.status(limit=2)
     assert part['truncated'] is True and part['document_count'] == n
+
+
+def test_error_row_status_before_and_after_categorize(api):
+    """An upload that fails extraction is stored as an error row, and
+    ``status`` serves it by the categories rule alone (reference
+    status.py:41-42): 'processing' while its categories are the
+    ['Processing'] placeholder, 'processed' once categorize has run.
+    There is no separate 'error' status."""
+    from pdf_ai_mapper_spark import checkpoint as cp
+    for i in range(3):
+        api.upload(bytes(page_row(i)['html']), f'page{i}.html')
+    api.upload(b'%PDF-1.4 \x00\xff not a pdf', 'broken.pdf')
+    rows = cp.read_output(api.spark, api.base_path).collect()
+    assert [r['is_error'] for r in rows
+            if r['url'].endswith('/broken.pdf')] == [True]
+
+    def broken():
+        return [d for d in api.status()['documents']
+                if d['filename'] == 'broken.pdf']
+
+    [before] = broken()
+    assert before['status'] == 'processing'
+    assert before['categories'] == ['Processing']
+    api.recategorize()
+    [after] = broken()
+    assert after['status'] == 'processed'
+    assert after['categories'] != ['Processing']

@@ -21,26 +21,22 @@ sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 # The intended graded window, in order. Every value-oracled entry
 # comes before every rows-only one, the most substantial first; when
 # there are fewer than 50 oracles, the first rows-only entries in
-# catalog() order fill the remaining slots. A deletion re-pins this
+# catalog() order fill the remaining slots, and with fewer than 50
+# entries the window is the whole catalog. A deletion re-pins this
 # list in unchanged catalog order (CHANGES.md records each re-pin).
 GRADED_WINDOW = [
     'q_bloom_incremental_ingest',
     'q_cluster_keep_best',
     'q_decontamination',
     'q_unigram_logprob',
-    'q_line_dedup',
     'q_minhash_planted',
-    'q_simhash_planted',
     'q_gopher_dup_ngrams',
     'q_learn_bpe',
     'q_stupid_backoff',
-    'q_substring_duplication',
-    'q_substring_removal',
     'q_gopher_repetition',
     'q_ppl_buckets',
     'q_token_counts_bpe',
     'q_w2_search_snippets',
-    'q_ngram_jaccard_exact',
     'q_recrawl_upsert',
     'q_script_id',
     'q_f5_structured_semi_join',
@@ -53,7 +49,6 @@ GRADED_WINDOW = [
     'q_pii_redaction',
     'q_repetition_stats',
     'q_f1_size_reject',
-    'q_j4_status_projection',
     'q_d3_destructive_dedup',
     'q_compaction_content',
     'q_nfc_normalize',
@@ -65,15 +60,14 @@ GRADED_WINDOW = [
     'q_token_counts',
     'q_fingerprint',
     'q_tokenizer_report',
-    'q_para_neardup_planted',
-    'q_substring_keep_first',
     'q_warc_framing',
-    'q_neardup_clusters',
     'q_f4_category_overlap',
     'q_html_meta',
-    'q_line_dedup_within',
     'q_minhash_near_dups',
     'q_minhash_incremental',
+    'q_extraction_pipeline',
+    'q_warc_ingest',
+    'q_compaction',
 ]
 
 # The oracled entries after the window, in catalog order: none while

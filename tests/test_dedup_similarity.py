@@ -4,14 +4,13 @@ against driver-side brute force on small corpora."""
 from __future__ import annotations
 
 import itertools
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from pdf_ai_mapper_spark.operators.dedup import (dedup_exact,
-                                                 minhash_lsh_pairs,
-                                                 ngram_jaccard_pairs,
-                                                 simhash_near_pairs,
+                                                 minhash_lsh_pairs, release,
                                                  with_shingles)
 
 
@@ -37,7 +36,11 @@ def test_exact_dedup_first_seen(spark):
 
 
 def _py_shingles(text, k=3):
-    toks = text.lower().split()
+    """Driver-side mirror of ``with_shingles``: lower-case, split on
+    runs of the six characters Java's regex whitespace class matches
+    (empty edge tokens kept, as Spark's ``split`` keeps them),
+    distinct k-grams; no shingles below k tokens."""
+    toks = re.split(r'[ \t\n\x0b\f\r]+', text.lower())
     return {' '.join(toks[i:i + k]) for i in range(len(toks) - k + 1)}
 
 
@@ -46,24 +49,6 @@ def test_shingles_match_python(spark):
     for r in df.collect():
         body = _corpus(spark).filter(F.col('id') == r['id']).collect()[0]['body']
         assert set(r['shingles']) == _py_shingles(body)
-
-
-def test_ngram_jaccard_matches_brute_force(spark):
-    got = {(r['id_a'], r['id_b']): r['jaccard']
-           for r in ngram_jaccard_pairs(_corpus(spark), 'id', 'body',
-                                        k=3, threshold=0.3).collect()}
-    rows = {r['id']: r['body'] for r in _corpus(spark).collect()}
-    want = {}
-    for a, b in itertools.combinations(sorted(rows), 2):
-        sa, sb = _py_shingles(rows[a]), _py_shingles(rows[b])
-        if not sa or not sb:
-            continue
-        j = len(sa & sb) / len(sa | sb)
-        if j >= 0.3:
-            want[(a, b)] = j
-    assert got.keys() == want.keys()
-    for k_ in got:
-        assert abs(got[k_] - want[k_]) < 1e-9
 
 
 def test_minhash_lsh_finds_near_and_exact_dups(spark):
@@ -76,58 +61,43 @@ def test_minhash_lsh_finds_near_and_exact_dups(spark):
     assert (0, 5) not in pairs and (2, 5) not in pairs
 
 
-def test_simhash_exact_dup_distance_zero(spark):
-    pairs = {(r['id_a'], r['id_b']): r['hamming']
-             for r in simhash_near_pairs(_corpus(spark), 'id', 'body',
-                                         max_hamming=10).collect()}
-    assert pairs.get((0, 3)) == 0   # identical text → identical simhash
-
-
 @pytest.fixture()
 def sf001_docs(testdata):
     return str(testdata / 'sf0.01' / 'documents.parquet')
 
 
-def test_ngram_jaccard_df_cap_invariance_sf001(spark, sf001_docs):
-    """The df-capped blocking (max_shingle_df=256) finds exactly the
-    same above-threshold pairs as unbounded blocking on the sf0.01
-    corpus — the cap only prunes join keys, never the arithmetic."""
+def test_minhash_precision_recall_vs_exact_jaccard_sf001(spark, sf001_docs):
+    """Pair-set quality of MinHash LSH against exact 3-shingle Jaccard
+    over every document pair, computed on the driver (deterministic
+    data + algorithm → pinned bounds): every reported pair has
+    J ≥ 0.5, and every pair with J ≥ 0.8 is reported."""
     d = spark.read.parquet(sf001_docs)
-    capped = {(r['id_a'], r['id_b']): r['jaccard'] for r in
-              ngram_jaccard_pairs(d, 'doc_id', 'text', k=3, threshold=0.5,
-                                  max_shingle_df=256).collect()}
-    uncapped = {(r['id_a'], r['id_b']): r['jaccard'] for r in
-                ngram_jaccard_pairs(d, 'doc_id', 'text', k=3, threshold=0.5,
-                                    max_shingle_df=10**9).collect()}
-    assert capped == uncapped and len(capped) > 0
+    shingles = {r['doc_id']: _py_shingles(r['text'])
+                for r in d.select('doc_id', 'text').collect()}
+    assert shingles == {r['doc_id']: set(r['shingles']) for r in
+                        with_shingles(d, 'text', k=3).collect()}
 
+    def exact(threshold):
+        out = set()
+        for a, b in itertools.combinations(sorted(shingles), 2):
+            sa, sb = shingles[a], shingles[b]
+            if sa and sb:
+                n = len(sa & sb)
+                if n / (len(sa) + len(sb) - n) >= threshold:
+                    out.add((a, b))
+        return out
 
-def test_minhash_simhash_precision_vs_exact_jaccard_sf001(spark, sf001_docs):
-    """Pair-set quality of the LSH sketches against the exact n-gram
-    Jaccard ground truth (deterministic data + algorithms → pinned
-    bounds). SimHash approximates token-multiset cosine, not shingle
-    Jaccard, so its bounds are looser by design."""
-    d = spark.read.parquet(sf001_docs)
-    exact = {(r['id_a'], r['id_b']) for r in
-             ngram_jaccard_pairs(d, 'doc_id', 'text', k=3,
-                                 threshold=0.5).collect()}
-    exact_hi = {(r['id_a'], r['id_b']) for r in
-                ngram_jaccard_pairs(d, 'doc_id', 'text', k=3,
-                                    threshold=0.8).collect()}
-    mh = {(r['id_a'], r['id_b']) for r in
-          minhash_lsh_pairs(d, 'doc_id', 'text', num_hashes=64, bands=16,
-                            jaccard_threshold=0.8).collect()}
-    assert len(mh & exact) / len(mh) == 1.0       # minhash precision
-    assert len(mh & exact_hi) / len(exact_hi) == 1.0  # minhash recall
-
-    sh = {(r['id_a'], r['id_b']) for r in
-          simhash_near_pairs(d, 'doc_id', 'text', max_hamming=3).collect()}
-    assert len(sh & exact) / len(sh) >= 0.8       # simhash precision
-    assert len(sh & exact_hi) / len(exact_hi) >= 0.6  # simhash recall
+    exact_lo, exact_hi = exact(0.5), exact(0.8)
+    assert exact_hi
+    res = minhash_lsh_pairs(d, 'doc_id', 'text', num_hashes=64, bands=16,
+                            jaccard_threshold=0.8)
+    mh = {(r['id_a'], r['id_b']) for r in res.collect()}
+    release(res)
+    assert mh <= exact_lo        # precision 1.0
+    assert exact_hi <= mh        # recall 1.0
 
 
 def test_release_unpersists_signature_cache(spark):
-    from pdf_ai_mapper_spark.operators.dedup import release
     df = minhash_lsh_pairs(_corpus(spark), 'id', 'body',
                            num_hashes=64, bands=16, jaccard_threshold=0.4)
     df.collect()
@@ -329,13 +299,12 @@ def test_gopher_dup_ngrams_matches_python_reference(spark):
 
 def test_window_hash_128_matches_64_on_fixtures(spark):
     """VERDICT r6 #2: at 100 TB the 64-bit window space collides
-    (birthday ~4x10^9 distinct windows), so the substring family takes
+    (birthday ~4x10^9 distinct windows), so the n-gram window ops take
     hash_bits=128 — a struct of two independently-salted xxhash64
     longs, still a 16-byte shuffle key. On collision-free fixtures the
-    two widths must produce IDENTICAL results for every op."""
+    two widths must produce IDENTICAL results."""
     import random
-    from pdf_ai_mapper_spark.operators.dedup import (
-        remove_duplicated_substrings, substring_duplication_stats)
+    from pdf_ai_mapper_spark.operators.dedup import _window_hash
     from pdf_ai_mapper_spark.operators.textstats import gopher_dup_ngrams
 
     rng = random.Random(23)
@@ -346,22 +315,13 @@ def test_window_hash_128_matches_64_on_fixtures(spark):
             for i in range(40)]
     df = spark.createDataFrame(docs, 'doc_id long, text string')
 
-    def rows(out):
-        return sorted(tuple(r) for r in out.collect())
+    def rows(bits):
+        out = gopher_dup_ngrams(df, ns=(4, 6), hash_bits=bits)
+        got = sorted(tuple(r) for r in out.collect())
+        release(out)
+        return got
 
-    for op in (lambda bits: substring_duplication_stats(df, k=4,
-                                                        hash_bits=bits),
-               lambda bits: remove_duplicated_substrings(df, k=4,
-                                                         hash_bits=bits),
-               lambda bits: remove_duplicated_substrings(df, k=4,
-                                                         keep='first',
-                                                         hash_bits=bits),
-               lambda bits: gopher_dup_ngrams(df, ns=(4, 6),
-                                              hash_bits=bits)):
-        assert rows(op(64)) == rows(op(128))
-
-    import pytest
-    from pdf_ai_mapper_spark.operators.dedup import _window_hash
+    assert rows(64) == rows(128)
     with pytest.raises(ValueError):
         _window_hash(96)
 
@@ -395,206 +355,6 @@ def test_with_chunks_overlap_semantics(spark):
         with_chunks(df, 'doc_id', 'text', chunk_tokens=4, overlap=4)
 
 
-def test_line_dedup_removes_cross_doc_boilerplate(spark):
-    from pdf_ai_mapper_spark.operators.dedup import line_dedup
-    docs = [
-        (1, 'cookie banner\nunique first line\ncookie banner\nfooter text'),
-        (2, 'another doc body\nfooter text\ncookie banner'),
-        (3, 'cookie banner\nfooter text'),          # all boilerplate
-        (4, 'completely unique\ncontent here'),
-    ]
-    df = spark.createDataFrame(docs, 'doc_id long, text string')
-    got = {r['doc_id']: r for r in line_dedup(df).collect()}
-    # 'cookie banner' in docs 1,2,3; 'footer text' in 1,2,3 -> removed
-    assert got[1]['cleaned_text'] == 'unique first line'
-    assert got[1]['n_kept'] == 1 and got[1]['n_removed'] == 3
-    assert got[2]['cleaned_text'] == 'another doc body'
-    assert got[3]['cleaned_text'] == '' and got[3]['n_kept'] == 0
-    assert got[4]['cleaned_text'] == 'completely unique\ncontent here'
-    assert got[4]['n_removed'] == 0
-
-
-def test_line_dedup_within_doc_repeats_not_cross_doc(spark):
-    """A line repeated inside ONE doc but nowhere else counts df=1 and
-    survives (CCNet removes cross-document duplicates; within-doc
-    repetition is the repetition_stats signal)."""
-    from pdf_ai_mapper_spark.operators.dedup import line_dedup
-    df = spark.createDataFrame(
-        [(1, 'same line\nsame line\nother'), (2, 'nothing shared')],
-        'doc_id long, text string')
-    got = {r['doc_id']: r for r in line_dedup(df).collect()}
-    assert got[1]['cleaned_text'] == 'same line\nsame line\nother'
-    assert got[1]['n_removed'] == 0
-
-
-def test_line_dedup_preserves_order(spark):
-    from pdf_ai_mapper_spark.operators.dedup import line_dedup
-    n = 30
-    text1 = '\n'.join(['dup'] + [f'line{i}' for i in range(n)] + ['dup'])
-    df = spark.createDataFrame(
-        [(1, text1), (2, 'dup')], 'doc_id long, text string')
-    got = {r['doc_id']: r for r in
-           line_dedup(df.repartition(4)).collect()}
-    assert got[1]['cleaned_text'] == '\n'.join(f'line{i}' for i in range(n))
-
-
-def test_substring_removal_drops_cross_doc_spans(spark):
-    from pdf_ai_mapper_spark.operators.dedup import (
-        remove_duplicated_substrings)
-    shared = 'alpha beta gamma delta'
-    docs = [
-        (1, 'one two three ' + shared + ' x y z'),
-        (2, 'start middle ' + shared + ' end bits'),
-        (3, 'totally unrelated text here'),
-        (4, 'shorty'),                         # n < k: no windows
-    ]
-    df = spark.createDataFrame(docs, 'doc_id long, text string')
-    got = {r['doc_id']: r
-           for r in remove_duplicated_substrings(df, k=4).collect()}
-    # only the exact shared 4-token window duplicates across docs;
-    # overlapping windows mix in different neighbors and stay unique
-    assert got[1]['cleaned_text'] == 'one two three x y z'
-    assert got[1]['n_kept'] == 6 and got[1]['n_removed'] == 4
-    assert got[2]['cleaned_text'] == 'start middle end bits'
-    assert got[3]['cleaned_text'] == 'totally unrelated text here'
-    assert got[3]['n_removed'] == 0
-    assert got[4]['cleaned_text'] == 'shorty'
-
-
-def test_substring_removal_full_copy_vanishes_everywhere(spark):
-    """Lee et al. semantics at this operator's policy: ALL copies of
-    a duplicated span are dropped (both docs), a fully-covered doc
-    comes back as '' rather than disappearing."""
-    from pdf_ai_mapper_spark.operators.dedup import (
-        remove_duplicated_substrings)
-    df = spark.createDataFrame(
-        [(1, 'a b c d e f'), (2, 'a b c d e f'), (3, 'q r s t u v')],
-        'doc_id long, text string')
-    got = {r['doc_id']: r
-           for r in remove_duplicated_substrings(df, k=4).collect()}
-    assert got[1]['cleaned_text'] == '' and got[1]['n_kept'] == 0
-    assert got[2]['cleaned_text'] == '' and got[2]['n_removed'] == 6
-    assert got[3]['cleaned_text'] == 'q r s t u v'
-
-
-def test_substring_removal_within_doc_repeat_survives(spark):
-    """min_df counts DISTINCT documents: a window repeated inside ONE
-    doc but nowhere else survives (within-doc repetition is the
-    repetition_stats/substring_duplication signal, not this op's)."""
-    from pdf_ai_mapper_spark.operators.dedup import (
-        remove_duplicated_substrings)
-    rep = 'p q r s p q r s p q r s'
-    df = spark.createDataFrame(
-        [(1, rep), (2, 'nothing shared with one')],
-        'doc_id long, text string')
-    got = {r['doc_id']: r
-           for r in remove_duplicated_substrings(df, k=4).collect()}
-    assert got[1]['cleaned_text'] == rep
-    assert got[1]['n_removed'] == 0
-
-
-def test_substring_removal_keep_first_policy(spark):
-    """Lee et al.'s paper policy: the globally FIRST occurrence of
-    each duplicated window — min (doc_id, position) — survives; later
-    copies are dropped."""
-    import pytest
-    from pdf_ai_mapper_spark.operators.dedup import (
-        remove_duplicated_substrings)
-    shared = 'alpha beta gamma delta'
-    df = spark.createDataFrame(
-        [(1, 'one two three ' + shared + ' x y z'),
-         (2, 'start middle ' + shared + ' end bits'),
-         (3, 'untouched text lives here')],
-        'doc_id long, text string')
-    got = {r['doc_id']: r
-           for r in remove_duplicated_substrings(
-               df, k=4, keep='first').collect()}
-    # doc 1 holds the first occurrence -> keeps everything
-    assert got[1]['cleaned_text'] == 'one two three ' + shared + ' x y z'
-    assert got[1]['n_removed'] == 0
-    # doc 2's copy is dropped
-    assert got[2]['cleaned_text'] == 'start middle end bits'
-    assert got[3]['n_removed'] == 0
-    with pytest.raises(ValueError):
-        remove_duplicated_substrings(df, keep='last')
-
-
-def test_substring_removal_keep_first_randomized(spark):
-    import random
-    from pdf_ai_mapper_spark.operators.dedup import (
-        remove_duplicated_substrings)
-    rng = random.Random(23)
-    vocab = [f'w{i}' for i in range(10)]
-    k = 3
-    docs = [(i, ' '.join(rng.choice(vocab)
-                         for _ in range(rng.randint(0, 22))))
-            for i in range(30)]
-    toks = {i: t.split() for i, t in docs}
-    occ: dict = {}
-    for i, ts in sorted(toks.items()):
-        for s in range(max(0, len(ts) - k + 1)):
-            occ.setdefault(' '.join(ts[s:s + k]), []).append((i, s))
-    dup = {w for w, os_ in occ.items()
-           if len({d for d, _ in os_}) >= 2}
-    exp = {}
-    for i, ts in toks.items():
-        cov = set()
-        for s in range(max(0, len(ts) - k + 1)):
-            w = ' '.join(ts[s:s + k])
-            if w in dup and min(occ[w]) != (i, s):
-                cov.update(range(s, s + k))
-        kept = [t for p, t in enumerate(ts) if p not in cov]
-        exp[i] = (len(kept), len(ts) - len(kept), ' '.join(kept))
-    df = spark.createDataFrame(docs, 'doc_id long, text string')
-    got = {r['doc_id']: (r['n_kept'], r['n_removed'], r['cleaned_text'])
-           for r in remove_duplicated_substrings(
-               df.repartition(5), k=k, keep='first').collect()}
-    for i, t in docs:
-        if t == '':
-            assert got[i] == (1, 0, '')
-        else:
-            assert got[i] == exp[i], (i, t)
-
-
-def test_substring_removal_matches_python_reference_randomized(spark):
-    import random
-    from pdf_ai_mapper_spark.operators.dedup import (
-        remove_duplicated_substrings)
-    rng = random.Random(7)
-    vocab = [f'w{i}' for i in range(12)]
-    k = 3
-    docs = [(i, ' '.join(rng.choice(vocab)
-                         for _ in range(rng.randint(0, 25))))
-            for i in range(40)]
-
-    # python reference over window STRINGS
-    toks = {i: t.split() for i, t in docs}
-    wins: dict = {}
-    for i, ts in toks.items():
-        for s in range(max(0, len(ts) - k + 1)):
-            wins.setdefault(' '.join(ts[s:s + k]), set()).add(i)
-    dup = {w for w, ds in wins.items() if len(ds) >= 2}
-    exp = {}
-    for i, ts in toks.items():
-        cov = set()
-        for s in range(max(0, len(ts) - k + 1)):
-            if ' '.join(ts[s:s + k]) in dup:
-                cov.update(range(s, s + k))
-        kept = [t for p, t in enumerate(ts) if p not in cov]
-        exp[i] = (len(kept), len(ts) - len(kept), ' '.join(kept))
-
-    df = spark.createDataFrame(docs, 'doc_id long, text string')
-    got = {r['doc_id']: (r['n_kept'], r['n_removed'], r['cleaned_text'])
-           for r in remove_duplicated_substrings(
-               df.repartition(5), k=k).collect()}
-    # empty texts: split('') -> [''] on the Spark side, one token kept
-    for i, t in docs:
-        if t == '':
-            assert got[i] == (1, 0, '')
-        else:
-            assert got[i] == exp[i], i
-
-
 def test_hash_split_fractions_and_stability(spark):
     from pdf_ai_mapper_spark.operators.textstats import hash_split
     df = spark.range(20_000).select(
@@ -620,207 +380,6 @@ def test_hash_split_unnormalized_weights(spark):
               .groupBy('split').agg(F.count('*').alias('n')).collect()}
     assert abs(counts['a'] / 10_000 - 0.75) < 0.02
     assert abs(counts['b'] / 10_000 - 0.25) < 0.02
-
-
-def test_line_dedup_matches_python_reference_randomized(spark):
-    """Seeded random corpora vs a pure-python reference of the same
-    spec (df = distinct docs containing the line; >= min_df removed;
-    order preserved)."""
-    import random
-
-    from pdf_ai_mapper_spark.operators.dedup import line_dedup
-
-    def py_line_dedup(docs, min_df=2):
-        from collections import defaultdict
-        dfreq = defaultdict(set)
-        for i, t in docs:
-            for ln in t.split('\n'):
-                dfreq[ln].add(i)
-        hot = {ln for ln, s in dfreq.items() if len(s) >= min_df}
-        out = {}
-        for i, t in docs:
-            lines = t.split('\n')
-            kept = [ln for ln in lines if ln not in hot]
-            out[i] = (len(kept), len(lines) - len(kept), '\n'.join(kept))
-        return out
-
-    for seed in (7, 23, 99):
-        rng = random.Random(seed)
-        vocab = [f'line {w}' for w in 'abcdefgh']   # small: forces dups
-        docs = [(i, '\n'.join(rng.choice(vocab)
-                              for _ in range(rng.randint(1, 6))))
-                for i in range(rng.randint(5, 15))]
-        want = py_line_dedup(docs)
-        df = spark.createDataFrame(docs, 'doc_id long, text string')
-        got = {r['doc_id']: (r['n_kept'], r['n_removed'], r['cleaned_text'])
-               for r in line_dedup(df.repartition(3)).collect()}
-        assert got == want, seed
-
-
-def test_substring_duplication_known_values(spark):
-    from pdf_ai_mapper_spark.operators.dedup import (
-        substring_duplication_stats)
-    # doc 1: 10 tokens with its 4-token prefix repeated at the end;
-    # doc 2: contains doc 1's prefix; doc 3: all unique; doc 4: short
-    docs = [
-        (1, 'a b c d e f a b c d'),
-        (2, 'x y a b c d z w q r'),
-        (3, 'u1 u2 u3 u4 u5 u6 u7'),
-        (4, 'too short'),
-    ]
-    df = spark.createDataFrame(docs, 'doc_id long, text string')
-    got = {r['doc_id']: r for r in
-           substring_duplication_stats(df, k=4).collect()}
-    # doc1 windows (7): abcd bcde cdef defa efab fabc abcd
-    #   -> 'a b c d' occurs 2x in doc1 + 1x in doc2 -> dup
-    assert got[1]['n_windows'] == 7 and got[1]['n_dup_windows'] == 2
-    # doc2 windows (7): xy ab / y a b c / a b c d / b c d z / ...
-    assert got[2]['n_windows'] == 7 and got[2]['n_dup_windows'] == 1
-    assert got[3]['n_windows'] == 4 and got[3]['n_dup_windows'] == 0
-    assert got[4]['n_windows'] == 0 and got[4]['dup_frac'] == 0.0
-
-
-def test_substring_duplication_detects_copied_span(spark):
-    from pdf_ai_mapper_spark.operators.dedup import (
-        substring_duplication_stats)
-    span = ' '.join(f's{i}' for i in range(20))
-    docs = [(1, f'intro words here {span} outro'),
-            (2, f'other page {span} different tail'),
-            (3, 'independent content entirely ' * 5)]
-    df = spark.createDataFrame(docs, 'doc_id long, text string')
-    got = {r['doc_id']: r['dup_frac'] for r in
-           substring_duplication_stats(df, k=8).collect()}
-    assert got[1] > 0.5 and got[2] > 0.5   # the copied span dominates
-    assert got[3] > 0.5                     # self-repetition counts too
-    solo = spark.createDataFrame([(9, 'plain unique words ' + ' '.join(
-        f'w{i}' for i in range(30)))], 'doc_id long, text string')
-    assert {r['doc_id']: r['dup_frac'] for r in
-            substring_duplication_stats(solo, k=8).collect()}[9] == 0.0
-
-
-def test_line_dedup_metachar_separator_is_literal(spark):
-    """sep is a LITERAL string, not a Java regex (ADVICE r4): F.split
-    must be fed the \\Q-quoted form so a '.' separator splits on dots,
-    not on every character."""
-    from pdf_ai_mapper_spark.operators.dedup import line_dedup
-    docs = [
-        (1, 'boiler.unique one.boiler'),
-        (2, 'boiler.unique two'),
-        (3, 'solo text here'),
-    ]
-    df = spark.createDataFrame(docs, 'doc_id long, text string')
-    got = {r['doc_id']: r for r in
-           line_dedup(df, min_df=2, sep='.').collect()}
-    assert got[1]['cleaned_text'] == 'unique one'
-    assert got[1]['n_kept'] == 1 and got[1]['n_removed'] == 2
-    assert got[2]['cleaned_text'] == 'unique two'
-    assert got[3]['cleaned_text'] == 'solo text here'
-
-
-def _para(words):
-    return ' '.join(words)
-
-
-def test_paragraph_rollup_flags_cross_doc_only(spark):
-    """A paragraph shared across two docs marks BOTH docs; a paragraph
-    repeated inside ONE doc does not (cross-doc semantics — in-doc
-    repetition is substring_duplication's signal)."""
-    from pdf_ai_mapper_spark.operators.dedup import (
-        paragraph_neardup_rollup, release)
-    shared = _para([f'alpha{i}' for i in range(12)])
-    selfrep = _para([f'beta{i}' for i in range(12)])
-    docs = [
-        (1, shared + '\n\n' + _para(['solo1'] * 8)),
-        (2, shared + '\n\n' + _para(['solo2'] * 8)),
-        (3, selfrep + '\n\n' + selfrep),            # in-doc repeat only
-        (4, _para([f'gamma{i}' for i in range(12)])),
-        (5, 'short'),                                # under min_tokens
-    ]
-    df = spark.createDataFrame(docs, 'doc_id long, text string')
-    out = paragraph_neardup_rollup(df, jaccard_threshold=0.8)
-    got = {r['doc_id']: r for r in out.collect()}
-    release(out)
-    assert got[1]['n_paras'] == 2 and got[1]['n_dup_paras'] == 1
-    assert got[2]['n_paras'] == 2 and got[2]['n_dup_paras'] == 1
-    assert got[1]['dup_para_frac'] == 0.5
-    assert got[3]['n_dup_paras'] == 0      # same-doc pair excluded
-    assert got[3]['n_paras'] == 2
-    assert got[4]['n_dup_paras'] == 0
-    assert got[5]['n_paras'] == 0 and got[5]['dup_para_frac'] == 0.0
-
-
-def test_paragraph_key_roundtrip(spark):
-    from pdf_ai_mapper_spark.operators.dedup import (
-        PARA_SHIFT, para_doc, para_idx, para_key)
-    df = spark.createDataFrame(
-        [(d, i) for d in (0, 1, 7, 12345, (1 << 42))
-         for i in (0, 1, 99, (1 << PARA_SHIFT) - 1)],
-        'doc long, idx long')
-    out = df.select(
-        'doc', 'idx',
-        para_doc(para_key(F.col('doc'), F.col('idx'))).alias('d2'),
-        para_idx(para_key(F.col('doc'), F.col('idx'))).alias('i2'))
-    assert out.filter((F.col('doc') != F.col('d2'))
-                      | (F.col('idx') != F.col('i2'))).count() == 0
-
-
-def test_paragraph_pairs_precision_recall_vs_exact(spark):
-    """Mirror of the doc-level P/R pin: paragraph LSH pairs vs EXACT
-    paragraph n-gram Jaccard over the same exploded paragraphs."""
-    import random
-
-    from pdf_ai_mapper_spark.operators.dedup import (
-        explode_paragraphs, ngram_jaccard_pairs, para_key,
-        paragraph_neardup_pairs, release)
-    rng = random.Random(11)
-    vocab = [f'w{i}' for i in range(60)]
-    base = [rng.choice(vocab) for _ in range(20)]
-    docs = []
-    for d in range(30):
-        paras = []
-        for p in range(3):
-            if d % 6 == 0 and p == 0:
-                paras.append(' '.join(base))           # exact copy: J=1
-            elif d % 3 == 0 and p == 0:
-                # near-copy (1 token changed): J≈0.7 — prober for the
-                # precision side, below the 0.8 recall anchor
-                mut = list(base)
-                mut[rng.randrange(len(mut))] = rng.choice(vocab)
-                paras.append(' '.join(mut))
-            else:
-                paras.append(' '.join(rng.choice(vocab)
-                                      for _ in range(20)))
-        docs.append((d, '\n\n'.join(paras)))
-    df = spark.createDataFrame(docs, 'doc_id long, text string')
-
-    paras = explode_paragraphs(df)
-    ptext = paras.withColumnRenamed('para', 'text')
-
-    def pset(q):
-        s = {(r['id_a'], r['id_b']) for r in q.collect()}
-        release(q)
-        return s
-
-    # same anchors as the doc-level pin (q_neardup_pr): precision vs
-    # the J>=0.5 exact set, recall vs the J>=0.8 exact set
-    exact_lo = pset(ngram_jaccard_pairs(ptext, 'pid', 'text',
-                                        k=3, threshold=0.5))
-    exact_hi = pset(ngram_jaccard_pairs(ptext, 'pid', 'text',
-                                        k=3, threshold=0.8))
-    got_pairs = paragraph_neardup_pairs(df, jaccard_threshold=0.8)
-    rows = got_pairs.collect()
-    release(got_pairs)
-    got = set()
-    shift = 1 << 20
-    for r in rows:
-        got.add((r['doc_a'] * shift + r['para_a'],
-                 r['doc_b'] * shift + r['para_b']))
-    assert got, 'LSH found no paragraph pairs'
-    assert exact_hi, 'fixture planted no J>=0.8 pairs'
-    prec = len(got & exact_lo) / len(got)
-    assert prec >= 0.9, (prec, len(got))
-    rec = len(got & exact_hi) / len(exact_hi)
-    assert rec >= 0.8, rec
 
 
 def test_bigram_lm_score_matches_python_reference(spark):
@@ -901,36 +460,3 @@ def test_with_nfc_semantics(spark):
     assert {r['doc_id']: r['nfc_text'] for r in again.collect()} == got
 
 
-class TestLineDedupWithinDoc:
-    """line_dedup_within_doc (round 7): keep-first per non-empty line
-    WITHIN each doc, empties always kept; zero-shuffle in-row HOF. The
-    q_line_dedup_within oracle proves in-row ≡ exploded-window; these
-    pin row-level edges and the no-Exchange plan."""
-
-    def test_keep_first_and_empties(self, spark):
-        from pdf_ai_mapper_spark.operators.dedup import line_dedup_within_doc
-        df = spark.createDataFrame(
-            [(1, 'a\nb\na\n\nb\n\nc'), (2, 'x'), (3, '')],
-            'doc_id long, text string')
-        got = {r['doc_id']: r for r in
-               line_dedup_within_doc(df).collect()}
-        assert got[1]['cleaned_text'] == 'a\nb\n\n\nc'
-        assert (got[1]['n_kept'], got[1]['n_removed']) == (5, 2)
-        assert got[2]['cleaned_text'] == 'x'
-        # ''.split -> [''] = one empty line, kept
-        assert (got[3]['n_kept'], got[3]['n_removed']) == (1, 0)
-
-    def test_custom_separator_with_metachar(self, spark):
-        from pdf_ai_mapper_spark.operators.dedup import line_dedup_within_doc
-        df = spark.createDataFrame([(1, 'a|b|a|b')],
-                                   'doc_id long, text string')
-        r = line_dedup_within_doc(df, sep='|').collect()[0]
-        assert r['cleaned_text'] == 'a|b'
-
-    def test_zero_shuffle_plan(self, spark):
-        from pdf_ai_mapper_spark.operators.dedup import line_dedup_within_doc
-        df = spark.createDataFrame([(1, 'a\nb')], 'doc_id long, text string')
-        plan = (line_dedup_within_doc(df)
-                ._jdf.queryExecution().executedPlan().toString())
-        assert 'Exchange' not in plan
-        assert 'ArrowEvalPython' not in plan

@@ -18,16 +18,20 @@ the test, and so does deleting one of these without dropping it here.
 
 The same boundary holds one level down, for the public top-level
 functions and classes of the reached modules (``NOT_YET_DELETED``
-modules aside): each name must be referenced from a reached module or
-a root script, not only from ``queries.py`` or the tests, unless
-``CALLED_ONLY_FROM_CATALOG_OR_TESTS`` lists it. The match
-is by name alone (a bare name, an attribute or a ``from`` import),
-so it over-counts what is reached: any same-named reference anywhere
-in the engine keeps a function in. ``CALLED_ONLY_FROM_CATALOG_OR_TESTS``
-records the names that no engine source references today. It is a
-record of fact, not a to-do list, and it is exact: a new public
-function that no engine path references fails the test, and so does a
-listed name that is gone or now referenced.
+modules aside): each name must be live, not only referenced from
+``queries.py`` or the tests, unless ``CALLED_ONLY_FROM_CATALOG_OR_TESTS``
+lists it. Liveness is transitive. The root scripts and the
+module-level code of the reached modules are live; so is every
+top-level function or class of a reached module whose name a live
+body references, and the walk follows references out of its body in
+turn. A name that only another unreached function references is not
+live. The match is by name alone (a bare name, an attribute or a
+``from`` import), so it over-counts what is reached: any same-named
+live reference keeps a function in. ``CALLED_ONLY_FROM_CATALOG_OR_TESTS``
+records the names that are not live today. It is a record of fact,
+not a to-do list, and it is exact: a new public function that no
+engine path reaches fails the test, and so does a listed name that is
+gone or now live.
 """
 
 from __future__ import annotations
@@ -58,18 +62,10 @@ CALLED_ONLY_FROM_CATALOG_OR_TESTS = {
     'operators.categorize.save_models',
     'operators.categorize.with_topic_type',
     'operators.dedup.dedup_exact',
-    'operators.dedup.line_dedup',
-    'operators.dedup.line_dedup_within_doc',
     'operators.dedup.minhash_index_update',
-    'operators.dedup.ngram_jaccard_pairs',
-    'operators.dedup.paragraph_neardup_rollup',
-    'operators.dedup.remove_duplicated_substrings',
-    'operators.dedup.simhash_near_pairs',
-    'operators.dedup.substring_duplication_stats',
     'operators.extraction.size_ok_col',
     'operators.extraction.with_html_meta',
     'operators.search.structured_category_filter',
-    'pipeline.with_status',
     'sources.warc.warc_member_ranges',
 }
 
@@ -141,39 +137,63 @@ def test_catalog_imports_only_engine_modules():
         f'queries.py imports modules no engine path reaches: {outside}')
 
 
-def _referenced_names(path: Path) -> set[str]:
-    """Every name ``path`` references: bare names, attribute names and
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _referenced_names(*trees: ast.AST) -> set[str]:
+    """Every name the trees reference: bare names, attribute names and
     ``from`` import aliases."""
     found = set()
-    for node in ast.walk(ast.parse(path.read_text(), str(path))):
-        if isinstance(node, ast.Name):
-            found.add(node.id)
-        elif isinstance(node, ast.Attribute):
-            found.add(node.attr)
-        elif isinstance(node, ast.ImportFrom):
-            found.update(a.name for a in node.names)
+    for tree in trees:
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Name):
+                found.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                found.add(node.attr)
+            elif isinstance(node, ast.ImportFrom):
+                found.update(a.name for a in node.names)
     return found
+
+
+def _live_names(reached: set[str]) -> set[str]:
+    """Names referenced from the root scripts, the module-level code of
+    the reached modules, and, transitively, the bodies of the top-level
+    defs those references make live."""
+    live = set()
+    for r in ROOTS:
+        if isinstance(r, Path):
+            live |= _referenced_names(ast.parse(r.read_text(), str(r)))
+    defs: dict[str, list[ast.AST]] = {}
+    for mod in reached:
+        for node in ast.parse(MODULES[mod].read_text()).body:
+            if isinstance(node, _DEFS):
+                defs.setdefault(node.name, []).append(node)
+            else:
+                live |= _referenced_names(node)
+    todo = list(live & defs.keys())
+    while todo:
+        for node in defs.pop(todo.pop(), ()):
+            new = _referenced_names(node) - live
+            live |= new
+            todo.extend(new & defs.keys())
+    return live
 
 
 def test_every_public_function_is_referenced_from_an_engine_path():
     reached = _reachable()
-    referenced = set()
-    for path in ([MODULES[m] for m in reached]
-                 + [r for r in ROOTS if isinstance(r, Path)]):
-        referenced |= _referenced_names(path)
+    live = _live_names(reached)
     unreferenced = set()
     for mod in reached - NOT_YET_DELETED:
         for node in ast.parse(MODULES[mod].read_text()).body:
-            if (isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
-                                  ast.ClassDef))
+            if (isinstance(node, _DEFS)
                     and not node.name.startswith('_')
-                    and node.name not in referenced):
+                    and node.name not in live):
                 unreferenced.add(
                     f'{mod.removeprefix(PKG + ".")}.{node.name}')
     assert not unreferenced - CALLED_ONLY_FROM_CATALOG_OR_TESTS, (
-        'public names no engine path references: '
+        'public names no engine path reaches: '
         f'{sorted(unreferenced - CALLED_ONLY_FROM_CATALOG_OR_TESTS)}')
     assert not CALLED_ONLY_FROM_CATALOG_OR_TESTS - unreferenced, (
         'CALLED_ONLY_FROM_CATALOG_OR_TESTS names functions that are gone '
-        'or now referenced: '
+        'or now reached: '
         f'{sorted(CALLED_ONLY_FROM_CATALOG_OR_TESTS - unreferenced)}')

@@ -664,25 +664,3 @@ def test_upsert_empty_batch_is_noop(spark, outdir):
                              order_col='crawl_ts', n_buckets=8)
     assert stats == {'buckets_rewritten': 0, 'rows_written': 0}
     assert _listing(outdir) == before
-
-
-def test_status_projection(spark):
-    from pdf_ai_mapper_spark.pipeline import transform, with_status
-    from pdf_ai_mapper_spark.fixtures.webpages import web_pages_df
-    from pdf_ai_mapper_spark.config import EngineConfig
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    cfg = EngineConfig(shuffle_partitions=4)
-    out = transform(web_pages_df(spark, 24, 2), 't', cfg)
-    st1 = with_status(out)
-    assert {r['status'] for r in st1.select('status').distinct().collect()} == {'processing'}
-
-    cats = out.withColumn('categories', F.array(F.lit('Topic: x')))
-    st2 = with_status(cats)
-    assert {r['status'] for r in st2.select('status').distinct().collect()} == {'processed'}
-
-    err = spark.createDataFrame(pd.DataFrame(
-        {'url': ['u'], 'is_error': [True],
-         'categories': [['Topic: x']]}))
-    assert with_status(err).collect()[0]['status'] == 'error'

@@ -133,50 +133,6 @@ def _final_ids(formatted: str) -> set[str]:
     return ids
 
 
-def test_substring_removal_text_never_in_exchange(spark, sf):
-    """remove_duplicated_substrings (round 6): window strings hash
-    in-row — no Exchange may carry the text column or any window
-    string; shuffles are (id, pos/start, hash) longs plus the rebuilt
-    aggregate.
-
-    Exempt: the RoundRobinPartitioning spread (ensure_min_parallelism)
-    — it fires ONLY on single-split inputs (this test's one-row-group
-    parquet file), where the whole corpus lives on one core anyway; at
-    scale the guard is a no-op, so text still never rides a KEY
-    exchange."""
-    from pdf_ai_mapper_spark.operators.dedup import (
-        remove_duplicated_substrings)
-    docs = spark.read.parquet(f'{sf}/documents.parquet') \
-        .select('doc_id', 'text')
-    import re
-
-    out = remove_duplicated_substrings(docs, k=8)
-    out.collect()
-    fm = _formatted(docs.sparkSession, out)
-    for dep in getattr(out, '_persisted_deps', ()):
-        dep.unpersist()
-    # Check the exchanges' INPUT COLUMN lists from the formatted
-    # details (the toString line only ever showed partition KEYS —
-    # round-robin exchanges have none, so the old string check could
-    # not see what they carried; ADVICE r7). Scoped exemption: a
-    # ROUND-ROBIN exchange may carry raw text — that is the
-    # ensure_min_parallelism spread, which sits on the scan before any
-    # window column exists — but no exchange of any kind may carry a
-    # window array/string (__w*), and keyed exchanges never carry text.
-    final_ids = _final_ids(fm)
-    n_exchanges = 0
-    for sid, name, section in _sections(fm):
-        if sid not in final_ids or name != 'Exchange':
-            continue
-        n_exchanges += 1
-        inputs = ' '.join(ln for ln in section.splitlines()
-                          if ln.startswith('Input'))
-        assert '__w' not in inputs, section   # window arrays never shuffle
-        if 'RoundRobinPartitioning' not in section:
-            assert 'text#' not in inputs, section
-    assert n_exchanges >= 2   # the audit actually saw the shuffles
-
-
 def test_gopher_repetition_text_never_in_exchange(spark, sf):
     """gopher_repetition (round 6): one exploded union of narrow
     (id, kind, key) rows — the document text column itself must not
@@ -192,9 +148,13 @@ def test_gopher_repetition_text_never_in_exchange(spark, sf):
     fm = _formatted(docs.sparkSession, out)
     for dep in getattr(out, '_persisted_deps', ()):
         dep.unpersist()
-    # input-column audit, scoped as in
-    # test_substring_removal_text_never_in_exchange: only the
-    # round-robin spread may carry text
+    # Check the exchanges' INPUT COLUMN lists from the formatted
+    # details (the toString line only shows partition KEYS, and
+    # round-robin exchanges have none; ADVICE r7). Scoped exemption: a
+    # ROUND-ROBIN exchange may carry raw text — that is the
+    # ensure_min_parallelism spread, which fires only on single-split
+    # inputs (this one-row-group parquet file) and sits on the scan;
+    # keyed exchanges never carry text.
     final_ids = _final_ids(fm)
     n_exchanges = 0
     for sid, name, section in _sections(fm):
@@ -239,10 +199,8 @@ def test_release_contract_no_persist_leaks(spark, sf):
     # checkpoint-class RDDs behind (GC-cleaned) — assert no GROWTH
     # beyond the baseline, not absolute zero
     baseline = _ids()
-    for name in ('q_substring_removal', 'q_substring_keep_first',
-                 'q_gopher_repetition', 'q_gopher_dup_ngrams',
-                 'q_ngram_jaccard_exact', 'q_minhash_near_dups',
-                 'q_simhash_near_dups'):
+    for name in ('q_gopher_repetition', 'q_gopher_dup_ngrams',
+                 'q_minhash_near_dups'):
         cat[name](spark, sf).collect()
         new = _ids() - baseline
         assert not new, (name, new)
