@@ -46,11 +46,11 @@ def dedup_exact(df: DataFrame,
 
 def release(df: DataFrame) -> None:
     """Unpersist the cached tables backing a DataFrame returned by
-    ``minhash_lsh_pairs``, ``connected_components`` or a textstats
-    window op. Call once the result has been materialized
-    (collect/write) — repeated calls in a long-lived session (bench
-    loops, repeated queries) otherwise accumulate MEMORY_AND_DISK
-    tables."""
+    ``minhash_lsh_pairs``, ``connected_components`` or
+    ``textstats.gopher_repetition``. Call once the result has been
+    materialized (collect/write) — repeated calls in a long-lived
+    session (bench loops, repeated queries) otherwise accumulate
+    MEMORY_AND_DISK tables."""
     for dep in getattr(df, '_persisted_deps', ()):
         dep.unpersist()
 
@@ -463,26 +463,3 @@ def minhash_index_update(spark, new_df: DataFrame, index_path: str,
     sig.unpersist()
     band_rows.unpersist()
     return result
-
-
-# --------------------------------------------------------- window hashing
-
-def _window_hash(hash_bits: int):
-    """In-row window-content hash for textstats' n-gram window ops.
-
-    64: one xxhash64 long — fine to the birthday bound (~50% collision
-    odds near 4x10^9 DISTINCT windows; a k=8 sweep over 10^12 tokens is
-    ~10^12 keys, far past it). 128: a struct of TWO xxhash64s over
-    (window) and (window, salt) — independent 64-bit halves, so the
-    bound moves to ~2^64 distinct windows while the shuffle key stays
-    two longs (16 bytes), no strings ever ride an exchange. Struct keys
-    group/join natively in Catalyst."""
-    if hash_bits == 64:
-        return lambda w: F.xxhash64(w)
-    if hash_bits == 128:
-        # second half re-keys the input with a constant salt column —
-        # xxhash64's seed is fixed in SQL, so vary the INPUT instead
-        return lambda w: F.struct(
-            F.xxhash64(w).alias('h1'),
-            F.xxhash64(w, F.lit(-640531527)).alias('h2'))
-    raise ValueError(f'hash_bits must be 64 or 128, got {hash_bits!r}')

@@ -1,9 +1,11 @@
-"""Text-analysis operators for a training-data pipeline: language ID,
-quality scoring, token counting, document fingerprinting.
+"""Text-analysis operators for a training-data pipeline: language and
+script ID, quality scoring, NFC normalization, PII redaction, Gopher
+repetition filters, chunking, fingerprinting, TF-IDF terms,
+decontamination and hash splits.
 
-All four are pure native-Catalyst column expressions — no Python in the
-hot path, fully whole-stage-codegen'd, and each has an exact ANSI-SQL
-equivalent for the DuckDB oracle.
+All but ``with_nfc`` (an Arrow UDF over ``unicodedata``) are native
+Catalyst expressions — no Python in the hot path — and each has an
+exact SQL equivalent for the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -201,82 +203,6 @@ def with_quality(df: DataFrame, text_col: str = 'text') -> DataFrame:
             .drop('__q_toks'))
 
 
-def with_token_counts(df: DataFrame, text_col: str = 'text') -> DataFrame:
-    """Whitespace tokens + a BPE-ish subword estimate: count of
-    alternating letter/digit/punct runs (regexp_count), a standard
-    cheap proxy for tokenizer token counts. For budgets that must be
-    tokenizer-FAITHFUL, use `with_exact_token_counts` (real merge-loop
-    BPE; this one stays the cheap native fallback)."""
-    t = F.col(text_col)
-    return (df
-            .withColumn('ws_tokens', F.size(F.split(F.trim(t), r'\s+')))
-            .withColumn('bpe_ish_tokens',
-                        F.regexp_count(t, F.lit(r'[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9\s]'))))
-
-
-def with_exact_token_counts(df: DataFrame, text_col: str = 'text',
-                            out_col: str = 'bpe_tokens') -> DataFrame:
-    """EXACT BPE token counts (kernels/bpe.py: the published merge
-    loop over the pinned in-repo table) — chunking and quota stages
-    key on token budgets at training time, and the regex estimate in
-    `with_token_counts` drifts from any real tokenizer.
-
-    Arrow-batched pandas UDF (the merge loop is genuinely iterative —
-    not expressible as a column expression); the kernel's per-word
-    lru_cache persists across batches inside each Python worker, so
-    Zipf-headed corpora amortize to a dict lookup per word. One
-    ArrowEvalPython stage, no shuffle."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
-    from ..kernels.bpe import bpe_token_count
-    from .skew import SPREAD_MIN_BYTES_PER_PART, ensure_min_parallelism
-
-    # spread as in with_input_ids: the merge loop dwarfs the one-time
-    # repartition of a pathological single-split scan (no-op
-    # otherwise, size-gated)
-    df = ensure_min_parallelism(
-        df, min_bytes_per_part=SPREAD_MIN_BYTES_PER_PART)
-
-    @pandas_udf(LongType())
-    def _udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            yield s.map(lambda t: bpe_token_count(t)
-                        if t is not None else None)
-    return df.withColumn(out_col, _udf(F.col(text_col)))
-
-
-def tokenizer_report(df: DataFrame, text_col: str = 'text',
-                     group_col: str = 'lang') -> DataFrame:
-    """Tokenizer evaluation report (round 6) — the two numbers every
-    tokenizer paper ships, per group: FERTILITY (BPE tokens per
-    whitespace word — how many subwords the tokenizer splits a word
-    into; 1.0 = every word is one token) and COMPRESSION (characters
-    per BPE token — how much text one token buys). Training budgets,
-    mixture weights and per-language cost all key on these; a
-    tokenizer trained on English text shows its bias as high fertility
-    on everything else.
-
-    Shape: ONE ArrowEvalPython pass (the exact merge-loop counter) +
-    one narrow aggregate; ratios are single IEEE divisions of exact
-    BIGINT sums, rounded 6 — hash-stable under any partitioning."""
-    d = with_exact_token_counts(df, text_col)
-    ws = F.size(F.split(F.trim(F.col(text_col)), r'\s+'))
-    return (d.groupBy(group_col)
-            .agg(F.count('*').cast('long').alias('n_docs'),
-                 F.sum(ws).cast('long').alias('ws_words'),
-                 F.sum('bpe_tokens').cast('long').alias('bpe_tokens'),
-                 F.sum(F.length(text_col)).cast('long').alias('chars'))
-            .withColumn('fertility',
-                        F.round(F.col('bpe_tokens')
-                                / F.greatest(F.col('ws_words'),
-                                             F.lit(1)), 6))
-            .withColumn('compression',
-                        F.round(F.col('chars')
-                                / F.greatest(F.col('bpe_tokens'),
-                                             F.lit(1)), 6)))
-
-
 def with_nfc(df: DataFrame, text_col: str = 'text',
              out_col: str = 'nfc_text') -> DataFrame:
     """Unicode NFC normalization (round 6) — the standard pre-hash
@@ -298,66 +224,6 @@ def with_nfc(df: DataFrame, text_col: str = 'text',
         for s in batches:
             yield s.map(lambda t: None if t is None
                         else (t if t.isascii() else norm('NFC', t)))
-    return df.withColumn(out_col, _udf(F.col(text_col)))
-
-
-def learn_bpe_merges(df: DataFrame, text_col: str = 'text',
-                     num_merges: int = 40, min_word_freq: int = 1,
-                     max_vocab: int = 1_000_000
-                     ) -> 'tuple[tuple[str, str], ...]':
-    """Learn a BPE merge table FROM the corpus (round 6 — the stage
-    before counting/encoding: a real pipeline trains its tokenizer on
-    the data it curates). The published algorithm needs only word
-    FREQUENCIES, so the distributed part is ONE groupBy(word) count —
-    100 TB collapses map-side to its Zipf vocabulary — and the merge
-    loop runs driver-side over the collected dict exactly as published
-    (kernels/bpe.learn_merges, ties pinned). ``max_vocab`` caps the
-    driver collect at the frequency head (deterministic order:
-    count desc, word asc); the tail it drops are hapax words whose
-    pair mass is negligible by Zipf. The result drops straight into
-    ``make_ranks``/``make_vocab`` — learn → count → encode → pack is
-    now end-to-end in-repo."""
-    from ..kernels.bpe import learn_merges
-    words = F.filter(F.split(F.lower(F.col(text_col)), r'\s+'),
-                     lambda x: F.length(x) > 0)
-    # explode_outer + isNotNull: keep the inferred non-empty filter
-    # from re-tokenizing rows at the scan (round 8)
-    rows = (df.select(F.explode_outer(words).alias('w'))
-            .filter(F.col('w').isNotNull())
-            .groupBy('w').agg(F.count('*').alias('c'))
-            .filter(F.col('c') >= min_word_freq)
-            .orderBy(F.col('c').desc(), F.col('w').asc())
-            .limit(max_vocab)
-            .collect())
-    return learn_merges({r['w']: int(r['c']) for r in rows}, num_merges)
-
-
-def with_input_ids(df: DataFrame, text_col: str = 'text',
-                   out_col: str = 'input_ids') -> DataFrame:
-    """EXACT BPE token-ID arrays (kernels/bpe.py `bpe_encode_ids`,
-    round 6 — VERDICT r5 #4): the training exporter needs the ids
-    themselves, not just counts, so packed sequences can ship as
-    loader-ready ``input_ids``. Same execution shape as
-    `with_exact_token_counts`: ONE ArrowEvalPython stage, per-word
-    lru_cache warm across batches, no shuffle. Invariant:
-    ``size(input_ids) == bpe_tokens`` for every row (pytest-pinned)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, LongType
-
-    from ..kernels.bpe import bpe_encode_ids
-    from .skew import SPREAD_MIN_BYTES_PER_PART, ensure_min_parallelism
-
-    # the merge loop is the heaviest per-row kernel in the repo —
-    # spread a too-few-split scan so the ArrowEvalPython stage uses
-    # the cluster (round 8; no-op on multi-split inputs, size-gated)
-    df = ensure_min_parallelism(
-        df, min_bytes_per_part=SPREAD_MIN_BYTES_PER_PART)
-
-    @pandas_udf(ArrayType(LongType()))
-    def _udf(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for s in batches:
-            yield s.map(lambda t: bpe_encode_ids(t)
-                        if t is not None else None)
     return df.withColumn(out_col, _udf(F.col(text_col)))
 
 
@@ -537,96 +403,6 @@ def gopher_repetition(df: DataFrame, id_col: str = 'doc_id',
     return out
 
 
-def gopher_dup_ngrams(df: DataFrame, id_col: str = 'doc_id',
-                      text_col: str = 'text',
-                      ns: 'tuple[int, ...]' = (5, 6, 7, 8, 9, 10),
-                      hash_bits: int = 64) -> DataFrame:
-    """The other half of Gopher's repetition table (Rae et al. 2021,
-    round 6): per document and per n in ``ns``, the fraction of word
-    characters covered by words belonging to at least one n-gram that
-    occurs >= 2 times WITHIN the document (union of spans — the
-    duplicated-n-gram character fraction; ``gopher_repetition`` covers
-    the top-n-gram and line/paragraph halves). Output columns
-    ``dup_{n}gram_char_frac``.
-
-    Scale shape: positional windows hash in-row (xxhash64 — window
-    strings never leave the row); one union of narrow
-    (id, n, start, hash) rows, a within-doc duplicate count, span
-    expansion to (id, n, pos) longs, a char-weight join against the
-    (id, pos, len) word relation, and a per-doc pivot. All shuffles
-    carry longs only. The duplicate test is WITHIN-document, so the
-    64-bit hash is already safe to ~10^9-window DOCUMENTS; pass
-    ``hash_bits=128`` (struct of two xxhash64 longs, see
-    ``dedup._window_hash``) for pathological inputs."""
-    from functools import reduce
-
-    from .dedup import _window_hash
-    hfun = _window_hash(hash_bits)
-
-    from pyspark.storagelevel import StorageLevel
-    from .skew import ensure_min_parallelism
-    df = ensure_min_parallelism(df)  # cf. gopher_repetition
-
-    t = F.col(text_col)
-    base = df.select(
-        F.col(id_col).alias('__id'),
-        F.filter(F.split(F.lower(t), r'\s+'),
-                 lambda x: F.length(x) > 0).alias('__w'))
-    # persisted: len(ns) window branches + the word-length relation +
-    # the totals join all read this array (see gopher_repetition).
-    # Callers release() the result.
-    base = base.withColumn(
-        '__chars', F.aggregate('__w', F.lit(0).cast('long'),
-                               lambda a, x: a + F.length(x))
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    wl = (base.select('__id', F.posexplode('__w').alias('__pos', '__tok'))
-          .select('__id', '__pos',
-                  F.length('__tok').cast('long').alias('__len')))
-    wins = []
-    for k in ns:
-        n = F.size('__w')
-        m = n - F.lit(k - 1)
-        parts = [F.slice('__w', j + 1, F.greatest(m, F.lit(0)))
-                 for j in range(k)]
-        g = parts[0]
-        for p in parts[1:]:
-            g = F.zip_with(g, p, lambda a, b: F.concat(a, F.lit(' '), b))
-        # posexplode_OUTER + isNotNull: see gopher_repetition — the
-        # inferred non-empty filter re-ran the zip_with+hash chain
-        wins.append(base.select(
-            '__id', F.lit(k).alias('__n'),
-            F.posexplode_outer(F.when(n >= k, F.transform(g, hfun))
-                               .otherwise(F.array()))
-            .alias('__start', '__h'))
-            .filter(F.col('__h').isNotNull()))
-    ex = reduce(DataFrame.unionByName, wins)
-    dup = (ex.groupBy('__id', '__n', '__h')
-           .agg(F.count('*').alias('__c'))
-           .filter(F.col('__c') >= 2).select('__id', '__n', '__h'))
-    cov = (ex.join(dup, on=['__id', '__n', '__h'], how='left_semi')
-           .select('__id', '__n',
-                   F.explode(F.sequence(
-                       F.col('__start'),
-                       F.col('__start') + F.col('__n') - 1))
-                   .alias('__pos'))
-           .distinct())
-    covchars = (cov.join(wl, on=['__id', '__pos'])
-                .groupBy('__id', '__n')
-                .agg(F.sum('__len').alias('__cc')))
-    per = covchars.groupBy('__id').agg(
-        *[F.max(F.when(F.col('__n') == k, F.col('__cc')))
-          .alias(f'__c{k}') for k in ns])
-    out = (base.select('__id', '__chars')
-           .join(per, on='__id', how='left')
-           .select(F.col('__id').alias(id_col),
-                   *[F.round(F.coalesce(F.col(f'__c{k}'), F.lit(0))
-                             / F.greatest(F.col('__chars'), F.lit(1)),
-                             6).alias(f'dup_{k}gram_char_frac')
-                     for k in ns]))
-    out._persisted_deps = [base]
-    return out
-
-
 def source_quality_gate(df: DataFrame, group_col: str = 'source',
                         text_col: str = 'text',
                         min_avg_alpha: float = 0.6) -> DataFrame:
@@ -781,40 +557,6 @@ def decontamination_overlap(train_df: DataFrame, bench_df: DataFrame,
             .agg(F.count('*').cast('long').alias('n_overlap')))
 
 
-def unigram_logprob(df: DataFrame, id_col: str, text_col: str,
-                    alpha: float = 0.5) -> DataFrame:
-    """Per-document mean unigram log-probability under the corpus's own
-    empirical term distribution with Lidstone (additive-α) smoothing —
-    the cheap LM-quality proxy: gibberish and boilerplate-stuffed docs
-    score far below fluent text. (CCNet-style pipelines use a trained
-    KenLM perplexity for this; at corpus bootstrap, the self-unigram
-    score is the standard first pass and needs no external model.)
-
-        p(t) = (tf(t) + α) / (N + α·V)
-        score(doc) = mean over its tokens of ln p(t)
-
-    Shape: one explode, one narrow (term, tf) aggregate, corpus totals
-    N/V as two driver literals (one tiny collect — keeps the scoring
-    expression codegen'd with no cross join), one shuffle join on term
-    (narrow rows), one per-doc aggregate. Nothing wide moves. Returns
-    (id, n_tokens, logprob) with logprob rounded to 6 places."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r'\s+'),
-                    lambda t: t != '')
-    # explode_outer + isNotNull: keep the inferred non-empty filter out
-    # of the scan (it would re-tokenize every row there — round 8)
-    ex = (df.select(id_col, F.explode_outer(toks).alias('term'))
-          .filter(F.col('term').isNotNull()))
-    tf = ex.groupBy('term').agg(F.count('*').alias('tf'))
-    totals = tf.agg(F.sum('tf').alias('n'), F.count('*').alias('v')).collect()[0]
-    n_tokens, vocab = int(totals['n'] or 0), int(totals['v'] or 0)
-    denom = float(n_tokens) + alpha * float(vocab)
-    logp = F.log((F.col('tf') + F.lit(alpha)) / F.lit(denom))
-    return (ex.join(tf, on='term')
-            .groupBy(id_col)
-            .agg(F.count('*').cast('long').alias('n_tokens'),
-                 F.round(F.avg(logp), 6).alias('logprob')))
-
-
 def hash_split(df: DataFrame, key_col: str,
                weights: 'dict[str, float] | None' = None,
                out_col: str = 'split') -> DataFrame:
@@ -854,239 +596,3 @@ def hash_split(df: DataFrame, key_col: str,
     expr = (expr.otherwise(F.lit(names[-1])) if expr is not None
             else F.lit(names[-1]))
     return df.withColumn(out_col, expr)
-
-
-def bigram_lm_score(df: DataFrame, id_col: str, text_col: str,
-                    lm_df: DataFrame | None = None,
-                    alpha: float = 0.5) -> DataFrame:
-    """Per-document mean bigram conditional log-probability under a
-    Lidstone-smoothed bigram LM — one rung up the CCNet ladder from
-    ``unigram_logprob`` toward the trained-KenLM perplexity filter
-    (Wenzek et al. 2020 score crawl text with an LM trained on a
-    clean reference corpus; the bigram model captures the word-order
-    signal a unigram score is blind to: shuffled or keyword-stuffed
-    text keeps its unigram score but collapses here).
-
-        p(v|u)     = (c(u,v) + α) / (c(u·) + α·V)
-        score(doc) = mean over its adjacent token pairs of ln p(v|u)
-
-    ``lm_df``: optional TRAINING corpus with the same ``text_col``
-    (the CCNet shape — LM fit on Wikipedia, applied to the crawl);
-    default is self-scored on ``df``.  Unseen bigrams/contexts fall
-    through the same formula with c=0 — no special backoff branch, so
-    the expression stays one codegen'd arithmetic chain.
-
-    Shape at scale: tokens never leave their row — bigram pairs are
-    built in-array (one ``transform`` over an index sequence) and
-    only the exploded narrow (u, v) pairs shuffle.  The bigram count
-    table is the heavy side; it shuffles on (u, v), which is exactly
-    the key the scoring join consumes, so Catalyst reuses one
-    partitioning for count + join.  V and nothing else is collected
-    (two driver literals keep the smoothing arithmetic codegen'd).
-    At 10^12 tokens, threshold the bigram table (c(u,v) ≥ 2 drops the
-    singleton long tail that dominates its size) — the α-smoothing
-    absorbs the dropped mass by design.  Docs with < 2 tokens have no
-    bigrams and are absent from the result.  Returns
-    (id, n_bigrams, bigram_logprob) with the mean rounded to 6
-    places (same exactness budget as ``unigram_logprob``: double
-    noise is ~1e-15, ten orders below the rounding grain).
-    """
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r'\s+'),
-                    lambda t: t != '')
-
-    def exploded_pairs(frame: DataFrame, keep_id: bool) -> DataFrame:
-        head = [F.col(id_col)] if keep_id else []
-        with_t = frame.select(*head, toks.alias('__t'))
-        # the >= 2 guard lives INSIDE the index expression (sequence
-        # descends when start > stop, so short docs need the guard) and
-        # the explode is OUTER + isNotNull — a plain size filter plus
-        # inner explode re-tokenized every row at the scan via filter
-        # pushdown / the inferred non-empty filter (round 8); short
-        # docs vanish through the empty array exactly as before
-        idx = F.when(F.size('__t') >= 2,
-                     F.sequence(F.lit(1), F.size('__t') - 1))             .otherwise(F.array().cast('array<int>'))
-        prs = F.transform(idx, lambda i: F.struct(
-            F.get('__t', i - 1).alias('u'), F.get('__t', i).alias('v')))
-        return (with_t.select(*([id_col] if keep_id else []),
-                              F.explode_outer(prs).alias('p'))
-                .filter(F.col('p').isNotNull())
-                .select(*([id_col] if keep_id else []), 'p.u', 'p.v'))
-
-    src = lm_df if lm_df is not None else df
-    bg = (exploded_pairs(src, keep_id=False)
-          .groupBy('u', 'v').agg(F.count('*').alias('c_uv')))
-    ctx = bg.groupBy('u').agg(F.sum('c_uv').alias('c_u'))
-    vocab = int(src.select(F.explode_outer(toks).alias('t'))
-                .agg(F.count_distinct('t')).collect()[0][0] or 0)
-    if vocab == 0:
-        return df.sparkSession.createDataFrame(
-            [], f'{id_col} long, n_bigrams long, bigram_logprob double')
-    logp = F.log(
-        (F.coalesce(F.col('c_uv'), F.lit(0)) + F.lit(float(alpha)))
-        / (F.coalesce(F.col('c_u'), F.lit(0))
-           + F.lit(float(alpha) * float(vocab))))
-    return (exploded_pairs(df, keep_id=True)
-            .join(bg, on=['u', 'v'], how='left')
-            .join(ctx, on='u', how='left')
-            .groupBy(id_col)
-            .agg(F.count('*').cast('long').alias('n_bigrams'),
-                 F.round(F.avg(logp), 6).alias('bigram_logprob')))
-
-
-def stupid_backoff_score(df: DataFrame, id_col: str, text_col: str,
-                         lm_df: DataFrame | None = None,
-                         lam: float = 0.4,
-                         alpha: float = 0.5) -> DataFrame:
-    """Per-document mean trigram log-score under STUPID BACKOFF
-    (Brants et al. 2007, "Large Language Models in Machine
-    Translation" — the smoothing DESIGNED for distributed web-scale
-    LMs: no normalization pass, no held-out tuning, just raw counts
-    and a constant backoff factor λ=0.4), round 6 — the rung above
-    ``bigram_lm_score`` on the CCNet quality ladder:
-
-        s(w3|w1w2) = c(w1w2w3)/c(w1w2)          if the trigram is seen
-                   = λ · c(w2w3)/c(w2)           else if the bigram is
-                   = λ² · (c(w3)+α)/(N+α·V)      else (Lidstone floor —
-                     the published score leaves unseen words at 0,
-                     which a LOG score cannot; the floor is pinned and
-                     mirrored by the oracle)
-
-    score(doc) = mean ln s over its trigram positions; docs with < 3
-    tokens are absent. ``lm_df`` optionally provides the training
-    corpus (fit-on-reference, score-the-crawl — the CCNet shape);
-    default self-scored.
-
-    Shape at scale: trigrams/bigrams are built in-array (tokens never
-    leave their row); each count table shuffles once on its OWN key,
-    which is exactly the key its scoring join consumes. N and V are
-    two driver literals. At 10^12 tokens threshold the trigram table
-    (c ≥ 2) — stupid backoff explicitly tolerates dropped tails, the
-    λ-path absorbs them. Returns (id, n_trigrams, sb_logscore)."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), r'\s+'),
-                    lambda t: t != '')
-
-    def grams(frame: DataFrame, n: int, names: 'list[str]',
-              keep_id: bool) -> DataFrame:
-        head = [F.col(id_col)] if keep_id else []
-        with_t = frame.select(*head, toks.alias('__t'))
-        # guard inside the index + outer explode: see exploded_pairs
-        idx = F.when(F.size('__t') >= n,
-                     F.sequence(F.lit(n - 1), F.size('__t') - 1))             .otherwise(F.array().cast('array<int>'))
-        g = F.transform(idx, lambda i: F.struct(
-            *[F.get('__t', i - (n - 1 - j)).alias(names[j])
-              for j in range(n)]))
-        return (with_t.select(*([id_col] if keep_id else []),
-                              F.explode_outer(g).alias('g'))
-                .filter(F.col('g').isNotNull())
-                .select(*([id_col] if keep_id else []), 'g.*'))
-
-    src = lm_df if lm_df is not None else df
-    tri = (grams(src, 3, ['w1', 'w2', 'w3'], False)
-           .groupBy('w1', 'w2', 'w3').agg(F.count('*').alias('c3')))
-    big = (grams(src, 2, ['u', 'v'], False)
-           .groupBy('u', 'v').agg(F.count('*').alias('c2')))
-    uni = (src.select(F.explode_outer(toks).alias('w'))
-           .filter(F.col('w').isNotNull())
-           .groupBy('w').agg(F.count('*').alias('c1')))
-    tot = uni.agg(F.sum('c1').alias('n'),
-                  F.count('*').alias('v')).collect()[0]
-    n_tok, vocab = int(tot['n'] or 0), int(tot['v'] or 0)
-    if vocab == 0:
-        return df.sparkSession.createDataFrame(
-            [], f'{id_col} long, n_trigrams long, sb_logscore double')
-
-    b12 = big.select(F.col('u').alias('w1'), F.col('v').alias('w2'),
-                     F.col('c2').alias('c12'))
-    b23 = big.select(F.col('u').alias('w2'), F.col('v').alias('w3'),
-                     F.col('c2').alias('c23'))
-    u2 = uni.select(F.col('w').alias('w2'), F.col('c1').alias('cw2'))
-    u3 = uni.select(F.col('w').alias('w3'), F.col('c1').alias('cw3'))
-    floor = ((F.coalesce(F.col('cw3'), F.lit(0)) + F.lit(float(alpha)))
-             / F.lit(float(n_tok) + float(alpha) * float(vocab)))
-    s = (F.when(F.col('c3').isNotNull(),
-                F.col('c3') / F.col('c12'))
-         .when(F.col('c23').isNotNull(),
-               F.lit(float(lam)) * F.col('c23') / F.col('cw2'))
-         # λ·λ (not λ**2): keeps the bit pattern identical to an
-         # oracle writing `0.4 * 0.4 * floor`
-         .otherwise(F.lit(float(lam)) * F.lit(float(lam)) * floor))
-    return (grams(df, 3, ['w1', 'w2', 'w3'], True)
-            .join(tri, on=['w1', 'w2', 'w3'], how='left')
-            .join(b12, on=['w1', 'w2'], how='left')
-            .join(b23, on=['w2', 'w3'], how='left')
-            .join(u2, on='w2', how='left')
-            .join(u3, on='w3', how='left')
-            .groupBy(id_col)
-            .agg(F.count('*').cast('long').alias('n_trigrams'),
-                 F.round(F.avg(F.log(s)), 6).alias('sb_logscore')))
-
-
-def ppl_buckets(df: DataFrame, id_col: str, score_col: str,
-                group_col: str | None = None,
-                labels: 'tuple[str, ...]' = ('head', 'middle', 'tail'),
-                out_col: str = 'ppl_bucket',
-                mode: str = 'exact') -> DataFrame:
-    """CCNet-style per-language perplexity bucketing (Wenzek et al.
-    2020): within each ``group_col`` (language), split documents by LM
-    quality score into equal-population tiers — CCNet's head/middle/
-    tail thirds, where 'head' is the best-scoring (lowest-perplexity)
-    slice and downstream consumers train on head(+middle) only.
-
-    ``score_col`` is a higher-is-better quality score (e.g.
-    ``unigram_logprob``/``bigram_lm_score`` output, or a negated
-    perplexity); 'head' gets the HIGHEST scores.  Deterministic:
-    within-group order is (score desc, id asc), so tied scores break
-    by id and the assignment is reproducible anywhere.
-
-    Two modes, same contract:
-
-    - ``mode='exact'``: ``ntile(len(labels))`` over a window.  Exact
-      equal-population tiers by construction (larger buckets first,
-      the standard SQL NTILE rule — DuckDB reproduces it verbatim, so
-      this mode is the oracle path).  Scale shape: the window runs
-      over a NARROW (group, score, id) projection — one hash shuffle
-      of skinny rows + a per-group sort — and survivors join back on
-      the id, so text/payload columns never ride the sort exchange.
-      A per-group sort is the honest cost of exact tiers; at 100 TB
-      per-language row counts are ~10^9-10^10 skinny rows, which a
-      range-partitioned sort handles, but prefer 'cutoff' there.
-    - ``mode='cutoff'``: per-group approximate score quantiles
-      (``percentile_approx``, one narrow aggregate), broadcast the
-      tiny (group, cutoffs) table and assign with plain comparisons —
-      no sort at all, the CCNet-paper shape (they compute cutoffs
-      once on a sample, then stream-assign).  Tier populations are
-      approximate at the cutoff boundary; tested vs 'exact' in
-      pytest, not oracle-graded.
-    """
-    if mode not in ('exact', 'cutoff'):
-        raise ValueError(f'unknown ppl_buckets mode: {mode!r}')
-    from pyspark.sql import Window
-    n = len(labels)
-    gcols = [group_col] if group_col else []
-    narrow = df.select(*dict.fromkeys([*gcols, id_col, score_col]))
-    label_arr = F.array(*[F.lit(x) for x in labels])
-    if mode == 'exact':
-        w = (Window.partitionBy(*gcols)
-             .orderBy(F.col(score_col).desc(), F.col(id_col).asc()))
-        tiered = (narrow
-                  .withColumn('__tile', F.ntile(n).over(w))
-                  .select(id_col,
-                          F.element_at(label_arr,
-                                       F.col('__tile')).alias(out_col)))
-    else:
-        probs = [i / n for i in range(1, n)]
-        agg_on = narrow.groupBy(*gcols) if gcols else narrow.groupBy()
-        cuts = agg_on.agg(F.percentile_approx(
-            score_col, probs, 10_000).alias('__cuts'))
-        joined = (narrow.join(F.broadcast(cuts), on=gcols) if gcols
-                  else narrow.crossJoin(F.broadcast(cuts)))
-        # cuts are ascending quantiles; tier i (0-based, head first)
-        # holds scores > cuts[n-1-i], walked with a when-chain
-        expr = None
-        for i, lab in enumerate(labels[:-1]):
-            cond = F.col(score_col) > F.element_at('__cuts', n - 1 - i)
-            expr = (F.when(cond, F.lit(lab)) if expr is None
-                    else expr.when(cond, F.lit(lab)))
-        expr = expr.otherwise(F.lit(labels[-1]))
-        tiered = joined.select(id_col, expr.alias(out_col))
-    return df.join(tiered, on=id_col)

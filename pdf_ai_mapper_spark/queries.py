@@ -120,45 +120,6 @@ def q_quality_scores(spark, sf_dir):
             .orderBy('source'))
 
 
-def q_token_counts(spark, sf_dir):
-    """Token counting: whitespace + BPE-ish subword estimate, corpus
-    totals per lang."""
-    d = textstats.with_token_counts(_ts(spark, sf_dir, 'documents'), 'text')
-    return (d.groupBy('lang')
-            .agg(F.sum('ws_tokens').cast('long').alias('total_ws_tokens'),
-                 F.sum('bpe_ish_tokens').cast('long').alias('total_bpe_tokens'))
-            .orderBy('lang'))
-
-
-def q_token_counts_bpe(spark, sf_dir):
-    """EXACT BPE token counting (kernels/bpe.py + textstats.
-    with_exact_token_counts, round 5): the real merge loop over the
-    pinned table, per-lang corpus totals. Oracle: per-word counts for
-    the corpus lexicon computed by tests/reference_bpe.py (the
-    independent GPT-2-loop transcription), pasted as a VALUES map —
-    any word the map misses NULL-poisons the oracle total, so lexicon
-    drift fails loudly instead of silently passing."""
-    d = textstats.with_exact_token_counts(
-        _t(spark, sf_dir, 'documents'), 'text')
-    return (d.groupBy('lang')
-            .agg(F.sum(F.size(F.split(F.trim(F.col('text')), r'\s+')))
-                 .cast('long').alias('total_ws_tokens'),
-                 F.sum('bpe_tokens').cast('long').alias('total_bpe_exact'))
-            .orderBy('lang'))
-
-
-def q_tokenizer_report(spark, sf_dir):
-    """Tokenizer fertility/compression per language
-    (textstats.tokenizer_report, round 6): exact-BPE tokens per
-    whitespace word and characters per token, from one Arrow pass +
-    one narrow aggregate. Oracle: the reference-BPE per-word count
-    map (q_token_counts_bpe's VALUES, loud on lexicon drift) + the
-    same exact-sum divisions."""
-    from .operators.textstats import tokenizer_report
-    return (tokenizer_report(_t(spark, sf_dir, 'documents'))
-            .orderBy('lang'))
-
-
 def q_fingerprint(spark, sf_dir):
     """Document fingerprinting: md5 + xxhash64 of normalized text;
     distinct-fingerprint count per lang."""
@@ -174,57 +135,6 @@ _SNIPPET_TOKENS = ['data', 'model']  # pinned; phrase = 'data model'
 # the driver — the same call search() makes — and inlined into the
 # DuckDB oracle as literals, so the oracle tracks the stemmer exactly
 _SEARCH_QUERY = 'data models'
-
-
-def _gopher_dup_ngrams_oracle_sql(ns=(5, 6, 7, 8, 9, 10)) -> str:
-    """Generated oracle for q_gopher_dup_ngrams: one UNION ALL window
-    branch per n (a VALUES alias cannot be referenced inside a LATERAL
-    in DuckDB — measured INTERNAL binder error), then within-doc
-    duplicate counts, span-union coverage, char weights, and a pivot —
-    all re-derived from scratch."""
-    branches = '\n              UNION ALL\n'.join(f"""
-              SELECT doc_id, {k} AS n, i AS s,
-                     array_to_string(ws[(i+1):(i+{k})], ' ') AS gr
-              FROM wa, LATERAL (SELECT unnest(range(0,
-                       greatest(len(ws) - {k - 1}, 0))) AS i)""" [1:]
-                                                  for k in ns)
-    piv = ',\n                       '.join(
-        f'max(CASE WHEN n = {k} THEN cc END) AS c{k}' for k in ns)
-    outs = ',\n               '.join(
-        f'round(COALESCE(c{k}, 0) / greatest(total_chars, 1), 6) '
-        f'AS dup_{k}gram_char_frac' for k in ns)
-    return rf"""
-        WITH t AS (SELECT doc_id,
-                          CASE WHEN doc_id % 4 = 0
-                               THEN text || ' ' || text
-                               ELSE text END AS text
-                   FROM documents),
-        wa AS (SELECT doc_id,
-                      list_filter(string_split_regex(lower(text),
-                                                     '\s+'),
-                                  x -> len(x) > 0) AS ws
-               FROM t),
-        chars AS (SELECT doc_id,
-                         COALESCE(list_sum(list_transform(ws,
-                                  x -> len(x))), 0) AS total_chars
-                  FROM wa),
-        g AS ({branches}),
-        d AS (SELECT doc_id, n, gr FROM g GROUP BY doc_id, n, gr
-              HAVING count(*) >= 2),
-        c AS (SELECT DISTINCT g.doc_id, g.n, p
-              FROM g JOIN d USING (doc_id, n, gr),
-                   LATERAL (SELECT unnest(range(g.s, g.s + g.n)) AS p)),
-        s AS (SELECT c.doc_id, c.n, sum(len(ws[p + 1])) AS cc
-              FROM c JOIN wa ON c.doc_id = wa.doc_id
-              GROUP BY c.doc_id, c.n),
-        piv AS (SELECT doc_id,
-                       {piv}
-                FROM s GROUP BY doc_id)
-        SELECT chars.doc_id,
-               {outs}
-        FROM chars LEFT JOIN piv USING (doc_id)
-        ORDER BY chars.doc_id
-    """
 
 
 def _search_pipeline_oracle_sql() -> str:
@@ -598,46 +508,6 @@ def q_gopher_repetition(spark, sf_dir):
     return spark.createDataFrame(rows, out.schema)
 
 
-def q_learn_bpe(spark, sf_dir):
-    """BPE merge-table LEARNING (textstats.learn_bpe_merges →
-    kernels/bpe.learn_merges, round 6): the first 10 merges learned
-    from the documents corpus (one word-count aggregate + the
-    published driver-side loop, ties pinned count-desc/pair-asc).
-    Oracle: golden merge sequences measured per corpus (keyed by
-    (count, total text length) exactly like q_lda_categories' golden
-    histogram — an unknown dataset matches nothing and fails the
-    row-count check loudly); goldens derived from DuckDB word counts
-    + the kernel, independent of the Spark aggregation under test."""
-    from .operators.textstats import learn_bpe_merges
-    merges = learn_bpe_merges(_t(spark, sf_dir, 'documents'),
-                              num_merges=10)
-    rows = [(i, a, b) for i, (a, b) in enumerate(merges)]
-    return spark.createDataFrame(
-        rows, 'merge_rank int, lhs string, rhs string').orderBy('merge_rank')
-
-
-def q_gopher_dup_ngrams(spark, sf_dir):
-    """Within-doc duplicated-n-gram character coverage
-    (textstats.gopher_dup_ngrams, round 6 — the dup-5..10-gram half of
-    Gopher's repetition table). Docs with doc_id % 4 == 0 have their
-    text DOUBLED on both sides, guaranteeing duplicated n-grams at
-    every n (frac near 1); the rest carry natural values. All six
-    columns re-derived in SQL (windows, within-doc counts, span-union
-    coverage, char weights)."""
-    from .operators.dedup import release as _release
-    from .operators.textstats import gopher_dup_ngrams
-    d = _t(spark, sf_dir, 'documents').select(
-        'doc_id',
-        F.when(F.col('doc_id') % 4 == 0,
-               F.concat_ws(' ', F.col('text'), F.col('text')))
-        .otherwise(F.col('text')).alias('text'))
-    res = gopher_dup_ngrams(d)
-    out = res.orderBy('doc_id')     # orderBy drops _persisted_deps
-    rows = out.collect()
-    _release(res)
-    return spark.createDataFrame(rows, out.schema)
-
-
 def q_hash_split(spark, sf_dir):
     """Deterministic train/val/test split (textstats.hash_split,
     round 4): md5-hex-threshold assignment on a derived doc key —
@@ -723,32 +593,6 @@ def q_minhash_planted(spark, sf_dir):
             .orderBy('g'))
 
 
-def q_unigram_logprob(spark, sf_dir):
-    """Unigram LM quality score (textstats.unigram_logprob): per-doc
-    mean ln p(token) under the corpus's own Lidstone-smoothed unigram
-    distribution — the CCNet-style perplexity-proxy filter signal.
-    Bottom-20 docs by score (the filter's reject candidates). ORACLED:
-    DuckDB reproduces tf/N/V and the smoothed mean exactly."""
-    from .operators.textstats import unigram_logprob
-    d = _t(spark, sf_dir, 'documents')
-    return (unigram_logprob(d, 'doc_id', 'text')
-            .orderBy(F.asc('logprob'), F.asc('doc_id')).limit(20))
-
-
-def q_bigram_lm(spark, sf_dir):
-    """Bigram LM quality score (textstats.bigram_lm_score): per-doc
-    mean ln p(v|u) under the corpus's own Lidstone-smoothed bigram
-    distribution — the word-order-aware rung between q_unigram_logprob
-    and CCNet's trained-KenLM perplexity filter (shuffled/stuffed text
-    keeps its unigram score but collapses here). Bottom-20 docs by
-    score. ORACLED: DuckDB rebuilds the bigram/context counts, V, and
-    the smoothed mean exactly."""
-    from .operators.textstats import bigram_lm_score
-    d = _t(spark, sf_dir, 'documents')
-    return (bigram_lm_score(d, 'doc_id', 'text')
-            .orderBy(F.asc('bigram_logprob'), F.asc('doc_id')).limit(20))
-
-
 def q_nfc_normalize(spark, sf_dir):
     """Unicode NFC normalization (textstats.with_nfc, round 6): every
     document's text gets a DECOMPOSED suffix appended (' cafe' +
@@ -766,39 +610,6 @@ def q_nfc_normalize(spark, sf_dir):
                        F.length('nfc_text').cast('long').alias('len_nfc'),
                        F.md5('nfc_text').alias('nfc_md5'))
             .orderBy('doc_id'))
-
-
-def q_stupid_backoff(spark, sf_dir):
-    """Trigram Stupid Backoff LM score
-    (textstats.stupid_backoff_score, round 6 — Brants et al. 2007,
-    the smoothing built FOR distributed web-scale LMs): per-doc mean
-    ln s over trigram positions with the pinned λ=0.4 backoff chain
-    and Lidstone unigram floor, self-scored. Bottom-20 docs.
-    ORACLED: DuckDB rebuilds all three count tables, N/V, and the
-    exact CASE chain (λ·λ written as 0.4*0.4 on both sides for bit
-    parity)."""
-    from .operators.textstats import stupid_backoff_score
-    d = _t(spark, sf_dir, 'documents')
-    return (stupid_backoff_score(d, 'doc_id', 'text')
-            .orderBy(F.asc('sb_logscore'), F.asc('doc_id')).limit(20))
-
-
-def q_ppl_buckets(spark, sf_dir):
-    """CCNet-style per-language perplexity bucketing
-    (textstats.ppl_buckets, Wenzek et al. 2020): score every doc with
-    the Lidstone unigram LM (q_unigram_logprob's signal), then split
-    each language into equal-population head/middle/tail tiers —
-    'head' is the best-scoring slice CCNet keeps for LM training.
-    Per-doc assignment output (doc_id, lang, logprob, bucket).
-    ORACLED: DuckDB rebuilds the smoothed score and applies the
-    identical NTILE(3) OVER (lang / score DESC, id ASC) — both rank on
-    the 6-rounded score, so ordering and tiers match exactly."""
-    from .operators.textstats import ppl_buckets, unigram_logprob
-    d = _t(spark, sf_dir, 'documents')
-    scores = unigram_logprob(d, 'doc_id', 'text')
-    scored = d.select('doc_id', 'lang').join(scores, on='doc_id')
-    return (ppl_buckets(scored, 'doc_id', 'logprob', 'lang')
-            .select('doc_id', 'lang', 'logprob', 'ppl_bucket'))
 
 
 def q_recrawl_upsert(spark, sf_dir):
@@ -1299,39 +1110,6 @@ ORACLES: dict[str, str] = {
                    AS n_ok
         FROM q GROUP BY source ORDER BY source
     """,
-    'q_token_counts': r"""
-        SELECT lang,
-               CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
-                   AS total_ws_tokens,
-               CAST(sum(len(regexp_extract_all(text,
-                   '[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9\s]'))) AS BIGINT)
-                   AS total_bpe_tokens
-        FROM documents GROUP BY lang ORDER BY lang
-    """,
-
-    # exact BPE: per-word counts computed by tests/reference_bpe.py
-    # (independent transcription of the public GPT-2 merge loop) over
-    # the fixture lexicon; an unmapped word makes count(*)<>count(n)
-    # and NULLs the total — loud failure on lexicon drift
-    'q_token_counts_bpe': r"""
-        WITH c(w, n) AS (VALUES
-            ('join', 3), ('hash', 3), ('row', 2), ('batch', 2),
-            ('scan', 1), ('column', 4), ('customer', 5), ('filter', 3),
-            ('small', 2), ('slow', 3), ('merge', 2), ('order', 3),
-            ('vector', 5), ('line', 2), ('table', 3), ('data', 3),
-            ('agg', 2), ('value', 3), ('key', 1), ('stream', 5),
-            ('window', 4), ('a', 1), ('spark', 3), ('part', 2),
-            ('group', 3), ('big', 3), ('sort', 3), ('query', 3),
-            ('fast', 3), ('the', 1), ('dup', 2)),
-        tok AS (SELECT lang,
-                       unnest(string_split_regex(trim(text), '\s+')) AS t
-                FROM documents),
-        j AS (SELECT lang, t, c.n FROM tok LEFT JOIN c ON t = c.w)
-        SELECT lang, CAST(count(*) AS BIGINT) AS total_ws_tokens,
-               CAST(CASE WHEN count(*) <> count(n) THEN NULL
-                         ELSE sum(n) END AS BIGINT) AS total_bpe_exact
-        FROM j GROUP BY lang ORDER BY lang
-    """,
     'q_fingerprint': r"""
         SELECT lang,
                CAST(count(DISTINCT md5(regexp_replace(lower(text), '\s+', ' ', 'g')))
@@ -1523,7 +1301,6 @@ ORACLES: dict[str, str] = {
         FROM lab GROUP BY doc_id ORDER BY doc_id
     """,
     'q_search_pipeline': _search_pipeline_oracle_sql(),
-    'q_gopher_dup_ngrams': _gopher_dup_ngrams_oracle_sql(),
 
     # the full Gopher repetition family: the 4-token-line / 2-line-
     # paragraph layout is constructed identically on both sides, then
@@ -1613,35 +1390,6 @@ ORACLES: dict[str, str] = {
         LEFT JOIN pstat p USING (doc_id)
         LEFT JOIN gp g USING (doc_id)
         ORDER BY c0.doc_id
-    """,
-
-    # BPE learning: golden merge sequences measured per corpus (the
-    # q_lda_categories golden-histogram pattern) — goldens computed
-    # from DuckDB word counts + kernels/bpe.learn_merges, keyed by
-    # corpus stats so unknown datasets fail loudly
-    'q_learn_bpe': r"""
-        WITH stat AS (SELECT count(*) AS n,
-                             CAST(sum(length(text)) AS BIGINT) AS tl
-                      FROM documents),
-        golden(n, tl, merge_rank, lhs, rhs) AS (VALUES
-            (500, 153156, 0, 'e', 'r'), (500, 153156, 1, 'o', 'r'),
-            (500, 153156, 2, 'i', 'n'), (500, 153156, 3, 'o', 'w'),
-            (500, 153156, 4, 's', 't'), (500, 153156, 5, 'l', 'u'),
-            (500, 153156, 6, 'a', 'r'), (500, 153156, 7, 'p', 'ar'),
-            (500, 153156, 8, 'm', 'er'), (500, 153156, 9, 'a', 't'),
-            (500, 149174, 0, 'e', 'r'), (500, 149174, 1, 'i', 'n'),
-            (500, 149174, 2, 'o', 'w'), (500, 149174, 3, 'o', 'r'),
-            (500, 149174, 4, 's', 't'), (500, 149174, 5, 'm', 'er'),
-            (500, 149174, 6, 'a', 't'), (500, 149174, 7, 'l', 'u'),
-            (500, 149174, 8, 'a', 'r'), (500, 149174, 9, 'p', 'ar'),
-            (5000, 1485576, 0, 'e', 'r'), (5000, 1485576, 1, 'i', 'n'),
-            (5000, 1485576, 2, 'o', 'r'), (5000, 1485576, 3, 's', 't'),
-            (5000, 1485576, 4, 'o', 'w'), (5000, 1485576, 5, 't', 'a'),
-            (5000, 1485576, 6, 'l', 'u'), (5000, 1485576, 7, 'm', 'er'),
-            (5000, 1485576, 8, 'a', 'r'), (5000, 1485576, 9, 'p', 'ar'))
-        SELECT CAST(g.merge_rank AS INT) AS merge_rank, g.lhs, g.rhs
-        FROM golden g JOIN stat s ON g.n = s.n AND g.tl = s.tl
-        ORDER BY merge_rank
     """,
 
     # MinHash planted oracle (round 7): the construction makes the LSH
@@ -1763,89 +1511,6 @@ ORACLES: dict[str, str] = {
         FROM j GROUP BY term
         ORDER BY tfidf_sum DESC, term ASC LIMIT 20
     """,
-    # tf/N/V and the Lidstone-smoothed mean reproduced exactly
-    'q_unigram_logprob': r"""
-        WITH ex AS (
-            SELECT doc_id, s.t AS term
-            FROM documents,
-                 LATERAL (SELECT unnest(string_split_regex(lower(text),
-                                                           '\s+')) AS t) s
-            WHERE s.t <> ''
-        ), tf AS (
-            SELECT term, count(*) AS tf FROM ex GROUP BY term
-        ), tot AS (
-            SELECT sum(tf) AS n, count(*) AS v FROM tf
-        )
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-               round(avg(ln((tf.tf + 0.5)
-                            / (tot.n + 0.5 * tot.v))), 6) AS logprob
-        FROM ex JOIN tf USING (term), tot
-        GROUP BY doc_id
-        ORDER BY logprob ASC, doc_id ASC LIMIT 20
-    """,
-    # bigram/context counts, V, and the smoothed conditional mean
-    # rebuilt exactly; docs with <2 tokens have no bigrams and are
-    # absent on both sides
-    'q_bigram_lm': r"""
-        WITH toks AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(lower(text), '\s+'),
-                               t -> t <> '') AS t
-            FROM documents
-        ), big AS (
-            SELECT doc_id, t[s.i] AS u, t[s.i + 1] AS v
-            FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS i) s
-            WHERE len(t) >= 2
-        ), bg AS (
-            SELECT u, v, count(*) AS c_uv FROM big GROUP BY u, v
-        ), ctx AS (
-            SELECT u, CAST(sum(c_uv) AS BIGINT) AS c_u FROM bg GROUP BY u
-        ), voc AS (
-            SELECT count(DISTINCT x) AS v_sz
-            FROM (SELECT unnest(t) AS x FROM toks)
-        )
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-               round(avg(ln((bg.c_uv + 0.5)
-                            / (ctx.c_u + 0.5 * voc.v_sz))), 6)
-                   AS bigram_logprob
-        FROM big JOIN bg USING (u, v) JOIN ctx USING (u), voc
-        GROUP BY doc_id
-        ORDER BY bigram_logprob ASC, doc_id ASC LIMIT 20
-    """,
-    # tokenizer report: the reference-BPE word->count map (loud NULL
-    # on lexicon drift) + exact-sum divisions
-    'q_tokenizer_report': r"""
-        WITH c(w, n) AS (VALUES
-            ('join', 3), ('hash', 3), ('row', 2), ('batch', 2),
-            ('scan', 1), ('column', 4), ('customer', 5), ('filter', 3),
-            ('small', 2), ('slow', 3), ('merge', 2), ('order', 3),
-            ('vector', 5), ('line', 2), ('table', 3), ('data', 3),
-            ('agg', 2), ('value', 3), ('key', 1), ('stream', 5),
-            ('window', 4), ('a', 1), ('spark', 3), ('part', 2),
-            ('group', 3), ('big', 3), ('sort', 3), ('query', 3),
-            ('fast', 3), ('the', 1), ('dup', 2)),
-        tok AS (SELECT doc_id, lang, length(text) AS chars,
-                       unnest(string_split_regex(trim(text), '\s+'))
-                           AS t
-                FROM documents),
-        j AS (SELECT doc_id, lang, chars, t, c.n
-              FROM tok LEFT JOIN c ON t = c.w),
-        per AS (SELECT doc_id, any_value(lang) AS lang,
-                       any_value(chars) AS chars,
-                       CAST(count(*) AS BIGINT) AS words,
-                       CAST(CASE WHEN count(*) <> count(n) THEN NULL
-                            ELSE sum(n) END AS BIGINT) AS toks
-                FROM j GROUP BY doc_id)
-        SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(words) AS BIGINT) AS ws_words,
-               CAST(sum(toks) AS BIGINT) AS bpe_tokens,
-               CAST(sum(chars) AS BIGINT) AS chars,
-               round(sum(toks) / greatest(sum(words), 1), 6)
-                   AS fertility,
-               round(sum(chars) / greatest(sum(toks), 1), 6)
-                   AS compression
-        FROM per GROUP BY lang ORDER BY lang
-    """,
 
     # NFC: both engines implement the Unicode standard algorithm —
     # byte-for-byte md5 agreement on decomposed input is the check
@@ -1869,86 +1534,6 @@ ORACLES: dict[str, str] = {
                               ORDER BY doc_id::VARCHAR)) AS ids_md5,
                CAST(sum(length(text)) AS BIGINT) AS chars
         FROM documents
-    """,
-
-    # stupid backoff: all three count tables, N/V, and the exact CASE
-    # chain rebuilt; λ·λ written 0.4*0.4 on both sides (0.4**2 differs
-    # in the last bit)
-    'q_stupid_backoff': r"""
-        WITH toks AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(lower(text), '\s+'),
-                               t -> t <> '') AS t
-            FROM documents
-        ), trid AS (
-            SELECT doc_id, t[s.j] AS w1, t[s.j + 1] AS w2,
-                   t[s.j + 2] AS w3
-            FROM toks, LATERAL (SELECT unnest(range(1, len(t) - 1))
-                                AS j) s
-            WHERE len(t) >= 3
-        ), tri AS (
-            SELECT w1, w2, w3, count(*) AS c3 FROM trid
-            GROUP BY w1, w2, w3
-        ), bigd AS (
-            SELECT t[s.j] AS u, t[s.j + 1] AS v
-            FROM toks, LATERAL (SELECT unnest(range(1, len(t))) AS j) s
-            WHERE len(t) >= 2
-        ), big AS (
-            SELECT u, v, count(*) AS c2 FROM bigd GROUP BY u, v
-        ), uni AS (
-            SELECT x AS w, count(*) AS c1
-            FROM (SELECT unnest(t) AS x FROM toks) GROUP BY x
-        ), tot AS (
-            SELECT CAST(sum(c1) AS BIGINT) AS n, count(*) AS v FROM uni
-        ), scored AS (
-            SELECT trid.doc_id,
-                   CASE WHEN tri.c3 IS NOT NULL
-                        THEN tri.c3 * 1.0 / b12.c2
-                        WHEN b23.c2 IS NOT NULL
-                        THEN 0.4 * b23.c2 / u2.c1
-                        ELSE 0.4 * 0.4 * ((coalesce(u3.c1, 0) + 0.5)
-                             / (tot.n + 0.5 * tot.v)) END AS s
-            FROM trid
-            LEFT JOIN tri USING (w1, w2, w3)
-            LEFT JOIN big b12 ON trid.w1 = b12.u AND trid.w2 = b12.v
-            LEFT JOIN big b23 ON trid.w2 = b23.u AND trid.w3 = b23.v
-            LEFT JOIN uni u2 ON trid.w2 = u2.w
-            LEFT JOIN uni u3 ON trid.w3 = u3.w, tot
-        )
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
-               round(avg(ln(s)), 6) AS sb_logscore
-        FROM scored GROUP BY doc_id
-        ORDER BY sb_logscore ASC, doc_id ASC LIMIT 20
-    """,
-
-    # CCNet head/middle/tail: the unigram-LM CTE verbatim, then the
-    # identical NTILE(3) over (lang / rounded-score DESC, id ASC) —
-    # both engines rank the same 6-rounded doubles, so tier boundaries
-    # (larger buckets first, standard SQL NTILE) match row-for-row
-    'q_ppl_buckets': r"""
-        WITH ex AS (
-            SELECT doc_id, s.t AS term
-            FROM documents,
-                 LATERAL (SELECT unnest(string_split_regex(lower(text),
-                                                           '\s+')) AS t) s
-            WHERE s.t <> ''
-        ), tf AS (
-            SELECT term, count(*) AS tf FROM ex GROUP BY term
-        ), tot AS (
-            SELECT sum(tf) AS n, count(*) AS v FROM tf
-        ), score AS (
-            SELECT doc_id,
-                   round(avg(ln((tf.tf + 0.5)
-                                / (tot.n + 0.5 * tot.v))), 6) AS logprob
-            FROM ex JOIN tf USING (term), tot
-            GROUP BY doc_id
-        )
-        SELECT d.doc_id, d.lang, s.logprob,
-               CASE NTILE(3) OVER (PARTITION BY d.lang
-                                   ORDER BY s.logprob DESC, d.doc_id ASC)
-                    WHEN 1 THEN 'head' WHEN 2 THEN 'middle'
-                    ELSE 'tail' END AS ppl_bucket
-        FROM documents d JOIN score s USING (doc_id)
     """,
     # both shingle sets rebuilt in SQL and intersected — the benchmark
     # slice is every 97th doc
@@ -2042,20 +1627,14 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     50 names so a reordering is always deliberate.
     """
     return {
-        # -- flagship oracles: Bloom ingest, cluster keep-best,
-        # decontamination and the unigram LM --------------------------
+        # -- flagship oracles: Bloom ingest, cluster keep-best and
+        # decontamination ---------------------------------------------
         'q_bloom_incremental_ingest': q_bloom_incremental_ingest,
         'q_cluster_keep_best': q_cluster_keep_best,
         'q_decontamination': q_decontamination,
-        'q_unigram_logprob': q_unigram_logprob,
         # -- reference-parity and operator oracles --------------------
         'q_minhash_planted': q_minhash_planted,
-        'q_gopher_dup_ngrams': q_gopher_dup_ngrams,
-        'q_learn_bpe': q_learn_bpe,
-        'q_stupid_backoff': q_stupid_backoff,
         'q_gopher_repetition': q_gopher_repetition,
-        'q_ppl_buckets': q_ppl_buckets,
-        'q_token_counts_bpe': q_token_counts_bpe,
         'q_w2_search_snippets': q_w2_search_snippets,
         'q_recrawl_upsert': q_recrawl_upsert,
         'q_script_id': q_script_id,
@@ -2065,10 +1644,9 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_search_pipeline': q_search_pipeline,
         'q_tfidf_top_terms': q_tfidf_top_terms,
         'q_lda_categories': q_lda_categories,
-        'q_bigram_lm': q_bigram_lm,
-        # -- thinner oracles, each with a cover above:
-        # q_pii_redaction (native regexp), q_repetition_stats
-        # (superseded by q_gopher_repetition).
+        # -- thinner oracles: q_pii_redaction (native regexp),
+        # q_repetition_stats (covered by q_gopher_repetition) and the
+        # reference's size and destructive-dedup rules.
         'q_pii_redaction': q_pii_redaction,
         'q_repetition_stats': q_repetition_stats,
         'q_f1_size_reject': q_f1_size_reject,
@@ -2081,9 +1659,7 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_hash_split': q_hash_split,
         'q_lang_id': q_lang_id,
         'q_quality_scores': q_quality_scores,
-        'q_token_counts': q_token_counts,
         'q_fingerprint': q_fingerprint,
-        'q_tokenizer_report': q_tokenizer_report,
         'q_warc_framing': q_warc_framing,
         'q_f4_category_overlap': q_f4_category_overlap,
         'q_html_meta': q_html_meta,

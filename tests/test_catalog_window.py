@@ -28,14 +28,8 @@ GRADED_WINDOW = [
     'q_bloom_incremental_ingest',
     'q_cluster_keep_best',
     'q_decontamination',
-    'q_unigram_logprob',
     'q_minhash_planted',
-    'q_gopher_dup_ngrams',
-    'q_learn_bpe',
-    'q_stupid_backoff',
     'q_gopher_repetition',
-    'q_ppl_buckets',
-    'q_token_counts_bpe',
     'q_w2_search_snippets',
     'q_recrawl_upsert',
     'q_script_id',
@@ -45,7 +39,6 @@ GRADED_WINDOW = [
     'q_search_pipeline',
     'q_tfidf_top_terms',
     'q_lda_categories',
-    'q_bigram_lm',
     'q_pii_redaction',
     'q_repetition_stats',
     'q_f1_size_reject',
@@ -57,9 +50,7 @@ GRADED_WINDOW = [
     'q_hash_split',
     'q_lang_id',
     'q_quality_scores',
-    'q_token_counts',
     'q_fingerprint',
-    'q_tokenizer_report',
     'q_warc_framing',
     'q_f4_category_overlap',
     'q_html_meta',

@@ -1,5 +1,7 @@
-"""Dedup family and text-statistics operators on Spark, checked
-against driver-side brute force on small corpora."""
+"""Exact and MinHash dedup, shingling, and the remaining textstats
+operators (PII redaction, Gopher repetition, source gate, chunking,
+hash split, NFC) on Spark, checked against driver-side brute force or
+hand goldens on small corpora."""
 
 from __future__ import annotations
 
@@ -207,124 +209,6 @@ def test_gopher_repetition_matches_python_reference_randomized(spark):
         assert got[i] == ref(t), (i, t)
 
 
-def test_stupid_backoff_all_three_branches(spark):
-    """External LM so every branch is live: seen trigram (c3/c12),
-    bigram backoff (0.4 * c23/c(w2)), and the double-backoff Lidstone
-    floor for unseen words — replicated in python over the same
-    counts."""
-    import math
-    from collections import Counter
-    from pdf_ai_mapper_spark.operators.textstats import (
-        stupid_backoff_score)
-    lm_texts = ['the cat sat on the mat', 'the cat ran', 'a dog sat']
-    docs = [(1, 'the cat sat'),          # seen trigram
-            (2, 'dog sat on'),           # bigram path then trigram? mixed
-            (3, 'zzz the cat'),          # unseen word -> floor branch
-            (4, 'xy')]                   # <3 tokens -> absent
-    lm = spark.createDataFrame([(t,) for t in lm_texts], 'text string')
-    df = spark.createDataFrame(docs, 'doc_id long, text string')
-    got = {r['doc_id']: r for r in stupid_backoff_score(
-        df, 'doc_id', 'text', lm_df=lm).collect()}
-
-    toks = [t.split() for t in lm_texts]
-    tri = Counter(tuple(ts[i:i + 3]) for ts in toks
-                  for i in range(len(ts) - 2))
-    big = Counter(tuple(ts[i:i + 2]) for ts in toks
-                  for i in range(len(ts) - 1))
-    uni = Counter(w for ts in toks for w in ts)
-    N, V = sum(uni.values()), len(uni)
-
-    def s(w1, w2, w3):
-        if tri[(w1, w2, w3)]:
-            return tri[(w1, w2, w3)] / big[(w1, w2)]
-        if big[(w2, w3)]:
-            return 0.4 * big[(w2, w3)] / uni[w2]
-        return 0.4 * 0.4 * ((uni.get(w3, 0) + 0.5) / (N + 0.5 * V))
-
-    for i, text in docs:
-        ws = text.split()
-        if len(ws) < 3:
-            assert i not in got
-            continue
-        terms = [math.log(s(*ws[j:j + 3])) for j in range(len(ws) - 2)]
-        assert got[i]['n_trigrams'] == len(terms)
-        assert abs(got[i]['sb_logscore']
-                   - round(sum(terms) / len(terms), 6)) < 2e-6, i
-
-
-def test_gopher_dup_ngrams_semantics(spark):
-    from pdf_ai_mapper_spark.operators.textstats import gopher_dup_ngrams
-    rep = ' '.join(['a b c d e'] * 3)          # every 5-gram duplicated
-    docs = [(1, rep), (2, 'all tokens here are different ones now'),
-            (3, '')]
-    df = spark.createDataFrame(docs, 'doc_id long, text string')
-    got = {r['doc_id']: r for r in gopher_dup_ngrams(df, ns=(5,)).collect()}
-    assert got[1]['dup_5gram_char_frac'] == 1.0   # full coverage
-    assert got[2]['dup_5gram_char_frac'] == 0.0
-    assert got[3]['dup_5gram_char_frac'] == 0.0
-
-
-def test_gopher_dup_ngrams_matches_python_reference(spark):
-    import random
-    from collections import Counter
-    from pdf_ai_mapper_spark.operators.textstats import gopher_dup_ngrams
-    rng = random.Random(19)
-    vocab = ['aa', 'bb', 'cc', 'dd']
-    docs = [(i, ' '.join(rng.choice(vocab)
-                         for _ in range(rng.randint(0, 30))))
-            for i in range(30)]
-
-    def ref(text, ns):
-        ws = [w for w in text.lower().split() if w]
-        chars = sum(len(w) for w in ws)
-        out = []
-        for n in ns:
-            grams = Counter(tuple(ws[i:i + n])
-                            for i in range(max(0, len(ws) - n + 1)))
-            cov = set()
-            for i in range(max(0, len(ws) - n + 1)):
-                if grams[tuple(ws[i:i + n])] >= 2:
-                    cov.update(range(i, i + n))
-            out.append(round(sum(len(ws[p]) for p in cov)
-                             / max(chars, 1), 6))
-        return tuple(out)
-
-    ns = (3, 5, 7)
-    df = spark.createDataFrame(docs, 'doc_id long, text string')
-    got = {r['doc_id']: tuple(r)[1:]
-           for r in gopher_dup_ngrams(df.repartition(4), ns=ns).collect()}
-    for i, t in docs:
-        assert got[i] == ref(t, ns), (i, t)
-
-
-def test_window_hash_128_matches_64_on_fixtures(spark):
-    """VERDICT r6 #2: at 100 TB the 64-bit window space collides
-    (birthday ~4x10^9 distinct windows), so the n-gram window ops take
-    hash_bits=128 — a struct of two independently-salted xxhash64
-    longs, still a 16-byte shuffle key. On collision-free fixtures the
-    two widths must produce IDENTICAL results."""
-    import random
-    from pdf_ai_mapper_spark.operators.dedup import _window_hash
-    from pdf_ai_mapper_spark.operators.textstats import gopher_dup_ngrams
-
-    rng = random.Random(23)
-    vocab = [f'w{i}' for i in range(12)]
-    boiler = ' '.join(vocab[:9])                 # shared 9-token span
-    docs = [(i, (' '.join(rng.choice(vocab) for _ in range(rng.randint(0, 40)))
-                 + (f' {boiler}' if i % 3 == 0 else '')).strip())
-            for i in range(40)]
-    df = spark.createDataFrame(docs, 'doc_id long, text string')
-
-    def rows(bits):
-        out = gopher_dup_ngrams(df, ns=(4, 6), hash_bits=bits)
-        got = sorted(tuple(r) for r in out.collect())
-        release(out)
-        return got
-
-    assert rows(64) == rows(128)
-    with pytest.raises(ValueError):
-        _window_hash(96)
-
 
 def test_source_quality_gate_filters_groups(spark):
     from pdf_ai_mapper_spark.operators.textstats import source_quality_gate
@@ -380,64 +264,6 @@ def test_hash_split_unnormalized_weights(spark):
               .groupBy('split').agg(F.count('*').alias('n')).collect()}
     assert abs(counts['a'] / 10_000 - 0.75) < 0.02
     assert abs(counts['b'] / 10_000 - 0.25) < 0.02
-
-
-def test_bigram_lm_score_matches_python_reference(spark):
-    """Self-scored bigram LM vs a pure-python transcription of the
-    Lidstone formula; single-token docs absent; whitespace runs
-    collapse identically."""
-    import math
-    from collections import Counter
-
-    from pdf_ai_mapper_spark.operators.textstats import bigram_lm_score
-
-    docs = [(1, 'the cat sat on the mat'), (2, 'the cat sat'),
-            (3, 'colorless green ideas sleep furiously'),
-            (4, 'single'), (5, '  the   mat  ')]
-    df = spark.createDataFrame(docs, 'doc_id long, text string')
-    out = {r['doc_id']: r for r in
-           bigram_lm_score(df, 'doc_id', 'text').collect()}
-
-    toks = {i: t.lower().split() for i, t in docs}
-    bg: Counter = Counter()
-    vocab = set()
-    for t in toks.values():
-        vocab.update(t)
-        for a, b in zip(t, t[1:]):
-            bg[(a, b)] += 1
-    ctx: Counter = Counter()
-    for (a, _), c in bg.items():
-        ctx[a] += c
-    v, alpha = len(vocab), 0.5
-
-    assert 4 not in out          # no bigrams -> absent
-    for i, t in toks.items():
-        if len(t) < 2:
-            continue
-        ref = [math.log((bg[(a, b)] + alpha) / (ctx[a] + alpha * v))
-               for a, b in zip(t, t[1:])]
-        assert out[i]['n_bigrams'] == len(ref)
-        assert out[i]['bigram_logprob'] == round(sum(ref) / len(ref), 6)
-
-
-def test_bigram_lm_external_lm_unseen_bigrams(spark):
-    """CCNet shape: LM fit on a clean corpus, applied to other text.
-    Unseen bigram + unseen context costs ln(alpha / (alpha * V)) =
-    ln(1/V) through the same smoothing arithmetic (no backoff branch)."""
-    import math
-
-    from pdf_ai_mapper_spark.operators.textstats import bigram_lm_score
-
-    lm = spark.createDataFrame(
-        [(1, 'the cat sat on the mat'), (2, 'the cat sat')],
-        'doc_id long, text string')
-    target = spark.createDataFrame(
-        [(9, 'colorless green ideas sleep furiously')],
-        'doc_id long, text string')
-    row = bigram_lm_score(target, 'doc_id', 'text', lm_df=lm).collect()[0]
-    v = len({'the', 'cat', 'sat', 'on', 'mat'})   # distinct LM tokens
-    assert row['n_bigrams'] == 4
-    assert row['bigram_logprob'] == round(math.log(1.0 / v), 6)
 
 
 def test_with_nfc_semantics(spark):

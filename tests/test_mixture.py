@@ -1,105 +1,12 @@
-"""Corpus-statistics operators in textstats: CCNet-style perplexity
-bucketing (ppl_buckets), the Han-script language-ID pre-check
-(with_lang_id) and dominant-script routing (with_script_id).
+"""Script-aware textstats operators: the Han-script language-ID
+pre-check (with_lang_id) and dominant-script routing (with_script_id).
 
 Each operator's value semantics are also DuckDB-oracled end-to-end by
-q_ppl_buckets / q_lang_id / q_script_id; these tests pin the
-properties the oracle can't see (mode agreement, pure-Python reference
-equivalence, contract edges, plan shape).
+q_lang_id / q_script_id; these tests pin the properties the oracle
+can't see (per-row contract edges, plan shape).
 """
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from pdf_ai_mapper_spark.operators.textstats import ppl_buckets
-
-
-def _scored(spark, n=90):
-    # three langs, deterministic scores with deliberate ties
-    rows = [(i, ['en', 'de', 'fr'][i % 3], float(-(i % 7)) / 2.0)
-            for i in range(n)]
-    return spark.createDataFrame(rows, 'doc_id long, lang string, score double')
-
-
-class TestPplBuckets:
-    def test_exact_tier_populations_and_order(self, spark):
-        df = _scored(spark)
-        out = ppl_buckets(df, 'doc_id', 'score', 'lang').collect()
-        by_lang = {}
-        for r in out:
-            by_lang.setdefault(r['lang'], []).append(r)
-        assert set(by_lang) == {'en', 'de', 'fr'}
-        for lang, rows in by_lang.items():
-            sizes = {'head': 0, 'middle': 0, 'tail': 0}
-            for r in rows:
-                sizes[r['ppl_bucket']] += 1
-            # 30 rows per lang -> exact thirds
-            assert sizes == {'head': 10, 'middle': 10, 'tail': 10}
-            # every head score >= every middle score >= every tail score
-            lo = {b: min(r['score'] for r in rows if r['ppl_bucket'] == b)
-                  for b in sizes}
-            hi = {b: max(r['score'] for r in rows if r['ppl_bucket'] == b)
-                  for b in sizes}
-            assert lo['head'] >= hi['middle'] >= hi['tail']
-            assert lo['middle'] >= hi['tail']
-
-    def test_exact_matches_python_reference(self, spark):
-        df = _scored(spark, n=50)  # 50 % 3 != 0: uneven tiers
-        out = {r['doc_id']: r['ppl_bucket']
-               for r in ppl_buckets(df, 'doc_id', 'score', 'lang').collect()}
-        rows = df.collect()
-        by_lang = {}
-        for r in rows:
-            by_lang.setdefault(r['lang'], []).append(r)
-        for rs in by_lang.values():
-            rs.sort(key=lambda r: (-r['score'], r['doc_id']))
-            n = len(rs)
-            base, rem = divmod(n, 3)
-            sizes = [base + (1 if i < rem else 0) for i in range(3)]
-            labels = (['head'] * sizes[0] + ['middle'] * sizes[1]
-                      + ['tail'] * sizes[2])
-            for r, lab in zip(rs, labels):
-                assert out[r['doc_id']] == lab, (r, lab)
-
-    def test_cutoff_mode_agrees_away_from_boundaries(self, spark):
-        # distinct scores, one lang: cutoff boundaries are exact
-        # percentiles of a clean grid, so every non-boundary row agrees
-        df = spark.createDataFrame(
-            [(i, 'en', float(i)) for i in range(30)],
-            'doc_id long, lang string, score double')
-        exact = {r['doc_id']: r['ppl_bucket'] for r in
-                 ppl_buckets(df, 'doc_id', 'score', 'lang').collect()}
-        cut = {r['doc_id']: r['ppl_bucket'] for r in
-               ppl_buckets(df, 'doc_id', 'score', 'lang',
-                           mode='cutoff').collect()}
-        disagree = [i for i in exact if exact[i] != cut[i]]
-        # at most the two boundary rows may differ between the modes
-        assert len(disagree) <= 2, disagree
-
-    def test_no_group_col(self, spark):
-        df = _scored(spark, n=30)
-        out = ppl_buckets(df, 'doc_id', 'score').collect()
-        sizes = {}
-        for r in out:
-            sizes[r['ppl_bucket']] = sizes.get(r['ppl_bucket'], 0) + 1
-        assert sizes == {'head': 10, 'middle': 10, 'tail': 10}
-
-    def test_bad_mode_raises(self, spark):
-        with pytest.raises(ValueError, match='mode'):
-            ppl_buckets(_scored(spark), 'doc_id', 'score', 'lang',
-                        mode='approx')
-
-    def test_payload_never_rides_the_sort(self, spark):
-        # the ntile window must run over the narrow projection: no
-        # text/payload column may appear in the window exchange
-        df = _scored(spark).withColumn('payload', F.repeat(F.lit('x'), 100))
-        plan = (ppl_buckets(df, 'doc_id', 'score', 'lang')
-                ._jdf.queryExecution().executedPlan().toString())
-        window_section = plan[plan.index('Window'):]
-        sort_above_window = window_section[:window_section.index('Scan')]
-        assert 'payload' not in sort_above_window
 
 
 class TestLangIdHanScript:

@@ -46,7 +46,6 @@ ROOTS = [f'{PKG}.api', f'{PKG}.pipeline',
          *sorted(ROOT.glob('scripts/*.py')),
          *sorted(ROOT.glob('perfbench/*.py'))]
 NOT_YET_DELETED = {
-    f'{PKG}.kernels.bpe',
     f'{PKG}.operators.textstats',
 }
 CALLED_ONLY_FROM_CATALOG_OR_TESTS = {

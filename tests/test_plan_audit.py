@@ -81,6 +81,7 @@ def _formatted(spark, df) -> str:
     return df._jdf.queryExecution().explainString(fm)
 
 
+
 def _sections(formatted: str) -> list[tuple[str, str, str]]:
     """[(operator_id, operator_name, section_text)] from the operator
     DETAILS region of a formatted explain (details follow both plan
@@ -98,6 +99,7 @@ def _sections(formatted: str) -> list[tuple[str, str, str]]:
     if cur_name:
         out.append((cur_id, cur_name, '\n'.join(cur)))
     return out
+
 
 
 def _final_ids(formatted: str) -> set[str]:
@@ -131,6 +133,7 @@ def _final_ids(formatted: str) -> set[str]:
         if not stack or stack[-1][1]:
             ids.add(m.group(1))
     return ids
+
 
 
 def test_gopher_repetition_text_never_in_exchange(spark, sf):
@@ -168,21 +171,12 @@ def test_gopher_repetition_text_never_in_exchange(spark, sf):
     assert n_exchanges >= 1
 
 
-def test_with_input_ids_single_arrow_stage(spark, sf):
-    """with_input_ids must stay ONE ArrowEvalPython (chaining a second
-    pandas UDF doubles Python workers per task)."""
-    from pdf_ai_mapper_spark.operators.textstats import with_input_ids
-    docs = spark.read.parquet(f'{sf}/documents.parquet') \
-        .select('doc_id', 'text')
-    ids = with_input_ids(docs).select('doc_id', 'input_ids')
-    assert _plan(ids).count('ArrowEvalPython') == 1
-
 
 def test_release_contract_no_persist_leaks(spark, sf):
-    """Every catalog query that persists internally (LSH signatures,
-    shared array bases) must leave ZERO persisted RDDs behind — a leak
-    per call accumulates MEMORY_AND_DISK tables across a bench loop or
-    a long driver session."""
+    """Every catalog query that persists internally (shared array
+    bases, LSH signatures, connected-component labels) must leave ZERO
+    persisted RDDs behind — a leak per call accumulates MEMORY_AND_DISK
+    tables across a bench loop or a long driver session."""
     # NOT covered: q_minhash_incremental — its operator
     # localCheckpoint()s, and checkpointed RDDs stay registered until
     # the JVM ContextCleaner GCs the unreferenced handles (bounded per call,
@@ -199,7 +193,7 @@ def test_release_contract_no_persist_leaks(spark, sf):
     # checkpoint-class RDDs behind (GC-cleaned) — assert no GROWTH
     # beyond the baseline, not absolute zero
     baseline = _ids()
-    for name in ('q_gopher_repetition', 'q_gopher_dup_ngrams',
+    for name in ('q_gopher_repetition', 'q_cluster_keep_best',
                  'q_minhash_near_dups'):
         cat[name](spark, sf).collect()
         new = _ids() - baseline
