@@ -46,11 +46,10 @@ def dedup_exact(df: DataFrame,
 
 def release(df: DataFrame) -> None:
     """Unpersist the cached tables backing a DataFrame returned by
-    ``minhash_lsh_pairs``, ``connected_components`` or
-    ``textstats.gopher_repetition``. Call once the result has been
-    materialized (collect/write) — repeated calls in a long-lived
-    session (bench loops, repeated queries) otherwise accumulate
-    MEMORY_AND_DISK tables."""
+    ``minhash_lsh_pairs`` or ``connected_components``. Call once the
+    result has been materialized (collect/write) — repeated calls in a
+    long-lived session (bench loops, repeated queries) otherwise
+    accumulate MEMORY_AND_DISK tables."""
     for dep in getattr(df, '_persisted_deps', ()):
         dep.unpersist()
 

@@ -22,112 +22,16 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .kernels.stopwords import TOPIC_KEYWORDS
-from .operators import textstats
 from .operators.dedup import dedup_exact, minhash_lsh_pairs
-
-# language-ID marker table (operators/textstats.py) — SQL mirror built
-# from the same pinned dict
-_MARKERS = textstats.LANG_MARKERS
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f'{sf_dir}/{name}.parquet')
 
 
-def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """_t + a one-split-scan spread for queries whose per-row map work
-    (marker counts, regex stats, scoring folds, explodes) dominates:
-    a single-row-group parquet file scans as ONE task no matter what
-    (round-7 finding), serializing the whole map stage onto one core.
-    No-op whenever the scan already has >= defaultParallelism splits —
-    i.e. always at real corpus scale (guide §2.5 input-skew fix) —
-    and size-gated so a tiny fixture scan is not repartitioned for
-    nothing (the gate is data-derived; see skew.py)."""
-    from .operators.skew import (SPREAD_MIN_BYTES_PER_PART,
-                                 ensure_min_parallelism)
-    return ensure_min_parallelism(
-        _t(spark, sf_dir, name),
-        min_bytes_per_part=SPREAD_MIN_BYTES_PER_PART)
-
-
-def _count_token_sql(word: str) -> str:
-    # mirrors textstats._count_token verbatim: one [^a-z]+ tokenization
-    # + equality filter per marker
-    return (f"len(list_filter(string_split_regex(lower(text), '[^a-z]+'), "
-            f"t -> t = '{word}'))")
-
-
 # =====================================================================
 # queries — each fn(spark, sf_dir) -> DataFrame
 # =====================================================================
-
-def q_lang_id(spark, sf_dir):
-    """Language-ID heuristic (operators/textstats.py): predicted lang
-    per doc from marker-word counts; returns per-(lang, pred) counts."""
-    d = textstats.with_lang_id(_ts(spark, sf_dir, 'documents'), 'text')
-    return (d.groupBy('lang', 'lang_pred')
-            .agg(F.count('*').cast('long').alias('n'))
-            .orderBy('lang', 'lang_pred'))
-
-
-# One sample per script family + the contract's edge cases; sid pins
-# the construction. The SQL oracle inlines the same rows as VALUES.
-_SCRIPT_SAMPLES: list[tuple[int, str]] = [
-    (1, 'The quick brown fox jumps over the lazy dog'),
-    (2, 'Привет мир это тест русского текста'),
-    (3, 'مرحبا بالعالم هذا نص عربي للاختبار'),
-    (4, 'नमस्ते दुनिया यह परीक्षण है'),
-    (5, '안녕하세요 세계 한국어 테스트입니다'),
-    (6, 'こんにちは世界 これはテストです'),      # kana+han → jpan
-    (7, 'Γεια σου κόσμε αυτό είναι δοκιμή'),
-    (8, 'שלום עולם זה מבחן'),
-    (9, 'สวัสดีชาวโลก นี่คือการทดสอบ'),
-    (10, '你好世界这是中文测试文本'),              # pure han → hani
-    (11, '12345 67890 !!! ???'),                  # no script chars → und
-    (12, 'abc где αβγ'),                          # 3-way tie → mixed
-    (13, '漢字漢字漢字漢字漢字の'),                # han-heavy + 1 kana → jpan
-    (14, 'hello world это'),                      # latn majority → latn
-]
-
-
-def q_script_id(spark, sf_dir):
-    """Dominant-script classification (textstats.with_script_id, round
-    7 — the routing step before per-script language ID): per-(src,
-    script) doc counts over the corpus UNION 14 planted samples that
-    exercise every script family plus the und/mixed/jpan-threshold
-    edges. Each planted script appears exactly once, so the (planted,
-    script) rows pin every sample's label individually; the corpus
-    rows pin the latn/hani split of the real documents table. The
-    DuckDB oracle re-derives all ten code-point counts independently
-    (length(regexp_replace)) and repeats the pinned CASE chain."""
-    d = (_t(spark, sf_dir, 'documents')
-         .select(F.lit('corpus').alias('src'), 'text'))
-    planted = (spark.createDataFrame(_SCRIPT_SAMPLES, 'sid long, text string')
-               .select(F.lit('planted').alias('src'), 'text'))
-    out = textstats.with_script_id(d.unionByName(planted), 'text')
-    return (out.groupBy('src', 'script')
-            .agg(F.count('*').cast('long').alias('n'))
-            .orderBy('src', 'script'))
-
-
-def q_quality_scores(spark, sf_dir):
-    """Quality heuristics aggregated per source."""
-    d = textstats.with_quality(_ts(spark, sf_dir, 'documents'), 'text')
-    return (d.groupBy('source')
-            .agg(F.round(F.avg('alpha_ratio'), 6).alias('avg_alpha'),
-                 F.round(F.avg('digit_ratio'), 6).alias('avg_digit'),
-                 F.sum(F.col('quality_ok').cast('long')).cast('long').alias('n_ok'))
-            .orderBy('source'))
-
-
-def q_fingerprint(spark, sf_dir):
-    """Document fingerprinting: md5 + xxhash64 of normalized text;
-    distinct-fingerprint count per lang."""
-    d = textstats.with_fingerprint(_t(spark, sf_dir, 'documents'), 'text')
-    return (d.groupBy('lang')
-            .agg(F.countDistinct('fp_md5').cast('long').alias('n_fp'))
-            .orderBy('lang'))
-
 
 _SNIPPET_TOKENS = ['data', 'model']  # pinned; phrase = 'data model'
 
@@ -312,84 +216,6 @@ def q_error_taxonomy(spark, sf_dir):
             .orderBy('error_code'))
 
 
-def q_pii_redaction(spark, sf_dir):
-    """PII scrubbing (operators/textstats.with_redacted): deterministic
-    emails/URLs/phone strings are embedded per doc, then redacted in
-    the pinned URL→EMAIL→PHONE order; per-lang counts of each PII kind
-    plus a hash-stable sample of redacted text lengths."""
-    d = _t(spark, sf_dir, 'documents')
-    sid = F.col('doc_id').cast('string')
-    msg = F.concat(F.col('text'),
-                   F.lit(' contact user'), sid,
-                   F.lit('@example.com or https://ex.com/p/'), sid,
-                   F.lit(' tel +1 (555) 000-'), F.lpad(sid, 4, '0'))
-    staged = d.withColumn('__msg', msg)
-    red = textstats.with_redacted(staged, '__msg')
-    return (red.groupBy('lang')
-            .agg(F.sum('n_urls').cast('long').alias('total_urls'),
-                 F.sum('n_emails').cast('long').alias('total_emails'),
-                 F.sum('n_phones').cast('long').alias('total_phones'),
-                 F.sum(F.length('redacted_text')).cast('long')
-                 .alias('total_redacted_chars'))
-            .orderBy('lang'))
-
-
-def q_repetition_stats(spark, sf_dir):
-    """Gopher-style repetition filters (operators/textstats.
-    repetition_stats): per-doc top-word fraction, distinct-word ratio
-    and word count."""
-    d = _t(spark, sf_dir, 'documents')
-    return textstats.repetition_stats(d, 'doc_id', 'text').orderBy('doc_id')
-
-
-def q_source_quality_gate(spark, sf_dir):
-    """C4-style group quality gate (operators/textstats.
-    source_quality_gate): keep docs whose source's mean alpha ratio
-    clears 0.8232 (a max-gap threshold on this corpus, so the pass set
-    is stable against float noise); surviving doc counts per source."""
-    d = _t(spark, sf_dir, 'documents')
-    gated = textstats.source_quality_gate(d, 'source', 'text',
-                                          min_avg_alpha=0.8232)
-    return (gated.groupBy('source')
-            .agg(F.count('*').cast('long').alias('n'))
-            .orderBy('source'))
-
-
-def q_doc_chunking(spark, sf_dir):
-    """Context-window chunking (operators/textstats.with_chunks,
-    chunk=64 overlap=8): per-doc chunk counts + total chunk tokens —
-    the training-window prep stage, value-checked against a DuckDB
-    list-slicing mirror."""
-    d = _t(spark, sf_dir, 'documents')
-    ch = textstats.with_chunks(d, 'doc_id', 'text',
-                               chunk_tokens=64, overlap=8)
-    return (ch.groupBy('doc_id')
-            .agg(F.count('*').cast('long').alias('n_chunks'),
-                 F.sum('n_tokens').cast('long').alias('total_chunk_tokens'),
-                 F.md5(F.concat_ws('\x1f',
-                                   F.array_sort(F.collect_list(
-                                       F.concat_ws(':', F.col('chunk_idx'),
-                                                   F.col('chunk_text'))))))
-                 .alias('chunks_digest'))
-            .orderBy('doc_id'))
-
-
-def q_tfidf_top_terms(spark, sf_dir):
-    """Exact-term TF-IDF (operators/textstats.tfidf_terms — the
-    SQL-checkable sibling of the HashingTF+IDF featurizer the north
-    star names; Spark ML IDF smoothing ln((N+1)/(df+1))): top-20 terms
-    by corpus-summed tf-idf. The sum is rounded BEFORE the ordering /
-    limit on both sides, so rank-boundary ties break on the rounded
-    value + term and the top-20 SET is engine-independent."""
-    d = _t(spark, sf_dir, 'documents')
-    t = textstats.tfidf_terms(d, 'doc_id', 'text', min_token_len=3)
-    return (t.groupBy('term')
-            .agg(F.max('df_count').cast('long').alias('df_count'),
-                 F.round(F.sum('tfidf'), 3).alias('tfidf_sum'))
-            .orderBy(F.desc('tfidf_sum'), F.asc('term'))
-            .limit(20))
-
-
 def q_html_meta(spark, sf_dir):
     """HTML head-metadata extraction (extraction.with_html_meta, round
     7 — the crawl-hygiene step before content extraction): pages are
@@ -476,54 +302,6 @@ def q_lda_categories(spark, sf_dir):
             .orderBy('arity'))
 
 
-def q_gopher_repetition(spark, sf_dir):
-    """The complete Gopher repetition family
-    (textstats.gopher_repetition, round 6 — VERDICT r5 #5): documents
-    re-laid-out as 4-token lines grouped into 2-line paragraphs
-    (construction shared verbatim with the SQL oracle), then per doc:
-    duplicate-line/paragraph fractions, their character fractions, and
-    top-2/3/4-gram character fractions — all seven columns re-derived
-    in SQL from scratch, rounded to 6dp."""
-    from .operators.textstats import gopher_repetition
-    k = 4
-    toks = F.split(F.col('text'), ' ')
-    n = F.size(toks)
-    linearr = F.transform(
-        F.sequence(F.lit(0), F.ceil(n / F.lit(k)).cast('int') - 1),
-        lambda i: F.array_join(
-            F.slice(toks, i * F.lit(k) + F.lit(1), F.lit(k)), ' '))
-    d = (_t(spark, sf_dir, 'documents')
-         .withColumn('__lines', linearr))
-    paraarr = F.transform(
-        F.sequence(F.lit(0),
-                   F.ceil(F.size('__lines') / F.lit(2)).cast('int') - 1),
-        lambda j: F.array_join(
-            F.slice('__lines', j * F.lit(2) + F.lit(1), F.lit(2)), '\n'))
-    d2 = d.select('doc_id', F.array_join(paraarr, '\n\n').alias('text'))
-    from .operators.dedup import release as _release
-    res = gopher_repetition(d2, 'doc_id', 'text')
-    out = res.orderBy('doc_id')     # orderBy drops _persisted_deps
-    rows = out.collect()
-    _release(res)
-    return spark.createDataFrame(rows, out.schema)
-
-
-def q_hash_split(spark, sf_dir):
-    """Deterministic train/val/test split (textstats.hash_split,
-    round 4): md5-hex-threshold assignment on a derived doc key —
-    engine-portable by construction, so the oracle repeats the exact
-    CASE expression. id_sum witnesses the ASSIGNMENT, not just the
-    counts."""
-    from .operators.textstats import hash_split
-    d = _t(spark, sf_dir, 'documents').withColumn(
-        'key', F.concat(F.lit('doc-'), F.col('doc_id').cast('string')))
-    return (hash_split(d, 'key')
-            .groupBy('split')
-            .agg(F.count('*').cast('long').alias('n_docs'),
-                 F.sum('doc_id').cast('long').alias('id_sum'))
-            .orderBy('split'))
-
-
 def q_search_pipeline(spark, sf_dir):
     """F7+F8+W1-W3+F6 composed through the REAL search() operator:
     query stem → guard → relevance → score>0 → snippet → top-k
@@ -591,25 +369,6 @@ def q_minhash_planted(spark, sf_dir):
                  F.round(F.min('jaccard_est'), 6).alias('min_j'),
                  F.round(F.max('jaccard_est'), 6).alias('max_j'))
             .orderBy('g'))
-
-
-def q_nfc_normalize(spark, sf_dir):
-    """Unicode NFC normalization (textstats.with_nfc, round 6): every
-    document's text gets a DECOMPOSED suffix appended (' cafe' +
-    combining acute U+0301 — bytes that NFC must recompose to 'é'),
-    then per-doc md5 of the normalized text plus char lengths before/
-    after. Oracle: DuckDB's nfc_normalize implements the same Unicode
-    standard — byte-for-byte agreement is the whole point."""
-    from .operators.textstats import with_nfc
-    d = _t(spark, sf_dir, 'documents').select(
-        'doc_id',
-        F.concat(F.col('text'), F.lit(' café')).alias('text'))
-    out = with_nfc(d)
-    return (out.select('doc_id',
-                       F.length('text').cast('long').alias('len_raw'),
-                       F.length('nfc_text').cast('long').alias('len_nfc'),
-                       F.md5('nfc_text').alias('nfc_md5'))
-            .orderBy('doc_id'))
 
 
 def q_recrawl_upsert(spark, sf_dir):
@@ -685,22 +444,6 @@ def q_minhash_incremental(spark, sf_dir):
             'n_cross_batch_pairs long, n_index_rows long')
     finally:
         shutil.rmtree(idx, ignore_errors=True)
-
-
-def q_decontamination(spark, sf_dir):
-    """Benchmark decontamination screen (textstats.decontamination_
-    overlap): every 97th document plays the held-out benchmark; the
-    rest is the training corpus. Per contaminated training doc, the
-    count of distinct 3-gram shingles shared with the benchmark —
-    the published GPT-3/Llama n-gram scrub re-expressed as one
-    broadcast semi-join (the training side never shuffles). ORACLED:
-    DuckDB rebuilds both shingle sets and intersects them."""
-    from .operators.textstats import decontamination_overlap
-    d = _t(spark, sf_dir, 'documents')
-    bench = d.filter(F.col('doc_id') % 97 == 0)
-    train = d.filter(F.col('doc_id') % 97 != 0)
-    return (decontamination_overlap(train, bench, 'doc_id', 'text', k=3)
-            .orderBy('doc_id'))
 
 
 def q_cluster_keep_best(spark, sf_dir):
@@ -972,40 +715,6 @@ def q_extraction_pipeline(spark, sf_dir):
 # SQL oracles (DuckDB dialect-compatible ANSI SQL)
 # =====================================================================
 
-def _markers_score_sql(lang: str) -> str:
-    return ' + '.join(_count_token_sql(w) for w in _MARKERS[lang])
-
-
-_LANG_ID_CASE = (
-    "CASE WHEN s_han >= 1 AND s_han * 5 >= GREATEST(n_cp, 1) THEN 'zh' "
-    + ' '.join(
-        f"WHEN s_{lang} >= GREATEST({', '.join('s_' + o for o in _MARKERS)}) "
-        f"AND s_{lang} >= 1 THEN '{lang}'"
-        for lang in _MARKERS)
-    + " ELSE 'und' END"
-)
-
-# script-ID SQL mirror, generated from the same pinned SCRIPT_RANGES
-# (counts re-derived via length(regexp_replace) — an independent
-# derivation of the same code-point counts; CASE chain in dict order,
-# earlier wins ties, 'kana' relabels to 'jpan')
-_SCRIPTS = list(textstats.SCRIPT_RANGES)
-_SCRIPT_COUNTS_SQL = ', '.join(
-    "length(regexp_replace(text, '[^" + r + "]', '', 'g')) AS c_" + s
-    for s, r in textstats.SCRIPT_RANGES.items())
-_SCRIPT_TOTAL_SQL = ' + '.join('c_' + s for s in _SCRIPTS)
-_SCRIPT_MAX_SQL = 'GREATEST(' + ', '.join('c_' + s for s in _SCRIPTS) + ')'
-_SCRIPT_CASE = (
-    "CASE WHEN total = 0 THEN 'und' "
-    "WHEN c_kana >= 1 AND c_kana * 20 >= total THEN 'jpan' "
-    "WHEN 2 * m < total THEN 'mixed' "
-    + ' '.join(
-        "WHEN c_" + s + " = m THEN '" + ('jpan' if s == 'kana' else s) + "'"
-        for s in _SCRIPTS)
-    + ' END')
-_SCRIPT_VALUES_SQL = ', '.join(
-    "(" + str(sid) + ", '" + txt + "')" for sid, txt in _SCRIPT_SAMPLES)
-
 # A6 topic-type SQL mirror, generated from the same pinned keyword dict
 # (first-in-dict-order wins ties — the CASE chain in dict order)
 _TOPIC_TYPES = list(TOPIC_KEYWORDS)
@@ -1024,29 +733,6 @@ _TOPIC_CASE = (
 )
 
 ORACLES: dict[str, str] = {
-    'q_lang_id': (
-        "WITH scored AS (SELECT lang, "
-        + ', '.join(f"{_markers_score_sql(lang)} AS s_{lang}" for lang in _MARKERS)
-        + r", length(regexp_replace(text, '[^\x{4E00}-\x{9FFF}]', '', 'g'))"
-        " AS s_han, length(text) AS n_cp"
-        + " FROM documents), pred AS (SELECT lang, " + _LANG_ID_CASE
-        + " AS lang_pred FROM scored) "
-        "SELECT lang, lang_pred, CAST(count(*) AS BIGINT) AS n "
-        "FROM pred GROUP BY lang, lang_pred ORDER BY lang, lang_pred"
-    ),
-    # dominant-script ID: ten independent code-point counts + the
-    # pinned CASE chain over corpus ∪ planted samples
-    'q_script_id': (
-        "WITH planted(sid, text) AS (VALUES " + _SCRIPT_VALUES_SQL + "), "
-        "uni AS (SELECT 'corpus' AS src, text FROM documents "
-        "UNION ALL SELECT 'planted', text FROM planted), "
-        "c AS (SELECT src, " + _SCRIPT_COUNTS_SQL + " FROM uni), "
-        "t AS (SELECT src, " + _SCRIPT_TOTAL_SQL + " AS total, "
-        + _SCRIPT_MAX_SQL + " AS m, c.* FROM c) "
-        "SELECT src, " + _SCRIPT_CASE + " AS script, "
-        "CAST(count(*) AS BIGINT) AS n "
-        "FROM t GROUP BY src, script ORDER BY src, script"
-    ),
     # html head metadata: same pinned regexes replayed by RE2 (''-on-
     # no-match matches Spark's regexp_extract), same page construction
     'q_html_meta': r"""
@@ -1092,29 +778,6 @@ ORACLES: dict[str, str] = {
                    AS titles_md5,
                CAST((SELECT count(*) FROM pt) AS BIGINT) AS n_targets,
                CAST((SELECT max(n) FROM pt) AS BIGINT) AS max_consolidation
-    """,
-    'q_quality_scores': r"""
-        WITH q AS (
-            SELECT source,
-                   round(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                         * 1.0 / greatest(length(text), 1), 6) AS alpha_ratio,
-                   round(length(regexp_replace(text, '[^0-9]', '', 'g'))
-                         * 1.0 / greatest(length(text), 1), 6) AS digit_ratio,
-                   len(string_split_regex(trim(text), '\s+')) AS n_tokens
-            FROM documents)
-        SELECT source,
-               round(avg(alpha_ratio), 6) AS avg_alpha,
-               round(avg(digit_ratio), 6) AS avg_digit,
-               CAST(sum(CASE WHEN alpha_ratio > 0.6 AND digit_ratio < 0.2
-                             AND n_tokens >= 5 THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_ok
-        FROM q GROUP BY source ORDER BY source
-    """,
-    'q_fingerprint': r"""
-        SELECT lang,
-               CAST(count(DISTINCT md5(regexp_replace(lower(text), '\s+', ' ', 'g')))
-                    AS BIGINT) AS n_fp
-        FROM documents GROUP BY lang ORDER BY lang
     """,
     'q_w2_search_snippets': """
         WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
@@ -1213,184 +876,7 @@ ORACLES: dict[str, str] = {
                CAST(count(*) AS BIGINT) AS n
         FROM m GROUP BY error_code ORDER BY error_code
     """,
-    'q_pii_redaction': r"""
-        WITH staged AS (
-            SELECT lang,
-                   text || ' contact user' || CAST(doc_id AS VARCHAR)
-                        || '@example.com or https://ex.com/p/'
-                        || CAST(doc_id AS VARCHAR)
-                        || ' tel +1 (555) 000-'
-                        || lpad(CAST(doc_id AS VARCHAR), 4, '0') AS msg
-            FROM documents),
-        s1 AS (
-            SELECT lang,
-                   len(regexp_extract_all(msg, 'https?://[^\s]+')) AS n_urls,
-                   regexp_replace(msg, 'https?://[^\s]+', '<URL>', 'g') AS m1
-            FROM staged),
-        s2 AS (
-            SELECT lang, n_urls,
-                   len(regexp_extract_all(m1,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}'))
-                       AS n_emails,
-                   regexp_replace(m1,
-                       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
-                       '<EMAIL>', 'g') AS m2
-            FROM s1),
-        s3 AS (
-            SELECT lang, n_urls, n_emails,
-                   len(regexp_extract_all(m2, '\+?[0-9][0-9()\- ]{7,}[0-9]'))
-                       AS n_phones,
-                   regexp_replace(m2, '\+?[0-9][0-9()\- ]{7,}[0-9]',
-                                  '<PHONE>', 'g') AS m3
-            FROM s2)
-        SELECT lang,
-               CAST(sum(n_urls) AS BIGINT) AS total_urls,
-               CAST(sum(n_emails) AS BIGINT) AS total_emails,
-               CAST(sum(n_phones) AS BIGINT) AS total_phones,
-               CAST(sum(length(m3)) AS BIGINT) AS total_redacted_chars
-        FROM s3 GROUP BY lang ORDER BY lang
-    """,
-    'q_repetition_stats': r"""
-        WITH w AS (
-            SELECT doc_id,
-                   unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                      x -> len(x) > 0)) AS w
-            FROM documents),
-        c AS (SELECT doc_id, w, count(*) AS c FROM w GROUP BY doc_id, w)
-        SELECT doc_id,
-               round(max(c) * 1.0 / sum(c), 6) AS top_word_frac,
-               round(count(*) * 1.0 / sum(c), 6) AS distinct_word_ratio,
-               CAST(sum(c) AS BIGINT) AS n_words
-        FROM c GROUP BY doc_id ORDER BY doc_id
-    """,
-    'q_source_quality_gate': """
-        WITH q AS (
-            SELECT source,
-                   round(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                         * 1.0 / greatest(length(text), 1), 6) AS alpha_ratio
-            FROM documents),
-        passing AS (
-            SELECT source FROM q GROUP BY source
-            HAVING avg(alpha_ratio) >= 0.8232)
-        SELECT d.source, CAST(count(*) AS BIGINT) AS n
-        FROM documents d JOIN passing USING (source)
-        GROUP BY d.source ORDER BY d.source
-    """,
-    'q_doc_chunking': r"""
-        WITH t AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(text, '\s+'),
-                               x -> len(x) > 0) AS toks
-            FROM documents),
-        st AS (
-            SELECT doc_id, toks, unnest(range(0, len(toks), 56)) AS s
-            FROM t WHERE len(toks) > 0),
-        c AS (
-            SELECT doc_id, (s // 56) AS chunk_idx,
-                   array_to_string(toks[s+1 : s+64], ' ') AS chunk_text,
-                   len(toks[s+1 : s+64]) AS n_tokens
-            FROM st),
-        lab AS (
-            SELECT doc_id,
-                   CAST(chunk_idx AS VARCHAR) || ':' || chunk_text AS lbl,
-                   n_tokens
-            FROM c)
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_chunks,
-               CAST(sum(n_tokens) AS BIGINT) AS total_chunk_tokens,
-               md5(string_agg(lbl, chr(31) ORDER BY lbl)) AS chunks_digest
-        FROM lab GROUP BY doc_id ORDER BY doc_id
-    """,
     'q_search_pipeline': _search_pipeline_oracle_sql(),
-
-    # the full Gopher repetition family: the 4-token-line / 2-line-
-    # paragraph layout is constructed identically on both sides, then
-    # all seven signals (dup line/para fractions + char fractions,
-    # top-2/3/4-gram char fractions with the count-then-weight tie
-    # rule) are re-derived from scratch
-    'q_gopher_repetition': r"""
-        WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
-                   FROM documents),
-        lin AS (SELECT doc_id, i AS pos,
-                       array_to_string(toks[(i*4+1):(i*4+4)], ' ')
-                           AS line
-                FROM t, LATERAL (SELECT unnest(range(0,
-                         CAST(ceil(len(toks)/4.0) AS INT))) AS i)),
-        par AS (SELECT doc_id, pos // 2 AS j,
-                       string_agg(line, chr(10) ORDER BY pos) AS para
-                FROM lin GROUP BY doc_id, pos // 2),
-        wa AS (SELECT doc_id,
-                      list_filter(list_transform(toks, x -> lower(x)),
-                                  x -> len(x) > 0) AS ws
-               FROM t),
-        chars AS (SELECT doc_id,
-                         COALESCE(list_sum(list_transform(ws,
-                                  x -> len(x))), 0) AS total_chars
-                  FROM wa),
-        lc AS (SELECT doc_id, line, count(*) AS c, len(line) AS w
-               FROM lin WHERE len(line) > 0 GROUP BY doc_id, line),
-        lstat AS (SELECT doc_id,
-                         round((sum(c) - count(*)) / sum(c), 6)
-                             AS dup_line_frac,
-                         round(sum(CASE WHEN c >= 2 THEN (c-1)*w
-                                        ELSE 0 END)
-                               / greatest(sum(c*w), 1), 6)
-                             AS dup_line_char_frac
-                  FROM lc GROUP BY doc_id),
-        pc AS (SELECT doc_id, para, count(*) AS c, len(para) AS w
-               FROM par WHERE len(para) > 0 GROUP BY doc_id, para),
-        pstat AS (SELECT doc_id,
-                         round((sum(c) - count(*)) / sum(c), 6)
-                             AS dup_para_frac,
-                         round(sum(CASE WHEN c >= 2 THEN (c-1)*w
-                                        ELSE 0 END)
-                               / greatest(sum(c*w), 1), 6)
-                             AS dup_para_char_frac
-                  FROM pc GROUP BY doc_id),
-        g AS (SELECT doc_id, 2 AS k,
-                     array_to_string(ws[(i+1):(i+2)], ' ') AS gram
-              FROM wa, LATERAL (SELECT unnest(range(0,
-                       greatest(len(ws) - 1, 0))) AS i)
-              UNION ALL
-              SELECT doc_id, 3 AS k,
-                     array_to_string(ws[(i+1):(i+3)], ' ') AS gram
-              FROM wa, LATERAL (SELECT unnest(range(0,
-                       greatest(len(ws) - 2, 0))) AS i)
-              UNION ALL
-              SELECT doc_id, 4 AS k,
-                     array_to_string(ws[(i+1):(i+4)], ' ') AS gram
-              FROM wa, LATERAL (SELECT unnest(range(0,
-                       greatest(len(ws) - 3, 0))) AS i)),
-        gc AS (SELECT doc_id, k, gram, count(*) AS c,
-                      len(gram) - (k-1) AS w
-               FROM g GROUP BY doc_id, k, gram),
-        gt AS (SELECT doc_id, k, c*w AS num,
-                      row_number() OVER (PARTITION BY doc_id, k
-                                         ORDER BY c DESC, w DESC) AS rn
-               FROM gc),
-        gp AS (SELECT doc_id,
-                      max(CASE WHEN k = 2 THEN num END) AS t2,
-                      max(CASE WHEN k = 3 THEN num END) AS t3,
-                      max(CASE WHEN k = 4 THEN num END) AS t4
-               FROM gt WHERE rn = 1 GROUP BY doc_id)
-        SELECT c0.doc_id,
-               COALESCE(l.dup_line_frac, 0.0) AS dup_line_frac,
-               COALESCE(l.dup_line_char_frac, 0.0)
-                   AS dup_line_char_frac,
-               COALESCE(p.dup_para_frac, 0.0) AS dup_para_frac,
-               COALESCE(p.dup_para_char_frac, 0.0)
-                   AS dup_para_char_frac,
-               round(COALESCE(g.t2, 0) / greatest(c0.total_chars, 1), 6)
-                   AS top_2gram_char_frac,
-               round(COALESCE(g.t3, 0) / greatest(c0.total_chars, 1), 6)
-                   AS top_3gram_char_frac,
-               round(COALESCE(g.t4, 0) / greatest(c0.total_chars, 1), 6)
-                   AS top_4gram_char_frac
-        FROM chars c0
-        LEFT JOIN lstat l USING (doc_id)
-        LEFT JOIN pstat p USING (doc_id)
-        LEFT JOIN gp g USING (doc_id)
-        ORDER BY c0.doc_id
-    """,
 
     # MinHash planted oracle (round 7): the construction makes the LSH
     # output provably the planted all-pairs set, so the oracle is pure
@@ -1449,25 +935,6 @@ ORACLES: dict[str, str] = {
         FROM h ORDER BY doc_id
     """,
 
-    # hash_split: thresholds are exact-integer-arithmetic hex literals
-    # (4/5 and 9/10 of 16^32); md5 hex compare is engine-portable
-    'q_hash_split': """
-        WITH s AS (
-            SELECT doc_id,
-                   CASE WHEN md5('doc-' || doc_id)
-                             < 'cccccccccccccccccccccccccccccccc'
-                        THEN 'train'
-                        WHEN md5('doc-' || doc_id)
-                             < 'e6666666666666666666666666666666'
-                        THEN 'val'
-                        ELSE 'test' END AS split
-            FROM documents)
-        SELECT split, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(doc_id) AS BIGINT) AS id_sum
-        FROM s GROUP BY split ORDER BY split
-    """,
-
-
     # Golden-histogram oracle: the (arity → n_docs) values below were
     # measured from the seeded LDA run (seed=42, maxIter=10, pinned
     # vocab) and verified parallelism-invariant (see q_lda_categories
@@ -1492,39 +959,6 @@ ORACLES: dict[str, str] = {
         FROM golden g JOIN stat s ON g.n = s.n AND g.tl = s.tl
         ORDER BY arity
     """,
-    'q_tfidf_top_terms': r"""
-        WITH toks AS (
-            SELECT doc_id,
-                   unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                                      x -> len(x) >= 3)) AS term
-            FROM documents),
-        tf AS (SELECT doc_id, term, count(*) AS tf
-               FROM toks GROUP BY doc_id, term),
-        dfreq AS (SELECT term, count(DISTINCT doc_id) AS df_count
-                  FROM toks GROUP BY term),
-        nd AS (SELECT count(*) AS n FROM documents),
-        j AS (SELECT t.term, d.df_count,
-                     t.tf * ln((nd.n + 1.0) / (d.df_count + 1.0)) AS tfidf
-              FROM tf t JOIN dfreq d USING (term), nd)
-        SELECT term, CAST(max(df_count) AS BIGINT) AS df_count,
-               round(sum(tfidf), 3) AS tfidf_sum
-        FROM j GROUP BY term
-        ORDER BY tfidf_sum DESC, term ASC LIMIT 20
-    """,
-
-    # NFC: both engines implement the Unicode standard algorithm —
-    # byte-for-byte md5 agreement on decomposed input is the check
-    'q_nfc_normalize': r"""
-        SELECT doc_id,
-               CAST(length(text || ' cafe' || chr(769)) AS BIGINT)
-                   AS len_raw,
-               CAST(length(nfc_normalize(text || ' cafe' || chr(769)))
-                   AS BIGINT) AS len_nfc,
-               md5(nfc_normalize(text || ' cafe' || chr(769)))
-                   AS nfc_md5
-        FROM documents ORDER BY doc_id
-    """,
-
     # compaction content invariance: what comes back after the rewrite
     # + swap must BE the corpus, independent of file layout
     'q_compaction_content': r"""
@@ -1534,28 +968,6 @@ ORACLES: dict[str, str] = {
                               ORDER BY doc_id::VARCHAR)) AS ids_md5,
                CAST(sum(length(text)) AS BIGINT) AS chars
         FROM documents
-    """,
-    # both shingle sets rebuilt in SQL and intersected — the benchmark
-    # slice is every 97th doc
-    'q_decontamination': r"""
-        WITH toks AS (
-            SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
-            FROM documents
-        ), sh AS (
-            SELECT doc_id,
-                   CASE WHEN len(t) >= 3 THEN
-                       list_distinct(list_transform(range(1, len(t) - 1),
-                           i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]))
-                   ELSE []::VARCHAR[] END AS shingles
-            FROM toks
-        ),
-        bench AS (SELECT DISTINCT unnest(shingles) AS s
-                  FROM sh WHERE doc_id % 97 = 0),
-        trainx AS (SELECT doc_id, unnest(shingles) AS s
-                   FROM sh WHERE doc_id % 97 <> 0)
-        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_overlap
-        FROM trainx JOIN bench USING (s)
-        GROUP BY doc_id ORDER BY doc_id
     """,
     # keep-best-per-cluster over the planted MinHash clusters: each
     # sentinel group is one cluster (pure arithmetic over doc_id), then
@@ -1627,39 +1039,24 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     50 names so a reordering is always deliberate.
     """
     return {
-        # -- flagship oracles: Bloom ingest, cluster keep-best and
-        # decontamination ---------------------------------------------
+        # -- flagship oracles: Bloom ingest and cluster keep-best -----
         'q_bloom_incremental_ingest': q_bloom_incremental_ingest,
         'q_cluster_keep_best': q_cluster_keep_best,
-        'q_decontamination': q_decontamination,
         # -- reference-parity and operator oracles --------------------
         'q_minhash_planted': q_minhash_planted,
-        'q_gopher_repetition': q_gopher_repetition,
         'q_w2_search_snippets': q_w2_search_snippets,
         'q_recrawl_upsert': q_recrawl_upsert,
-        'q_script_id': q_script_id,
         'q_f5_structured_semi_join': q_f5_structured_semi_join,
         'q_a6_topic_type': q_a6_topic_type,
         'q_error_taxonomy': q_error_taxonomy,
         'q_search_pipeline': q_search_pipeline,
-        'q_tfidf_top_terms': q_tfidf_top_terms,
         'q_lda_categories': q_lda_categories,
-        # -- thinner oracles: q_pii_redaction (native regexp),
-        # q_repetition_stats (covered by q_gopher_repetition) and the
-        # reference's size and destructive-dedup rules.
-        'q_pii_redaction': q_pii_redaction,
-        'q_repetition_stats': q_repetition_stats,
+        # -- thinner oracles: the reference's size and destructive-
+        # dedup rules --------------------------------------------------
         'q_f1_size_reject': q_f1_size_reject,
         'q_d3_destructive_dedup': q_d3_destructive_dedup,
         # -- further oracles -----------------------------------------
         'q_compaction_content': q_compaction_content,
-        'q_nfc_normalize': q_nfc_normalize,
-        'q_source_quality_gate': q_source_quality_gate,
-        'q_doc_chunking': q_doc_chunking,
-        'q_hash_split': q_hash_split,
-        'q_lang_id': q_lang_id,
-        'q_quality_scores': q_quality_scores,
-        'q_fingerprint': q_fingerprint,
         'q_warc_framing': q_warc_framing,
         'q_f4_category_overlap': q_f4_category_overlap,
         'q_html_meta': q_html_meta,

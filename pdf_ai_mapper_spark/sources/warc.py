@@ -234,8 +234,7 @@ def read_warc(spark, path: str, index=None,
     """``*.warc(.gz)`` files under ``path`` → DataFrame(url string,
     warc_ts timestamp, html binary, lang string) — the engine's input
     shape minus the fixture-only ground-truth column. ``lang`` is NULL
-    (WARC carries no language; run ``textstats.with_lang_id`` on the
-    extracted text to fill it).
+    (WARC carries no language).
 
     Without ``index``: one scan task per file (binaryFile source).
     Fine for convention-sized (~1 GiB) segments; a single multi-GB

@@ -7,21 +7,15 @@ and ``perfbench/*.py``. Reachability follows every ``import`` in a
 module's source, module-level and function-local, plus the parent
 packages an import runs. ``queries.py`` (the query catalog) is not a
 root and its edges are not followed: it may only import modules the
-engine paths already reach (or ones in ``NOT_YET_DELETED``), so a
-catalog entry cannot keep an operator alive on its own. No Spark is
-needed.
-
-``NOT_YET_DELETED`` names the unreached modules that are still
-shipped, with their catalog entries and tests, until a later deletion
-step removes them. The set is exact: a newly unreached module fails
-the test, and so does deleting one of these without dropping it here.
+engine paths already reach, so a catalog entry cannot keep an
+operator alive on its own. No Spark is needed.
 
 The same boundary holds one level down, for the public top-level
-functions and classes of the reached modules (``NOT_YET_DELETED``
-modules aside): each name must be live, not only referenced from
-``queries.py`` or the tests, unless ``CALLED_ONLY_FROM_CATALOG_OR_TESTS``
-lists it. Liveness is transitive. The root scripts and the
-module-level code of the reached modules are live; so is every
+functions and classes of the reached modules: each name must be live,
+not only referenced from ``queries.py`` or the tests, unless
+``CALLED_ONLY_FROM_CATALOG_OR_TESTS`` lists it. Liveness is
+transitive. The root scripts and the module-level code of the reached
+modules are live; so is every
 top-level function or class of a reached module whose name a live
 body references, and the walk follows references out of its body in
 turn. A name that only another unreached function references is not
@@ -45,9 +39,6 @@ CATALOG = f'{PKG}.queries'
 ROOTS = [f'{PKG}.api', f'{PKG}.pipeline',
          *sorted(ROOT.glob('scripts/*.py')),
          *sorted(ROOT.glob('perfbench/*.py'))]
-NOT_YET_DELETED = {
-    f'{PKG}.operators.textstats',
-}
 CALLED_ONLY_FROM_CATALOG_OR_TESTS = {
     'checkpoint.compact_output',
     'checkpoint.upsert_output',
@@ -121,17 +112,12 @@ def _reachable() -> set[str]:
 
 def test_every_package_module_is_reached_from_an_engine_path():
     unreachable = MODULES.keys() - _reachable() - {CATALOG}
-    assert not unreachable - NOT_YET_DELETED, (
-        'modules no engine path imports: '
-        f'{sorted(unreachable - NOT_YET_DELETED)}')
-    assert not NOT_YET_DELETED - unreachable, (
-        'NOT_YET_DELETED names modules that are gone or now reached: '
-        f'{sorted(NOT_YET_DELETED - unreachable)}')
+    assert not unreachable, (
+        f'modules no engine path imports: {sorted(unreachable)}')
 
 
 def test_catalog_imports_only_engine_modules():
-    outside = sorted(_imports(MODULES[CATALOG]) - _reachable()
-                     - NOT_YET_DELETED)
+    outside = sorted(_imports(MODULES[CATALOG]) - _reachable())
     assert not outside, (
         f'queries.py imports modules no engine path reaches: {outside}')
 
@@ -182,7 +168,7 @@ def test_every_public_function_is_referenced_from_an_engine_path():
     reached = _reachable()
     live = _live_names(reached)
     unreferenced = set()
-    for mod in reached - NOT_YET_DELETED:
+    for mod in reached:
         for node in ast.parse(MODULES[mod].read_text()).body:
             if (isinstance(node, _DEFS)
                     and not node.name.startswith('_')

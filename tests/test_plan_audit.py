@@ -22,15 +22,6 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_decontamination_train_side_never_shuffles(spark, sf):
-    """The benchmark shingle set must broadcast; the training corpus
-    must reach the semi-join without an exchange on its shingles."""
-    import __spark_entry__ as e
-    p = _plan(e.queries()['q_decontamination'](spark, sf))
-    assert 'BroadcastHashJoin' in p and 'LeftSemi' in p
-    assert 'SortMergeJoin' not in p
-
-
 def test_extraction_transform_no_payload_in_exchange(spark):
     """pipeline.transform: the only shuffle is the narrow content-hash
     aggregate — html payload and extracted/preprocessed text must
@@ -75,108 +66,11 @@ def test_filter_pushdown_reaches_scan(spark, sf):
     assert 'user_id' in pushed
 
 
-def _formatted(spark, df) -> str:
-    fm = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        'formatted')
-    return df._jdf.queryExecution().explainString(fm)
-
-
-
-def _sections(formatted: str) -> list[tuple[str, str, str]]:
-    """[(operator_id, operator_name, section_text)] from the operator
-    DETAILS region of a formatted explain (details follow both plan
-    trees, so callers filter by the ids present in the final tree)."""
-    import re
-    out, cur_id, cur_name, cur = [], None, None, []
-    for ln in formatted.splitlines():
-        m = re.match(r'\((\d+)\) (\w+)', ln)
-        if m:
-            if cur_name:
-                out.append((cur_id, cur_name, '\n'.join(cur)))
-            cur_id, cur_name, cur = m.group(1), m.group(2), [ln]
-        elif cur_name:
-            cur.append(ln)
-    if cur_name:
-        out.append((cur_id, cur_name, '\n'.join(cur)))
-    return out
-
-
-
-def _final_ids(formatted: str) -> set[str]:
-    """Operator ids appearing in FINAL plan regions of a formatted
-    AQE explain. A nested InMemoryRelation carries its OWN
-    AdaptiveSparkPlan whose '== Initial Plan ==' marker appears before
-    the outer final tree finishes printing, so 'split at the first
-    Initial marker' (the r5 recipe) drops outer-final operators.
-    Track marker blocks by INDENTATION: a marker governs exactly the
-    deeper-or-equal-indented lines below it until indentation falls
-    back past it; scanning stops where the details region starts
-    (section headers at column 0)."""
-    import re
-    ids: set[str] = set()
-    stack: list[tuple[int, bool]] = []   # (marker indent, is_final)
-    for ln in formatted.splitlines():
-        if re.match(r'^\(\d+\) ', ln):   # details region begins
-            break
-        stripped = ln.lstrip(' :+|-*')
-        indent = len(ln) - len(stripped)
-        if stripped.startswith(('== Final Plan ==', '== Initial Plan ==')):
-            while stack and stack[-1][0] >= indent:
-                stack.pop()
-            stack.append((indent, stripped.startswith('== Final')))
-            continue
-        m = re.search(r'\((\d+)\)', ln)
-        if not m:
-            continue
-        while stack and stack[-1][0] > indent:
-            stack.pop()
-        if not stack or stack[-1][1]:
-            ids.add(m.group(1))
-    return ids
-
-
-
-def test_gopher_repetition_text_never_in_exchange(spark, sf):
-    """gopher_repetition (round 6): one exploded union of narrow
-    (id, kind, key) rows — the document text column itself must not
-    ride any Exchange (keys are lines/paragraphs/n-grams, bounded per
-    row; the full text never moves)."""
-    from pdf_ai_mapper_spark.operators.textstats import gopher_repetition
-    docs = spark.read.parquet(f'{sf}/documents.parquet') \
-        .select('doc_id', 'text')
-    import re
-
-    out = gopher_repetition(docs)
-    out.collect()
-    fm = _formatted(docs.sparkSession, out)
-    for dep in getattr(out, '_persisted_deps', ()):
-        dep.unpersist()
-    # Check the exchanges' INPUT COLUMN lists from the formatted
-    # details (the toString line only shows partition KEYS, and
-    # round-robin exchanges have none; ADVICE r7). Scoped exemption: a
-    # ROUND-ROBIN exchange may carry raw text — that is the
-    # ensure_min_parallelism spread, which fires only on single-split
-    # inputs (this one-row-group parquet file) and sits on the scan;
-    # keyed exchanges never carry text.
-    final_ids = _final_ids(fm)
-    n_exchanges = 0
-    for sid, name, section in _sections(fm):
-        if sid not in final_ids or name != 'Exchange':
-            continue
-        n_exchanges += 1
-        inputs = ' '.join(ln for ln in section.splitlines()
-                          if ln.startswith('Input'))
-        if 'RoundRobinPartitioning' not in section:
-            assert 'text#' not in inputs, section
-    assert n_exchanges >= 1
-
-
-
 def test_release_contract_no_persist_leaks(spark, sf):
-    """Every catalog query that persists internally (shared array
-    bases, LSH signatures, connected-component labels) must leave ZERO
-    persisted RDDs behind — a leak per call accumulates MEMORY_AND_DISK
-    tables across a bench loop or a long driver session."""
+    """Every catalog query that persists internally (LSH signatures,
+    connected-component labels) must leave ZERO persisted RDDs behind
+    — a leak per call accumulates MEMORY_AND_DISK tables across a bench
+    loop or a long driver session."""
     # NOT covered: q_minhash_incremental — its operator
     # localCheckpoint()s, and checkpointed RDDs stay registered until
     # the JVM ContextCleaner GCs the unreferenced handles (bounded per call,
@@ -193,8 +87,7 @@ def test_release_contract_no_persist_leaks(spark, sf):
     # checkpoint-class RDDs behind (GC-cleaned) — assert no GROWTH
     # beyond the baseline, not absolute zero
     baseline = _ids()
-    for name in ('q_gopher_repetition', 'q_cluster_keep_best',
-                 'q_minhash_near_dups'):
+    for name in ('q_cluster_keep_best', 'q_minhash_near_dups'):
         cat[name](spark, sf).collect()
         new = _ids() - baseline
         assert not new, (name, new)
