@@ -10,8 +10,7 @@ Common-Crawl-style web-page tables:
                    snippets). No Spark imports; unit-testable standalone.
 - ``operators``  — Spark DataFrame operators wrapping the kernels as
                    Arrow pandas UDFs, plus native-Catalyst dedup, search,
-                   categorization, the Bloom ingest pre-filter and the
-                   scan parallelism spread.
+                   categorization and the Bloom ingest pre-filter.
 - ``fixtures``   — deterministic synthetic ``web_pages`` generator
                    (seed-free: content derived from row index).
 - ``pipeline``   — the end-to-end extraction pipeline with

@@ -197,11 +197,12 @@ class MapperAPI:
         if docs is None:
             return {'status': 'success', 'message': 'Recategorized 0 documents',
                     'structured_categories': []}
+        n = docs.count()
         if clusters is not None:
             clusters = max(2, min(20, clusters))            # categories.py:85
             cat_df = fit_kmeans_categories(docs, clusters, cfg=self.cfg)
         else:
-            cat_df = fit_lda_categories(docs, cfg=self.cfg)
+            cat_df = fit_lda_categories(docs, cfg=self.cfg, doc_count=n)
         (cat_df.select('url', 'categories')
          .write.mode('overwrite').parquet(self._cats_path()))
         names = sorted(r['c'] for r in
@@ -209,7 +210,6 @@ class MapperAPI:
                        .distinct().collect())
         dim = category_dimension(self.spark, names)
         dim.write.mode('overwrite').parquet(self._structured_path())
-        n = docs.count()
         return {'status': 'success',
                 'message': f'Recategorized {n} documents',  # categories.py:76
                 'structured_categories': self._structured_list(),

@@ -54,7 +54,6 @@ class EngineConfig:
     )
     arrow_max_records_per_batch: int = 2048  # payloads are large; keep batches bounded
     output_buckets: int = 64                 # url-hash buckets for output layout + resume
-    hot_host_threshold: int = 10_000         # rows/host before salting kicks in
 
 
 DEFAULT_CONFIG = EngineConfig()

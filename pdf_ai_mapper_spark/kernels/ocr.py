@@ -1,11 +1,12 @@
-"""Pluggable OCR kernel with a deterministic stub.
+"""OCR kernel: a deterministic stub.
 
 The reference OCRs with pytesseract (``pdf_extractor.py:84-97``,
 ``image_extractor.py:29-36``).  Tesseract/PIL/pdf2image are absent in
-this runtime (and often on locked-down clusters), so the kernel is a
-module-level hook: production swaps in a Tesseract-backed callable via
-``set_ocr_kernel``; the default stub deterministically recovers the
-ground-truth text the synthetic fixtures embed in their payloads:
+this runtime (and often on locked-down clusters), so ``ocr_image`` and
+``ocr_pdf_pages`` call stubs that deterministically recover the
+ground-truth text the synthetic fixtures embed in their payloads (a
+Tesseract-backed kernel would replace the stubs behind the same two
+signatures):
 
 - PNG stub payloads carry a standard ``tEXt`` chunk with keyword
   ``gt`` whose value is the OCR ground truth.
@@ -21,7 +22,6 @@ from __future__ import annotations
 import base64
 import re
 import struct
-from collections.abc import Callable
 
 _OCRPAGE_RE = re.compile(rb'%OCRPAGE:([A-Za-z0-9+/=]+)')
 
@@ -64,23 +64,9 @@ def stub_ocr_pdf_pages(data: bytes, max_pages: int) -> list[str]:
     return texts[:max_pages]
 
 
-# Hooks — production replaces these with Tesseract-backed callables.
-_ocr_image: Callable[[bytes], str] = stub_ocr_image
-_ocr_pdf_pages: Callable[[bytes, int], list[str]] = stub_ocr_pdf_pages
-
-
-def set_ocr_kernel(image_fn: Callable[[bytes], str] | None = None,
-                   pdf_pages_fn: Callable[[bytes, int], list[str]] | None = None) -> None:
-    global _ocr_image, _ocr_pdf_pages
-    if image_fn is not None:
-        _ocr_image = image_fn
-    if pdf_pages_fn is not None:
-        _ocr_pdf_pages = pdf_pages_fn
-
-
 def ocr_image(data: bytes) -> str:
-    return _ocr_image(data)
+    return stub_ocr_image(data)
 
 
 def ocr_pdf_pages(data: bytes, max_pages: int) -> list[str]:
-    return _ocr_pdf_pages(data, max_pages)
+    return stub_ocr_pdf_pages(data, max_pages)

@@ -9,8 +9,8 @@ fixtures use (the same shape as the reference's own test fixture,
 ``/root/reference/tests/conftest.py:143-158``): uncompressed content
 streams with ``(…) Tj`` / ``[(…) …] TJ`` / ``(…) '`` text-showing
 operators.  On a real cluster a pypdf-backed kernel is a drop-in for
-``parse_pdf_pages`` (same signature; see ``ocr.set_ocr_kernel`` for the
-analogous OCR hook).
+``parse_pdf_pages`` (same signature), as a Tesseract-backed one is for
+``ocr.ocr_image`` / ``ocr_pdf_pages``.
 """
 
 from __future__ import annotations

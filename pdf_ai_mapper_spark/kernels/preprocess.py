@@ -91,30 +91,6 @@ def _lower_strip(text: str) -> str:
     return text.lower().translate(_STRIP_TABLE)
 
 
-def normalize_text(text: str) -> str:
-    """T2-T5: lowercase, strip non-Latin scripts / specials / digits,
-    collapse whitespace. (reference text_preprocessor.py:106-119)
-
-    The collapse is ``' '.join(text.split())``, byte-identical to the
-    reference's ``re.sub(r'\\s+', ' ', text).strip()``: regex ``\\s``
-    and ``str.split``'s whitespace table agree on every BMP codepoint
-    (exhaustively checked + 20k-string fuzz, tests/test_kernels.py),
-    and the C-level split is ~2× faster than the regex pass."""
-    text = _lower_strip(text)
-    return ' '.join(text.split())
-
-
-def meaningful_tokens(normalized: str) -> list[str]:
-    """T6-T8 on the deterministic fallback path: whitespace split, keep
-    tokens with len>=3, not in the frozen stopword set, not all digits.
-    (reference text_preprocessor.py:125-139)"""
-    stops = STOP_WORDS  # local binding: one global lookup, not per token
-    return [
-        tok for tok in normalized.split()
-        if len(tok) >= 3 and tok not in stops and not tok.isdigit()
-    ]
-
-
 def extract_key_phrases(tokens: list[str]) -> list[str]:
     """T9: sliding-window bigrams (both words len>=3) and trigrams (all
     len>=3); Counter.most_common(20) filtered to count>=2.  Counter
@@ -150,26 +126,21 @@ def extract_key_phrases(tokens: list[str]) -> list[str]:
     return [p for p, _ in nlargest(20, dups, key=_phrase_count)]
 
 
-def preprocess_text(text: str, mode: str = 'deterministic') -> str:
+def preprocess_text(text: str) -> str:
     """Full T1-T10 chain. Byte-identical to the reference's
-    deterministic path for any input string (default mode).
+    deterministic path for any input string.
 
-    Fuses T2-T8 into one pass: ``meaningful_tokens(normalize_text(t))``
-    joins the tokens with ' ' only to immediately re-split them —
-    ``' '.join(xs).split() == xs`` for any split() output, so the
-    direct formulation skips one full-string join + split per document
-    (the standalone normalize_text/meaningful_tokens stay for the
-    T-chain parity tests and SQL oracles).
+    T2-T8 run as one pass: lower + strip (``_lower_strip``), the
+    whitespace split, then the T7 token filter. The split stands in
+    for the reference's ``re.sub(r'\\s+', ' ', text).strip()``
+    collapse followed by ``text.split()``: regex ``\\s`` and
+    ``str.split``'s whitespace table agree on every BMP codepoint
+    (exhaustively checked + 20k-string fuzz, tests/test_kernels.py).
 
-    ``mode='nltk'`` reproduces the NLTK-PRESENT reference path
-    (text_preprocessor.py:22-27,122-129) — see nltk_tokenize for the
-    derivation and the documented POS-tagging delta."""
+    ``preprocess_text_nltk`` is the NLTK-present reference path; the
+    extraction operator picks one of the two by ``preprocess_mode``."""
     if text.startswith("Error:"):  # T1, reference :98-99
         return text
-    if mode == 'nltk':
-        return preprocess_text_nltk(text)
-    if mode != 'deterministic':
-        raise ValueError(f'unknown preprocess mode: {mode!r}')
     stops = STOP_WORDS
     tokens = [
         tok for tok in _lower_strip(text).split()

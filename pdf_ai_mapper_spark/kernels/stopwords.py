@@ -86,7 +86,7 @@ STOP_WORDS = frozenset(BASIC_STOPWORDS | ADDITIONAL_STOPWORDS)
 # corpora/stopwords/english, 179 words — public corpus, transcribed
 # from its spec, NOT read from any nltk installation).  This is what
 # reference text_preprocessor.py:26 loads when NLTK data is present;
-# preprocess_text(mode='nltk') uses it.  The apostrophed entries
+# preprocess_text_nltk uses it.  The apostrophed entries
 # ("you're", "don't", …) can never match a cleaned token — the T4
 # cleanup strips apostrophes before tokenization — but they are kept
 # verbatim so the set equals the reference's self.stop_words exactly.

@@ -99,60 +99,24 @@ def determine_topic_type(terms: list[str]) -> str:
     return best if scores[best] > 0 else "Document"
 
 
-def _rx_filter(pattern: str):
-    # closure factory — a default-arg lambda would be bound as a 2-arg
-    # HOF lambda (PLANS.md hazard list)
-    return lambda t: t.rlike(pattern)
-
-
-def with_topic_type(df: DataFrame, text_col: str = 'text',
-                    out_col: str = 'topic_type') -> DataFrame:
-    """A6 topic-type scoring as a NATIVE Spark expression (reference
-    ``_determine_topic_type``, category_manager.py:266-296): per row,
-    score each type = number of whitespace tokens containing any of the
-    type's keywords (one alternation regex per type — a single
-    codegen'd pass over the token array, not one filter per keyword);
-    argmax with first-in-dict-order tie-break via array_max over
-    (score, -index) structs; 'Document' when every score is 0.
-
-    The driver-side Python twin (``determine_topic_type``) keeps the
-    reference's exact list-of-terms semantics for topic naming; this
-    column form is what a 100 TB corpus-labeling pass would run."""
-    toks = F.split(F.lower(F.col(text_col)), ' ')
-    entries = []
-    for i, (ttype, kws) in enumerate(TOPIC_KEYWORDS.items()):
-        score = F.size(F.filter(toks, _rx_filter('|'.join(kws))))
-        entries.append(F.struct(score.alias('s'), F.lit(-i).alias('ni'),
-                                F.lit(ttype).alias('n')))
-    best = F.array_max(F.array(*entries))
-    return df.withColumn(
-        out_col,
-        F.when(best['s'] > 0, best['n']).otherwise(F.lit('Document')))
-
-
 def fit_lda_categories(df: DataFrame,
                        text_col: str = 'preprocessed_text',
                        cfg: EngineConfig = DEFAULT_CONFIG,
-                       max_iter: int | None = None,
-                       doc_count: int | None = None,
-                       models_out: dict | None = None) -> DataFrame:
+                       doc_count: int | None = None) -> DataFrame:
     """Full categorization stage. Cold start (<5 docs,
     category_manager.py:64-75): per-doc simple 'Topic: w1, w2, w3'
     categories (A1). Otherwise CountVectorizer + LDA(k=8, seed=42) →
-    per-doc top-3 topics over the 0.1 threshold."""
+    per-doc top-3 topics over the 0.1 threshold. ``doc_count`` spares
+    the count of ``df`` when the caller already has it."""
     doc_count = doc_count if doc_count is not None else df.count()
     if doc_count < cfg.min_docs_for_model:
         return with_simple_categories(df, text_col)
 
     toks = with_tokens(df, text_col)
     feats, cv_model = count_vector_features(toks)
-    lda = LDA(k=cfg.lda_topics, seed=cfg.lda_seed,
-              maxIter=max_iter if max_iter is not None else cfg.lda_max_iter,
+    lda = LDA(k=cfg.lda_topics, seed=cfg.lda_seed, maxIter=cfg.lda_max_iter,
               featuresCol='features')
     model = lda.fit(feats)
-    if models_out is not None:  # S9: hand models to the caller for save_models
-        models_out['vectorizer'] = cv_model
-        models_out['lda'] = model
 
     # topic names from describeTopics (driver-side — k×10 terms, tiny)
     vocab = cv_model.vocabulary
@@ -210,38 +174,6 @@ def with_simple_categories(df: DataFrame,
                              else ['Uncategorized'] for t in texts])
 
     return df.withColumn('categories', cats_udf(F.col(text_col)))
-
-
-def save_models(path: str, cv_model=None, lda_model=None,
-                kmeans_model=None) -> None:
-    """S9 model persistence: pyspark.ml writers replace the reference's
-    pickle files (category_manager.py:141-145, document_service.py:
-    132-138). NB the reference's pickle LOAD path is dead code — a
-    NameError at category_manager.py:28 means it always refits
-    (SURVEY.md §2.1 S9); we implement the documented intent."""
-    import os
-    if cv_model is not None:
-        cv_model.write().overwrite().save(os.path.join(path, 'vectorizer'))
-    if lda_model is not None:
-        lda_model.write().overwrite().save(os.path.join(path, 'lda'))
-    if kmeans_model is not None:
-        kmeans_model.write().overwrite().save(os.path.join(path, 'kmeans'))
-
-
-def load_models(path: str) -> dict:
-    """Load whichever persisted models exist under ``path``."""
-    import os
-
-    from pyspark.ml.clustering import KMeansModel, LocalLDAModel
-    out: dict = {}
-    if os.path.exists(os.path.join(path, 'vectorizer')):
-        out['vectorizer'] = CountVectorizerModel.load(
-            os.path.join(path, 'vectorizer'))
-    if os.path.exists(os.path.join(path, 'lda')):
-        out['lda'] = LocalLDAModel.load(os.path.join(path, 'lda'))
-    if os.path.exists(os.path.join(path, 'kmeans')):
-        out['kmeans'] = KMeansModel.load(os.path.join(path, 'kmeans'))
-    return out
 
 
 def category_dimension(spark, category_names: list[str]) -> DataFrame:

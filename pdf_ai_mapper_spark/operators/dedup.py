@@ -99,6 +99,44 @@ def _affine_params(num_hashes: int) -> list[tuple[int, int]]:
     return params
 
 
+# A partition fed under ~32 KiB of source bytes cannot amortize the
+# spread's repartition round trip (measured at sf0.1: unconditional
+# spreads cost 0.2-0.7 s there while per-split work is milliseconds);
+# any real corpus clears this by orders of magnitude.
+_SPREAD_MIN_BYTES_PER_PART = 32 * 1024
+
+
+def _ensure_min_parallelism(df: DataFrame) -> DataFrame:
+    """Spread a one-split scan input to ``defaultParallelism``
+    partitions before per-row-heavy map work; NO-OP when the plan
+    already has that many partitions, or when the plan's estimated
+    size would give each target partition under
+    ``_SPREAD_MIN_BYTES_PER_PART`` source bytes.
+
+    A parquet file with one row group scans as ONE task regardless of
+    ``spark.sql.files.maxPartitionBytes`` (byte-range splits assign row
+    groups whole), so every pre-shuffle map stage over it serializes
+    onto one core. A 100 TB table scans as thousands of splits, so the
+    guard never fires there and never adds a shuffle. Plain round-robin
+    ``repartition(n)`` (sort-based, deterministic under task retries)
+    — no key, so no pmod-rehash occupancy loss.
+
+    Apply to SCAN-STAGE inputs only: the partition probe reads the
+    pre-execution plan (``df.rdd.getNumPartitions()``), which for a
+    mid-plan DataFrame reports the pre-AQE shuffle partition count."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if target <= 1 or df.rdd.getNumPartitions() >= target:
+        return df
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan()
+                  .stats().sizeInBytes())
+    except Exception:
+        est = None   # unknown size: be conservative, spread
+    if est is not None and est < _SPREAD_MIN_BYTES_PER_PART * target:
+        return df
+    return df.repartition(target)
+
+
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
                        num_hashes: int = 64, k: int = 3) -> DataFrame:
     """(id, sig: array<bigint>) — num_hashes min-hash values per doc.
@@ -114,7 +152,7 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     groupBy formulation shuffled |docs|·|shingles| rows; this one
     shuffles nothing.
 
-    Spread via ensure_min_parallelism since round 8: the r7 "not worth
+    Spread via _ensure_min_parallelism since round 8: the r7 "not worth
     it" call was tuned at sf0.1 (17 MB scan, ~2.8 s of work); at sf1.0
     the single-row-group documents scan serialized ~11 s of shingle +
     signature work onto one core while every downstream stage blocked
@@ -124,11 +162,9 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     filter pushdown sinks the predicate below the spread exchange into
     the scan, and the expensive form re-evaluates the whole shingle
     expression there, serially (the ngram round-8 lesson)."""
-    from .skew import SPREAD_MIN_BYTES_PER_PART, ensure_min_parallelism
     n_toks = F.size(F.split(F.lower(F.col(text_col)), r'\s+'))
-    base_in = ensure_min_parallelism(
-        df.select(id_col, text_col).filter(n_toks >= F.lit(k)),
-        min_bytes_per_part=SPREAD_MIN_BYTES_PER_PART)
+    base_in = _ensure_min_parallelism(
+        df.select(id_col, text_col).filter(n_toks >= F.lit(k)))
     shingled = with_shingles(base_in, text_col, k)
     base = F.transform(F.col('shingles'),
                        lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE31)))

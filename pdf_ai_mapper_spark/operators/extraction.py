@@ -48,73 +48,8 @@ def doctype_col(html: Column) -> Column:
     )
 
 
-def with_doctype(df: DataFrame, payload_col: str = 'html') -> DataFrame:
-    return df.withColumn('doctype', doctype_col(F.col(payload_col)))
-
-
-# head-metadata patterns, pinned for the SQL oracle: Java regex and
-# DuckDB's RE2 agree on (?is) flags, lazy quantifiers, [^"]* classes,
-# group-1 extraction, AND the no-match result ('' in both engines).
-# Whitespace is the EXPLICIT class [ \t\n\f\r] (ADVICE r7; round-4
-# transcription rule): Java's \s additionally matches U+000B where
-# RE2's does not, so a bare \s here would diverge from the oracle on
-# payloads containing vertical tabs.
-_WS = r'[ \t\n\f\r]'
-_TITLE_RX = r'(?is)<title[^>]*>(.*?)</title>'
-_ROBOTS_RX = (r'(?is)<meta[^>]*name' + _WS + r'*=' + _WS
-              + r'*"robots"[^>]*content' + _WS + r'*=' + _WS + r'*"([^"]*)"')
-_CANONICAL_RX = (r'(?is)<link[^>]*rel' + _WS + r'*=' + _WS
-                 + r'*"canonical"[^>]*href' + _WS + r'*=' + _WS
-                 + r'*"([^"]*)"')
-
-
-def with_html_meta(df: DataFrame, payload_col: str = 'html',
-                   url_col: str = 'url') -> DataFrame:
-    """Head-metadata extraction for HTML payloads — the crawl-hygiene
-    step a Common-Crawl pipeline runs BEFORE content extraction and
-    URL-level dedup: pages that declare ``<meta name="robots"
-    content="noindex">`` must not enter the corpus, and pages that
-    declare ``<link rel="canonical">`` should consolidate onto the
-    canonical target (the publisher's own dedup hint — catches mobile/
-    AMP/print/session-URL variants that no syntactic URL
-    canonicalization can).
-
-    Adds columns (all native regexp on the decoded payload — pure
-    codegen inside the scan projection, zero shuffle, zero Python):
-    - ``html_title``: first <title> text ('' when absent),
-    - ``meta_robots``: robots meta content ('' when absent),
-    - ``noindex``: true iff meta_robots contains 'noindex'
-      (case-insensitive) — the corpus-exclusion gate,
-    - ``canonical_target``: the rel=canonical href when present and
-      non-empty, else the page's own ``url_col`` — group directly on
-      this column for canonical consolidation (first grouped stage
-      shuffles only (target, narrow keys), never payloads).
-
-    First-attribute-wins and double-quoted attributes are the pinned
-    contract (regexes above are shared verbatim with the SQL oracle;
-    single-quoted/unquoted attribute variants are a documented
-    non-goal — at corpus scale they route through the full DOM parse
-    in kernels/html_extract, not this fast path)."""
-    page = F.decode(F.col(payload_col), 'UTF-8') \
-        if dict(df.dtypes)[payload_col] == 'binary' else F.col(payload_col)
-    robots = F.regexp_extract(page, _ROBOTS_RX, 1)
-    canon = F.regexp_extract(page, _CANONICAL_RX, 1)
-    return (df
-            .withColumn('html_title', F.regexp_extract(page, _TITLE_RX, 1))
-            .withColumn('meta_robots', robots)
-            .withColumn('noindex',
-                        F.lower(robots).contains('noindex'))
-            .withColumn('canonical_target',
-                        F.when(canon != '', canon)
-                        .otherwise(F.col(url_col))))
-
-
-def size_ok_col(payload: Column, max_bytes: int) -> Column:
-    """F1 file-size predicate as a native expression (reference
-    document_processor.py:66-73; the per-row kernel mirror is
-    kernels/extract.py:88-89). Native so Catalyst can push it into the
-    scan and route oversized rows without touching Python."""
-    return F.octet_length(payload) <= F.lit(max_bytes)
+def with_doctype(df: DataFrame) -> DataFrame:
+    return df.withColumn('doctype', doctype_col(F.col('html')))
 
 
 def error_code_col(text: Column) -> Column:
@@ -193,68 +128,24 @@ def _make_extract_preprocess_udf(preprocess_mode: str):
 extract_preprocess_udf = _make_extract_preprocess_udf('deterministic')
 
 
-def needs_salt(df: DataFrame, threshold: int) -> bool:
-    """Cheap pre-aggregation skew detector (SURVEY.md §4.3's 'salting
-    on by default with a measured threshold'): max rows per host over
-    the url column only — a narrow partial-agg job, the payload stays
-    in place.  A host over ``threshold`` rows means url-hash
-    repartitioning can put re-crawl bursts (many rows, few urls) on one
-    task; the caller then salts the repartition key with warc_ts.
-
-    try_parse_url, not parse_url: ANSI mode (on by default) makes
-    parse_url THROW on malformed URLs, and real WARC/crawl input — the
-    use case for auto-salt — routinely contains them; try_parse_url
-    returns NULL and the malformed rows just group together."""
-    top = (df.groupBy(F.try_parse_url(F.col('url'), F.lit('HOST')).alias('__h'))
-           .agg(F.count('*').alias('__n'))
-           .agg(F.max('__n').alias('m')).collect())
-    return bool(top) and (top[0]['m'] or 0) > threshold
-
-
 def extracted(df: DataFrame,
-              payload_col: str = 'html',
-              partitions: int | None = None,
-              preprocess_mode: str = 'deterministic',
-              auto_salt: bool = True,
-              hot_host_threshold: int | None = None) -> DataFrame:
+              preprocess_mode: str = 'deterministic') -> DataFrame:
     """Input table → + doctype, extracted_text, preprocessed_text,
     content_hash.
 
-    NO repartition by default: shuffling raw payload bytes before the
-    UDFs is a full write+read of the corpus (measured: it capped
-    N→4N extraction scaling at 0.3 efficiency locally, and at 100 TB
-    it would be a 100 TB shuffle). Uniform work distribution comes from
-    the scan itself — `spark.sql.files.maxPartitionBytes` splits
-    parquet row-groups evenly, and the url-hash bucket layout of our
-    own outputs is already uniform. Pass ``partitions`` only when the
-    input layout is genuinely pathological (a handful of giant
-    unsplittable files).
-
-    When ``partitions`` is passed and ``auto_salt`` is on (default),
-    ``needs_salt`` probes for hot hosts first; over the threshold
-    (cfg.hot_host_threshold) the repartition key becomes
-    xxhash64(url, warc_ts), spreading same-url re-crawl bursts across
-    tasks.  Salting only changes physical layout — every downstream
-    stage (dedup agg, bucket write) keys on content, not partition."""
+    NO repartition: shuffling raw payload bytes before the UDFs is a
+    full write+read of the corpus (measured: it capped N→4N extraction
+    scaling at 0.3 efficiency locally, and at 100 TB it would be a
+    100 TB shuffle). Uniform work distribution comes from the scan
+    itself — `spark.sql.files.maxPartitionBytes` splits parquet
+    row-groups evenly, and the url-hash bucket layout of our own
+    outputs is already uniform."""
     fused = (extract_preprocess_udf if preprocess_mode == 'deterministic'
              else _make_extract_preprocess_udf(preprocess_mode))
-    out = with_doctype(df, payload_col)
-    if partitions:
-        threshold = (hot_host_threshold if hot_host_threshold is not None
-                     else DEFAULT_CONFIG.hot_host_threshold)
-        key_cols = ['url']
-        if auto_salt and 'warc_ts' in df.columns and needs_salt(df, threshold):
-            key_cols.append('warc_ts')
-        # repartition on the FULL-RANGE hash: repartition(n, expr)
-        # applies hash(expr) % n, so wrapping the key in pmod(.., n)
-        # first collapses it to n values that re-hash into ~0.63*n
-        # occupied partitions (measured: 8 requested → 4 non-empty);
-        # the raw 64-bit hash distributes uniformly
-        out = out.repartition(partitions, F.xxhash64(*key_cols))
     return (
-        out
-        .withColumn('content_hash', F.md5(F.col(payload_col)))  # D1: F.md5 == hashlib.md5 hex
-        .withColumn('__ep', fused(F.col(payload_col)))
+        with_doctype(df)
+        .withColumn('content_hash', F.md5(F.col('html')))  # D1: F.md5 == hashlib.md5 hex
+        .withColumn('__ep', fused(F.col('html')))
         .withColumn('extracted_text', F.col('__ep.extracted_text'))
         .withColumn('preprocessed_text', F.col('__ep.preprocessed_text'))
         .drop('__ep')
@@ -262,5 +153,5 @@ def extracted(df: DataFrame,
                     F.col('extracted_text').startswith('Error'))  # F3
         .withColumn('error_code', error_code_col(F.col('extracted_text')))
         .withColumn('processed_at', F.current_timestamp())
-        .drop(payload_col)  # prune the binary before any shuffle
+        .drop('html')  # prune the binary before any shuffle
     )

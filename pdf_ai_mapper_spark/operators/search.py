@@ -166,30 +166,12 @@ def resolve_structured(dim_rows: Iterable,
     dicts with type, keywords, display_name) whose type is in
     ``category_types`` or whose keywords overlap ``keywords``
     (reference filter_manager.py:52-68, search.py:31-42). Sorted,
-    distinct; empty when nothing matches."""
+    distinct; empty when nothing matches, and ``category_filter``
+    keeps every row for an empty list, so a structured filter that
+    names no category searches unfiltered."""
     types, kws = set(category_types or ()), set(keywords or ())
     return sorted({r['display_name'] for r in dim_rows
                    if r['type'] in types or kws & set(r['keywords'] or ())})
-
-
-def structured_category_filter(df: DataFrame, cats_dim: DataFrame,
-                               category_types: list[str] | None = None,
-                               keywords: list[str] | None = None,
-                               cat_col: str = 'categories') -> DataFrame:
-    """F5/J3: resolve type/keyword filters against the structured
-    category dimension, then filter with ONE native arrays_overlap
-    predicate — no explode, no shuffle, heavy rows never move. The
-    dimension is driver-built (``categorize.category_dimension``: topic
-    names, ≤ dozens), so it is collected. No filter → ``df`` as is; no
-    matching name → no rows."""
-    if not (category_types or keywords):
-        return df
-    names = resolve_structured(
-        cats_dim.select('type', 'keywords', 'display_name').collect(),
-        category_types, keywords)
-    if not names:
-        return df.filter(F.lit(False))
-    return category_filter(df, names, cat_col)
 
 
 def search(df: DataFrame, query: str,

@@ -74,12 +74,10 @@ _HASH_ROW_BYTES = 64
 
 
 def transform(input_df: DataFrame, run_id: str,
-              cfg: EngineConfig = DEFAULT_CONFIG,
-              partitions: int | None = None) -> DataFrame:
+              cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
     """The pure (no-IO) pipeline body: input web_pages → output rows."""
     out = input_df.withColumn('bucket', cp.bucket_of('url', cfg.output_buckets))
-    out = extracted(out, payload_col='html', partitions=partitions,
-                    preprocess_mode=cfg.preprocess_mode)
+    out = extracted(out, preprocess_mode=cfg.preprocess_mode)
     # first-seen duplicate flag WITHOUT shuffling the heavy text rows:
     # a narrow (hash, ts, url) aggregation finds each hash's first
     # sighting, joined back on content_hash — AQE broadcasts the agg

@@ -16,12 +16,12 @@ Keys are prefixed with the SURVEY.md §2 operator ids they cover.
 
 from __future__ import annotations
 
+import dataclasses
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .kernels.stopwords import TOPIC_KEYWORDS
 from .operators.dedup import dedup_exact, minhash_lsh_pairs
 
 
@@ -123,18 +123,6 @@ def q_w2_search_snippets(spark, sf_dir):
     return out.select('doc_id', 'score', 'snippet')
 
 
-def q_f1_size_reject(spark, sf_dir):
-    """F1 file-size predicate (operators/extraction.size_ok_col;
-    reference document_processor.py:66-73): accept/reject counts at a
-    1500-byte threshold over the UTF-8 payload size."""
-    from .operators.extraction import size_ok_col
-    d = _t(spark, sf_dir, 'documents')
-    ok = size_ok_col(F.encode(F.col('text'), 'UTF-8'), 1500)
-    return (d.groupBy(ok.alias('accepted'))
-            .agg(F.count('*').cast('long').alias('n'))
-            .orderBy('accepted'))
-
-
 def q_f4_category_overlap(spark, sf_dir):
     """F4 category-overlap filter (operators/search.category_filter;
     reference filter_manager.py:25-34): docs whose category array
@@ -152,20 +140,22 @@ def q_f4_category_overlap(spark, sf_dir):
 
 def q_f5_structured_semi_join(spark, sf_dir):
     """F5 structured category filter (operators/search.
-    structured_category_filter + operators/categorize.
-    category_dimension; reference filter_manager.py:52-68): resolve a
-    type filter + a keyword filter against the category dimension,
-    broadcast-semi-join the docs, count per (lang, source)."""
+    resolve_structured + category_filter over operators/categorize.
+    category_dimension, as ``MapperAPI.search`` runs them; reference
+    filter_manager.py:52-68): resolve a type filter + a keyword filter
+    against the category dimension to display names, filter the docs
+    with one arrays_overlap, count per (lang, source)."""
     from .operators.categorize import category_dimension
-    from .operators.search import structured_category_filter
+    from .operators.search import category_filter, resolve_structured
     dim = category_dimension(
         spark, ['Lang: en', 'Lang: de', 'Source: src1'])
     d = _t(spark, sf_dir, 'documents').withColumn(
         'categories',
         F.array(F.concat(F.lit('Lang: '), F.col('lang')),
                 F.concat(F.lit('Source: '), F.col('source'))))
-    hit = structured_category_filter(d, dim, category_types=['Lang'],
-                                     keywords=['src1'])
+    names = resolve_structured(dim.collect(), category_types=['Lang'],
+                               keywords=['src1'])
+    hit = category_filter(d, names)
     return (hit.groupBy('lang', 'source')
             .agg(F.count('*').cast('long').alias('n'))
             .orderBy('lang', 'source'))
@@ -182,17 +172,6 @@ def q_d3_destructive_dedup(spark, sf_dir):
     return (removed.groupBy('lang')
             .agg(F.count('*').cast('long').alias('n_removed'))
             .orderBy('lang'))
-
-
-def q_a6_topic_type(spark, sf_dir):
-    """A6 topic-type scoring (operators/categorize.with_topic_type;
-    reference _determine_topic_type, category_manager.py:266-296):
-    per-doc argmax over the pinned keyword table, counted per type."""
-    from .operators.categorize import with_topic_type
-    d = with_topic_type(_t(spark, sf_dir, 'documents'), 'text')
-    return (d.groupBy('topic_type')
-            .agg(F.count('*').cast('long').alias('n'))
-            .orderBy('topic_type'))
 
 
 def q_error_taxonomy(spark, sf_dir):
@@ -214,53 +193,6 @@ def q_error_taxonomy(spark, sf_dir):
             .groupBy('error_code')
             .agg(F.count('*').cast('long').alias('n'))
             .orderBy('error_code'))
-
-
-def q_html_meta(spark, sf_dir):
-    """HTML head-metadata extraction (extraction.with_html_meta, round
-    7 — the crawl-hygiene step before content extraction): pages are
-    synthesized deterministically around the documents corpus (title
-    from doc_id; a noindex robots meta on doc_id%4==0, an index one on
-    %4==1, none otherwise; a rel=canonical to target doc_id//9 on
-    doc_id%3==0 — so ~3 live pages consolidate per canonical target),
-    passed through as BINARY payloads (the input-hint schema). Reports
-    corpus totals: doc count, noindex count, distinct canonical
-    targets among live pages, max consolidation fan-in, and an
-    order-independent titles digest. The oracle re-derives every
-    column with the same pinned regexes (Java regex and RE2 agree on
-    these constructs, including ''-on-no-match)."""
-    from .operators.extraction import with_html_meta
-    d = _t(spark, sf_dir, 'documents')
-    did = F.col('doc_id')
-    html = F.concat(
-        F.lit('<html><head><title>Doc '), did.cast('string'),
-        F.lit('</title>'),
-        F.when(did % 4 == 0,
-               F.lit('<meta name="robots" content="noindex, nofollow">'))
-        .when(did % 4 == 1,
-              F.lit('<meta name="robots" content="index, follow">'))
-        .otherwise(F.lit('')),
-        F.when(did % 3 == 0, F.concat(
-            F.lit('<link rel="canonical" href="https://canon.example/p/'),
-            # DIV, not floor(did / 9): long/long `/` goes through DOUBLE
-            # and loses exactness above 2^53 (ADVICE r7; round-5 rule) —
-            # identical for every non-negative sub-2^53 doc_id
-            F.expr('doc_id DIV 9').cast('long').cast('string'), F.lit('">')))
-        .otherwise(F.lit('')),
-        F.lit('</head><body>'), F.col('text'), F.lit('</body></html>'))
-    url = F.concat(F.lit('https://crawl.example/p/'), did.cast('string'))
-    m = with_html_meta(d.select(
-        'doc_id', html.cast('binary').alias('html'), url.alias('url')))
-    per_t = (m.filter(~F.col('noindex'))
-             .groupBy('canonical_target').agg(F.count('*').alias('n')))
-    return (m.agg(
-        F.count('*').cast('long').alias('n_docs'),
-        F.sum(F.col('noindex').cast('long')).cast('long').alias('n_noindex'),
-        F.md5(F.concat_ws('\x1f', F.array_sort(
-            F.collect_list('html_title')))).alias('titles_md5'))
-        .crossJoin(per_t.agg(
-            F.count('*').cast('long').alias('n_targets'),
-            F.max('n').cast('long').alias('max_consolidation'))))
 
 
 # ---- non-SQL-expressible (rows-only checks) -------------------------
@@ -292,10 +224,12 @@ def q_lda_categories(spark, sf_dir):
     The oracle joins the measured golden histogram against a content
     statistic (doc count + total text length), so an unknown dataset
     yields 0 oracle rows — a loud mismatch, never a silent pass."""
+    from .config import DEFAULT_CONFIG
     from .operators.categorize import fit_lda_categories
     d = (_t(spark, sf_dir, 'documents')
          .withColumn('preprocessed_text', F.col('text')))
-    out = fit_lda_categories(d, max_iter=10)
+    out = fit_lda_categories(
+        d, cfg=dataclasses.replace(DEFAULT_CONFIG, lda_max_iter=10))
     return (out.select(F.size('categories').alias('arity'))
             .groupBy('arity')
             .agg(F.count('*').cast('long').alias('n_docs'))
@@ -704,7 +638,7 @@ def q_extraction_pipeline(spark, sf_dir):
     from .fixtures.webpages import web_pages_from_documents
     from .pipeline import transform
     pages = web_pages_from_documents(spark, sf_dir)
-    out = transform(pages, run_id='driver', partitions=None)
+    out = transform(pages, run_id='driver')
     return (out.select('url', 'doctype', 'content_hash', 'is_error',
                        'error_code',
                        (F.col('extracted_text') == F.col('text')).alias('byte_identical'))
@@ -715,70 +649,7 @@ def q_extraction_pipeline(spark, sf_dir):
 # SQL oracles (DuckDB dialect-compatible ANSI SQL)
 # =====================================================================
 
-# A6 topic-type SQL mirror, generated from the same pinned keyword dict
-# (first-in-dict-order wins ties — the CASE chain in dict order)
-_TOPIC_TYPES = list(TOPIC_KEYWORDS)
-_TOPIC_SCORES_SQL = ', '.join(
-    "len(list_filter(toks, t -> regexp_matches(t, '"
-    + '|'.join(TOPIC_KEYWORDS[t]) + f"'))) AS s_{i}"
-    for i, t in enumerate(_TOPIC_TYPES))
-_TOPIC_CASE = (
-    "CASE "
-    + ' '.join(
-        f"WHEN s_{i} >= GREATEST("
-        + ', '.join(f's_{j}' for j in range(len(_TOPIC_TYPES)))
-        + f") AND s_{i} > 0 THEN '{t}'"
-        for i, t in enumerate(_TOPIC_TYPES))
-    + " ELSE 'Document' END"
-)
-
 ORACLES: dict[str, str] = {
-    # html head metadata: same pinned regexes replayed by RE2 (''-on-
-    # no-match matches Spark's regexp_extract), same page construction
-    'q_html_meta': r"""
-        WITH pages AS (
-            SELECT doc_id,
-                   '<html><head><title>Doc ' || doc_id::VARCHAR
-                   || '</title>' ||
-                   CASE WHEN doc_id % 4 = 0 THEN
-                            '<meta name="robots" content="noindex, nofollow">'
-                        WHEN doc_id % 4 = 1 THEN
-                            '<meta name="robots" content="index, follow">'
-                        ELSE '' END ||
-                   CASE WHEN doc_id % 3 = 0 THEN
-                            '<link rel="canonical" href="https://canon.example/p/'
-                            || (doc_id // 9)::VARCHAR || '">'
-                        ELSE '' END ||
-                   '</head><body>' || text || '</body></html>' AS html,
-                   'https://crawl.example/p/' || doc_id::VARCHAR AS url
-            FROM documents),
-        m AS (
-            SELECT doc_id, url,
-                   regexp_extract(html,
-                       '(?is)<title[^>]*>(.*?)</title>', 1) AS html_title,
-                   regexp_extract(html,
-                       '(?is)<meta[^>]*name\s*=\s*"robots"[^>]*content\s*=\s*"([^"]*)"',
-                       1) AS meta_robots,
-                   regexp_extract(html,
-                       '(?is)<link[^>]*rel\s*=\s*"canonical"[^>]*href\s*=\s*"([^"]*)"',
-                       1) AS canon
-            FROM pages),
-        mm AS (
-            SELECT *, contains(lower(meta_robots), 'noindex') AS noindex,
-                   CASE WHEN canon != '' THEN canon ELSE url END
-                       AS canonical_target
-            FROM m),
-        pt AS (SELECT canonical_target, count(*) AS n FROM mm
-               WHERE NOT noindex GROUP BY canonical_target)
-        SELECT CAST((SELECT count(*) FROM mm) AS BIGINT) AS n_docs,
-               CAST((SELECT count(*) FILTER (WHERE noindex) FROM mm)
-                    AS BIGINT) AS n_noindex,
-               (SELECT md5(string_agg(html_title, chr(31)
-                                      ORDER BY html_title)) FROM mm)
-                   AS titles_md5,
-               CAST((SELECT count(*) FROM pt) AS BIGINT) AS n_targets,
-               CAST((SELECT max(n) FROM pt) AS BIGINT) AS max_consolidation
-    """,
     'q_w2_search_snippets': """
         WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
         scored AS (
@@ -821,11 +692,6 @@ ORACLES: dict[str, str] = {
                    AS snippet
         FROM cleaned ORDER BY score DESC, doc_id ASC
     """,
-    'q_f1_size_reject': """
-        SELECT octet_length(encode(text)) <= 1500 AS accepted,
-               CAST(count(*) AS BIGINT) AS n
-        FROM documents GROUP BY accepted ORDER BY accepted
-    """,
     'q_f4_category_overlap': """
         SELECT lang, source, CAST(count(*) AS BIGINT) AS n
         FROM documents
@@ -847,14 +713,6 @@ ORACLES: dict[str, str] = {
         SELECT lang, CAST(count(*) AS BIGINT) AS n_removed
         FROM ranked WHERE rn > 1 GROUP BY lang ORDER BY lang
     """,
-    'q_a6_topic_type': (
-        "WITH toks_t AS (SELECT string_split(lower(text), ' ') AS toks "
-        "FROM documents), scored AS (SELECT " + _TOPIC_SCORES_SQL
-        + " FROM toks_t), pred AS (SELECT " + _TOPIC_CASE
-        + " AS topic_type FROM scored) "
-        "SELECT topic_type, CAST(count(*) AS BIGINT) AS n "
-        "FROM pred GROUP BY topic_type ORDER BY topic_type"
-    ),
     'q_error_taxonomy': """
         WITH m AS (
             SELECT CASE
@@ -1047,19 +905,15 @@ def catalog() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         'q_w2_search_snippets': q_w2_search_snippets,
         'q_recrawl_upsert': q_recrawl_upsert,
         'q_f5_structured_semi_join': q_f5_structured_semi_join,
-        'q_a6_topic_type': q_a6_topic_type,
         'q_error_taxonomy': q_error_taxonomy,
         'q_search_pipeline': q_search_pipeline,
         'q_lda_categories': q_lda_categories,
-        # -- thinner oracles: the reference's size and destructive-
-        # dedup rules --------------------------------------------------
-        'q_f1_size_reject': q_f1_size_reject,
+        # -- thinner oracle: the reference's destructive-dedup rule ---
         'q_d3_destructive_dedup': q_d3_destructive_dedup,
         # -- further oracles -----------------------------------------
         'q_compaction_content': q_compaction_content,
         'q_warc_framing': q_warc_framing,
         'q_f4_category_overlap': q_f4_category_overlap,
-        'q_html_meta': q_html_meta,
         # -- rows-only (no SQL oracle), after every oracled entry ------
         'q_minhash_near_dups': q_minhash_near_dups,
         'q_minhash_incremental': q_minhash_incremental,

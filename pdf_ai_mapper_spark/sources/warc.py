@@ -188,12 +188,6 @@ def iter_warc_ranges_stream(fh) -> list[tuple[int, int]]:
     return _raw_record_ranges_stream(fh)
 
 
-def warc_member_ranges(data: bytes) -> list[tuple[int, int]]:
-    """In-memory convenience wrapper over ``iter_warc_ranges_stream``."""
-    import io
-    return iter_warc_ranges_stream(io.BytesIO(data))
-
-
 def build_warc_index(spark, path: str):
     """Offset-index sidecar: DataFrame(file, offset, length) — one row
     per gzip member / raw record of every ``*.warc(.gz)`` under

@@ -88,6 +88,22 @@ def test_upload_status_search_recategorize_cleanup(api):
     assert cd['document_count'] == n_unique and 'Removed 0' in cd['message']
 
 
+def test_search_structured_filter_matching_no_category_is_unfiltered(api):
+    """``category_types`` / ``keywords`` that resolve to no display name
+    leave the search unfiltered (reference search.py:31-42 passes an
+    empty category list on): the same hits as no filter at all."""
+    for i in range(4):
+        api.upload(bytes(page_row(i)['html']), f'page{i}.html')
+    api.recategorize()  # 4 docs: the cold-start categories, no LDA fit
+    assert api.categories()['structured_categories']
+    want = api.search('notes history', k=5)
+    assert want['results']
+    assert api.search('notes history', category_types=['NoSuchType'],
+                      k=5) == want
+    assert api.search('notes history', keywords=['nosuchkeyword'],
+                      k=5) == want
+
+
 def test_status_pagination_bounds_driver_payload(api):
     """status() must not collect the whole corpus: limit/offset page in
     url order while document_count stays the total (VERDICT r2 #5)."""

@@ -24,16 +24,13 @@ GRADED_WINDOW = [
     'q_w2_search_snippets',
     'q_recrawl_upsert',
     'q_f5_structured_semi_join',
-    'q_a6_topic_type',
     'q_error_taxonomy',
     'q_search_pipeline',
     'q_lda_categories',
-    'q_f1_size_reject',
     'q_d3_destructive_dedup',
     'q_compaction_content',
     'q_warc_framing',
     'q_f4_category_overlap',
-    'q_html_meta',
     'q_minhash_near_dups',
     'q_minhash_incremental',
     'q_extraction_pipeline',

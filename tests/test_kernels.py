@@ -119,6 +119,10 @@ def test_corrupt_payload_yields_error_string():
     assert extract_text(bad_pdf).startswith('Error')
     bad_png = b'\x89PNG\r\n\x1a\n' + b'\x00' * 4
     assert extract_text(bad_png).startswith('Error extracting text:')
+    # F1 is enforced per row: a payload over max_file_size is an error row
+    from pdf_ai_mapper_spark.config import EngineConfig
+    assert (extract_text(b'<p>big</p>', EngineConfig(max_file_size=4))
+            == 'Error: File too large')
 
 
 def test_html_extractor_skips_boilerplate():
@@ -217,8 +221,9 @@ def test_porter_stemmer_nltk_extensions(word, expected):
 
 
 def test_ws_collapse_split_equals_regex_sub():
-    """normalize_text's ' '.join(split()) collapse must be
-    byte-identical to the reference's re.sub(r'\\s+',' ',t).strip():
+    """A ' '.join(split()) collapse must be byte-identical to the
+    reference's re.sub(r'\\s+',' ',t).strip() (preprocess_text's bare
+    split() relies on it):
     exhaustive BMP whitespace-table agreement + string fuzz."""
     import re
     import random
@@ -303,53 +308,3 @@ def test_ascii_lower_strip_fusion_exhaustive_and_composed():
     for s in ['', 'Hello, World! 123', 'A-B_c  D\t9', '<TAG>&amp;',
               'MiXeD CaSe-with_underscores 00', 'é non-ascii PATH Σ']:
         assert _lower_strip(s) == s.lower().translate(_STRIP_TABLE)
-
-
-class TestWithHtmlMeta:
-    """with_html_meta (round 7): head-metadata fast path — title,
-    robots, canonical via pinned native regexes. The q_html_meta
-    oracle replays them corpus-wide; these pin row edges, the binary
-    and string payload paths, and the zero-Python plan."""
-
-    def _meta(self, spark, html, binary=True):
-        from pyspark.sql import functions as F
-        from pdf_ai_mapper_spark.operators.extraction import with_html_meta
-        df = spark.createDataFrame([(html, 'https://self.example/x')],
-                                   'html string, url string')
-        if binary:
-            df = df.withColumn('html', F.col('html').cast('binary'))
-        return with_html_meta(df).collect()[0]
-
-    def test_all_fields_extracted(self, spark):
-        r = self._meta(spark,
-                       '<html><head><TITLE>T1</TITLE>'
-                       '<meta name="robots" content="NOINDEX, nofollow">'
-                       '<link rel="canonical" href="https://c.example/1">'
-                       '</head><body>b</body></html>')
-        assert r['html_title'] == 'T1'              # (?i) on the tag
-        assert r['meta_robots'] == 'NOINDEX, nofollow'
-        assert r['noindex'] is True                 # case-insensitive
-        assert r['canonical_target'] == 'https://c.example/1'
-
-    def test_absent_fields_fall_back(self, spark):
-        r = self._meta(spark, '<html><body>no head</body></html>',
-                       binary=False)                # string payload path
-        assert r['html_title'] == ''
-        assert r['meta_robots'] == ''
-        assert r['noindex'] is False
-        assert r['canonical_target'] == 'https://self.example/x'
-
-    def test_index_robots_is_not_noindex(self, spark):
-        r = self._meta(spark,
-                       '<head><meta name="robots" content="index, follow">'
-                       '</head>')
-        assert r['noindex'] is False
-
-    def test_pure_codegen_plan(self, spark):
-        from pdf_ai_mapper_spark.operators.extraction import with_html_meta
-        df = spark.createDataFrame([('<html></html>', 'u')],
-                                   'html string, url string')
-        plan = with_html_meta(df)._jdf.queryExecution() \
-            .executedPlan().toString()
-        assert 'Exchange' not in plan
-        assert 'ArrowEvalPython' not in plan

@@ -74,14 +74,16 @@ GOLDENS = [
 @pytest.mark.parametrize('raw,want', GOLDENS)
 def test_nltk_mode_goldens(raw, want):
     assert preprocess_text_nltk(raw) == want
-    assert preprocess_text(raw, mode='nltk') == want
 
 
-def test_mode_dispatch_and_validation():
-    txt = 'some sample content words'
-    assert preprocess_text(txt) == preprocess_text(txt, mode='deterministic')
-    with pytest.raises(ValueError, match='unknown preprocess mode'):
-        preprocess_text(txt, mode='treebank')
+def test_unknown_preprocess_mode_raises(spark):
+    """A typo'd preprocess_mode must fail loudly, not silently fall
+    back to the deterministic kernel (ADVICE r4)."""
+    from pdf_ai_mapper_spark.fixtures.webpages import web_pages_df
+    from pdf_ai_mapper_spark.operators.extraction import extracted
+
+    with pytest.raises(ValueError, match='preprocess_mode'):
+        extracted(web_pages_df(spark, 2), preprocess_mode='ntlk')  # the classic typo
 
 
 def test_mode_divergence_contraction():

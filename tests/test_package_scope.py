@@ -43,20 +43,11 @@ CALLED_ONLY_FROM_CATALOG_OR_TESTS = {
     'checkpoint.compact_output',
     'checkpoint.upsert_output',
     'fixtures.webpages.build_warc',
+    'fixtures.webpages.web_pages_df',
     'fixtures.webpages.web_pages_from_documents',
     'fixtures.webpages.web_pages_pandas',
-    'kernels.ocr.set_ocr_kernel',
-    'kernels.preprocess.meaningful_tokens',
-    'kernels.preprocess.normalize_text',
-    'operators.categorize.load_models',
-    'operators.categorize.save_models',
-    'operators.categorize.with_topic_type',
     'operators.dedup.dedup_exact',
     'operators.dedup.minhash_index_update',
-    'operators.extraction.size_ok_col',
-    'operators.extraction.with_html_meta',
-    'operators.search.structured_category_filter',
-    'sources.warc.warc_member_ranges',
 }
 
 

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -79,14 +81,15 @@ def test_simple_categories_match_reference_kernel(spark, corpus):
 
 
 def test_lda_categories_shape_and_stability(spark, corpus):
-    out = fit_lda_categories(corpus, cfg=CFG, max_iter=10)
+    cfg = dataclasses.replace(CFG, lda_max_iter=10)
+    out = fit_lda_categories(corpus, cfg=cfg)
     rows = out.select('url', 'categories').collect()
     assert len(rows) == corpus.count()
     for r in rows:
         assert 1 <= len(r['categories']) <= 3
     # rerun → identical assignment (seeded, fixed parallelism)
     again = {r['url']: list(r['categories'])
-             for r in fit_lda_categories(corpus, cfg=CFG, max_iter=10)
+             for r in fit_lda_categories(corpus, cfg=cfg)
              .select('url', 'categories').collect()}
     for r in rows:
         assert again[r['url']] == list(r['categories'])
@@ -118,7 +121,8 @@ def test_topic_name_filters_and_format():
 
 def test_category_dimension_and_structured_filter(spark, corpus):
     from pdf_ai_mapper_spark.operators.categorize import category_dimension
-    from pdf_ai_mapper_spark.operators.search import structured_category_filter
+    from pdf_ai_mapper_spark.operators.search import (category_filter,
+                                                      resolve_structured)
 
     names = ['Science: theorem, proof, euclid',
              'History: empire, battle',
@@ -137,17 +141,21 @@ def test_category_dimension_and_structured_filter(spark, corpus):
                        ['History: empire, battle'],
                        ['Document']],
     }))
-    by_type = structured_category_filter(docs, dim, category_types=['Science'])
+    dim_rows = dim.collect()
+
+    def structured(category_types=None, keywords=None):
+        return category_filter(
+            docs, resolve_structured(dim_rows, category_types, keywords))
+
+    by_type = structured(category_types=['Science'])
     assert [r['url'] for r in by_type.collect()] == ['u1']
-    by_kw = structured_category_filter(docs, dim, keywords=['battle'])
+    by_kw = structured(keywords=['battle'])
     assert [r['url'] for r in by_kw.collect()] == ['u2']
-    both = structured_category_filter(docs, dim,
-                                      category_types=['Document'],
-                                      keywords=['proof'])
+    both = structured(category_types=['Document'], keywords=['proof'])
     assert sorted(r['url'] for r in both.collect()) == ['u1', 'u3']
-    assert structured_category_filter(docs, dim) is docs       # no filter
-    assert structured_category_filter(docs, dim,
-                                      keywords=['nomatch']).count() == 0
+    assert structured() is docs                                # no filter
+    # a filter that names no category filters nothing (MapperAPI.search)
+    assert structured(keywords=['nomatch']) is docs
 
 
 def test_resolve_structured_is_type_or_keyword_union():
@@ -175,53 +183,3 @@ def test_search_category_filter_needs_categories_column(spark, corpus):
     from pyspark.errors import AnalysisException
     with pytest.raises(AnalysisException):
         search(corpus, 'philosophy virtue', categories=['History']).collect()
-
-
-def test_model_persistence_roundtrip(spark, corpus, tmp_path):
-    from pdf_ai_mapper_spark.operators.categorize import (fit_lda_categories,
-                                                          load_models,
-                                                          save_models)
-    models = {}
-    out1 = fit_lda_categories(corpus, cfg=CFG, max_iter=5, models_out=models)
-    assert 'vectorizer' in models and 'lda' in models
-    save_models(str(tmp_path), cv_model=models['vectorizer'],
-                lda_model=models['lda'])
-    loaded = load_models(str(tmp_path))
-    assert loaded['vectorizer'].vocabulary == models['vectorizer'].vocabulary
-    # loaded model reproduces the same topic distributions
-    from pdf_ai_mapper_spark.operators.categorize import with_tokens
-    feats = loaded['vectorizer'].transform(with_tokens(corpus.limit(10)))
-    a = models['lda'].transform(feats).select('topicDistribution').collect()
-    b = loaded['lda'].transform(feats).select('topicDistribution').collect()
-    for ra, rb in zip(a, b):
-        assert ra[0].toArray().round(8).tolist() == rb[0].toArray().round(8).tolist()
-
-
-def test_with_topic_type_matches_python_twin(spark):
-    """The native A6 column form must agree with the reference-faithful
-    Python twin (determine_topic_type) on randomized token lists —
-    including tie-breaks (first type in dict order wins) and the
-    all-zero 'Document' fallback."""
-    import random
-    from pdf_ai_mapper_spark.kernels.stopwords import TOPIC_KEYWORDS
-    from pdf_ai_mapper_spark.operators.categorize import (
-        determine_topic_type, with_topic_type)
-
-    rng = random.Random(42)
-    all_kws = [kw for kws in TOPIC_KEYWORDS.values() for kw in kws]
-    filler = ['lorem', 'ipsum', 'dolor', 'sit', 'amet', 'xyzzy']
-    rows = []
-    for i in range(200):
-        n = rng.randint(0, 12)
-        toks = [rng.choice(all_kws if rng.random() < 0.5 else filler)
-                for _ in range(n)]
-        if rng.random() < 0.3 and toks:  # keyword-as-substring cases
-            toks[0] = 'pre' + toks[0] + 'post'
-        rows.append((i, ' '.join(toks)))
-    df = spark.createDataFrame(rows, 'id long, text string')
-    got = {r['id']: r['topic_type']
-           for r in with_topic_type(df, 'text').collect()}
-    for i, text in rows:
-        want = determine_topic_type(text.split(' ')) if text else \
-            determine_topic_type([''])
-        assert got[i] == want, (i, text, got[i], want)

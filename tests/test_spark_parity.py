@@ -19,7 +19,7 @@ N = 240
 
 def _result(spark, partitions):
     pages = web_pages_df(spark, N, num_partitions=partitions)
-    return transform(pages, run_id='t', cfg=CFG, partitions=partitions)
+    return transform(pages, run_id='t', cfg=CFG)
 
 
 def test_extraction_byte_identical_per_url(spark):

@@ -65,12 +65,14 @@ def test_spark_read_and_extract_byte_identity(spark, tmp_path):
 
 
 def test_member_ranges_tile_both_formats():
-    from pdf_ai_mapper_spark.sources.warc import warc_member_ranges
+    import io
+
+    from pdf_ai_mapper_spark.sources.warc import iter_warc_ranges_stream
     rows = _rows(8)
     for gz in (False, True):
         data = build_warc([(u, t, h) for u, t, h, _ in rows],
                           gzip_members=gz)
-        ranges = warc_member_ranges(data)
+        ranges = iter_warc_ranges_stream(io.BytesIO(data))
         assert len(ranges) == 8
         # ranges tile the file exactly
         pos = 0
