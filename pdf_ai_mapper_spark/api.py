@@ -200,7 +200,7 @@ class MapperAPI:
         n = docs.count()
         if clusters is not None:
             clusters = max(2, min(20, clusters))            # categories.py:85
-            cat_df = fit_kmeans_categories(docs, clusters, cfg=self.cfg)
+            cat_df = fit_kmeans_categories(docs, clusters)
         else:
             cat_df = fit_lda_categories(docs, cfg=self.cfg, doc_count=n)
         (cat_df.select('url', 'categories')

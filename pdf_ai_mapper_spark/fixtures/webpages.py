@@ -119,10 +119,10 @@ def doctype_of(i: int) -> str:
 
 # ---------------------------------------------------------------- HTML pages
 
-def _nav_links(i: int, n: int = 12) -> str:
+def _nav_links(i: int) -> str:
     return '\n'.join(
         f'<li><a href="/section/{(i + k) % 40}">Section {(i + k) % 40} home page link</a></li>'
-        for k in range(n)
+        for k in range(12)
     )
 
 

@@ -23,7 +23,6 @@ cluster scale the stragglers are additionally bounded by
 
 from __future__ import annotations
 
-from ..config import DEFAULT_CONFIG, EngineConfig
 from . import ocr
 from .html_extract import extract_main_text
 from .pdf_extract import parse_pdf_pages
@@ -31,6 +30,10 @@ from .pdf_extract import parse_pdf_pages
 DOCTYPE_PDF = 'pdf'
 DOCTYPE_IMAGE = 'image'
 DOCTYPE_HTML = 'html'
+
+MAX_FILE_SIZE = 50 * 1024 * 1024  # reference app/core/config.py:39
+OCR_TRIGGER_CHARS = 1000          # reference pdf_extractor.py:53
+MAX_PAGES_FOR_OCR = 5             # reference config.py:49, pdf_extractor.py:88
 
 
 def sniff_doctype(data: bytes) -> str:
@@ -43,14 +46,14 @@ def sniff_doctype(data: bytes) -> str:
     return DOCTYPE_HTML
 
 
-def extract_pdf(data: bytes, cfg: EngineConfig = DEFAULT_CONFIG) -> str:
+def extract_pdf(data: bytes) -> str:
     """reference pdf_extractor.py:29-82 (deterministic path)."""
     try:
         pages = parse_pdf_pages(data)
         text = ''.join(page + '\n' for page in pages)  # :45 appends "\n" per page
-        if len(text.strip()) < cfg.ocr_trigger_chars:   # :53
+        if len(text.strip()) < OCR_TRIGGER_CHARS:       # :53
             try:
-                max_pages = min(cfg.max_pages_for_ocr, len(pages))  # :88
+                max_pages = min(MAX_PAGES_FOR_OCR, len(pages))  # :88
                 for page_text in ocr.ocr_pdf_pages(data, max_pages):
                     text += page_text + '\n'            # :95
             except Exception:
@@ -81,15 +84,15 @@ def extract_html(data: bytes) -> str:
     return "Error: No text could be extracted from the document"
 
 
-def extract_text(data: bytes, cfg: EngineConfig = DEFAULT_CONFIG) -> str:
+def extract_text(data: bytes) -> str:
     """Full dispatch: sniff + extract. Pure; never raises."""
     if data is None:
         return "Error: empty payload"
-    if len(data) > cfg.max_file_size:  # F1, reference document_processor.py:66-73
+    if len(data) > MAX_FILE_SIZE:  # F1, reference document_processor.py:66-73
         return "Error: File too large"
     doctype = sniff_doctype(bytes(data))
     if doctype == DOCTYPE_PDF:
-        return extract_pdf(bytes(data), cfg)
+        return extract_pdf(bytes(data))
     if doctype == DOCTYPE_IMAGE:
         return extract_image(bytes(data))
     return extract_html(bytes(data))

@@ -197,13 +197,13 @@ def preprocess_text_nltk(text: str) -> str:
     return ' '.join(tokens + extract_key_phrases(tokens))
 
 
-def simple_categories(preprocessed: str, top_n: int = 3, min_len: int = 4) -> list[str]:
+def simple_categories(preprocessed: str) -> list[str]:
     """Cold-start per-doc category (A1): top-3 words of len>=4 by
     frequency → ``"Topic: w1, w2, w3"``.  Counter tie-break = first
     occurrence, as in the reference.
     (reference category_manager.py:90-103)"""
-    words = [w for w in preprocessed.split() if len(w) >= min_len]
+    words = [w for w in preprocessed.split() if len(w) >= 4]
     if not words:
         return ["Uncategorized"]
-    top = [w for w, _ in Counter(words).most_common(top_n)]
+    top = [w for w, _ in Counter(words).most_common(3)]
     return [f"Topic: {', '.join(top)}"]

@@ -16,6 +16,10 @@ import re
 
 _RE_WS = re.compile(r'\s+')
 
+# window length and stride, reference snippet_generator.py:12,34
+SNIPPET_LENGTH = 200
+SNIPPET_STRIDE = 50
+
 
 def relevance_score(query_tokens: list[str], document_text: str) -> int:
     text = document_text.lower()
@@ -29,26 +33,25 @@ def relevance_score(query_tokens: list[str], document_text: str) -> int:
     return score
 
 
-def generate_snippet(query_tokens: list[str], text: str,
-                     snippet_length: int = 200, stride: int = 50) -> str:
+def generate_snippet(query_tokens: list[str], text: str) -> str:
     text = text.lower()
     best_pos = 0
     highest = 0
-    for i in range(0, len(text) - snippet_length, stride):
-        window = text[i:i + snippet_length]
+    for i in range(0, len(text) - SNIPPET_LENGTH, SNIPPET_STRIDE):
+        window = text[i:i + SNIPPET_LENGTH]
         count = sum(window.count(tok) for tok in query_tokens)
         if count > highest:
             highest = count
             best_pos = i
     if highest == 0:
-        snippet = text[:snippet_length]
+        snippet = text[:SNIPPET_LENGTH]
         best_pos = 0
     else:
-        snippet = text[best_pos:best_pos + snippet_length]
+        snippet = text[best_pos:best_pos + SNIPPET_LENGTH]
     snippet = snippet.replace('\n', ' ')
     snippet = _RE_WS.sub(' ', snippet).strip()
     if best_pos > 0:
         snippet = f"...{snippet}"
-    if best_pos + snippet_length < len(text):
+    if best_pos + SNIPPET_LENGTH < len(text):
         snippet = f"{snippet}..."
     return snippet

@@ -38,8 +38,8 @@ OR-reduced with ``treeReduce`` so no single task pulls more than
 ~8 bitmaps — ~512 MiB per reduce task at the 64 MiB cap, regardless of
 how many splits the committed corpus scanned as.
 
-Sizing: m_bits = next power of two ≥ n·bits_per_key (default 10 →
-fpp ≈ 1%), k = 7. The bitmap must fit in a broadcast (default cap
+Sizing: m_bits = next power of two ≥ n·bits_per_key (10 bits per
+key → fpp ≈ 1%), k = 7. The bitmap must fit in a broadcast (cap
 64 MiB ≈ 53M keys at 10 bits); above the cap ``build_bloom`` raises —
 callers fall back to the plain anti-join, or shard the corpus and
 build one bloom per shard. The reference has no incremental mode at
@@ -73,7 +73,7 @@ def _splitmix64(x: np.ndarray) -> np.ndarray:
         return z ^ (z >> np.uint64(31))
 
 
-_DEFAULT_BITS_PER_KEY = 10
+_BITS_PER_KEY = 10
 _NUM_PROBES = 7  # ≈ 0.69 · bits_per_key, optimal for 10 bits/key
 _MAX_BITMAP_BYTES = 64 << 20
 
@@ -100,11 +100,10 @@ def _test_bits(bitmap: np.ndarray, pos: np.ndarray) -> np.ndarray:
     return ((byte & bit) != 0).all(axis=0)
 
 
-def bloom_params(expected_keys: int,
-                 bits_per_key: int = _DEFAULT_BITS_PER_KEY) -> int:
-    """Bitmap size in bits: next power of two ≥ n·bits_per_key (the
+def bloom_params(expected_keys: int) -> int:
+    """Bitmap size in bits: next power of two ≥ n·_BITS_PER_KEY (the
     power-of-two constraint turns the mod into a mask)."""
-    m = 1 << max(10, int(expected_keys * bits_per_key - 1).bit_length())
+    m = 1 << max(10, int(expected_keys * _BITS_PER_KEY - 1).bit_length())
     if m // 8 > _MAX_BITMAP_BYTES:
         raise ValueError(
             f"bloom bitmap {m // 8} B exceeds the {_MAX_BITMAP_BYTES} B "
@@ -114,8 +113,7 @@ def bloom_params(expected_keys: int,
 
 
 def build_bloom(df: DataFrame, key_col: str,
-                expected_keys: int | None = None,
-                bits_per_key: int = _DEFAULT_BITS_PER_KEY) -> bytes:
+                expected_keys: int | None = None) -> bytes:
     """Build a Bloom bitmap over ``key_col`` (any hashable SQL type;
     hashed JVM-side with xxhash64 so only 8 B/row leaves the scan).
 
@@ -126,7 +124,7 @@ def build_bloom(df: DataFrame, key_col: str,
     AQE — so pass a count the caller already has."""
     if expected_keys is None:
         expected_keys = df.count()
-    m_bits = bloom_params(max(1, expected_keys), bits_per_key)
+    m_bits = bloom_params(max(1, expected_keys))
     m_bytes = m_bits // 8
 
     hashes = df.select(F.xxhash64(key_col).alias('__h'))
@@ -150,9 +148,9 @@ def build_bloom(df: DataFrame, key_col: str,
     return acc.tobytes()
 
 
-def might_contain_col(df: DataFrame, key_col: str, bitmap: bytes,
-                      out_col: str = '__bloom_maybe') -> DataFrame:
-    """Append a boolean column: Bloom membership of ``key_col``.
+def might_contain_col(df: DataFrame, key_col: str, bitmap: bytes) -> DataFrame:
+    """Append the boolean column ``__bloom_maybe``: Bloom membership
+    of ``key_col``.
     The bitmap ships ONCE per executor via an explicit broadcast (not
     per-task closure capture). The broadcast handle rides on the result
     as ``_bloom_broadcasts`` — call :func:`release_blooms` once the
@@ -167,7 +165,7 @@ def might_contain_col(df: DataFrame, key_col: str, bitmap: bytes,
         hv = h.to_numpy().astype(np.int64).view(np.uint64)
         return pd.Series(_test_bits(bm, _positions(hv, m_bits)))
 
-    out = df.withColumn(out_col, maybe(F.xxhash64(key_col)))
+    out = df.withColumn('__bloom_maybe', maybe(F.xxhash64(key_col)))
     out._bloom_broadcasts = [bc]
     return out
 

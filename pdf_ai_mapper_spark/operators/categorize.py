@@ -27,24 +27,29 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.ml.clustering import LDA, KMeans
-from pyspark.ml.feature import CountVectorizer, CountVectorizerModel
+from pyspark.ml.feature import CountVectorizerModel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..config import DEFAULT_CONFIG, EngineConfig
 from ..kernels.stopwords import MEANINGLESS_WORDS, STOP_WORDS, TOPIC_KEYWORDS
 
+LDA_TOPICS = 8                # reference category_manager.py:36-41, config.py:52-55
+LDA_SEED = 42                 # reference category_manager.py:36-41, config.py:52-55
+VOCAB_SIZE = 1000             # reference category_manager.py:36-40
+MIN_DOCS_FOR_MODEL = 5        # reference config.py:52, category_manager.py:64-75
+TOPIC_PROB_THRESHOLD = 0.1    # reference category_manager.py:161-165
+MAX_CATEGORIES_PER_DOC = 3    # reference category_manager.py:172
 
-def with_tokens(df: DataFrame, text_col: str = 'preprocessed_text',
-                out_col: str = 'tokens') -> DataFrame:
+
+def with_tokens(df: DataFrame) -> DataFrame:
     return df.withColumn(
-        out_col,
-        F.filter(F.split(F.col(text_col), ' '), lambda t: F.length(t) > 0))
+        'tokens',
+        F.filter(F.split(F.col('preprocessed_text'), ' '),
+                 lambda t: F.length(t) > 0))
 
 
-def count_vector_features(df: DataFrame, tokens_col: str = 'tokens',
-                          out_col: str = 'features',
-                          cfg: EngineConfig = DEFAULT_CONFIG):
+def count_vector_features(df: DataFrame):
     """Reference-semantics featurization: CountVectorizer(vocabSize=
     1000) (category_manager.py:36-40). Returns (df, model) — the model
     carries the vocabulary for topic naming.
@@ -58,15 +63,15 @@ def count_vector_features(df: DataFrame, tokens_col: str = 'tokens',
     # explode_outer + isNotNull: keeps the inferred non-empty filter
     # from re-running array_distinct per row at the scan (round 8)
     vocab_rows = (df.select(F.explode_outer(
-                      F.array_distinct(F.col(tokens_col))).alias('t'))
+                      F.array_distinct(F.col('tokens'))).alias('t'))
                   .filter(F.col('t').isNotNull())
                   .groupBy('t').agg(F.count('*').alias('df_'))
                   .orderBy(F.desc('df_'), F.asc('t'))
-                  .limit(cfg.vocab_size)
+                  .limit(VOCAB_SIZE)
                   .collect())
     vocab = [r['t'] for r in vocab_rows]
     model = CountVectorizerModel.from_vocabulary(
-        vocab, inputCol=tokens_col, outputCol=out_col)
+        vocab, inputCol='tokens', outputCol='features')
     return model.transform(df), model
 
 
@@ -100,7 +105,6 @@ def determine_topic_type(terms: list[str]) -> str:
 
 
 def fit_lda_categories(df: DataFrame,
-                       text_col: str = 'preprocessed_text',
                        cfg: EngineConfig = DEFAULT_CONFIG,
                        doc_count: int | None = None) -> DataFrame:
     """Full categorization stage. Cold start (<5 docs,
@@ -109,12 +113,11 @@ def fit_lda_categories(df: DataFrame,
     per-doc top-3 topics over the 0.1 threshold. ``doc_count`` spares
     the count of ``df`` when the caller already has it."""
     doc_count = doc_count if doc_count is not None else df.count()
-    if doc_count < cfg.min_docs_for_model:
-        return with_simple_categories(df, text_col)
+    if doc_count < MIN_DOCS_FOR_MODEL:
+        return with_simple_categories(df)
 
-    toks = with_tokens(df, text_col)
-    feats, cv_model = count_vector_features(toks)
-    lda = LDA(k=cfg.lda_topics, seed=cfg.lda_seed, maxIter=cfg.lda_max_iter,
+    feats, cv_model = count_vector_features(with_tokens(df))
+    lda = LDA(k=LDA_TOPICS, seed=LDA_SEED, maxIter=cfg.lda_max_iter,
               featuresCol='features')
     model = lda.fit(feats)
 
@@ -124,16 +127,16 @@ def fit_lda_categories(df: DataFrame,
     names = {int(r['topic']): topic_name([vocab[i] for i in r['termIndices']],
                                          int(r['topic']))
              for r in topics}
-    names_arr = F.array(*[F.lit(names[i]) for i in range(cfg.lda_topics)])
+    names_arr = F.array(*[F.lit(names[i]) for i in range(LDA_TOPICS)])
 
     scored = model.transform(feats)
     # vector → array for native top-3-over-threshold selection
     from pyspark.ml.functions import vector_to_array
     dist = vector_to_array(F.col('topicDistribution'))
     pairs = F.filter(
-        F.zip_with(dist, F.sequence(F.lit(0), F.lit(cfg.lda_topics - 1)),
+        F.zip_with(dist, F.sequence(F.lit(0), F.lit(LDA_TOPICS - 1)),
                    lambda p, i: F.struct(p.alias('p'), i.alias('i'))),
-        lambda s: s['p'] > cfg.topic_prob_threshold)
+        lambda s: s['p'] > TOPIC_PROB_THRESHOLD)
     # sort (prob desc, topic-id asc) — matches the reference's stable
     # descending sort (:168, Python sort stability)
     sorted_pairs = F.array_sort(
@@ -143,7 +146,7 @@ def fit_lda_categories(df: DataFrame,
                       .when(a['i'] < b['i'], F.lit(-1))
                       .when(a['i'] > b['i'], F.lit(1))
                       .otherwise(F.lit(0)))
-    top3 = F.slice(sorted_pairs, 1, cfg.max_categories_per_doc)
+    top3 = F.slice(sorted_pairs, 1, MAX_CATEGORIES_PER_DOC)
     cats = F.transform(top3, lambda s: F.element_at(names_arr, s['i'].cast('int') + 1))
     out = scored.withColumn(
         'categories',
@@ -151,13 +154,12 @@ def fit_lda_categories(df: DataFrame,
     return out.drop('features', 'topicDistribution', 'tokens', '__tf')
 
 
-def with_simple_categories(df: DataFrame,
-                           text_col: str = 'preprocessed_text') -> DataFrame:
+def with_simple_categories(df: DataFrame) -> DataFrame:
     """A1 cold-start path (reference category_manager.py:64-75,90-103):
     top-3 words of len>=4 by count, ties by first occurrence (Counter
     semantics), via the per-row Python kernel in an Arrow-batched
     pandas UDF. This path only runs when the corpus has fewer than
-    min_docs_for_model (5) documents, so row-wise Python is the right
+    MIN_DOCS_FOR_MODEL (5) documents, so row-wise Python is the right
     tool — the earlier native formulation referenced the token-split
     expression inside HOF lambdas, which re-evaluates it per distinct
     word on the interpreted path (the no-CSE-in-HOF-lambdas hazard in
@@ -173,7 +175,7 @@ def with_simple_categories(df: DataFrame,
             yield pd.Series([simple_categories(t) if t is not None
                              else ['Uncategorized'] for t in texts])
 
-    return df.withColumn('categories', cats_udf(F.col(text_col)))
+    return df.withColumn('categories', cats_udf(F.col('preprocessed_text')))
 
 
 def category_dimension(spark, category_names: list[str]) -> DataFrame:
@@ -195,17 +197,14 @@ def category_dimension(spark, category_names: list[str]) -> DataFrame:
     return df.withColumn('created_at', F.current_timestamp())
 
 
-def fit_kmeans_categories(df: DataFrame, k: int,
-                          text_col: str = 'preprocessed_text',
-                          cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
+def fit_kmeans_categories(df: DataFrame, k: int) -> DataFrame:
     """The *intended* semantics of POST /recategorize-with-clusters
     (the reference endpoint is dead code — AttributeErrors,
     categories.py:129-145; SURVEY.md §3.3): KMeans(k, seed=42) over the
-    same term matrix, one cluster per doc."""
-    k = max(2, min(20, k))
-    toks = with_tokens(df, text_col)
-    feats, cv_model = count_vector_features(toks)
-    km = KMeans(k=k, seed=cfg.lda_seed, featuresCol='features')
+    same term matrix, one cluster per doc. ``MapperAPI.recategorize``
+    clamps ``k`` to [2, 20] (categories.py:85)."""
+    feats, cv_model = count_vector_features(with_tokens(df))
+    km = KMeans(k=k, seed=LDA_SEED, featuresCol='features')
     model = km.fit(feats)
     pred = model.transform(feats)
     # name clusters from their center's top terms

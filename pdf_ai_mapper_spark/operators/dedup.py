@@ -56,8 +56,7 @@ def release(df: DataFrame) -> None:
 
 # --------------------------------------------------------------- shingling
 
-def with_shingles(df: DataFrame, text_col: str, k: int = 3,
-                  out_col: str = 'shingles') -> DataFrame:
+def with_shingles(df: DataFrame, text_col: str, k: int = 3) -> DataFrame:
     """Distinct word k-gram shingles per row, via native higher-order
     functions (no UDF): k shifted slices of the token array zipped into
     shingle strings — O(n) per row with exactly k split() evaluations.
@@ -75,7 +74,7 @@ def with_shingles(df: DataFrame, text_col: str, k: int = 3,
     for p in parts[1:]:
         sh = F.zip_with(sh, p, lambda a, b: F.concat(a, F.lit(' '), b))
     return df.withColumn(
-        out_col,
+        'shingles',
         F.when(n >= k, F.array_distinct(sh)).otherwise(F.array()),
     )
 
@@ -200,10 +199,13 @@ def _numpy_sig_udf(num_hashes: int):
     return sig_udf
 
 
+# band buckets above this size expand as a star (minhash_lsh_pairs)
+_MAX_BUCKET_SIZE = 64
+
+
 def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
-                      num_hashes: int = 64, bands: int = 16, k: int = 3,
-                      jaccard_threshold: float = 0.5,
-                      max_bucket_size: int = 64) -> DataFrame:
+                      num_hashes: int = 64, bands: int = 16,
+                      jaccard_threshold: float = 0.5) -> DataFrame:
     """Candidate near-dup pairs via banded LSH, verified by estimated
     Jaccard = fraction of agreeing minhashes. Returns (id_a, id_b,
     jaccard_est) with id_a < id_b.
@@ -211,14 +213,14 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     Skew guard: a band bucket with B members yields B² join rows —
     template-heavy corpora produce buckets of thousands (measured:
     2500-doc buckets on the synthetic fixture → a quadratic join that
-    never finishes). Buckets larger than ``max_bucket_size`` are
+    never finishes). Buckets larger than ``_MAX_BUCKET_SIZE`` are
     expanded as a STAR instead: every member pairs with the bucket's
     minimum id only. That keeps dup-cluster discovery (connected
     components through the hub) while bounding work linearly in bucket
     size — the standard production dedup trick. No silent truncation:
     star-expanded pairs still verify against the full signature."""
     rows = num_hashes // bands
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, k)
+    sig = minhash_signatures(df, id_col, text_col, num_hashes)
     # sig feeds three branches (band table + both verify joins); without
     # persistence the whole shingle+permutation computation runs 3×
     # (measured: it dominated the job). At cluster scale this is the
@@ -247,8 +249,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     band = (band
             .withColumn('__bsz', F.count('*').over(w))
             .withColumn('__hub', F.min(id_col).over(w)))
-    small = band.filter(F.col('__bsz') <= max_bucket_size)
-    big = band.filter(F.col('__bsz') > max_bucket_size)
+    small = band.filter(F.col('__bsz') <= _MAX_BUCKET_SIZE)
+    big = band.filter(F.col('__bsz') > _MAX_BUCKET_SIZE)
 
     a = small.select(F.col(id_col).alias('id_a'), 'band', 'band_key')
     b = small.select(F.col(id_col).alias('id_b'), 'band', 'band_key')
@@ -278,13 +280,12 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
 
 # -------------------------------------------- near-dup cluster resolution
 
-def connected_components(pairs: DataFrame, id_a: str = 'id_a',
-                         id_b: str = 'id_b',
-                         max_iter: int = 50) -> DataFrame:
-    """Resolve near-dup PAIRS into duplicate CLUSTERS: (node, component)
-    where ``component`` is the minimum node id reachable through the
-    pair graph — the canonical survivor every production dedup keeps
-    while dropping the rest of its cluster (the reference deletes one
+def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
+    """Resolve near-dup PAIRS (id_a, id_b — the ``minhash_lsh_pairs``
+    columns) into duplicate CLUSTERS: (node, component) where
+    ``component`` is the minimum node id reachable through the pair
+    graph — the canonical survivor every production dedup keeps while
+    dropping the rest of its cluster (the reference deletes one
     duplicate at a time, app/api/management.py; at corpus scale the
     transitive closure is what you actually delete against).
 
@@ -308,7 +309,7 @@ def connected_components(pairs: DataFrame, id_a: str = 'id_a',
 
     Only nodes that appear in ``pairs`` are returned (singletons are
     their own component trivially)."""
-    src = pairs.select(F.col(id_a).alias('node'), F.col(id_b).alias('peer'))
+    src = pairs.select(F.col('id_a').alias('node'), F.col('id_b').alias('peer'))
     # persist the symmetric edge table FIRST and derive everything else
     # from the cache: without it, labels (via nodes via edges) and both
     # union branches of sym each re-evaluate `pairs` — three runs of a

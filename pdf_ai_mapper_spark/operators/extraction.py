@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..config import DEFAULT_CONFIG
 from ..kernels.extract import extract_text
 from ..kernels.preprocess import preprocess_text, preprocess_text_nltk
 
@@ -69,11 +68,12 @@ def error_code_col(text: Column) -> Column:
         .otherwise(F.lit('UNKNOWN_ERROR')))
 
 
+_PDF_TIMEOUT_S = 120  # reference pdf_extractor.py:62-73
 _TIMEOUT_MSG = ("Error: PDF extraction timed out after {s} seconds. "
                 "The file may be too large or complex.")
 
 
-def _budget_check(text: str, elapsed: float, budget: float) -> str:
+def _budget_check(text: str, elapsed: float) -> str:
     """Post-hoc per-row time budget (reference pdf_extractor.py:68-73):
     a row whose extraction ran over budget AND produced no text gets
     the reference's timeout string; partial text is kept, and a
@@ -81,8 +81,8 @@ def _budget_check(text: str, elapsed: float, budget: float) -> str:
     detection mechanism, not a preemption one — it cannot interrupt a
     hung kernel call; at cluster scale stragglers are additionally
     bounded by spark.task.maxFailures + speculative execution."""
-    if elapsed > budget and not text:
-        return _TIMEOUT_MSG.format(s=int(budget))
+    if elapsed > _PDF_TIMEOUT_S and not text:
+        return _TIMEOUT_MSG.format(s=_PDF_TIMEOUT_S)
     return text
 
 
@@ -110,14 +110,12 @@ def _make_extract_preprocess_udf(preprocess_mode: str):
 
     @pandas_udf(_EXTRACT_STRUCT)
     def _udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        cfg = DEFAULT_CONFIG
-        budget = cfg.pdf_timeout_s
         for payloads in batches:
             ext, pre = [], []
             for data in payloads:
                 t0 = time.monotonic()
-                text = extract_text(data, cfg)
-                text = _budget_check(text, time.monotonic() - t0, budget)
+                text = extract_text(data)
+                text = _budget_check(text, time.monotonic() - t0)
                 ext.append(text)
                 pre.append(pre_fn(text))
             yield pd.DataFrame({'extracted_text': ext,

@@ -24,7 +24,8 @@ from pyspark.sql.types import LongType, StringType
 
 from ..config import DEFAULT_CONFIG
 from ..kernels.query import is_valid_query, preprocess_query
-from ..kernels.relevance import generate_snippet, relevance_score
+from ..kernels.relevance import (SNIPPET_LENGTH, SNIPPET_STRIDE,
+                                 generate_snippet, relevance_score)
 
 
 def _relevance_udf(tokens: list[str]):
@@ -46,14 +47,14 @@ def _relevance_udf(tokens: list[str]):
     return rel.asNondeterministic()
 
 
-def _snippet_udf(tokens: list[str], length: int, stride: int):
+def _snippet_udf(tokens: list[str]):
     toks = list(tokens)
 
     @pandas_udf(StringType())
     def snip(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for texts in batches:
-            yield pd.Series([generate_snippet(toks, t or '', length, stride)
-                             for t in texts], dtype='object')
+            yield pd.Series([generate_snippet(toks, t or '') for t in texts],
+                            dtype='object')
     return snip.asNondeterministic()
 
 
@@ -111,8 +112,7 @@ def native_relevance_col(tokens: list[str], text_col: str):
     return score.cast('long')
 
 
-def native_snippet_col(tokens: list[str], text_col: str,
-                       length: int = 200, stride: int = 50):
+def native_snippet_col(tokens: list[str], text_col: str):
     """generate_snippet (W2) as a pure Catalyst column: sliding-window
     token-count argmax (first strict max), whitespace collapse with the
     exact Python \\s set, ellipsis affixes."""
@@ -120,12 +120,13 @@ def native_snippet_col(tokens: list[str], text_col: str,
     n = F.length(lower)
     # python range(0, len - length, stride): empty unless len > length
     positions = F.when(
-        n > length,
-        F.sequence(F.lit(0), n - F.lit(length + 1), F.lit(stride))
+        n > SNIPPET_LENGTH,
+        F.sequence(F.lit(0), n - F.lit(SNIPPET_LENGTH + 1),
+                   F.lit(SNIPPET_STRIDE))
     ).otherwise(F.array().cast('array<int>'))
 
     def window_count(i):
-        w = F.substring(lower, i + F.lit(1), F.lit(length))
+        w = F.substring(lower, i + F.lit(1), F.lit(SNIPPET_LENGTH))
         c = _count_in(w, tokens[0])
         for t in tokens[1:]:
             c = c + _count_in(w, t)
@@ -140,22 +141,21 @@ def native_snippet_col(tokens: list[str], text_col: str,
         lambda acc, x: F.when(x['c'] > acc['c'], x).otherwise(acc))
     hit = best['c'] > 0
     pos = F.when(hit, best['p']).otherwise(F.lit(0))
-    raw = F.substring(lower, pos + F.lit(1), F.lit(length))
+    raw = F.substring(lower, pos + F.lit(1), F.lit(SNIPPET_LENGTH))
     clean = F.trim(F.regexp_replace(raw, F.lit(_PY_WS_CLASS + '+'),
                                     F.lit(' ')))
     clean = F.when(pos > 0, F.concat(F.lit('...'), clean)).otherwise(clean)
-    return F.when(pos + F.lit(length) < n,
+    return F.when(pos + F.lit(SNIPPET_LENGTH) < n,
                   F.concat(clean, F.lit('...'))).otherwise(clean)
 
 
-def category_filter(df: DataFrame, categories: list[str] | None,
-                    cat_col: str = 'categories') -> DataFrame:
+def category_filter(df: DataFrame, categories: list[str] | None) -> DataFrame:
     """F4: keep rows whose category array overlaps the wanted list —
     native arrays_overlap, no explode, no shuffle
     (reference filter_manager.py:25-34)."""
     if not categories:
         return df
-    return df.filter(F.arrays_overlap(F.col(cat_col),
+    return df.filter(F.arrays_overlap(F.col('categories'),
                                       F.lit([c for c in categories])))
 
 
@@ -176,14 +176,14 @@ def resolve_structured(dim_rows: Iterable,
 
 def search(df: DataFrame, query: str,
            categories: list[str] | None = None,
-           text_col: str = 'extracted_text',
            k: int | None = None,
            cfg=DEFAULT_CONFIG) -> DataFrame:
     """Full search pipeline (reference search_engine.py:39-84):
     driver-side query stem → filters → stored dedup flag → score →
-    snippet → top-k.
+    snippet → top-k, over the ``extracted_text`` column.
     Returns (url, categories?, score, snippet) ordered by score desc."""
     k = k or cfg.max_results
+    text_col = 'extracted_text'
     tokens = preprocess_query(query)
     if not is_valid_query(tokens):  # F7 early exit (driver-side)
         return df.sparkSession.createDataFrame(
@@ -218,11 +218,9 @@ def search(df: DataFrame, query: str,
            .limit(k))  # W3 → TakeOrderedAndProject
 
     if native:
-        snippet = native_snippet_col(tokens, text_col,
-                                     cfg.snippet_length, cfg.snippet_stride)
+        snippet = native_snippet_col(tokens, text_col)
     else:
-        snip = _snippet_udf(tokens, cfg.snippet_length, cfg.snippet_stride)
-        snippet = snip(F.col(text_col))
+        snippet = _snippet_udf(tokens)(F.col(text_col))
     return (top.withColumn('snippet', snippet)
             .select(*keep, 'score', 'snippet')
             .orderBy(*order))

@@ -107,12 +107,10 @@ def q_w2_search_snippets(spark, sf_dir):
     with first-max tie-break, whitespace cleanup and ellipses —
     computed by the engine's pandas-UDF kernels and cross-checked
     against a pure-SQL reconstruction in DuckDB."""
-    from .config import DEFAULT_CONFIG
     from .operators.search import _relevance_udf, _snippet_udf
     toks = list(_SNIPPET_TOKENS)
     rel = _relevance_udf(toks)
-    snip = _snippet_udf(toks, DEFAULT_CONFIG.snippet_length,
-                        DEFAULT_CONFIG.snippet_stride)
+    snip = _snippet_udf(toks)
 
     d = _t(spark, sf_dir, 'documents')
     out = (d.withColumn('score', rel(F.col('text')))
@@ -251,9 +249,9 @@ def q_search_pipeline(spark, sf_dir):
     return search(d, _SEARCH_QUERY, k=10)
 
 
-def _planted_corpus(spark, sf_dir, n_tokens: int = 12):
+def _planted_corpus(spark, sf_dir):
     """Shared planted construction (round 7 — VERDICT r6 #3): every
-    doc is ``n_tokens`` doc-namespaced tokens (cross-doc token/shingle
+    doc is 12 doc-namespaced tokens (cross-doc token/shingle
     sets EXACTLY disjoint), except docs with doc_id % 50 < 3, which
     carry a group-namespaced sentinel text shared VERBATIM within
     their group of three (g = doc_id DIV 50; every token carries g, so
@@ -265,10 +263,10 @@ def _planted_corpus(spark, sf_dir, n_tokens: int = 12):
     g = F.expr('doc_id DIV 50')
     filler = F.concat_ws(' ', *[
         F.concat(F.lit('d'), i.cast('string'), F.lit(f't{j}'))
-        for j in range(n_tokens)])
+        for j in range(12)])
     sentinel = F.concat_ws(' ', *[
         F.concat(F.lit('g'), g.cast('string'), F.lit(f'd{j}'))
-        for j in range(n_tokens)])
+        for j in range(12)])
     return (_t(spark, sf_dir, 'documents')
             .select('doc_id',
                     F.when(i % 50 < 3, sentinel).otherwise(filler)

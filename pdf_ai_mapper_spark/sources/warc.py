@@ -29,6 +29,8 @@ from typing import Iterator
 
 _GZIP_MAGIC = b'\x1f\x8b'
 _CRLF2 = b'\r\n\r\n'
+_READ_CHUNK = 1 << 20   # gzip bytes fed per decompress call
+_HEAD_CAP = 1 << 16     # WARC header bytes read per record
 
 
 def iter_warc_records(data: bytes) -> Iterator[tuple[dict, bytes]]:
@@ -100,8 +102,7 @@ def warc_response_rows(data: bytes) -> Iterator[tuple]:
                _http_body(block))
 
 
-def _gzip_member_ranges_stream(fh, chunk_size: int = 1 << 20
-                               ) -> list[tuple[int, int]]:
+def _gzip_member_ranges_stream(fh) -> list[tuple[int, int]]:
     """(offset, length) per gzip member, streaming: O(chunk) memory,
     one decompression pass."""
     import zlib
@@ -111,7 +112,7 @@ def _gzip_member_ranges_stream(fh, chunk_size: int = 1 << 20
     d = zlib.decompressobj(wbits=31)
     carry = b''
     while True:
-        data = carry if carry else fh.read(chunk_size)
+        data = carry if carry else fh.read(_READ_CHUNK)
         carry = b''
         if not data:
             if fed > start:
@@ -128,8 +129,7 @@ def _gzip_member_ranges_stream(fh, chunk_size: int = 1 << 20
             d = zlib.decompressobj(wbits=31)
 
 
-def _raw_record_ranges_stream(fh, head_cap: int = 1 << 16
-                              ) -> list[tuple[int, int]]:
+def _raw_record_ranges_stream(fh) -> list[tuple[int, int]]:
     """(offset, length) per raw WARC record, streaming with seek —
     blocks are skipped, never buffered."""
     fh.seek(0, 2)
@@ -138,7 +138,7 @@ def _raw_record_ranges_stream(fh, head_cap: int = 1 << 16
     pos = 0
     while pos < size:
         fh.seek(pos)
-        head = fh.read(head_cap)
+        head = fh.read(_HEAD_CAP)
         if not head:
             break
         if not head.startswith(b'WARC/'):
@@ -148,7 +148,7 @@ def _raw_record_ranges_stream(fh, head_cap: int = 1 << 16
                 continue
             pos += idx
             fh.seek(pos)
-            head = fh.read(head_cap)
+            head = fh.read(_HEAD_CAP)
         he = head.find(_CRLF2)
         if he < 0:
             break  # truncated / >64k header: complete records only

@@ -104,6 +104,17 @@ def test_search_structured_filter_matching_no_category_is_unfiltered(api):
                       k=5) == want
 
 
+def test_recategorize_with_clusters_clamps_k(api):
+    """POST /recategorize-with-clusters/ clamps ``clusters`` to [2, 20]
+    (reference categories.py:85) before the KMeans fit, which rejects
+    k < 2."""
+    for i in range(4):
+        api.upload(bytes(page_row(i)['html']), f'page{i}.html')
+    rc = api.recategorize(clusters=1)
+    assert rc['status'] == 'success'
+    assert 1 <= len(rc['structured_categories']) <= 2
+
+
 def test_status_pagination_bounds_driver_payload(api):
     """status() must not collect the whole corpus: limit/offset page in
     url order while document_count stays the total (VERDICT r2 #5)."""

@@ -6,7 +6,6 @@ prefilter; ``definite_new`` must have zero false negatives; the false
 positive rate must be near the design point.
 """
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 

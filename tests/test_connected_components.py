@@ -3,7 +3,6 @@
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from pdf_ai_mapper_spark.operators.dedup import connected_components, release
 

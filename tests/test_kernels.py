@@ -114,15 +114,15 @@ def test_png_ocr_stub_roundtrip():
     assert extract_text(png) == 'ground truth text 42'
 
 
-def test_corrupt_payload_yields_error_string():
+def test_corrupt_payload_yields_error_string(monkeypatch):
     bad_pdf = b'%PDF-'  # header only, no streams → no text
     assert extract_text(bad_pdf).startswith('Error')
     bad_png = b'\x89PNG\r\n\x1a\n' + b'\x00' * 4
     assert extract_text(bad_png).startswith('Error extracting text:')
-    # F1 is enforced per row: a payload over max_file_size is an error row
-    from pdf_ai_mapper_spark.config import EngineConfig
-    assert (extract_text(b'<p>big</p>', EngineConfig(max_file_size=4))
-            == 'Error: File too large')
+    # F1 is enforced per row: a payload over MAX_FILE_SIZE is an error row
+    from pdf_ai_mapper_spark.kernels import extract
+    monkeypatch.setattr(extract, 'MAX_FILE_SIZE', 4)
+    assert extract_text(b'<p>big</p>') == 'Error: File too large'
 
 
 def test_html_extractor_skips_boilerplate():

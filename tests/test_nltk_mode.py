@@ -112,8 +112,6 @@ def test_modes_agree_when_no_divergent_tokens():
 def test_pipeline_mode_plumbs_through(spark, tmp_path):
     """run_extraction with cfg.preprocess_mode='nltk' must produce
     preprocessed_text == preprocess_text_nltk(extracted_text) per row."""
-    from pyspark.sql import functions as F
-
     from pdf_ai_mapper_spark import checkpoint as cp
     from pdf_ai_mapper_spark.fixtures.webpages import web_pages_df
     from pdf_ai_mapper_spark.pipeline import run_extraction

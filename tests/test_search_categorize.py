@@ -5,7 +5,6 @@ from __future__ import annotations
 import dataclasses
 
 import pytest
-from pyspark.sql import functions as F
 
 import reference_extractor as ref
 from pdf_ai_mapper_spark.config import EngineConfig
@@ -96,7 +95,7 @@ def test_lda_categories_shape_and_stability(spark, corpus):
 
 
 def test_kmeans_categories(spark, corpus):
-    out = fit_kmeans_categories(corpus, k=4, cfg=CFG)
+    out = fit_kmeans_categories(corpus, k=4)
     rows = out.select('categories').collect()
     names = {r['categories'][0] for r in rows}
     assert 1 < len(names) <= 4

@@ -11,8 +11,6 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import functions as F
-
 from pdf_ai_mapper_spark.kernels.relevance import (
     generate_snippet, relevance_score)
 from pdf_ai_mapper_spark.operators.search import (

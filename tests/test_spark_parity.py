@@ -4,9 +4,6 @@ reference transcription."""
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import functions as F
-
 import reference_extractor as ref
 from pdf_ai_mapper_spark.config import EngineConfig
 from pdf_ai_mapper_spark.fixtures.webpages import web_pages_df, web_pages_pandas

@@ -1,7 +1,5 @@
 """WARC source (sources/warc.py) vs the write-side twin fixture."""
 
-import datetime as dt
-
 from pyspark.sql import functions as F
 
 from pdf_ai_mapper_spark.fixtures.webpages import (
