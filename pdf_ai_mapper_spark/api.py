@@ -192,12 +192,11 @@ class MapperAPI:
         KMeans when ``clusters`` is given — the documented intent of
         the reference's dead endpoint), categories + structured
         dimension persisted."""
-        removed = self._cleanup_duplicates_impl()
+        removed, n = self._cleanup_duplicates_impl()
         docs = self._read_output()
         if docs is None:
             return {'status': 'success', 'message': 'Recategorized 0 documents',
                     'structured_categories': []}
-        n = docs.count()
         if clusters is not None:
             clusters = max(2, min(20, clusters))            # categories.py:85
             cat_df = fit_kmeans_categories(docs, clusters)
@@ -249,30 +248,37 @@ class MapperAPI:
     def cleanup_duplicates(self) -> dict:
         """POST /cleanup-duplicates/ (categories.py:167-188): D3
         destructive dedup — rows the commit flagged ``is_duplicate``
-        are dropped, survivors rewritten, count reported."""
-        removed = self._cleanup_duplicates_impl()
-        out = self._read_output()
-        n = out.count() if out is not None else 0
+        are dropped, the buckets that held them rewritten, the rows
+        left reported."""
+        removed, n = self._cleanup_duplicates_impl()
         return {'status': 'success',
                 'message': f'Removed {removed} duplicate documents',
                 'document_count': n}
 
     # -------------------------------------------------------- internals
-    def _cleanup_duplicates_impl(self) -> int:
+    def _cleanup_duplicates_impl(self) -> tuple[int, int]:
+        """Drop the rows the commit flagged ``is_duplicate`` (the
+        first-seen row per content hash survives; destructive,
+        document_storage.py:105-138). One per-bucket aggregate names
+        the buckets that hold a flagged row, and only those are
+        rewritten: every other bucket keeps its files. Returns the
+        rows removed and the rows left."""
         docs = self._read_output()
         if docs is None:
-            return 0
-        # first-seen per content hash is the flag the commit stored
-        removed = docs.filter(F.col('is_duplicate')).count()
-        if removed:
-            # rewrite the full table (destructive, document_storage.py:
-            # 105-138); bucketed layout preserved
-            tmp = cp.data_path(self.base_path) + '.dedup_tmp'
-            (docs.filter(~F.col('is_duplicate'))
-             .write.partitionBy('bucket').mode('overwrite').parquet(tmp))
-            data = cp.data_path(self.base_path)
-            cp.swap_dirs(data, tmp, data + '.dedup_old')
-        return removed
+            return 0, 0
+        per_bucket = (docs.groupBy('bucket')
+                      .agg(F.count('*').alias('rows'),
+                           F.count_if('is_duplicate').alias('dups'))
+                      .collect())
+        removed = sum(r['dups'] for r in per_bucket)
+        hit = [r['bucket'] for r in per_bucket if r['dups']]
+        if hit:
+            cp._rewrite_buckets(
+                cp.data_path(self.base_path),
+                docs.filter(F.col('bucket').isin(hit)
+                            & ~F.col('is_duplicate')),
+                hit)
+        return removed, sum(r['rows'] for r in per_bucket) - removed
 
     def _structured_list(self) -> list[dict]:
         dim = self._read_sidecar(self._structured_path())

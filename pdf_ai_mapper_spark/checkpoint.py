@@ -1,24 +1,37 @@
-"""Checkpoint / lineage table: resumable, idempotent extraction runs.
+"""Checkpoint / lineage table: resumable, idempotent extraction runs
+and crash-safe rewrites of the output table.
 
 The reference batches JSON index writes behind a pending-save flag
 (``document_storage.py:59-74``); at cluster scale that becomes
-snapshot-style commits with per-bucket lineage (SURVEY.md §4.3):
+snapshot-style commits with per-bucket lineage (SURVEY.md §4.3).
+Output is laid out in ``output_buckets`` url-hash buckets
+(``bucket_of(url, B)``; the parquet layout here is Iceberg-shaped),
+and three commit mechanisms keep it consistent under a crash at any
+step, each a local-fs stand-in for an Iceberg snapshot commit:
 
-- Output is laid out in ``output_buckets`` url-hash buckets
-  (``bucket_of(url, B)``), written with dynamic partition
-  overwrite — each bucket commit is atomic at the directory level
-  (Iceberg snapshot commit on real clusters; the parquet layout here
-  is Iceberg-shaped).
-- ``_checkpoints`` parquet records, per committed bucket:
-  run id, rows in/out, error-row count, commit timestamp.
-- A resumed run reads the committed bucket set and processes only the
+- resume: a run writes its buckets with dynamic partition overwrite
+  (atomic per bucket directory) and records, per committed bucket,
+  run id, rows in/out, error-row count and commit timestamp in the
+  ``_checkpoints`` parquet. A resumed run processes only the
   remaining buckets — re-running a finished job writes 0 rows
   (idempotence test in tests/test_pipeline.py).
+- append: an append-mode run publishes ``_intents/<run_id>.json``
+  before its data append and clears it after its checkpoint append;
+  ``reconcile_intents`` rebuilds the counters of a run that crashed
+  in between.
+- rewrite: ``MapperAPI.cleanup_duplicates``, ``compact_output`` and
+  ``upsert_output`` replace the rows of the buckets they touch
+  through ``_rewrite_buckets`` (sibling tmp, published intent,
+  per-bucket promotion); ``recover_output`` rolls a published intent
+  forward, or discards an unpublished tmp, before every read and
+  write.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -144,14 +157,19 @@ def intents_path(output_path: str) -> str:
     return os.path.join(output_path, '_intents')
 
 
+def _publish_json(path: str, obj: dict) -> None:
+    """Write ``obj`` to ``path`` so that a reader sees all of it or
+    nothing: write a sibling, then rename (atomic)."""
+    tmp = path + '.tmp'
+    with open(tmp, 'w') as f:
+        json.dump(obj, f)
+    os.rename(tmp, path)
+
+
 def write_intent(output_path: str, run_id: str) -> None:
-    import json
     d = intents_path(output_path)
     os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, f'.{run_id}.tmp')
-    with open(tmp, 'w') as f:
-        json.dump({'run_id': run_id}, f)
-    os.rename(tmp, os.path.join(d, f'{run_id}.json'))  # atomic publish
+    _publish_json(os.path.join(d, f'{run_id}.json'), {'run_id': run_id})
 
 
 def clear_intent(output_path: str, run_id: str) -> None:
@@ -162,7 +180,6 @@ def clear_intent(output_path: str, run_id: str) -> None:
 
 
 def pending_intents(output_path: str) -> list[dict]:
-    import json
     d = intents_path(output_path)
     if not os.path.isdir(d):
         return []
@@ -214,13 +231,22 @@ def reconcile_intents(spark: SparkSession, output_path: str) -> int:
 
 
 def recover_output(output_path: str) -> None:
-    """Finish or roll back any directory swap a crash interrupted
-    (``recover_swap``, then ``recover_upsert``). Readers and writers
-    call it first: a writer that created a fresh ``data`` before it
-    would strand the table a crashed swap moved aside."""
+    """Finish or discard a table rewrite (``_rewrite_buckets``) that a
+    crash interrupted. With a published intent the rewrite had been
+    written in full, so the per-bucket promotion rolls FORWARD;
+    without one the crash hit before the publish, the stored table is
+    untouched, and the stray tmp and old directories are discarded.
+    Readers and writers call it first: a bucket a writer wrote before
+    the roll-forward would be moved aside by it."""
     data = data_path(output_path)
-    recover_swap(data)
-    recover_upsert(data)
+    tmp, old, intent = _rewrite_paths(data)
+    if os.path.exists(intent):
+        with open(intent) as f:
+            published = json.load(f)
+        _promote_rewrite(data, published['buckets'], published['emptied'])
+    else:
+        shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(old, ignore_errors=True)
 
 
 def read_output(spark: SparkSession, output_path: str) -> DataFrame:
@@ -230,47 +256,73 @@ def read_output(spark: SparkSession, output_path: str) -> DataFrame:
 
 def read_output_or_none(spark: SparkSession,
                         output_path: str) -> DataFrame | None:
-    """``read_output``, or None while the table has no ``data`` yet. A
-    crashed swap is rolled back before the check, so a table it moved
-    aside is found, not taken for a first run."""
-    recover_output(output_path)
+    """``read_output``, or None while the table has no ``data`` yet."""
     return read_or_none(read_output, spark, output_path,
                         path=data_path(output_path))
 
 
-def swap_dirs(data: str, tmp: str, old: str) -> None:
-    """Promote ``tmp`` to ``data`` via rename-through-``old``.
+# -- the table's one rewrite: cleanup, compaction and upsert --
+#
+# A rewrite replaces the rows of some buckets and keeps every other
+# bucket's files.  It writes the new rows to a sibling tmp, partitioned
+# by bucket; publishes an intent that lists the affected buckets
+# (atomic rename); then promotes bucket by bucket: the old bucket
+# directory moves aside and the tmp's moves in.  A bucket the rewrite
+# empties has no tmp directory, so the intent names it apart and its
+# promotion only moves it aside.  On a real cluster the whole step is
+# one Iceberg snapshot commit.
 
-    Crash-safe contract (local-fs stand-in for an Iceberg snapshot
-    commit, where this whole dance is one metadata pointer swap):
-    - a stale ``old`` left by a previously interrupted swap is removed
-      first — otherwise ``os.rename(data, old)`` raises ENOTEMPTY and
-      every later swap fails forever;
-    - the window between the two renames is NOT atomic: a crash there
-      leaves ``data`` missing but ``old`` + ``tmp`` intact.
-      ``recover_swap`` (called through ``recover_output``) restores
-      ``old`` in that case, so readers see the pre-swap table rather
-      than PATH_NOT_FOUND, and writers never write a fresh ``data``
-      beside the stranded one.
-    """
-    import shutil
+def _rewrite_paths(data: str) -> tuple[str, str, str]:
+    return (data + '.rewrite_tmp', data + '.rewrite_old',
+            data + '.rewrite_intent.json')
+
+
+def _rewrite_buckets(data: str, rows: DataFrame, buckets: list[int],
+                     expect_rows: int | None = None) -> None:
+    """Replace the rows of ``buckets`` in the table at ``data`` with
+    ``rows``, which hold only those buckets (none at all empties a
+    bucket). With ``expect_rows``, the written tmp is read back and
+    its row count checked before anything is published; on a mismatch
+    the tmp is dropped and the table is left untouched."""
+    tmp, _old, intent = _rewrite_paths(data)
+    rows.write.partitionBy('bucket').mode('error').parquet(tmp)
+    if expect_rows is not None:
+        n = rows.sparkSession.read.parquet(tmp).count()
+        if n != expect_rows:
+            shutil.rmtree(tmp, ignore_errors=True)
+            raise RuntimeError(
+                f'rewrite row-count mismatch: {expect_rows} -> {n}; '
+                f'original data left untouched')
+    # an emptied bucket has no directory in the tmp, and with every
+    # row dropped the tmp itself may be missing
+    written = set(os.listdir(tmp)) if os.path.isdir(tmp) else set()
+    emptied = [n for n in buckets if f'bucket={n}' not in written]
+    # from here on a crash rolls forward; before here the stored
+    # table is untouched
+    _publish_json(intent, {'buckets': buckets, 'emptied': emptied})
+    _promote_rewrite(data, buckets, emptied)
+
+
+def _promote_rewrite(data: str, buckets: list[int],
+                     emptied: list[int]) -> None:
+    """Per-bucket promotion, idempotent so that recovery can resume it.
+    A bucket's directory moves aside while its replacement still waits
+    in the tmp, or when the rewrite emptied it; then the replacement
+    moves in. Per bucket the only reachable states are not started,
+    moved aside and done, and os.rename is atomic, so none is
+    ambiguous: an emptied bucket is done only once it is gone."""
+    tmp, old, intent = _rewrite_paths(data)
+    for n in buckets:
+        name = f'bucket={n}'
+        t, d = os.path.join(tmp, name), os.path.join(data, name)
+        if os.path.exists(d) and (n in emptied or os.path.exists(t)):
+            os.makedirs(old, exist_ok=True)
+            os.rename(d, os.path.join(old, name))
+        if os.path.exists(t):
+            os.rename(t, d)
+    shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(old, ignore_errors=True)
-    os.rename(data, old)
-    os.rename(tmp, data)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def recover_swap(data: str) -> None:
-    """Roll back a swap that crashed between its two renames: if
-    ``data`` is missing but a ``.dedup_old`` / ``.compact_old`` sibling
-    exists, restore it."""
-    if os.path.exists(data):
-        return
-    for suffix in ('.dedup_old', '.compact_old'):
-        old = data + suffix
-        if os.path.exists(old):
-            os.rename(old, data)
-            return
+    os.remove(intent)
 
 
 def compact_output(spark: SparkSession, output_path: str) -> dict:
@@ -280,86 +332,22 @@ def compact_output(spark: SparkSession, output_path: str) -> dict:
     ``run_extraction(dedup_against_output=True)``) adds ≥1 file per
     touched bucket, so file count grows linearly with runs — at
     cluster scale each read then pays one open()+footer parse per tiny
-    file. Rewrites each bucket into one file (repartition on bucket),
-    verifies the row count, then atomically swaps directories. The
-    lineage table is untouched: compaction moves bytes, not rows, so
-    resume semantics and counters stay valid.
-
-    On a real cluster this is Iceberg's rewrite-data-files snapshot
-    commit; the local-fs stand-in is write-to-sibling + rename swap,
-    with the row-count check before the old data is dropped."""
-    import shutil
-
+    file. Rewrites each bucket into one file (repartition on bucket)
+    through ``_rewrite_buckets``, which checks the rewrite's row count
+    before it publishes. The lineage table is untouched: compaction
+    moves bytes, not rows, so resume semantics and counters stay
+    valid. On a real cluster this is Iceberg's rewrite-data-files
+    snapshot commit."""
     data = data_path(output_path)
     df = read_output(spark, output_path)
     files_before = len(df.inputFiles())
-    n_before = df.count()
-
-    n_buckets = df.select('bucket').distinct().count()
-    parts = df.repartition(max(1, n_buckets), F.col('bucket'))
-    tmp = data + '.compact_tmp'
-    parts.write.partitionBy('bucket').mode('overwrite').parquet(tmp)
-
-    compacted = spark.read.parquet(tmp)
-    n_after = compacted.count()
-    if n_after != n_before:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise RuntimeError(
-            f'compaction row-count mismatch: {n_before} -> {n_after}; '
-            f'original data left untouched')
-    files_after = len(compacted.inputFiles())
-
-    swap_dirs(data, tmp, data + '.compact_old')
-    return {'rows': int(n_after), 'files_before': int(files_before),
+    n_rows = df.count()
+    buckets = [r['bucket'] for r in df.select('bucket').distinct().collect()]
+    parts = df.repartition(max(1, len(buckets)), F.col('bucket'))
+    _rewrite_buckets(data, parts, buckets, expect_rows=n_rows)
+    files_after = len(spark.read.parquet(data).inputFiles())
+    return {'rows': int(n_rows), 'files_before': int(files_before),
             'files_after': int(files_after)}
-
-
-def _upsert_paths(data: str) -> tuple[str, str, str]:
-    return (data + '.upsert_tmp', data + '.upsert_old',
-            data + '.upsert_intent.json')
-
-
-def _promote_upsert(data: str, buckets: list[int]) -> None:
-    """Per-bucket promotion, idempotent so a crashed run can resume it
-    (roll-forward). Per bucket the only reachable states are:
-    tmp present + data present (not started → both renames), tmp
-    present + data absent (crashed between renames, or an inserted
-    bucket → rename tmp in), tmp absent (done). os.rename is atomic,
-    so no state is ambiguous."""
-    import shutil
-    tmp, old, intent = _upsert_paths(data)
-    for n in buckets:
-        t = os.path.join(tmp, f'bucket={n}')
-        d = os.path.join(data, f'bucket={n}')
-        if os.path.exists(t):
-            if os.path.exists(d):
-                os.makedirs(old, exist_ok=True)
-                os.rename(d, os.path.join(old, f'bucket={n}'))
-            os.rename(t, d)
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    try:
-        os.remove(intent)
-    except FileNotFoundError:
-        pass
-
-
-def recover_upsert(data: str) -> None:
-    """Finish or discard an interrupted ``upsert_output`` (called
-    through ``recover_output``). With a published intent the merge
-    write had completed → roll FORWARD (finish the per-bucket
-    promotion); without one the crash hit mid-merge-write → the
-    stored table is untouched, discard the stray tmp."""
-    import json
-    import shutil
-    tmp, old, intent = _upsert_paths(data)
-    if os.path.exists(intent):
-        with open(intent) as f:
-            buckets = json.load(f)['buckets']
-        _promote_upsert(data, buckets)
-    else:
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
 
 
 def upsert_output(spark: SparkSession, output_path: str,
@@ -399,16 +387,13 @@ def upsert_output(spark: SparkSession, output_path: str,
     directories it replaces, and V1 dynamic partition overwrite deletes
     matched dirs during commit — an in-place overwrite can lose the
     affected buckets on a mid-commit failure with no recovery path.
-    So the merge writes to a SIBLING tmp dir first; once that write
-    completes, an intent marker (the affected-bucket list) publishes
-    atomically, and promotion is per-bucket renames that
-    ``recover_upsert`` can roll forward after any crash — the same
-    write-then-publish contract as ``compact_output``'s swap."""
-    import json
+    So the merge goes through ``_rewrite_buckets``, the table's one
+    rewrite, as cleanup and compaction do: a SIBLING tmp dir first,
+    then an atomically published intent (the affected-bucket list),
+    then per-bucket renames that ``recover_output`` rolls forward
+    after any crash."""
     from pyspark.sql import Observation
 
-    data = data_path(output_path)
-    tmp, _old, intent = _upsert_paths(data)
     b = batch.withColumn('bucket', bucket_of(key_col, n_buckets))
     affected = sorted(r['bucket']
                       for r in b.select('bucket').distinct().collect())
@@ -427,13 +412,6 @@ def upsert_output(spark: SparkSession, output_path: str,
     merged = (stored.unionByName(bb)
               .groupBy(key_col).agg(pick).select('__row.*')
               .observe(obs, F.count(F.lit(1)).alias('n')))
-    merged.write.partitionBy('bucket').mode('error').parquet(tmp)
-    # publish the intent ATOMICALLY (rename): from here on a crash
-    # rolls forward; before here the stored table is untouched
-    itmp = intent + '.tmp'
-    with open(itmp, 'w') as f:
-        json.dump({'buckets': [int(n) for n in affected]}, f)
-    os.rename(itmp, intent)
-    _promote_upsert(data, affected)
+    _rewrite_buckets(data_path(output_path), merged, affected)
     return {'buckets_rewritten': len(affected),
             'rows_written': int(obs.get['n'])}

@@ -136,9 +136,14 @@ def _ensure_min_parallelism(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
+# word k-gram size of the shingles a MinHash signature is taken over
+_SHINGLE_K = 3
+
+
 def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
-                       num_hashes: int = 64, k: int = 3) -> DataFrame:
-    """(id, sig: array<bigint>) — num_hashes min-hash values per doc.
+                       num_hashes: int = 64) -> DataFrame:
+    """(id, sig: array<bigint>) — num_hashes min-hash values per doc,
+    over the doc's ``_SHINGLE_K``-word shingles.
 
     Entirely map-side — NO shuffle: shingles and their base hashes are
     per-row arrays, and each of the num_hashes signature slots is an
@@ -157,14 +162,15 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     signature work onto one core while every downstream stage blocked
     on the cache lock (measured: q_minhash 14.9 s → 4.3 s from the
     spread alone). The row-empty gate is the CHEAP equivalent predicate
-    ``n_tokens >= k`` (one split) instead of ``size(shingles) > 0``:
-    filter pushdown sinks the predicate below the spread exchange into
-    the scan, and the expensive form re-evaluates the whole shingle
-    expression there, serially (the ngram round-8 lesson)."""
+    ``n_tokens >= _SHINGLE_K`` (one split) instead of
+    ``size(shingles) > 0``: filter pushdown sinks the predicate below
+    the spread exchange into the scan, and the expensive form
+    re-evaluates the whole shingle expression there, serially (the
+    ngram round-8 lesson)."""
     n_toks = F.size(F.split(F.lower(F.col(text_col)), r'\s+'))
     base_in = _ensure_min_parallelism(
-        df.select(id_col, text_col).filter(n_toks >= F.lit(k)))
-    shingled = with_shingles(base_in, text_col, k)
+        df.select(id_col, text_col).filter(n_toks >= F.lit(_SHINGLE_K)))
+    shingled = with_shingles(base_in, text_col, _SHINGLE_K)
     base = F.transform(F.col('shingles'),
                        lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE31)))
     shingled = shingled.withColumn('__h', base)
@@ -199,7 +205,9 @@ def _numpy_sig_udf(num_hashes: int):
     return sig_udf
 
 
-# band buckets above this size expand as a star (minhash_lsh_pairs)
+# band buckets above this size expand as a star (minhash_lsh_pairs);
+# the incremental index joins at most this many stored members of a
+# bucket to each new doc (minhash_index_update)
 _MAX_BUCKET_SIZE = 64
 
 
@@ -386,11 +394,16 @@ def keep_best_per_cluster(docs: DataFrame, components: DataFrame,
 
 # ---------------------------------------------- incremental MinHash index
 
+# the index's signature length, LSH bands and verify threshold (the
+# threshold is stricter than minhash_lsh_pairs' default 0.5)
+_INDEX_NUM_HASHES = 64
+_INDEX_BANDS = 16
+_INDEX_JACCARD_THRESHOLD = 0.8
+
+
 def minhash_index_update(spark, new_df: DataFrame, index_path: str,
-                         id_col: str, text_col: str, batch_id: str,
-                         num_hashes: int = 64, bands: int = 16, k: int = 3,
-                         jaccard_threshold: float = 0.8,
-                         max_bucket_size: int = 64) -> DataFrame:
+                         id_col: str, text_col: str,
+                         batch_id: str) -> DataFrame:
     """Incremental near-dup detection against a PERSISTENT signature
     index — the production shape at corpus scale, where re-running
     ``minhash_lsh_pairs`` over 10^12 committed docs per new crawl batch
@@ -410,20 +423,21 @@ def minhash_index_update(spark, new_df: DataFrame, index_path: str,
 
     Skew guard: only buckets the new batch TOUCHES are read; within a
     touched bucket the stored members joined to each new doc are
-    capped at ``max_bucket_size`` lowest ids (deterministic) — a
+    capped at ``_MAX_BUCKET_SIZE`` lowest ids (deterministic) — a
     template bucket with 10^6 members cannot explode a batch join.
     Returns (id_a, id_b, jaccard_est) pairs where at least one side is
     new; on an uncapped-bucket corpus this equals the full-recompute
     pair set restricted to pairs touching the batch (pinned by
     tests/test_minhash_index.py)."""
-    rows = num_hashes // bands
-    sig = minhash_signatures(new_df, id_col, text_col, num_hashes, k)
+    rows = _INDEX_NUM_HASHES // _INDEX_BANDS
+    sig = minhash_signatures(new_df, id_col, text_col, _INDEX_NUM_HASHES)
     from pyspark.storagelevel import StorageLevel
     sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
 
     band_rows = sig.select(
         F.col(id_col).alias('id'),
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias('band'),
+        F.explode(F.sequence(F.lit(0), F.lit(_INDEX_BANDS - 1)))
+        .alias('band'),
         'sig',
     ).select(
         'id', 'band', 'sig',
@@ -456,7 +470,7 @@ def minhash_index_update(spark, new_df: DataFrame, index_path: str,
         w = Window.partitionBy('band', 'band_key').orderBy('id')
         touched = (touched
                    .withColumn('__rn', F.row_number().over(w))
-                   .filter(F.col('__rn') <= max_bucket_size)
+                   .filter(F.col('__rn') <= _MAX_BUCKET_SIZE)
                    .select('id', 'band', 'band_key'))
         sides.append(touched)
     all_rows = sides[0] if len(sides) == 1 else sides[0].unionByName(sides[1])
@@ -487,8 +501,9 @@ def minhash_index_update(spark, new_df: DataFrame, index_path: str,
     agree = F.size(F.filter(
         F.zip_with('sig_a', 'sig_b', lambda x, y: x == y), lambda m: m))
     result = (cand.join(sig_a, 'id_a').join(sig_b, 'id_b')
-              .withColumn('jaccard_est', agree / F.lit(float(num_hashes)))
-              .filter(F.col('jaccard_est') >= jaccard_threshold)
+              .withColumn('jaccard_est',
+                          agree / F.lit(float(_INDEX_NUM_HASHES)))
+              .filter(F.col('jaccard_est') >= _INDEX_JACCARD_THRESHOLD)
               .select('id_a', 'id_b', 'jaccard_est'))
     result = result.localCheckpoint()  # materialize BEFORE the append below
 

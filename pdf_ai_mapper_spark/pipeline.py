@@ -133,10 +133,11 @@ def run_extraction(spark: SparkSession, input_df: DataFrame, output_path: str,
     run_id = run_id or cp.new_run_id()
     bucket = cp.bucket_of('url', cfg.output_buckets)
 
-    # heal a crashed swap before anything reads or writes data/ (the
-    # write below would otherwise strand the moved-aside table), then
-    # any prior run that crashed between its data append and its
-    # checkpoint append (exactly-once counters; see cp.reconcile_intents)
+    # roll a crashed rewrite forward before anything reads or writes
+    # data/ (its promotion would otherwise move aside a bucket the
+    # write below appends to), then heal any prior run that crashed
+    # between its data append and its checkpoint append (exactly-once
+    # counters; see cp.reconcile_intents)
     cp.recover_output(output_path)
     cp.reconcile_intents(spark, output_path)
 

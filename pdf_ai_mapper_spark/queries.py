@@ -562,7 +562,8 @@ def q_compaction_content(spark, sf_dir):
     q_compaction exercises the real extraction store; this one proves
     content invariance end-to-end on SQL-derivable data): documents
     written as a fragmented bucketed store in three append slices,
-    compacted behind the row-count check + atomic swap, read back —
+    compacted behind the row-count check + the published per-bucket
+    promotion (the table's one rewrite), read back —
     count, id sum, order-independent ids-md5 and char sum must equal
     the corpus exactly (compaction moves bytes, never rows). The
     files-reduced invariant is asserted in-query so a no-op compactor
@@ -602,7 +603,8 @@ def q_compaction(spark, sf_dir):
     """Small-file compaction (checkpoint.compact_output; rows-only):
     three incremental ingest batches fragment the bucketed layout, the
     compactor rewrites it to ≤1 file per bucket behind a row-count
-    check and an atomic swap; reports rows + the invariants."""
+    check and the published per-bucket promotion; reports rows + the
+    invariants."""
     import shutil
     import tempfile
     from . import checkpoint as cp_mod
@@ -816,7 +818,7 @@ ORACLES: dict[str, str] = {
         ORDER BY arity
     """,
     # compaction content invariance: what comes back after the rewrite
-    # + swap must BE the corpus, independent of file layout
+    # + promotion must BE the corpus, independent of file layout
     'q_compaction_content': r"""
         SELECT CAST(count(*) AS BIGINT) AS n_docs,
                CAST(sum(doc_id) AS BIGINT) AS id_sum,

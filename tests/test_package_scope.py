@@ -26,6 +26,17 @@ records the names that are not live today. It is a record of fact,
 not a to-do list, and it is exact: a new public function that no
 engine path reaches fails the test, and so does a listed name that is
 gone or now live.
+
+And one level further down, for their parameters: a defaulted
+parameter of a public function, or of a public method of a public
+class, in a reached module must be set by some call, by keyword or by
+position, in the package, ``scripts/``, ``perfbench/``,
+``__spark_entry__.py`` or ``tests/``. A value no call sets is a
+constant next to its reader, not a setting. The match is by name, as
+above (a ``from`` import alias counts as its name, a class's
+constructor as the class name); a call that unpacks ``*args`` or
+``**kwargs`` sets every parameter. The ``MapperAPI`` endpoint
+parameters are exempt: they are outside input.
 """
 
 from __future__ import annotations
@@ -173,3 +184,80 @@ def test_every_public_function_is_referenced_from_an_engine_path():
         'CALLED_ONLY_FROM_CATALOG_OR_TESTS names functions that are gone '
         'or now reached: '
         f'{sorted(CALLED_ONLY_FROM_CATALOG_OR_TESTS - unreferenced)}')
+
+
+CALLERS = [*sorted((ROOT / PKG).rglob('*.py')),
+           *sorted(ROOT.glob('scripts/*.py')),
+           *sorted(ROOT.glob('perfbench/*.py')),
+           ROOT / '__spark_entry__.py',
+           *sorted(ROOT.glob('tests/*.py'))]
+ENDPOINT_CLASSES = {'MapperAPI'}
+
+
+def _defaulted(fn: ast.FunctionDef,
+               method: bool) -> tuple[list[str], set[str]]:
+    """The positional parameter names a call fills (``self`` dropped
+    for a method) and the names of the parameters with a default."""
+    a = fn.args
+    pos = [p.arg for p in a.posonlyargs + a.args][1 if method else 0:]
+    defaulted = set(pos[len(pos) - len(a.defaults):] if a.defaults else ())
+    defaulted |= {p.arg for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                  if d is not None}
+    return pos, defaulted
+
+
+def _settable(reached: set[str]) -> dict[str, tuple]:
+    """Qualified name → (the name a call uses, positional parameters,
+    defaulted parameters) for every public function and public method
+    of a public class in the reached modules."""
+    out = {}
+    for mod in reached:
+        for node in ast.parse(MODULES[mod].read_text()).body:
+            if not isinstance(node, _DEFS) or node.name.startswith('_'):
+                continue
+            if not isinstance(node, ast.ClassDef):
+                out[f'{mod}.{node.name}'] = (node.name,
+                                             *_defaulted(node, False))
+                continue
+            for m in node.body:
+                if (isinstance(m, ast.FunctionDef)
+                        and (m.name == '__init__'
+                             or (not m.name.startswith('_')
+                                 and node.name not in ENDPOINT_CLASSES))):
+                    name = node.name if m.name == '__init__' else m.name
+                    out[f'{mod}.{node.name}.{m.name}'] = (
+                        name, *_defaulted(m, True))
+    return out
+
+
+def _calls() -> dict[str, list[ast.Call]]:
+    """Every call in the caller files, by the called name."""
+    out: dict[str, list[ast.Call]] = {}
+    for path in CALLERS:
+        tree = ast.parse(path.read_text(), str(path))
+        alias = {a.asname: a.name for n in ast.walk(tree)
+                 if isinstance(n, ast.ImportFrom) for a in n.names
+                 if a.asname}
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                if isinstance(n.func, ast.Name):
+                    out.setdefault(alias.get(n.func.id, n.func.id),
+                                   []).append(n)
+                elif isinstance(n.func, ast.Attribute):
+                    out.setdefault(n.func.attr, []).append(n)
+    return out
+
+
+def test_every_defaulted_parameter_is_set_by_a_call():
+    calls = _calls()
+    unset = []
+    for qual, (name, pos, defaulted) in sorted(
+            _settable(_reachable()).items()):
+        left = set(defaulted)
+        for c in calls.get(name, ()):
+            if (any(isinstance(a, ast.Starred) for a in c.args)
+                    or any(k.arg is None for k in c.keywords)):
+                left.clear()
+            left -= set(pos[:len(c.args)]) | {k.arg for k in c.keywords}
+        unset += [f'{qual.removeprefix(PKG + ".")}({p})' for p in sorted(left)]
+    assert not unset, f'defaulted parameters no call sets: {unset}'

@@ -328,42 +328,75 @@ def test_compact_output_preserves_rows_and_reduces_files(spark, outdir):
     assert cp.read_output(spark, outdir).count() == 120
 
 
-def test_swap_survives_stale_old_dir_and_crashed_window(spark, outdir):
-    """Crash-safety of the rename swap (ADVICE r2): a stale
-    '.compact_old' left by an interrupted run must not break the next
-    compaction, and a crash BETWEEN the two renames (data moved aside,
-    tmp not yet promoted) must be recoverable by readers."""
+def _crash_after_intent(monkeypatch, rewrite):
+    """Run ``rewrite`` (a compaction or a cleanup) up to its published
+    intent: the promotion never runs."""
+    monkeypatch.setattr(cp, '_promote_rewrite', lambda *a, **k: None)
+    try:
+        return rewrite()
+    finally:
+        monkeypatch.undo()
+
+
+def _crash_mid_promotion(monkeypatch, spark, outdir):
+    """A compaction that crashed inside its promotion: the intent is
+    published, and the first bucket has moved aside without its
+    replacement moving in."""
+    import os
+    _crash_after_intent(monkeypatch, lambda: cp.compact_output(spark, outdir))
+    data = cp.data_path(outdir)
+    tmp, old, intent = cp._rewrite_paths(data)
+    assert os.path.exists(intent)
+    first = sorted(d for d in os.listdir(tmp) if d.startswith('bucket='))[0]
+    os.makedirs(old)
+    os.rename(os.path.join(data, first), os.path.join(old, first))
+    return first
+
+
+def test_rewrite_survives_stale_dirs_and_crashed_promotion(
+        spark, outdir, monkeypatch):
+    """Crash-safety of the table rewrite, through compaction: the tmp
+    and old directories a rewrite left when it crashed before its
+    intent must not break the next compaction, and a crash inside the
+    promotion (a bucket moved aside, its replacement still in the tmp)
+    must be rolled forward by readers."""
     import os
     from pdf_ai_mapper_spark.fixtures.webpages import web_pages_pandas
     batch = spark.createDataFrame(web_pages_pandas(30, start=0))
     run_extraction(spark, batch, outdir, CFG, dedup_against_output=True)
     data = cp.data_path(outdir)
+    tmp, old, intent = cp._rewrite_paths(data)
     n = cp.read_output(spark, outdir).count()
 
-    # 1. stale old dir from a previously interrupted swap
-    os.makedirs(data + '.compact_old/junk', exist_ok=True)
+    # 1. stale tmp and old dirs from a rewrite that crashed before its
+    # intent
+    os.makedirs(os.path.join(tmp, 'bucket=0', 'junk'))
+    os.makedirs(os.path.join(old, 'bucket=0', 'junk'))
     stats = cp.compact_output(spark, outdir)
     assert stats['rows'] == n
-    assert not os.path.exists(data + '.compact_old')
+    assert not os.path.exists(tmp) and not os.path.exists(old)
 
-    # 2. crash between the renames: data gone, old present
-    os.rename(data, data + '.compact_old')
+    # 2. crash between a bucket's two renames
+    moved = _crash_mid_promotion(monkeypatch, spark, outdir)
+    assert not os.path.exists(os.path.join(data, moved))
     assert cp.read_output(spark, outdir).count() == n  # recovered
-    assert os.path.exists(data)
+    assert os.path.exists(os.path.join(data, moved))
+    assert not any(map(os.path.exists, (tmp, old, intent)))
 
 
-def test_writers_recover_a_crashed_swap_before_writing(spark, outdir):
-    """A swap that crashed between its renames leaves data/ missing
-    and the table aside in data.compact_old. A resume run must restore
-    it before it writes: a fresh data/ would strand every committed
-    bucket, which _checkpoints still counts, so no later resume redoes
-    them. Compaction after the same crash must recover, not fail."""
+def test_writers_roll_a_crashed_rewrite_forward_before_writing(
+        spark, outdir, monkeypatch):
+    """A compaction that crashed inside its promotion leaves a committed
+    bucket moved out of data/. A resume run must roll the rewrite
+    forward before it writes: a bucket left out of data/ is still
+    counted in _checkpoints, so no later resume would redo it.
+    Compaction after the same crash must recover, not fail."""
     import os
     cfg = EngineConfig(shuffle_partitions=8, output_buckets=64)
     first = web_pages_df(spark, 8, num_partitions=2)
     run_extraction(spark, first, outdir, cfg)
-    data = cp.data_path(outdir)
-    os.rename(data, data + '.compact_old')
+    stray = cp._rewrite_paths(cp.data_path(outdir))
+    _crash_mid_promotion(monkeypatch, spark, outdir)
 
     pages = web_pages_df(spark, 60, num_partitions=4)  # a superset
     s = run_extraction(spark, pages, outdir, cfg)
@@ -378,14 +411,14 @@ def test_writers_recover_a_crashed_swap_before_writing(spark, outdir):
     assert s['resumed_skipped_rows'] == sum(r['b'] in done for r in rows)
     got = {r['url'] for r in cp.read_output(spark, outdir).collect()}
     assert got == want  # run 1's urls included
-    assert not os.path.exists(data + '.compact_old')
+    assert not any(map(os.path.exists, stray))
     counted = (spark.read.parquet(cp.checkpoint_path(outdir))
                .agg(F.sum('rows_out')).collect()[0][0])
     assert counted == len(got)
 
-    os.rename(data, data + '.compact_old')
+    _crash_mid_promotion(monkeypatch, spark, outdir)
     assert cp.compact_output(spark, outdir)['rows'] == len(want)
-    assert not os.path.exists(data + '.compact_old')
+    assert not any(map(os.path.exists, stray))
 
 
 def test_crash_between_data_and_checkpoint_append_reconciles(
@@ -617,7 +650,7 @@ def test_upsert_crash_before_intent_leaves_store_untouched(spark, outdir):
     _write_store(spark, outdir, [(f'u{i}', 100, f'old{i}')
                                  for i in range(40)])
     before = _listing(outdir)
-    tmp = cp.data_path(outdir) + '.upsert_tmp'
+    tmp, _old, _intent = cp._rewrite_paths(cp.data_path(outdir))
     os.makedirs(os.path.join(tmp, 'bucket=0'))
     with open(os.path.join(tmp, 'bucket=0', 'part-junk.parquet'), 'w') as f:
         f.write('torn')
@@ -638,11 +671,11 @@ def test_upsert_crash_after_intent_rolls_forward(spark, outdir, monkeypatch):
         [('u0', 200, 'newer'), ('brand-new', 150, 'insert')],
         'url string, crawl_ts long, body string')
     # simulate the crash: merge write + intent land, promotion never runs
-    monkeypatch.setattr(cp, '_promote_upsert', lambda *a, **k: None)
+    monkeypatch.setattr(cp, '_promote_rewrite', lambda *a, **k: None)
     cp.upsert_output(spark, outdir, batch, key_col='url',
                      order_col='crawl_ts', n_buckets=8)
     monkeypatch.undo()
-    _tmp, _old, intent = cp._upsert_paths(cp.data_path(outdir))
+    _tmp, _old, intent = cp._rewrite_paths(cp.data_path(outdir))
     assert os.path.exists(intent)
     got = {r['url']: (r['crawl_ts'], r['body'])
            for r in cp.read_output(spark, outdir).collect()}
@@ -652,7 +685,7 @@ def test_upsert_crash_after_intent_rolls_forward(spark, outdir, monkeypatch):
     assert got['u5'] == (100, 'old5')
     assert not os.path.exists(intent)        # recovery cleaned up
     # promotion is idempotent: a second recovery pass is a no-op
-    cp.recover_upsert(cp.data_path(outdir))
+    cp.recover_output(outdir)
     assert cp.read_output(spark, outdir).count() == 41
 
 
@@ -664,3 +697,121 @@ def test_upsert_empty_batch_is_noop(spark, outdir):
                              order_col='crawl_ts', n_buckets=8)
     assert stats == {'buckets_rewritten': 0, 'rows_written': 0}
     assert _listing(outdir) == before
+
+
+# -- cleanup through the shared rewrite --
+#
+# 48 fixture pages at 64 buckets: the commit flags copies in 8
+# buckets, and in 3 of them every row is a copy, so cleanup empties
+# them (a bucket is by url, not by content hash).
+
+CLEANUP_CFG = EngineConfig(shuffle_partitions=8, output_buckets=64)
+
+
+def _cleanup_store(spark, outdir):
+    """Commit the 48 pages; return the bucket dirs that hold a flagged
+    row, those where every row is flagged, and the urls cleanup
+    keeps."""
+    run_extraction(spark, web_pages_df(spark, 48, num_partitions=2),
+                   outdir, CLEANUP_CFG)
+    table = cp.read_output(spark, outdir)
+    per = (table.groupBy('bucket')
+           .agg(F.count('*').alias('n'),
+                F.count_if('is_duplicate').alias('dups'))
+           .filter('dups > 0').collect())
+    hit = {f'bucket={r["bucket"]}' for r in per}
+    emptied = {f'bucket={r["bucket"]}' for r in per if r['dups'] == r['n']}
+    assert emptied, 'the fixture must hold a bucket of copies only'
+    kept = sorted(r['url'] for r in
+                  table.filter(~F.col('is_duplicate')).collect())
+    return hit, emptied, kept
+
+
+def test_cleanup_rewrites_only_the_flagged_buckets(spark, outdir):
+    import os
+    from pdf_ai_mapper_spark.api import MapperAPI
+    hit, emptied, kept = _cleanup_store(spark, outdir)
+    before = _listing(outdir)
+    res = MapperAPI(spark, outdir, CLEANUP_CFG).cleanup_duplicates()
+    assert res == {'status': 'success',
+                   'message': f'Removed {48 - len(kept)} duplicate documents',
+                   'document_count': len(kept)}
+    after = _listing(outdir)
+    assert set(after) == set(before) - emptied
+    for d in after:
+        if d in hit:
+            assert before[d] != after[d]      # rewritten
+        else:
+            assert before[d] == after[d]      # untouched bytes
+    assert sorted(r['url'] for r in
+                  cp.read_output(spark, outdir).collect()) == kept
+    assert not any(map(os.path.exists,
+                       cp._rewrite_paths(cp.data_path(outdir))))
+
+
+def test_cleanup_crash_before_intent_leaves_table_untouched(
+        spark, outdir, monkeypatch):
+    import os
+    from pdf_ai_mapper_spark.api import MapperAPI
+    _cleanup_store(spark, outdir)
+    before = _listing(outdir)
+    tmp, _old, intent = cp._rewrite_paths(cp.data_path(outdir))
+
+    def crash(*a, **k):
+        raise RuntimeError('injected crash before the intent')
+
+    monkeypatch.setattr(cp, '_publish_json', crash)
+    with pytest.raises(RuntimeError, match='injected crash'):
+        MapperAPI(spark, outdir, CLEANUP_CFG).cleanup_duplicates()
+    monkeypatch.undo()
+    assert os.path.isdir(tmp) and not os.path.exists(intent)
+    assert _listing(outdir) == before        # untouched bytes
+    assert cp.read_output(spark, outdir).count() == 48
+    assert not os.path.exists(tmp)           # stray tmp discarded
+
+
+def test_cleanup_crash_after_intent_rolls_forward_emptied_buckets(
+        spark, outdir, monkeypatch):
+    """Recovery must not take an emptied bucket, which has nothing in
+    the tmp, for promoted: readers see the cleaned table with the
+    emptied buckets gone, and a second recovery changes nothing."""
+    import os
+    from pdf_ai_mapper_spark.api import MapperAPI
+    _hit, emptied, kept = _cleanup_store(spark, outdir)
+    api = MapperAPI(spark, outdir, CLEANUP_CFG)
+    _crash_after_intent(monkeypatch, api.cleanup_duplicates)
+    data = cp.data_path(outdir)
+    _tmp, _old, intent = cp._rewrite_paths(data)
+    assert os.path.exists(intent)
+    assert all(os.path.exists(os.path.join(data, d)) for d in emptied)
+
+    assert sorted(r['url'] for r in
+                  cp.read_output(spark, outdir).collect()) == kept
+    assert not any(os.path.exists(os.path.join(data, d)) for d in emptied)
+    assert not any(map(os.path.exists, cp._rewrite_paths(data)))
+    after = _listing(outdir)
+    cp.recover_output(outdir)
+    assert _listing(outdir) == after
+
+
+def test_run_after_a_crashed_cleanup_rolls_forward_before_writing(
+        spark, outdir, monkeypatch):
+    """An append run after a cleanup that crashed past its intent must
+    finish the cleanup first: rows it appended to a bucket the cleanup
+    rewrites would be moved aside by a later roll-forward."""
+    from pdf_ai_mapper_spark.api import MapperAPI
+    from pdf_ai_mapper_spark.fixtures.webpages import web_pages_pandas
+    hit, _emptied, kept = _cleanup_store(spark, outdir)
+    api = MapperAPI(spark, outdir, CLEANUP_CFG)
+    _crash_after_intent(monkeypatch, api.cleanup_duplicates)
+
+    batch = spark.createDataFrame(web_pages_pandas(48, start=48))
+    s = run_extraction(spark, batch, outdir, CLEANUP_CFG,
+                       dedup_against_output=True, run_id='afterclean1')
+    table = cp.read_output(spark, outdir)
+    assert table.count() == len(kept) + s['rows_out']
+    hit_buckets = [int(d.split('=')[1]) for d in hit]
+    assert table.filter((F.col('run_id') == 'afterclean1')
+                        & F.col('bucket').isin(hit_buckets)).count() > 0
+    assert table.filter(F.col('run_id') != 'afterclean1').filter(
+        F.col('is_duplicate')).count() == 0
